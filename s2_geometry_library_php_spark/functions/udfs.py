@@ -1,15 +1,18 @@
-"""Arrow-batched pandas UDFs wrapping the s2core numpy kernels.
+"""Arrow-batched pandas and arrow UDFs wrapping the s2core numpy kernels.
 
 These are the only JVM<->Python crossings in the engine; every kernel
 is vectorized numpy over whole Arrow batches (no per-row Python, per
-BASELINE.json input_hint).  uint64 cell ids are reinterpreted to int64
-at the boundary (bit pattern, never value conversion).
+BASELINE.json input_hint).  Array-valued ring kernels are arrow UDFs
+that build their ``ListArray`` from offsets: a pandas UDF would have to
+return one Python list per row.  uint64 cell ids are reinterpreted to
+int64 at the boundary (bit pattern, never value conversion).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -58,14 +61,57 @@ def s2_cell_center_lng(cell_id: pd.Series) -> pd.Series:
     return pd.Series(np.degrees(lng))
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def s2_all_neighbors_udf(cell_id: pd.Series) -> pd.Series:
-    """Same-level 8-ring (kNN ring expansion / union buffering)."""
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
-    if len(ids) == 0:
-        return pd.Series([], dtype=object)
+def distinct_rings(
+    ids: np.ndarray, with_center: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each cell's same-level 3x3 neighborhood as sorted distinct
+    signed ids, flattened: cell ``i``'s ring is
+    ``values[offsets[i]:offsets[i + 1]]``.  ``with_center`` adds the
+    cell itself (the kNN / radius-join candidate ring); without it the
+    ring is the 8-neighborhood of ``s2_all_neighbors``.  Cube-corner
+    cells have fewer distinct neighbors, which the row-wise sort +
+    adjacent-difference dedupe drops with no per-row Python."""
+    ids = np.asarray(ids, dtype=np.uint64)
     ring = cid.to_signed(cid.all_neighbors(ids))
-    return pd.Series([np.unique(row).tolist() for row in ring])
+    if with_center:
+        ring = np.concatenate([cid.to_signed(ids)[:, None], ring], axis=1)
+    ring.sort(axis=1)
+    keep = np.ones(ring.shape, dtype=bool)
+    np.not_equal(ring[:, 1:], ring[:, :-1], out=keep[:, 1:])
+    offsets = np.zeros(len(ring) + 1, dtype=np.int32)
+    np.cumsum(keep.sum(axis=1), out=offsets[1:])
+    return ring[keep], offsets
+
+
+def _ring_list_array(ids: np.ndarray, with_center: bool, mask=None) -> pa.Array:
+    values, offsets = distinct_rings(ids, with_center)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets), pa.array(values), mask=mask
+    )
+
+
+@F.arrow_udf(ArrayType(LongType()))
+def s2_all_neighbors_udf(cell_id: pa.Array) -> pa.Array:
+    """Same-level 8-ring (kNN ring expansion / union buffering): the
+    sorted distinct neighbors, the cell itself excluded; null in, null
+    out."""
+    ids = cid.from_signed(cell_id.fill_null(0).to_numpy())
+    mask = cell_id.is_null() if cell_id.null_count else None
+    return _ring_list_array(ids, False, mask)
+
+
+@F.arrow_udf(ArrayType(LongType()))
+def s2_ring_cells_udf(lat: pa.Array, lng: pa.Array, level: pa.Array) -> pa.Array:
+    """Point (degrees) -> its level-``level`` cell -> that cell's
+    sorted distinct 3x3 ring, the cell included: the probe ring of the
+    radius join in one Arrow crossing (encode, parent and ring fused).
+    ``level`` is a constant column."""
+    lv = int(level[0].as_py()) if len(level) else 0
+    leaf = cid.cell_id_from_latlng_degrees(
+        lat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+        lng.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+    )
+    return _ring_list_array(cid.parent(leaf, lv), True)
 
 
 @F.pandas_udf(ArrayType(LongType()))

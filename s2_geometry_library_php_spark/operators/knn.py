@@ -13,15 +13,28 @@ candidate distance < MIN_WIDTH(L) the result is provably exact;
 probes that fail the guarantee (or have < k candidates) are retried
 at a coarser level, driver-side loop (mirrors the reference's
 adaptive brute-force-vs-index switch, S2EdgeIndex.php:162-204).
+
+Python crossings: the probe side never reaches a Python worker.  The
+probes are collected once and encoded, parented and ring-expanded on
+the driver with the numpy kernels; each round's rings ship as a
+broadcast local relation.  A round evaluates one pandas UDF, the
+caller's docs encode, once per doc row (the docs-side join key is
+non-nullable, see ``join_key``), and the driver decides satisfied /
+failed / retry level from one collected per-probe stats frame.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.sql_bitops import s2_parent
-from ..functions.udfs import s2_cell_id
+from ..functions.udfs import distinct_rings
+from ..s2core import cellid as cid
 from ..s2core.metric import MIN_WIDTH
 
 
@@ -117,8 +130,54 @@ def _estimate_count(docs: DataFrame, max_partitions: int = 8) -> int:
     return max(1, int(per_part * n_parts))
 
 
+def join_key(col):
+    """An engine-built cell equi-join key, made non-nullable.  A
+    nullable key makes the optimizer infer ``isnotnull(key)`` for the
+    join and push it below the projection that computes the key; when
+    that projection evaluates a pandas UDF (the leaf encode), the pushed
+    filter evaluates the UDF a second time in its own ArrowEvalPython
+    node.  A non-nullable key carries the constraint already, so no
+    filter is inferred.  The answer is unchanged: the encode never
+    returns null, and a null caller cell id becomes 0, which is no
+    valid cell id and so matches no ring cell, as a null key would."""
+    return F.coalesce(col, F.lit(0).cast("long"))
+
+
+def probe_ring_frame(
+    spark: SparkSession,
+    probes: pa.Table,
+    leaf: np.ndarray,
+    level: int,
+    id_field: StructField,
+) -> DataFrame:
+    """Each probe's distinct 3x3 ring at ``level`` (its own cell
+    included) as a local relation of (probe_id, _plat, _plon,
+    _cand_cell) rows, built on the driver: ``probes`` holds the
+    (probe_id, _plat, _plon) columns and ``leaf`` their leaf cell ids
+    (uint64).  No Spark job and no Python worker."""
+    values, offsets = distinct_rings(cid.parent(leaf, level), True)
+    rows = np.repeat(np.arange(len(leaf)), np.diff(offsets))
+    table = probes.take(pa.array(rows)).append_column(
+        "_cand_cell", pa.array(values)
+    )
+    return _local_relation(spark, table, id_field)
+
+
+def _local_relation(
+    spark: SparkSession, table: pa.Table, id_field: StructField
+) -> DataFrame:
+    """A driver-built probe table (probe id first, then coordinates and
+    cell ids) as a local relation: no Spark job, no Python worker.  The
+    probe id keeps the caller's Spark type."""
+    spark_type = {pa.float64(): DoubleType(), pa.int64(): LongType()}
+    fields = [StructField(id_field.name, id_field.dataType)] + [
+        StructField(f.name, spark_type[f.type]) for f in list(table.schema)[1:]
+    ]
+    return spark.createDataFrame(table, StructType(fields))
+
+
 def ring_round_topk(
-    remaining: DataFrame,
+    ring: DataFrame,
     docs: DataFrame,
     k: int,
     level: int,
@@ -126,25 +185,15 @@ def ring_round_topk(
     doc_id: str = "doc_id",
     leaf_col: str = "cell_id",
 ) -> DataFrame:
-    """One ring-expansion round: each probe's 3x3 cell neighborhood at
-    ``level`` equi-joined (broadcast, no doc shuffle) against the docs'
-    level-L prefix, exact re-rank, window top-k.  ``remaining`` needs
-    (_plat, _plon, _pleaf) columns (see knn_join)."""
-    from ..functions.udfs import s2_all_neighbors_udf
-
-    ring = remaining.withColumn(
-        "_center", s2_parent(F.col("_pleaf"), level)
-    ).withColumn(
-        "_cand_cell",
-        F.explode(
-            F.array_union(
-                F.array(F.col("_center")),
-                s2_all_neighbors_udf(F.col("_center")),
-            )
-        ),
-    )
+    """One ring-expansion round: the probes' 3x3 cell neighborhoods at
+    ``level`` (``ring``: one (probe_id, _plat, _plon, _cand_cell) row
+    per probe and ring cell, see probe_ring_frame) equi-joined
+    (broadcast, no doc shuffle) against the docs' level-L prefix,
+    exact re-rank, window top-k."""
     cand = F.broadcast(ring).join(
-        docs.withColumn("_dcell", s2_parent(F.col(leaf_col), level)),
+        docs.withColumn(
+            "_dcell", join_key(s2_parent(F.col(leaf_col), level))
+        ),
         F.col("_cand_cell") == F.col("_dcell"),
         "inner",
     )
@@ -179,9 +228,12 @@ def knn_join(
     reference's adaptive brute-vs-index spirit, S2EdgeIndex.php:162-204).
 
     ``docs`` must carry the leaf ``cell_id``; probes need (probe_id,
-    lat, lon).  Each round materializes its (small) top-k result so
-    the per-round plan does not grow; the big ``docs`` side is only
-    ever hash-probed, never shuffled.
+    lat, lon).  The probes are the SMALL side by contract: they are
+    collected once, encoded and ring-expanded on the driver with the
+    numpy kernels, and each round ships its rings as a broadcast local
+    relation, so the probe side costs no Python worker at all.  The big
+    ``docs`` side is only ever hash-probed, never shuffled.  Each round
+    runs one pinned top-k job and one collect of its per-probe stats.
     """
     if start_level is None:
         # auto_start_level only needs the ORDER OF MAGNITUDE of the
@@ -192,48 +244,58 @@ def knn_join(
         n = n_docs_hint if n_docs_hint is not None else _estimate_count(docs)
         start_level = auto_start_level(n, k)
 
-    # Every per-round frame is probe-sized (<= P x k rows: the probe
-    # side is the SMALL side of this operator by contract, the big
-    # docs side is only ever hash-probed).  Each is therefore
-    # materialized EAGERLY with a lineage cut (localCheckpoint):
-    # lazy caches here leave each round's plan nested inside the next
-    # round's broadcast build (broadcast-of-broadcast through
-    # InMemoryRelations), which the scheduler executes pathologically
-    # — a measured 6-25x wall blow-up on the benchmark corpus versus
-    # the same rounds with cut lineage.
-    def _pin(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True)
-
-    remaining = _pin(
-        probes.select(
-            probe_id, F.col("lat").alias("_plat"), F.col("lon").alias("_plon")
-        ).withColumn("_pleaf", s2_cell_id(F.col("_plat"), F.col("_plon")))
+    id_field = probes.schema[probe_id]
+    todo = probes.select(
+        probe_id,
+        F.col("lat").cast("double").alias("_plat"),
+        F.col("lon").cast("double").alias("_plon"),
+    ).toArrow()
+    leaf = cid.cell_id_from_latlng_degrees(
+        todo.column("_plat").to_numpy(zero_copy_only=False),
+        todo.column("_plon").to_numpy(zero_copy_only=False),
     )
     results: list[DataFrame] = []
+    by_probe = Window.partitionBy(probe_id)
     level = start_level
     for rnd in range(max_rounds):
-        if level < 0 or (rnd > 0 and remaining.isEmpty()):
+        if level < 0 or (rnd > 0 and todo.num_rows == 0):
             break
-        topk = _pin(
+        # Exactness: k candidates found AND kth distance < MIN_WIDTH(L),
+        # judged per probe over its top-k rows.  Each round's top-k is
+        # probe-sized (<= P x k rows) and read twice (the stats collect
+        # below and the final union), so it is materialized EAGERLY with
+        # a lineage cut (localCheckpoint): a lazy frame would rerun the
+        # docs-side join and encode for each reader.  Keep the next
+        # round's rings a fresh local relation, never derived from this
+        # frame: a round's plan nested inside the next round's broadcast
+        # build runs pathologically (a measured 6-25x wall blow-up).
+        guarantee = float(MIN_WIDTH.get_value(level))
+        ring = probe_ring_frame(spark, todo, leaf, level, id_field)
+        topk = (
             ring_round_topk(
-                remaining, docs, k, level,
+                ring, docs, k, level,
                 probe_id=probe_id, doc_id=doc_id, leaf_col=leaf_col,
             )
-        )
-        # Exactness: k candidates found AND kth distance < MIN_WIDTH(L).
-        guarantee = float(MIN_WIDTH.get_value(level))
-        stats = _pin(
-            topk.groupBy(probe_id).agg(
-                F.count(F.lit(1)).alias("_n"), F.max("dist_rad").alias("_kth")
+            .withColumn("_n", F.count(F.lit(1)).over(by_probe))
+            .withColumn("_kth", F.max("dist_rad").over(by_probe))
+            .withColumn(
+                "_ok", (F.col("_n") >= k) & (F.col("_kth") < F.lit(guarantee))
             )
+            .localCheckpoint(eager=True)
         )
-        ok_ids = stats.where(
-            (F.col("_n") >= k) & (F.col("_kth") < F.lit(guarantee))
-        ).select(probe_id)
-        results.append(topk.join(F.broadcast(ok_ids), probe_id, "leftsemi"))
-        remaining = _pin(
-            remaining.join(F.broadcast(ok_ids), probe_id, "leftanti")
+        results.append(
+            topk.where("_ok").select(probe_id, doc_id, "dist_rad", "rank")
         )
+        # One stats row per probe that found any candidate.
+        stats = topk.where(F.col("rank") == 1).select(
+            probe_id, "_n", "_kth", "_ok"
+        ).toArrow()
+        ok = pc.fill_null(stats.column("_ok"), False).to_numpy()
+        done = pc.is_in(
+            todo.column(probe_id),
+            value_set=stats.column(probe_id).filter(ok).combine_chunks(),
+        ).to_numpy()
+        todo, leaf = todo.filter(~done), leaf[~done]
         # Data-driven retry level: a failed probe's MEASURED k-th
         # candidate distance upper-bounds its true k-th distance (the
         # candidates are a subset of the corpus), so the coarsest level
@@ -243,31 +305,23 @@ def knn_join(
         # that overshoot into quarter-sphere rings (a measured 7x wall
         # cost on the benchmark corpus).  Probes with < k candidates
         # carry no bound and keep the 2-level drop.
-        failed = (
-            stats.join(F.broadcast(ok_ids), probe_id, "leftanti")
-            .agg(F.max("_kth").alias("_mx"), F.min("_n").alias("_mn"))
-            .first()
-        )
-        max_kth, min_n = failed["_mx"], failed["_mn"]
-        if max_kth is not None and min_n is not None and min_n >= k:
+        failed = ~ok
+        kth = stats.column("_kth").to_numpy(zero_copy_only=False)[failed]
+        n_cand = stats.column("_n").to_numpy(zero_copy_only=False)[failed]
+        if failed.any() and not np.isnan(kth).all() and n_cand.min() >= k:
             level = min(
-                level - 1, MIN_WIDTH.get_max_level(1.05 * float(max_kth))
+                level - 1, MIN_WIDTH.get_max_level(1.05 * float(np.nanmax(kth)))
             )
         else:
             level -= 2  # no distance bound available: 16x coarser cells
-    if not remaining.isEmpty():
+    if todo.num_rows:
         # Final fallback: brute force for the stragglers.
+        stragglers = _local_relation(
+            spark, todo.rename_columns([probe_id, "lat", "lon"]), id_field
+        )
         results.append(
             knn_brute_force(
-                remaining.select(
-                    probe_id,
-                    F.col("_plat").alias("lat"),
-                    F.col("_plon").alias("lon"),
-                ),
-                docs,
-                k,
-                probe_id=probe_id,
-                doc_id=doc_id,
+                stragglers, docs, k, probe_id=probe_id, doc_id=doc_id
             )
         )
     out = results[0]

@@ -36,9 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sql_bitops import s2_parent
-from ..functions.udfs import s2_all_neighbors_udf, s2_cell_id
+from ..functions.udfs import s2_cell_id, s2_ring_cells_udf
 from ..s2core.metric import MIN_WIDTH
-from .knn import _exact_distance
+from .knn import _exact_distance, join_key
 
 
 def radius_join_level(radius_rad: float) -> int | None:
@@ -100,18 +100,12 @@ def within_radius_join(
         )
 
     lk = l.withColumn(
-        "_cell", s2_parent(s2_cell_id(F.col("_alat"), F.col("_alon")), lvl)
+        "_cell",
+        join_key(s2_parent(s2_cell_id(F.col("_alat"), F.col("_alon")), lvl)),
     )
-    rcell = s2_parent(s2_cell_id(F.col("_blat"), F.col("_blon")), lvl)
     rk = r.withColumn(
         "_cell",
-        F.explode(
-            F.array_distinct(
-                F.concat(
-                    F.array(rcell), s2_all_neighbors_udf(rcell)
-                )
-            )
-        ),
+        F.explode(s2_ring_cells_udf(F.col("_blat"), F.col("_blon"), F.lit(lvl))),
     )
     if broadcast_right:
         rk = F.broadcast(rk)

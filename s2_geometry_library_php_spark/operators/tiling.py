@@ -81,13 +81,16 @@ def tile_rollup(
     count_col: str = "doc_count",
 ) -> DataFrame:
     """Roll a fine tiling up to coarser levels by re-grouping on the
-    parent id — each rollup consumes the PREVIOUS level's (already
-    tiny) output, not the raw docs, so the chain is nearly free.
+    parent id — each level aggregates the checkpointed finest level
+    (small: one row per occupied tile) directly, so every union branch
+    plans exactly one exchange.  Re-aggregating the previous LAZY level
+    instead would replay every finer rollup inside each branch (1 + 2 +
+    ... + n exchanges for n levels); the sums are integer counts, so
+    rolling from the finest level gives identical rows.
 
     Output: union over levels of (level, tile_id, tile_token,
     doc_count)."""
-    out = None
-    current = tiles.select(
+    finest = tiles.select(
         F.lit(from_level).alias("level"),
         F.col(tile_col).alias("tile_id"),
         F.col(count_col).alias("doc_count"),
@@ -96,27 +99,19 @@ def tile_rollup(
     # union output otherwise embeds the full upstream chain (scan +
     # encode + aggregation) into EVERY level's branch — verified via
     # .explain, the static plan showed 3 copies of the scan subtree.
-    # The finest tiling is small (one row per occupied tile), so the
-    # checkpoint is cheap and every coarser level re-aggregates it.
-    current = current.localCheckpoint(eager=False)
-    pieces = [current.withColumn("tile_token", s2_token_sql("tile_id"))]
-    prev = current
+    finest = finest.localCheckpoint(eager=False)
+    out = finest.withColumn("tile_token", s2_token_sql("tile_id"))
     for lvl in sorted(to_levels, reverse=True):
         if lvl >= from_level:
             continue
         rolled = (
-            prev.groupBy(s2_parent(F.col("tile_id"), lvl).alias("tile_id"))
+            finest.groupBy(s2_parent(F.col("tile_id"), lvl).alias("tile_id"))
             .agg(F.sum("doc_count").alias("doc_count"))
-            .select(
-                F.lit(lvl).alias("level"),
-                "tile_id",
-                "doc_count",
-            )
+            .select(F.lit(lvl).alias("level"), "tile_id", "doc_count")
         )
-        pieces.append(rolled.withColumn("tile_token", s2_token_sql("tile_id")))
-        prev = rolled
-    for p in pieces:
-        out = p if out is None else out.unionByName(p)
+        out = out.unionByName(
+            rolled.withColumn("tile_token", s2_token_sql("tile_id"))
+        )
     return out
 
 

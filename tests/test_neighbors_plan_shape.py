@@ -1,0 +1,126 @@
+"""Plan shape of the neighbors operators: every Python kernel crosses
+into Python once per row.  A kNN round evaluates only the caller's docs
+encode (its probe rings are a driver-built local relation); the radius
+join evaluates the left encode and the fused right ring kernel.  No
+filter on a Python UDF's output may sit under a second ArrowEvalPython
+(the optimizer's inferred ``isnotnull(join key)`` pushed below the
+projection that computes the key would evaluate the UDF twice)."""
+
+import re
+
+import numpy as np
+import pyarrow as pa
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField
+
+from s2_geometry_library_php_spark.functions import s2_cell_id
+from s2_geometry_library_php_spark.operators.knn import (
+    knn_join,
+    probe_ring_frame,
+    ring_round_topk,
+)
+from s2_geometry_library_php_spark.operators.radius_join import within_radius_join
+from s2_geometry_library_php_spark.s2core import cellid as cid
+
+PYTHON_NODES = re.compile(r"(ArrowEvalPython|MapIn\w+|FlatMapGroupsIn\w+)\b")
+
+
+def _executed_nodes(df):
+    """(depth, node text) of the executed physical plan, top-down."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan, not the initial one
+    tree = plan.treeString()
+    nodes = []
+    for line in tree.splitlines():
+        m = re.search(r"[A-Za-z*]", line)
+        if m:  # drop the whole-stage-codegen marker "*(n) "
+            nodes.append((m.start(), re.sub(r"^\*\(\d+\) ", "", line[m.start():])))
+    return nodes
+
+
+def _python_nodes(nodes):
+    return [t for _, t in nodes if PYTHON_NODES.match(t)]
+
+
+def _udf_filters_under_python(nodes):
+    """Filters on a pythonUDF output that have an ArrowEvalPython
+    ancestor: each marks a UDF evaluated twice."""
+    bad = []
+    for i, (depth, text) in enumerate(nodes):
+        if not (text.startswith("Filter") and "pythonUDF" in text):
+            continue
+        d = depth
+        for up_depth, up_text in reversed(nodes[:i]):
+            if up_depth < d:
+                d = up_depth
+                if up_text.startswith("ArrowEvalPython"):
+                    bad.append(text)
+                    break
+    return bad
+
+
+@pytest.fixture(scope="module")
+def points(spark, tmp_path_factory):
+    """Uncached parquet points, so every plan reads and encodes them."""
+    rng = np.random.default_rng(3)
+    n = 2000
+    path = str(tmp_path_factory.mktemp("pts") / "points")
+    spark.createDataFrame(
+        [
+            (i, float(a), float(b))
+            for i, (a, b) in enumerate(
+                zip(
+                    np.degrees(np.arcsin(rng.uniform(-1, 1, n))),
+                    rng.uniform(-180, 180, n),
+                )
+            )
+        ],
+        "doc_id long, lat double, lon double",
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_knn_round_evaluates_only_the_docs_encode(spark, points):
+    docs = points.withColumn("cell_id", s2_cell_id("lat", "lon"))
+    probes = pa.table(
+        {
+            "probe_id": pa.array([0, 1], pa.int64()),
+            "_plat": pa.array([48.85, -33.9]),
+            "_plon": pa.array([2.35, 151.2]),
+        }
+    )
+    leaf = cid.cell_id_from_latlng_degrees(
+        probes.column("_plat").to_numpy(), probes.column("_plon").to_numpy()
+    )
+    ring = probe_ring_frame(spark, probes, leaf, 6, StructField("probe_id", LongType()))
+    nodes = _executed_nodes(ring_round_topk(ring, docs, 3, 6))
+    python = _python_nodes(nodes)
+    assert len(python) == 1 and "s2_cell_id" in python[0]
+    assert _udf_filters_under_python(nodes) == []
+
+
+def test_knn_join_result_holds_no_python_node(spark, points):
+    docs = points.withColumn("cell_id", s2_cell_id("lat", "lon"))
+    probes = spark.createDataFrame(
+        [(0, 48.85, 2.35), (1, -33.9, 151.2)], "probe_id long, lat double, lon double"
+    )
+    # Every round is pinned: the result reads checkpoints only.
+    nodes = _executed_nodes(knn_join(spark, probes, docs, 3, start_level=6))
+    assert _python_nodes(nodes) == []
+
+
+def test_radius_join_evaluates_each_kernel_once(spark, points):
+    left = points.select(F.col("doc_id").alias("a_id"), "lat", "lon")
+    right = points.select(F.col("doc_id").alias("b_id"), "lat", "lon")
+    for broadcast_right in (True, False):
+        nodes = _executed_nodes(
+            within_radius_join(left, right, 0.01, broadcast_right=broadcast_right)
+        )
+        python = _python_nodes(nodes)
+        assert len(python) == 2, python
+        assert sum("s2_cell_id" in t for t in python) == 1
+        assert sum("s2_ring_cells_udf" in t for t in python) == 1
+        assert _udf_filters_under_python(nodes) == []

@@ -9,19 +9,30 @@ and cited in README:
   pruning drops text/html when not selected);
 * bitwise tile math stays inside WholeStageCodegen (no Python).
 
-Usage: python tools/dump_plans.py  (writes /root/repo/EXPLAIN.md)
+Each section header carries the plan's Python-node count
+(ArrowEvalPython, MapIn*, FlatMapGroupsIn*): every such node is one
+crossing into a Python worker per task.
+
+Usage: python tools/dump_plans.py  (writes EXPLAIN.md at the repository
+root)
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = "/root/testdata/sf0.01"
+
+# A physical-plan tree line names its node then its id, "Name (n)".
+PYTHON_NODE = re.compile(
+    r"\b(\w*EvalPython|MapIn\w+|FlatMapGroupsIn\w+|FlatMapCoGroupsIn\w+) \(\d+\)"
+)
 
 
 def main() -> None:
@@ -72,27 +83,44 @@ def main() -> None:
     )
     plans.append(
         (
-            "tile rollup 8 -> 6 -> 4 (reuses previous level)",
+            "tile rollup 8 -> 6 -> 4 (each level rolled from the "
+            "checkpointed finest level: one exchange per level)",
             tile_rollup(tile_aggregate(docs, 8), 8, [6, 4]),
         )
     )
-    from s2_geometry_library_php_spark.operators.knn import ring_round_topk
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField
 
-    probes = spark.createDataFrame(
-        [(0, 48.85, 2.35), (1, -33.9, 151.2)],
-        "probe_id long, lat double, lon double",
-    ).select(
-        "probe_id",
-        F.col("lat").alias("_plat"),
-        F.col("lon").alias("_plon"),
-    ).withColumn("_pleaf", s2_cell_id(F.col("_plat"), F.col("_plon")))
+    from s2_geometry_library_php_spark.operators.knn import (
+        probe_ring_frame,
+        ring_round_topk,
+    )
+    from s2_geometry_library_php_spark.s2core import cellid as cid
+
+    probes = pa.table(
+        {
+            "probe_id": pa.array([0, 1], pa.int64()),
+            "_plat": pa.array([48.85, -33.9]),
+            "_plon": pa.array([2.35, 151.2]),
+        }
+    )
+    ring = probe_ring_frame(
+        spark,
+        probes,
+        cid.cell_id_from_latlng_degrees(
+            probes.column("_plat").to_numpy(), probes.column("_plon").to_numpy()
+        ),
+        8,
+        StructField("probe_id", LongType()),
+    )
     plans.append(
         (
-            "kNN ring round (broadcast 3x3 probe ring -> equi-join on "
-            "level-8 prefix -> exact re-rank -> window top-k; docs never "
-            "shuffled)",
+            "kNN ring round (driver-built 3x3 probe rings as a broadcast "
+            "local relation -> equi-join on level-8 prefix -> exact "
+            "re-rank -> window top-k; docs never shuffled, the docs "
+            "encode is the only Python node)",
             ring_round_topk(
-                probes, docs.select("doc_id", "lat", "lon", "cell_id"), 5, 8
+                ring, docs.select("doc_id", "lat", "lon", "cell_id"), 5, 8
             ),
         )
     )
@@ -320,9 +348,9 @@ def main() -> None:
     plans.append(
         (
             "within-radius self-join (level picked from MIN_WIDTH, "
-            "right side explodes to its <=9-cell neighbor ring, hash "
-            "equi-join on the ring cell, exact-angle refine in "
-            "WholeStageCodegen; no theta-join)",
+            "right side explodes to its <=9-cell neighbor ring from one "
+            "fused encode+ring kernel, hash equi-join on the ring cell, "
+            "exact-angle refine in WholeStageCodegen; no theta-join)",
             self_radius_pairs(docs.select("doc_id", "lat", "lon"), 0.001),
         )
     )
@@ -425,12 +453,19 @@ def main() -> None:
     out.append(
         "Generated by tools/dump_plans.py at sf0.01 on local[8]; the\n"
         "shapes (not the statistics) are what hold at cluster scale.\n"
+        "Each header ends with the plan's Python-node count\n"
+        "(ArrowEvalPython, MapIn*, FlatMapGroupsIn*): one crossing into a\n"
+        "Python worker per task each.\n"
     )
     for title, df in plans:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        out.append(f"\n## {title}\n\n```\n{buf.getvalue().strip()}\n```\n")
+        plan = buf.getvalue().strip()
+        n_python = len(PYTHON_NODE.findall(plan))
+        out.append(
+            f"\n## {title} [Python nodes: {n_python}]\n\n```\n{plan}\n```\n"
+        )
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "EXPLAIN.md"), "w") as f:
         f.write("\n".join(out))
