@@ -20,18 +20,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..s2core.cellid import to_signed_scalar
+
 MAX_LEVEL = 30
 _MIN_LONG = -(1 << 63)
 
 
 def _lsb_for_level(level: int) -> int:
     return 1 << (2 * (MAX_LEVEL - level))
-
-
-def _signed64(x: int) -> int:
-    """Reinterpret a uint64 constant as int64 (two's complement)."""
-    x &= 0xFFFFFFFFFFFFFFFF
-    return x - (1 << 64) if x >= (1 << 63) else x
 
 
 # --- Column builders -----------------------------------------------------------
@@ -49,7 +45,7 @@ def s2_is_leaf(cell_id: Column) -> Column:
 
 def s2_parent(cell_id: Column, level: int) -> Column:
     lsb = _lsb_for_level(level)
-    return cell_id.bitwiseAND(F.lit(_signed64(-lsb))).bitwiseOR(F.lit(lsb))
+    return cell_id.bitwiseAND(F.lit(to_signed_scalar(-lsb))).bitwiseOR(F.lit(lsb))
 
 
 def s2_range_min(cell_id: Column) -> Column:
@@ -90,7 +86,7 @@ def sql_s2_level(cell_id: str) -> str:
 
 def sql_s2_parent(cell_id: str, level: int) -> str:
     lsb = _lsb_for_level(level)
-    return f"(({cell_id} & {_signed64(-lsb)}) | {lsb})"
+    return f"(({cell_id} & {to_signed_scalar(-lsb)}) | {lsb})"
 
 
 def sql_s2_range_min(cell_id: str) -> str:

@@ -16,13 +16,55 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.coverer import expand_by_radius
-from ..s2core.edges import polyline_covering
-from .spatial_join import _parent_col, _sig, _lvl
+from ..s2core.edges import polyline_covering, polyline_project
+from .spatial_join import covering_candidates
+
+
+def _polyline_candidates(
+    spark: SparkSession,
+    docs: DataFrame,
+    polylines: list[dict],
+    max_distance_rad: float,
+    leaf_col: str,
+) -> tuple[DataFrame, dict[int, np.ndarray]]:
+    """Banded-prefix candidate join of ``docs`` against every polyline's
+    edge covering buffered by ``max_distance_rad``; returns the
+    candidates (docs columns + line_id) and each line's unit vertices.
+    Expanded coverings are normalized (disjoint), so each doc matches
+    at most one covering cell per line: no dedup shuffle needed."""
+    cov_rows = []
+    verts_by_line: dict[int, np.ndarray] = {}
+    for spec in polylines:
+        lid = int(spec["line_id"])
+        v = np.asarray(spec["vertices"], dtype=np.float64)
+        verts_by_line[lid] = geom.normalize(
+            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+        )
+        cov = expand_by_radius(polyline_covering(v), max_distance_rad, 6)
+        for c in cov:
+            cov_rows.append((lid, cid.to_signed_scalar(c), cid.level_scalar(c)))
+    cov_df = spark.createDataFrame(
+        cov_rows, "line_id long, cov_cell long, cov_level int"
+    )
+    levels = sorted({r[2] for r in cov_rows})
+    return covering_candidates(docs, cov_df, levels, leaf_col), verts_by_line
+
+
+def _line_groups(lat: pd.Series, lon: pd.Series, line_id: pd.Series):
+    """(line_id, row mask, unit points) per line present in a batch."""
+    pts = geom.latlng_to_xyz(
+        np.radians(lat.to_numpy(np.float64)),
+        np.radians(lon.to_numpy(np.float64)),
+    )
+    lid_arr = line_id.to_numpy(np.int64)
+    for lid in np.unique(lid_arr):
+        mask = lid_arr == lid
+        yield int(lid), mask, pts[mask]
 
 
 def polyline_proximity_join(
@@ -35,66 +77,39 @@ def polyline_proximity_join(
     leaf_col: str = "cell_id",
 ) -> DataFrame:
     """polylines: [{line_id, vertices: [[lat,lng] deg, ...]}, ...].
-    Returns docs columns + line_id + dist_rad for docs within
-    max_distance_rad of the polyline."""
-    cov_rows = []
-    verts_by_line: dict[int, np.ndarray] = {}
-    for spec in polylines:
-        lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts_by_line[lid] = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
-        cov = polyline_covering(v)
-        cov = expand_by_radius(cov, max_distance_rad, 6)
-        for c in cov:
-            cov_rows.append((lid, _sig(c), _lvl(c)))
-    cov_df = spark.createDataFrame(
-        cov_rows, "line_id long, cov_cell long, cov_level int"
-    )
-    levels = sorted({r[2] for r in cov_rows})
-
-    # Single-key banded-prefix join (see spatial_join: the cell id's
-    # lsb encodes its level, so the level equality is implied).
-    prefix_cols = F.array(
-        *[_parent_col(F.col(leaf_col), lvl) for lvl in levels]
-    )
-    probe = docs.withColumn("_prefix", F.explode(prefix_cols))
-    joined = probe.join(
-        F.broadcast(cov_df.drop("cov_level")),
-        F.col("_prefix") == F.col("cov_cell"),
-        "inner",
+    Returns docs columns + line_id for docs within max_distance_rad of
+    the polyline."""
+    joined, verts_by_line = _polyline_candidates(
+        spark, docs, polylines, max_distance_rad, leaf_col
     )
 
     @F.pandas_udf(BooleanType())
     def within(lat: pd.Series, lon: pd.Series, line_id: pd.Series) -> pd.Series:
-        n = len(lat)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
+        out = np.zeros(len(lat), dtype=bool)
+        if len(lat) == 0:
             return pd.Series(out)
-        pts = geom.latlng_to_xyz(
-            np.radians(lat.to_numpy(np.float64)),
-            np.radians(lon.to_numpy(np.float64)),
-        )
-        lid_arr = line_id.to_numpy(np.int64)
-        for lid in np.unique(lid_arr):
-            mask = lid_arr == lid
-            verts = verts_by_line[int(lid)]
-            best = np.full(mask.sum(), np.inf)
+        for lid, mask, pts in _line_groups(lat, lon, line_id):
+            verts = verts_by_line[lid]
+            best = np.full(len(pts), np.inf)
             for k in range(len(verts) - 1):
-                d = geom.edge_distance_radians(
-                    pts[mask], verts[k], verts[k + 1]
-                )
+                d = geom.edge_distance_radians(pts, verts[k], verts[k + 1])
                 best = np.minimum(best, d)
             out[mask] = best <= max_distance_rad
         return pd.Series(out)
 
-    # expanded coverings are normalized (disjoint), so each doc matches
-    # at most one covering cell per line: no dedup shuffle needed
-    out_cols = [*docs.columns, "line_id"]
     return joined.where(
         within(F.col(lat_col), F.col(lon_col), F.col("line_id"))
-    ).select(*out_cols)
+    ).select(*docs.columns, "line_id")
+
+
+_PROJECTION = StructType(
+    [
+        StructField("dist_rad", DoubleType()),
+        StructField("fraction", DoubleType()),
+        StructField("proj_lat", DoubleType()),
+        StructField("proj_lon", DoubleType()),
+    ]
+)
 
 
 def polyline_project_join(
@@ -110,65 +125,36 @@ def polyline_project_join(
     of each polyline, annotated with the exact distance, the arc-length
     fraction of the projection, and the projected point
     (S2Polyline.project / interpolate semantics via
-    s2core.edges.polyline_project)."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..s2core.edges import polyline_project
-
-    verts_by_line = {
-        int(s["line_id"]): geom.normalize(
-            geom.latlng_to_xyz(
-                np.radians(np.asarray(s["vertices"], dtype=np.float64)[:, 0]),
-                np.radians(np.asarray(s["vertices"], dtype=np.float64)[:, 1]),
-            )
-        )
-        for s in polylines
-    }
-
-    candidates = polyline_proximity_join(
-        spark, docs, polylines, max_distance_rad,
-        lat_col=lat_col, lon_col=lon_col, leaf_col=leaf_col,
+    s2core.edges.polyline_project).  The projection runs once on the
+    candidates; its distance is the proximity refine."""
+    joined, verts_by_line = _polyline_candidates(
+        spark, docs, polylines, max_distance_rad, leaf_col
     )
 
-    proj_type = StructType(
-        [
-            StructField("dist_rad", DoubleType()),
-            StructField("fraction", DoubleType()),
-            StructField("proj_lat", DoubleType()),
-            StructField("proj_lon", DoubleType()),
-        ]
-    )
-
-    @F.pandas_udf(proj_type)
+    @F.pandas_udf(_PROJECTION)
     def project(lat: pd.Series, lon: pd.Series, line_id: pd.Series) -> pd.DataFrame:
-        n = len(lat)
-        out = {
-            "dist_rad": np.zeros(n), "fraction": np.zeros(n),
-            "proj_lat": np.zeros(n), "proj_lon": np.zeros(n),
-        }
-        if n:
-            pts = geom.latlng_to_xyz(
-                np.radians(lat.to_numpy(np.float64)),
-                np.radians(lon.to_numpy(np.float64)),
-            )
-            lid_arr = line_id.to_numpy(np.int64)
-            for lid in np.unique(lid_arr):
-                mask = lid_arr == lid
-                cp, d, fr = polyline_project(pts[mask], verts_by_line[int(lid)])
-                plat, plng = geom.xyz_to_latlng(cp)
-                out["dist_rad"][mask] = d
-                out["fraction"][mask] = fr
-                out["proj_lat"][mask] = np.degrees(plat)
-                out["proj_lon"][mask] = np.degrees(plng)
+        out = {name: np.zeros(len(lat)) for name in _PROJECTION.fieldNames()}
+        if len(lat) == 0:
+            return pd.DataFrame(out)
+        for lid, mask, pts in _line_groups(lat, lon, line_id):
+            cp, d, fr = polyline_project(pts, verts_by_line[lid])
+            plat, plng = geom.xyz_to_latlng(cp)
+            out["dist_rad"][mask] = d
+            out["fraction"][mask] = fr
+            out["proj_lat"][mask] = np.degrees(plat)
+            out["proj_lon"][mask] = np.degrees(plng)
         return pd.DataFrame(out)
 
-    proj = project(F.col(lat_col), F.col(lon_col), F.col("line_id"))
-    return candidates.withColumn("_p", proj).select(
-        *candidates.columns,
-        F.col("_p.dist_rad").alias("dist_rad"),
-        F.col("_p.fraction").alias("fraction"),
-        F.col("_p.proj_lat").alias("proj_lat"),
-        F.col("_p.proj_lon").alias("proj_lon"),
+    # Marked nondeterministic only so the optimizer cannot push the
+    # distance filter below this projection: that would substitute the
+    # UDF into the filter and evaluate it twice.
+    proj = project.asNondeterministic()(
+        F.col(lat_col), F.col(lon_col), F.col("line_id")
+    )
+    return (
+        joined.select(*docs.columns, "line_id", proj.alias("_p"))
+        .where(F.col("_p.dist_rad") <= F.lit(max_distance_rad))
+        .select(*docs.columns, "line_id", "_p.*")
     )
 
 
@@ -177,8 +163,8 @@ def _ancestors(cell: int) -> list[int]:
     """cell + every proper ancestor up to the face (driver-side)."""
     out = [cell]
     c = cell
-    while _lvl(c) > 0:
-        c = _parent1_int(c)
+    while cid.level_scalar(c) > 0:
+        c = cid.parent1_scalar(c)
         out.append(c)
     return out
 
@@ -196,10 +182,28 @@ def use_edge_index(n_data_edges: int, n_query_edges: int) -> bool:
     return n_data_edges > 100 and n_query_edges > 30
 
 
-def _parent1_int(c: int) -> int:
-    lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-    nl = lsb << 2
-    return (c & (~(nl - 1)) & 0xFFFFFFFFFFFFFFFF) | nl
+@F.pandas_udf(BooleanType())
+def _crosses(*cols: pd.Series) -> pd.Series:
+    """Vectorized robustCrossing > 0 of edge AB vs edge CD, from the
+    12 endpoint columns ax..bz, cx..dz."""
+    if len(cols[0]) == 0:
+        return pd.Series([], dtype=bool)
+    m = [c.to_numpy(np.float64) for c in cols]
+    a = np.stack(m[0:3], axis=1)
+    b = np.stack(m[3:6], axis=1)
+    c_ = np.stack(m[6:9], axis=1)
+    d = np.stack(m[9:12], axis=1)
+    return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
+
+
+def _count_crossings(pairs: DataFrame, *keys: str) -> DataFrame:
+    """Edge pairs with a proper crossing, counted per ``keys``."""
+    endpoints = [F.col(p + x) for p in "abcd" for x in "xyz"]
+    return (
+        pairs.where(_crosses(*endpoints))
+        .groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_crossings"))
+    )
 
 
 def polyline_region_crossing_join(
@@ -302,9 +306,9 @@ def polyline_region_crossing_join(
         for rid, re, c, d in redge_xyz:
             cov, _ = edge_covering(c, d)
             for cell in cov:
-                rcell_raw.append((rid, re, _sig(cell)))
+                rcell_raw.append((rid, re, cid.to_signed_scalar(cell)))
                 for anc in _ancestors(cell):
-                    rcell_anc.append((rid, re, _sig(anc)))
+                    rcell_anc.append((rid, re, cid.to_signed_scalar(anc)))
         raw_df = spark.createDataFrame(
             rcell_raw, "region_id long, redge long, rcell long"
         ).distinct()
@@ -320,8 +324,8 @@ def polyline_region_crossing_join(
                 (
                     lid, k,
                     *[float(x) for x in a], *[float(x) for x in b],
-                    [_sig(c) for c in cov],
-                    [_sig(c) for c in anc],
+                    [cid.to_signed_scalar(c) for c in cov],
+                    [cid.to_signed_scalar(c) for c in anc],
                 )
             )
         ledges = spark.createDataFrame(
@@ -353,28 +357,7 @@ def polyline_region_crossing_join(
         ["line_id", "ledge"],
     ).join(F.broadcast(redges), ["region_id", "redge"])
 
-    @F.pandas_udf(BooleanType())
-    def crosses(*cols: pd.Series) -> pd.Series:
-        if len(cols[0]) == 0:
-            return pd.Series([], dtype=bool)
-        m = [c.to_numpy(np.float64) for c in cols]
-        a = np.stack(m[0:3], axis=1)
-        b = np.stack(m[3:6], axis=1)
-        c_ = np.stack(m[6:9], axis=1)
-        d = np.stack(m[9:12], axis=1)
-        return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
-
-    hit = pairs.where(
-        crosses(
-            F.col("ax"), F.col("ay"), F.col("az"),
-            F.col("bx"), F.col("by"), F.col("bz"),
-            F.col("cx"), F.col("cy"), F.col("cz"),
-            F.col("dx"), F.col("dy"), F.col("dz"),
-        )
-    )
-    return hit.groupBy("line_id", "region_id").agg(
-        F.count(F.lit(1)).alias("n_crossings")
-    )
+    return _count_crossings(pairs, "line_id", "region_id")
 
 
 def polyline_region_crossings_numpy(
@@ -498,7 +481,7 @@ def polyline_self_crossing_join(
         out = []
         for i in range(n):
             cov, _ = edge_covering(a[i], b[i])
-            out.append([_sig(c) for c in cov])
+            out.append([cid.to_signed_scalar(c) for c in cov])
         return pd.Series(out)
 
     covered = edges.withColumn(
@@ -510,7 +493,7 @@ def polyline_self_crossing_join(
     )
     # ancestor chain natively: parent at each level <= the cell's own
     # (garbage parents above the cell's level are filtered by level)
-    from ..functions.sql_bitops import s2_level, s2_parent as s2_parent_col
+    from ..functions.sql_bitops import s2_level
 
     raw = covered.select(
         "line_id", "edge", F.explode("cells").alias("cell")
@@ -523,7 +506,6 @@ def polyline_self_crossing_join(
             F.transform(anc_levels, lambda lv: _parent_dyn(F.col("cell"), lv))
         ).alias("cell"),
     ).distinct()
-    _ = s2_parent_col
     cand = (
         anc.alias("pa")
         .join(
@@ -561,31 +543,7 @@ def _self_crossing_refine(edges: DataFrame, cand: DataFrame) -> DataFrame:
         F.col("by").alias("dy"), F.col("bz").alias("dz"),
     )
     pairs = cand.join(ea, ["line_a", "edge_a"]).join(eb, ["line_b", "edge_b"])
-
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def crosses(*cols: pd.Series) -> pd.Series:
-        if len(cols[0]) == 0:
-            return pd.Series([], dtype=bool)
-        m = [c.to_numpy(np.float64) for c in cols]
-        a = np.stack(m[0:3], axis=1)
-        b = np.stack(m[3:6], axis=1)
-        c_ = np.stack(m[6:9], axis=1)
-        d = np.stack(m[9:12], axis=1)
-        return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
-
-    hit = pairs.where(
-        crosses(
-            F.col("ax"), F.col("ay"), F.col("az"),
-            F.col("bx"), F.col("by"), F.col("bz"),
-            F.col("cx"), F.col("cy"), F.col("cz"),
-            F.col("dx"), F.col("dy"), F.col("dz"),
-        )
-    )
-    return hit.groupBy("line_a", "line_b").agg(
-        F.count(F.lit(1)).alias("n_crossings")
-    )
+    return _count_crossings(pairs, "line_a", "line_b")
 
 
 def _parent_dyn(cell, level):

@@ -4,12 +4,11 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
 ``S2EdgeIndex`` probe, S2EdgeIndex.php:85-147,385-448):
 
 1. **Plan-time covering build (driver)**: for each region, compute an
-   exterior covering (candidate superset) and an interior covering
-   (containment-certain subset).  Interior cells are subtracted from
-   the exterior set so each candidate row is either ``is_interior``
-   (skip refine) or boundary (needs the exact kernel) — the
-   filter/refine optimization the reference encodes as interior
-   coverings (S2RegionCoverer.php:257-267).
+   exterior covering (candidate superset) and flag each of its cells
+   with an exact ``contains_cell`` test, so each candidate row is
+   either ``is_interior`` (skip refine) or boundary (needs the exact
+   kernel) — the filter/refine optimization the reference encodes as
+   interior coverings (S2RegionCoverer.php:257-267).
 
 2. **Broadcast equi-join on banded prefixes**: each covering cell at
    level L matches probes via ``s2_parent(leaf_id, L) = cell_id`` — a
@@ -24,6 +23,17 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
    rect interval) via a pandas UDF over Arrow batches; interior
    matches pass through untouched.
 
+Each step has one definition, shared by :func:`spatial_join`, its
+region-table twin :func:`spatial_join_region_table` and the polyline
+joins: :func:`covering_rows` (cover one region), :func:`covering_candidates`
+(prefix explode + equi-join) and ``_refine_points`` (the refine kernel).
+
+Driver-side coverings are memoized in process and on disk under
+``$TMPDIR/s2spark_covering_cache``, keyed on the region specs, the
+coverer parameters and a digest of the s2core sources: a change to the
+coverer, cell or region code re-keys the cache, so it never serves
+coverings computed by other code.
+
 At 100 TB scale: stage 2 is map-side only (scan -> project -> BHJ);
 the only shuffles in a typical pipeline are the caller's final
 aggregations.  Skewed hot tiles don't matter for the join itself
@@ -33,25 +43,30 @@ downstream groupBys and is provided by ``tiling.salted_repartition``.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
 import os
 import tempfile
+from importlib import resources
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
-    DoubleType,
     IntegerType,
     LongType,
     StructField,
     StructType,
 )
 
+from .. import s2core
+from ..functions.sql_bitops import s2_parent
 from ..s2core import cellid as cid
+from ..s2core import geom
+from ..s2core.cell import Cell
 from ..s2core.coverer import RegionCoverer, normalize_cell_union
 from ..s2core.region import Region, region_from_params
 
@@ -75,16 +90,16 @@ COVERING_SCHEMA = StructType(
 JOIN_LEVEL_GRID = (4, 7, 10, 13)
 
 
-def compute_coverings(
-    regions: list[dict],
-    max_cells: int = 96,
-    min_level: int = JOIN_LEVEL_GRID[0],
-    max_level: int = JOIN_LEVEL_GRID[-1],
-    level_mod: int = 3,
+def covering_rows(
+    region: Region,
+    region_id: int,
+    max_cells: int,
+    min_level: int,
+    max_level: int,
+    level_mod: int,
 ) -> list[tuple[int, int, int, bool]]:
-    """Driver-side covering rows: (region_id, cell_id_signed, level,
-    is_interior).  Memoized — coverings are deterministic functions of
-    the region spec + parameters.
+    """One region's covering rows: (region_id, cell_id_signed, level,
+    is_interior).
 
     The exterior covering (disjoint, grid-conformant via the coverer's
     min_level/level_mod) is the candidate set; each cell is then
@@ -93,13 +108,41 @@ def compute_coverings(
     without a second covering pass.  Disjointness guarantees a probe
     matches at most one covering row per region, so the join needs no
     dedup shuffle."""
+    exterior = RegionCoverer(
+        min_level=min_level,
+        max_level=max_level,
+        level_mod=level_mod,
+        max_cells=max_cells,
+    ).get_covering(region)
+    return [
+        (
+            region_id,
+            cid.to_signed_scalar(c),
+            cid.level_scalar(c),
+            bool(region.contains_cell(Cell(c))),
+        )
+        for c in exterior
+    ]
+
+
+def compute_coverings(
+    regions: list[dict],
+    max_cells: int = 96,
+    min_level: int = JOIN_LEVEL_GRID[0],
+    max_level: int = JOIN_LEVEL_GRID[-1],
+    level_mod: int = 3,
+) -> list[tuple[int, int, int, bool]]:
+    """Driver-side covering rows (:func:`covering_rows`) of every
+    region.  Memoized in process and on disk: coverings are
+    deterministic functions of the region spec, the parameters and the
+    s2core code (:func:`_s2core_digest`)."""
     key = (
         tuple(
             (r["region_id"], r["kind"], tuple(r["params"]),
              tuple(r.get("loop_offsets") or ()))
             for r in regions
         ),
-        max_cells, min_level, max_level, level_mod, 3,
+        max_cells, min_level, max_level, level_mod, _s2core_digest(),
     )
     cached = _COVERING_CACHE.get(key)
     if cached is not None:
@@ -108,23 +151,17 @@ def compute_coverings(
     if disk is not None:
         _COVERING_CACHE[key] = disk
         return disk
-    from ..s2core.cell import Cell
-
     rows: list[tuple[int, int, int, bool]] = []
     for spec in regions:
         region = region_from_params(
             spec["kind"], spec["params"], spec.get("loop_offsets")
         )
-        rid = int(spec["region_id"])
-        exterior = RegionCoverer(
-            min_level=min_level,
-            max_level=max_level,
-            level_mod=level_mod,
-            max_cells=max_cells,
-        ).get_covering(region)
-        for c in exterior:
-            is_interior = region.contains_cell(Cell(c))
-            rows.append((rid, _sig(c), _lvl(c), bool(is_interior)))
+        rows.extend(
+            covering_rows(
+                region, int(spec["region_id"]),
+                max_cells, min_level, max_level, level_mod,
+            )
+        )
     _COVERING_CACHE[key] = rows
     _disk_cache_store(key, rows)
     return rows
@@ -134,27 +171,40 @@ _COVERING_CACHE: dict = {}
 _DISK_CACHE_DIR = os.path.join(tempfile.gettempdir(), "s2spark_covering_cache")
 
 
-def _disk_key(key) -> str:
-    import hashlib
+@functools.cache
+def _s2core_digest() -> str:
+    """Digest of every s2core source file, computed once per process:
+    a coverer, cell or region change re-keys the covering caches, so a
+    cache entry never outlives the code that filled it."""
+    h = hashlib.sha256()
+    for f in sorted(resources.files(s2core).iterdir(), key=lambda f: f.name):
+        if f.name.endswith(".py"):
+            h.update(f.name.encode())
+            h.update(f.read_bytes())
+    return h.hexdigest()
 
-    return hashlib.md5(repr(key).encode()).hexdigest()
+
+def _disk_path(key) -> str:
+    digest = hashlib.md5(repr(key).encode()).hexdigest()
+    return os.path.join(_DISK_CACHE_DIR, digest + ".json")
 
 
 def _disk_cache_load(key):
     """Coverings are pure functions of the region specs; cache across
-    processes so repeated bench/driver runs skip the coverer."""
-    path = os.path.join(_DISK_CACHE_DIR, _disk_key(key) + ".json")
+    processes so repeated bench/driver runs skip the coverer.  An
+    unreadable or malformed file (e.g. truncated) is a miss."""
     try:
-        with open(path) as f:
-            return [tuple(r) for r in json.load(f)]
-    except (OSError, ValueError):
+        with open(_disk_path(key)) as f:
+            rows = [tuple(r) for r in json.load(f)]
+    except (OSError, ValueError, TypeError):
         return None
+    return rows if all(len(r) == 4 for r in rows) else None
 
 
 def _disk_cache_store(key, rows) -> None:
     try:
         os.makedirs(_DISK_CACHE_DIR, exist_ok=True)
-        path = os.path.join(_DISK_CACHE_DIR, _disk_key(key) + ".json")
+        path = _disk_path(key)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump([list(r) for r in rows], f)
@@ -163,41 +213,12 @@ def _disk_cache_store(key, rows) -> None:
         pass
 
 
-def cell_union_difference(
-    a_cells: list[int], b_cells: list[int], grid: tuple[int, ...] | None = None
-) -> list[int]:
+def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
     """Cell set A \\ B (S2CellUnion getDifference semantics,
     S2CellUnion.php:227-313 family): split A cells recursively until
-    disjoint from or contained in B.
-
-    With ``grid``, output cells are additionally split down to the
-    nearest grid level (keeps the banded-prefix join's explosion factor
-    at len(grid))."""
-    grid_set = set(grid) if grid else None
-
-    def on_grid(c: int) -> bool:
-        if grid_set is None:
-            return True
-        lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-        level = 30 - ((lsb.bit_length() - 1) >> 1)
-        return level in grid_set
-
+    disjoint from or contained in B."""
     if not b_cells:
-        out0: list[int] = []
-
-        def snap(c: int) -> None:
-            if on_grid(c):
-                out0.append(c)
-                return
-            lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-            child = c - lsb + (lsb >> 2)
-            step = (lsb >> 2) << 1
-            for k in range(4):
-                snap(child + k * step)
-
-        for c in (x & 0xFFFFFFFFFFFFFFFF for x in a_cells):
-            snap(c)
-        return out0
+        return [x & 0xFFFFFFFFFFFFFFFF for x in a_cells]
     b_ranges = sorted(
         ((c - ((c & -c) - 1)) & 0xFFFFFFFFFFFFFFFF,
          (c + ((c & -c) - 1)) & 0xFFFFFFFFFFFFFFFF)
@@ -220,17 +241,12 @@ def cell_union_difference(
 
     def rec(c: int) -> None:
         lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-        lo, hi = c - (lsb - 1), c + (lsb - 1)
-        state = overlaps(lo, hi)
-        if state == "none" and on_grid(c):
-            out.append(c)
-            return
+        state = overlaps(c - (lsb - 1), c + (lsb - 1))
         if state == "full":
             return
-        if lsb == 1:  # leaf that still partially overlaps: keep
+        if state == "none" or lsb == 1:  # a partial leaf is kept
             out.append(c)
             return
-        # split into 4 children (also used to snap onto the grid)
         child = c - lsb + (lsb >> 2)
         step = (lsb >> 2) << 1
         for k in range(4):
@@ -238,19 +254,7 @@ def cell_union_difference(
 
     for c in (x & 0xFFFFFFFFFFFFFFFF for x in a_cells):
         rec(c)
-    if grid_set is None:
-        return normalize_cell_union(out)
-    return sorted(out)  # already disjoint; normalize would leave the grid
-
-
-def _sig(u: int) -> int:
-    u &= 0xFFFFFFFFFFFFFFFF
-    return u - (1 << 64) if u >= 1 << 63 else u
-
-
-def _lvl(u: int) -> int:
-    lsb = u & (-u & 0xFFFFFFFFFFFFFFFF)
-    return cid.MAX_LEVEL - ((lsb.bit_length() - 1) >> 1)
+    return normalize_cell_union(out)
 
 
 def build_covering_table(
@@ -308,14 +312,53 @@ def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
     return out
 
 
-def _refine_udf(regions: list[dict]):
-    """Pandas UDF closure: exact containment for (lat, lon, region_id)
-    batches. Region objects are rebuilt once per executor (closure
-    serialization), then containment is one vectorized kernel call per
-    region present in the batch."""
+def _refine_points(
+    lat: pd.Series,
+    lon: pd.Series,
+    region_id: pd.Series,
+    is_interior: pd.Series,
+    cache: dict[int, Region],
+    build,
+) -> pd.Series:
+    """Refine kernel shared by both covering joins: exact containment
+    for (lat, lon, region_id) batches, one vectorized kernel call per
+    region present in the batch.  ``build(rid, mask)`` rebuilds a
+    region missing from the per-worker ``cache``."""
+    n = len(lat)
+    out = np.zeros(n, dtype=bool)
+    if n == 0:
+        return pd.Series(out)
+    # Interior-covering matches are containment-certain: pass
+    # through with zero kernel work (the filter/refine split).
+    interior = is_interior.to_numpy(bool)
+    out[interior] = True
+    todo = ~interior
+    if not np.any(todo):
+        return pd.Series(out)
+    rid_arr = region_id.to_numpy(np.int64)
+    pts = geom.latlng_to_xyz(
+        np.radians(lat.to_numpy(np.float64)),
+        np.radians(lon.to_numpy(np.float64)),
+    )
+    for rid in np.unique(rid_arr[todo]):
+        mask = todo & (rid_arr == rid)
+        if int(rid) not in cache:
+            cache[int(rid)] = build(int(rid), mask)
+        out[mask] = cache[int(rid)].contains_points(pts[mask])
+    return pd.Series(out)
 
+
+def _refine_udf(regions: list[dict]):
+    """Refine UDF with the regions in its closure: rebuilt once per
+    executor (closure serialization)."""
     specs = {int(r["region_id"]): r for r in regions}
     cache: dict[int, Region] = {}
+
+    def build(rid: int, _mask) -> Region:
+        spec = specs[rid]
+        return region_from_params(
+            spec["kind"], spec["params"], spec.get("loop_offsets")
+        )
 
     @F.pandas_udf(BooleanType())
     def refine(
@@ -324,34 +367,33 @@ def _refine_udf(regions: list[dict]):
         region_id: pd.Series,
         is_interior: pd.Series,
     ) -> pd.Series:
-        from ..s2core import geom
-
-        n = len(lat)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        # Interior-covering matches are containment-certain: pass
-        # through with zero kernel work (the filter/refine split).
-        interior = is_interior.to_numpy(bool)
-        out[interior] = True
-        todo = ~interior
-        if not np.any(todo):
-            return pd.Series(out)
-        rid_arr = region_id.to_numpy(np.int64)
-        lat_arr = np.radians(lat.to_numpy(np.float64))
-        lon_arr = np.radians(lon.to_numpy(np.float64))
-        pts = geom.latlng_to_xyz(lat_arr, lon_arr)
-        for rid in np.unique(rid_arr[todo]):
-            spec = specs[int(rid)]
-            if int(rid) not in cache:
-                cache[int(rid)] = region_from_params(
-                    spec["kind"], spec["params"], spec.get("loop_offsets")
-                )
-            mask = todo & (rid_arr == rid)
-            out[mask] = cache[int(rid)].contains_points(pts[mask])
-        return pd.Series(out)
+        return _refine_points(lat, lon, region_id, is_interior, cache, build)
 
     return refine
+
+
+def covering_candidates(
+    docs: DataFrame,
+    cov: DataFrame,
+    levels,
+    leaf_col: str,
+    broadcast: bool = True,
+) -> DataFrame:
+    """Banded-prefix candidate join: ``docs`` rows x covering rows whose
+    ``cov_cell`` is an ancestor of the row's leaf.
+
+    Probe side: one prefix key per covering level (a plain long-array
+    explode; stays narrow, no shuffle).  A single equi-key suffices: a
+    cell id's lowest set bit encodes its level (S2CellId.php:211-243),
+    so s2_parent(leaf, L') = cov_cell already implies L' = cov_level —
+    no second join key, no struct materialization through the exploded
+    rows.  With ``broadcast`` the covering side is broadcast."""
+    prefixes = F.array(*[s2_parent(F.col(leaf_col), lvl) for lvl in levels])
+    probe = docs.withColumn("_prefix", F.explode(prefixes))
+    cov_side = cov.drop("cov_level")
+    if broadcast:
+        cov_side = F.broadcast(cov_side)
+    return probe.join(cov_side, F.col("_prefix") == F.col("cov_cell"), "inner")
 
 
 def spatial_join(
@@ -375,30 +417,12 @@ def spatial_join(
 
     if prefilter:
         docs = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
-
-    # Probe side: one prefix key per covering level present (a plain
-    # long-array explode; stays narrow, no shuffle).  A single equi-key
-    # suffices: a cell id's lowest set bit encodes its level
-    # (S2CellId.php:211-243), so s2_parent(leaf, L') = cov_cell already
-    # implies L' = cov_level — no second join key, no struct
-    # materialization through the exploded rows.
-    prefix_cols = F.array(
-        *[_parent_col(F.col(leaf_col), lvl) for lvl in levels]
-    )
-    probe = docs.withColumn("_prefix", F.explode(prefix_cols))
-
-    joined = probe.join(
-        F.broadcast(cov.drop("cov_level")),
-        F.col("_prefix") == F.col("cov_cell"),
-        "inner",
-    )
+    joined = covering_candidates(docs, cov, levels, leaf_col)
 
     # Covering rows are disjoint per region, so no dedup is needed.
     # SINGLE pass: the refine kernel receives is_interior and passes
     # interior matches through untouched (masked, zero kernel work) —
     # avoids a union that would re-execute the probe subtree twice.
-    doc_cols = [c for c in docs.columns]
-    out_cols = [*doc_cols, "region_id"]
     refine = _refine_udf(regions)
     return joined.where(
         refine(
@@ -407,13 +431,7 @@ def spatial_join(
             F.col("region_id"),
             F.col("is_interior"),
         )
-    ).select(*out_cols)
-
-
-def _parent_col(cell_id, level: int):
-    lsb = 1 << (2 * (cid.MAX_LEVEL - level))
-    neg = _sig(-lsb & 0xFFFFFFFFFFFFFFFF)
-    return cell_id.bitwiseAND(F.lit(neg)).bitwiseOR(F.lit(lsb))
+    ).select(*docs.columns, "region_id")
 
 
 # --- distributed region path (large region sets, SURVEY.md §3.2) ---------------
@@ -438,6 +456,14 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
     return spark.createDataFrame(rows, REGION_TABLE_SCHEMA)
 
 
+def _region_from_row(kind, params, loop_offsets) -> Region:
+    return region_from_params(
+        kind,
+        [float(x) for x in params],
+        None if loop_offsets is None else [int(x) for x in loop_offsets],
+    )
+
+
 def build_covering_table_distributed(
     regions_df: DataFrame,
     max_cells: int = 8,
@@ -452,44 +478,26 @@ def build_covering_table_distributed(
     parallel.  Output schema matches COVERING_SCHEMA."""
 
     def gen(batches):
-        from ..s2core.cell import Cell
-
         for pdf in batches:
-            out = {
-                "region_id": [], "cov_cell": [], "cov_level": [],
-                "is_interior": [],
-            }
+            rows = []
             for row in pdf.itertuples(index=False):
-                offsets = (
-                    None if row.loop_offsets is None
-                    else [int(x) for x in row.loop_offsets]
-                )
-                region = region_from_params(
-                    row.kind, [float(x) for x in row.params], offsets
-                )
-                exterior = RegionCoverer(
-                    min_level=min_level,
-                    max_level=max_level,
-                    level_mod=level_mod,
-                    max_cells=max_cells,
-                ).get_covering(region)
-                for c in exterior:
-                    out["region_id"].append(int(row.region_id))
-                    out["cov_cell"].append(_sig(c))
-                    out["cov_level"].append(_lvl(c))
-                    out["is_interior"].append(
-                        bool(region.contains_cell(Cell(c)))
+                rows.extend(
+                    covering_rows(
+                        _region_from_row(row.kind, row.params, row.loop_offsets),
+                        int(row.region_id),
+                        max_cells, min_level, max_level, level_mod,
                     )
-            yield pd.DataFrame(out)
+                )
+            yield pd.DataFrame(rows, columns=COVERING_SCHEMA.fieldNames())
 
     return regions_df.mapInPandas(gen, COVERING_SCHEMA)
 
 
 def _refine_udf_from_table():
-    """Refine kernel for the distributed-region path: region geometry
+    """Refine UDF for the distributed-region path: region geometry
     arrives per-row (joined from the region table) instead of via a
     driver closure, so the region set size is unbounded.  Regions are
-    rebuilt once per (batch, region_id) group and memoized per worker."""
+    rebuilt from their first row in a batch and memoized per worker."""
     cache: dict[int, Region] = {}
 
     @F.pandas_udf(BooleanType())
@@ -502,34 +510,13 @@ def _refine_udf_from_table():
         params: pd.Series,
         loop_offsets: pd.Series,
     ) -> pd.Series:
-        from ..s2core import geom
+        def build(_rid: int, mask) -> Region:
+            i = int(np.argmax(mask))
+            return _region_from_row(
+                kind.iloc[i], params.iloc[i], loop_offsets.iloc[i]
+            )
 
-        n = len(lat)
-        out = np.zeros(n, dtype=bool)
-        if n == 0:
-            return pd.Series(out)
-        interior = is_interior.to_numpy(bool)
-        out[interior] = True
-        todo = ~interior
-        if not np.any(todo):
-            return pd.Series(out)
-        rid_arr = region_id.to_numpy(np.int64)
-        pts = geom.latlng_to_xyz(
-            np.radians(lat.to_numpy(np.float64)),
-            np.radians(lon.to_numpy(np.float64)),
-        )
-        for rid in np.unique(rid_arr[todo]):
-            mask = todo & (rid_arr == rid)
-            if int(rid) not in cache:
-                i = int(np.argmax(mask))
-                offs = loop_offsets.iloc[i]
-                cache[int(rid)] = region_from_params(
-                    kind.iloc[i],
-                    [float(x) for x in params.iloc[i]],
-                    None if offs is None else [int(x) for x in offs],
-                )
-            out[mask] = cache[int(rid)].contains_points(pts[mask])
-        return pd.Series(out)
+        return _refine_points(lat, lon, region_id, is_interior, cache, build)
 
     return refine
 
@@ -552,26 +539,18 @@ def spatial_join_region_table(
     joins fall back to shuffle joins and the path scales to region
     sets far beyond driver memory."""
     cov = build_covering_table_distributed(regions_df, max_cells=max_cells)
-    prefix_cols = F.array(
-        *[_parent_col(F.col(leaf_col), lvl) for lvl in JOIN_LEVEL_GRID]
-    )
-    probe = docs.withColumn("_prefix", F.explode(prefix_cols))
-    cov_side = cov.drop("cov_level")
-    if broadcast_covering:
-        cov_side = F.broadcast(cov_side)
-    joined = probe.join(
-        cov_side, F.col("_prefix") == F.col("cov_cell"), "inner"
+    joined = covering_candidates(
+        docs, cov, JOIN_LEVEL_GRID, leaf_col, broadcast_covering
     )
     reg_side = regions_df
     if broadcast_covering:
         reg_side = F.broadcast(reg_side)
     joined = joined.join(reg_side, "region_id", "inner")
     refine = _refine_udf_from_table()
-    out_cols = [*docs.columns, "region_id"]
     return joined.where(
         refine(
             F.col(lat_col), F.col(lon_col), F.col("region_id"),
             F.col("is_interior"), F.col("kind"), F.col("params"),
             F.col("loop_offsets"),
         )
-    ).select(*out_cols)
+    ).select(*docs.columns, "region_id")

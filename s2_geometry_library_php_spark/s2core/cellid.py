@@ -554,6 +554,18 @@ def level_scalar(cell_id: int) -> int:
     return MAX_LEVEL - ((lsb.bit_length() - 1) >> 1)
 
 
+def parent1_scalar(cell_id: int) -> int:
+    """Parent one level up (S2CellId.php:330-340 with level - 1)."""
+    new_lsb = (cell_id & (-cell_id & 0xFFFFFFFFFFFFFFFF)) << 2
+    return (cell_id & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
+
+
+def to_signed_scalar(cell_id: int) -> int:
+    """uint64 bit pattern -> int64, for one python int (Spark LongType)."""
+    cell_id &= 0xFFFFFFFFFFFFFFFF
+    return cell_id - (1 << 64) if cell_id >= 1 << 63 else cell_id
+
+
 def st_to_uv_scalar(s: float) -> float:
     if s >= 0:
         return (1.0 / 3.0) * ((1.0 + s) * (1.0 + s) - 1.0)

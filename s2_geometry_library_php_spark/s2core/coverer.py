@@ -261,7 +261,7 @@ def normalize_cell_union(ids: list[int]) -> list[int]:
             output.pop()
             output.pop()
             output.pop()
-            i = _parent1(i)
+            i = cid.parent1_scalar(i)
         output.append(i)
     return output
 
@@ -272,15 +272,6 @@ def _lsb(i: int) -> int:
 
 def _is_face(i: int) -> bool:
     return (i & ((1 << 60) - 1)) == 0
-
-
-def _parent1(i: int) -> int:
-    new_lsb = _lsb(i) << 2
-    return (i & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
-
-
-def _level(i: int) -> int:
-    return cid.MAX_LEVEL - (_lsb(i).bit_length() - 1) // 2
 
 
 def _range(i: int) -> tuple[int, int]:
@@ -297,7 +288,7 @@ def denormalize(ids: list[int], min_level: int, level_mod: int) -> list[int]:
     """Re-expand to satisfy min_level/level_mod (S2CellUnion.php:111-135)."""
     out: list[int] = []
     for i in ids:
-        level = _level(i)
+        level = cid.level_scalar(i)
         new_level = max(min_level, level)
         if level_mod > 1:
             new_level += (cid.MAX_LEVEL - (new_level - min_level)) % level_mod
@@ -341,7 +332,7 @@ def expand_by_radius(
     """(S2CellUnion.php:395-415): pick expansion level from MIN_WIDTH."""
     min_level = cid.MAX_LEVEL
     for i in ids:
-        min_level = min(min_level, _level(i))
+        min_level = min(min_level, cid.level_scalar(i))
     radius_level = MIN_WIDTH.get_max_level(min_radius_rad)
     if radius_level == 0 and min_radius_rad > MIN_WIDTH.get_value(0):
         ids = expand_cell_union(ids, 0)
@@ -371,7 +362,7 @@ def simple_covering(region: Region, start_id: int, level: int) -> list[int]:
 
 
 def _parent_at(i: int, level: int) -> int:
-    if _level(i) <= level:
+    if cid.level_scalar(i) <= level:
         return i
     new_lsb = 1 << (2 * (cid.MAX_LEVEL - level))
     return (i & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb

@@ -42,16 +42,10 @@ def _containing_cell(*points: np.ndarray) -> int | None:
         return None
     cells = ids
     while len(set(cells)) > 1:
-        cells = [_parent1(c) for c in cells]
+        cells = [cid.parent1_scalar(c) for c in cells]
         if cid.level_scalar(cells[0]) == 0:
             break
     return cells[0] if len(set(cells)) == 1 else None
-
-
-def _parent1(c: int) -> int:
-    lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-    new_lsb = lsb << 2
-    return (c & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
 
 
 def edge_covering(
@@ -343,7 +337,8 @@ def edge_closest_point(
     x = np.atleast_2d(x)
     ab = geom.robust_cross_prod(a, b)
     ab_unit = ab / np.linalg.norm(ab)
-    proj = x - np.outer(x @ ab_unit, ab_unit)
+    # geom.dot keeps each row's bits batch-invariant (edge_distance_radians)
+    proj = x - np.outer(geom.dot(x, ab_unit), ab_unit)
     pn = np.linalg.norm(proj, axis=1)
     # degenerate projections (x parallel to the edge normal) fall back
     # to the endpoint branch via on_segment=False

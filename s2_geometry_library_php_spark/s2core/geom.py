@@ -494,7 +494,10 @@ def edge_distance_radians(
     on_segment = simple_ccw_vec(a_cross_b, a, x) & simple_ccw_vec(
         x, b, a_cross_b
     )
-    sin_dist = np.abs(x @ a_cross_b) / np.linalg.norm(a_cross_b)
+    # geom.dot, not ``x @``: a BLAS matrix-vector product rounds a row
+    # differently depending on its position in the batch, and Spark
+    # hands this kernel batches of arbitrary composition.
+    sin_dist = np.abs(dot(x, a_cross_b)) / np.linalg.norm(a_cross_b)
     seg_dist = np.arcsin(np.minimum(1.0, sin_dist))
     lin2 = np.minimum(norm2(x - a), norm2(x - b))
     end_dist = 2.0 * np.arcsin(np.minimum(1.0, 0.5 * np.sqrt(lin2)))

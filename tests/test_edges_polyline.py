@@ -107,6 +107,70 @@ def test_polyline_proximity_join_matches_brute_force(spark, docs):
     assert got == expected
 
 
+def test_polyline_project_join_matches_brute_force(spark, docs):
+    """Every doc projected onto every line by the numpy kernel, kept
+    within D: same (doc_id, line_id) set, same doubles to the bit."""
+    from s2_geometry_library_php_spark.operators.polyline_join import (
+        polyline_project_join,
+    )
+
+    polylines = [
+        {"line_id": 1, "vertices": [[48.5, 1.8], [48.9, 2.4], [49.3, 3.0]]},
+        {"line_id": 2, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]},
+        {"line_id": 3, "vertices": [[-20.0, 175.0], [-12.0, -178.0], [-5.0, -170.0]]},
+    ]
+    dist = 0.1  # ~640 km: the antimeridian chain reaches a few docs
+    d = docs.select("doc_id", "lat", "lon", "cell_id")
+    got = {
+        (int(r.doc_id), int(r.line_id)): (r.dist_rad, r.fraction, r.proj_lat, r.proj_lon)
+        for r in polyline_project_join(spark, d, polylines, dist).collect()
+    }
+    pdf = d.toPandas()
+    pts = geom.latlng_to_xyz(
+        np.radians(pdf.lat.to_numpy()), np.radians(pdf.lon.to_numpy())
+    )
+    expected = {}
+    for spec in polylines:
+        v = np.asarray(spec["vertices"], dtype=np.float64)
+        verts = geom.normalize(
+            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+        )
+        cp, dd, fr = edges.polyline_project(pts, verts)
+        plat, plng = geom.xyz_to_latlng(cp)
+        for i in np.flatnonzero(dd <= dist):
+            expected[(int(pdf.doc_id[i]), spec["line_id"])] = (
+                float(dd[i]), float(fr[i]),
+                float(np.degrees(plat[i])), float(np.degrees(plng[i])),
+            )
+    assert {lid for _, lid in expected} == {1, 2, 3}
+    assert got.keys() == expected.keys()
+    for key, values in expected.items():
+        assert got[key] == values, key
+
+
+def test_polyline_project_is_batch_invariant():
+    """A row's projection does not depend on the rows batched with it
+    (Spark's Arrow batches have arbitrary composition): every chunking
+    and order gives the same bits as the whole array."""
+    rng = np.random.default_rng(11)
+    v = np.asarray([[-20.0, 175.0], [-12.0, -178.0], [-5.0, -170.0]])
+    verts = geom.normalize(
+        geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+    )
+    pts = geom.latlng_to_xyz(
+        np.radians(rng.uniform(-25, 0, 2000)),
+        np.radians(rng.uniform(170, 195, 2000)),
+    )
+    whole = edges.polyline_project(pts, verts)
+    for k in (1, 3, 7, 13):
+        parts = [edges.polyline_project(pts[i : i + k], verts) for i in range(0, len(pts), k)]
+        for j in range(3):
+            assert np.array_equal(np.concatenate([p[j] for p in parts]), whole[j])
+    perm = rng.permutation(len(pts))
+    for got, want in zip(edges.polyline_project(pts[perm], verts), whole):
+        assert np.array_equal(got, want[perm])
+
+
 def test_polyline_interpolate_project_roundtrip():
     import numpy as np
 

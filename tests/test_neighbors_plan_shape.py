@@ -1,10 +1,13 @@
-"""Plan shape of the neighbors operators: every Python kernel crosses
-into Python once per row.  A kNN round evaluates only the caller's docs
-encode (its probe rings are a driver-built local relation); the radius
-join evaluates the left encode and the fused right ring kernel.  No
-filter on a Python UDF's output may sit under a second ArrowEvalPython
-(the optimizer's inferred ``isnotnull(join key)`` pushed below the
-projection that computes the key would evaluate the UDF twice)."""
+"""Plan shape of the neighbors and covering-join operators: every
+Python kernel crosses into Python once per row.  A kNN round evaluates
+only the caller's docs encode (its probe rings are a driver-built local
+relation); the radius join evaluates the left encode and the fused
+right ring kernel.  No filter on a Python UDF's output may sit under a
+second ArrowEvalPython (the optimizer's inferred ``isnotnull(join key)``
+pushed below the projection that computes the key would evaluate the
+UDF twice).  The covering joins (point-in-region, its region-table
+twin, polyline projection) explode banded prefixes into a broadcast
+equi-join and cross into Python once, for the refine."""
 
 import re
 
@@ -20,8 +23,15 @@ from s2_geometry_library_php_spark.operators.knn import (
     probe_ring_frame,
     ring_round_topk,
 )
+from s2_geometry_library_php_spark.operators.polyline_join import polyline_project_join
 from s2_geometry_library_php_spark.operators.radius_join import within_radius_join
+from s2_geometry_library_php_spark.operators.spatial_join import (
+    regions_to_df,
+    spatial_join,
+    spatial_join_region_table,
+)
 from s2_geometry_library_php_spark.s2core import cellid as cid
+from s2_geometry_library_php_spark.sources import region_fixtures
 
 PYTHON_NODES = re.compile(r"(ArrowEvalPython|MapIn\w+|FlatMapGroupsIn\w+)\b")
 
@@ -45,21 +55,31 @@ def _python_nodes(nodes):
     return [t for _, t in nodes if PYTHON_NODES.match(t)]
 
 
+def _ancestors(nodes, i):
+    """Node texts on the path from node ``i`` up to the root."""
+    out = []
+    d = nodes[i][0]
+    for up_depth, up_text in reversed(nodes[:i]):
+        if up_depth < d:
+            d = up_depth
+            out.append(up_text)
+    return out
+
+
 def _udf_filters_under_python(nodes):
     """Filters on a pythonUDF output that have an ArrowEvalPython
     ancestor: each marks a UDF evaluated twice."""
-    bad = []
-    for i, (depth, text) in enumerate(nodes):
-        if not (text.startswith("Filter") and "pythonUDF" in text):
-            continue
-        d = depth
-        for up_depth, up_text in reversed(nodes[:i]):
-            if up_depth < d:
-                d = up_depth
-                if up_text.startswith("ArrowEvalPython"):
-                    bad.append(text)
-                    break
-    return bad
+    return [
+        text
+        for i, (_, text) in enumerate(nodes)
+        if text.startswith("Filter")
+        and "pythonUDF" in text
+        and any(t.startswith("ArrowEvalPython") for t in _ancestors(nodes, i))
+    ]
+
+
+def _names(nodes, prefix):
+    return [t for _, t in nodes if t.startswith(prefix)]
 
 
 @pytest.fixture(scope="module")
@@ -81,6 +101,22 @@ def points(spark, tmp_path_factory):
         "doc_id long, lat double, lon double",
     ).write.parquet(path)
     return spark.read.parquet(path)
+
+
+@pytest.fixture(scope="module")
+def encoded(spark, points, tmp_path_factory):
+    """The points with their leaf cell id already on disk, so a join
+    plan's only Python nodes are its own."""
+    path = str(tmp_path_factory.mktemp("enc") / "encoded")
+    points.withColumn("cell_id", s2_cell_id("lat", "lon")).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _assert_banded_prefix_join(nodes):
+    generates = [i for i, (_, t) in enumerate(nodes) if t.startswith("Generate")]
+    assert len(generates) == 1
+    assert any(t.startswith("BroadcastHashJoin") for t in _ancestors(nodes, generates[0]))
+    assert _names(nodes, "SortMergeJoin") == []
 
 
 def test_knn_round_evaluates_only_the_docs_encode(spark, points):
@@ -124,3 +160,29 @@ def test_radius_join_evaluates_each_kernel_once(spark, points):
         assert sum("s2_cell_id" in t for t in python) == 1
         assert sum("s2_ring_cells_udf" in t for t in python) == 1
         assert _udf_filters_under_python(nodes) == []
+
+
+def test_spatial_join_crosses_once_for_the_refine(spark, encoded):
+    nodes = _executed_nodes(spatial_join(spark, encoded, region_fixtures()))
+    python = _python_nodes(nodes)
+    assert len(python) == 1 and python[0].startswith("ArrowEvalPython [refine(")
+    _assert_banded_prefix_join(nodes)
+
+
+def test_region_table_join_covers_in_one_map_and_refines_once(spark, encoded):
+    nodes = _executed_nodes(
+        spatial_join_region_table(spark, encoded, regions_to_df(spark, region_fixtures()))
+    )
+    assert len(_names(nodes, "MapInPandas")) == 1
+    assert len(_names(nodes, "ArrowEvalPython")) == 1
+    assert len(_python_nodes(nodes)) == 2
+    _assert_banded_prefix_join(nodes)
+
+
+def test_polyline_project_join_projects_once(spark, encoded):
+    lines = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]}]
+    nodes = _executed_nodes(polyline_project_join(spark, encoded, lines, 0.2))
+    python = _python_nodes(nodes)
+    assert len(python) == 1 and python[0].startswith("ArrowEvalPython")
+    assert _udf_filters_under_python(nodes) == []
+    _assert_banded_prefix_join(nodes)

@@ -5,6 +5,8 @@ and cited in README:
 * flagship spatial join: scan -> project (prefix array explode) ->
   BroadcastHashJoin (no shuffle of the probe side) -> ArrowEvalPython
   (refine) -> two-exchange aggregate with partial aggregation;
+* polyline project join: the same banded-prefix BroadcastHashJoin
+  with a single ArrowEvalPython (projection + distance refine);
 * parquet scans show PushedFilters / narrow ReadSchema (column
   pruning drops text/html when not selected);
 * bitwise tile math stays inside WholeStageCodegen (no Python).
@@ -75,6 +77,24 @@ def main() -> None:
                 spark,
                 docs.select("doc_id", "lat", "lon", "cell_id"),
                 region_fixtures(),
+            ),
+        )
+    )
+    from s2_geometry_library_php_spark.operators.polyline_join import (
+        polyline_project_join,
+    )
+
+    plans.append(
+        (
+            "polyline project join (buffered edge coverings on the same "
+            "banded-prefix BroadcastHashJoin; one ArrowEvalPython projects "
+            "the candidates and its distance is the proximity refine, the "
+            "docs encode is the only other Python node)",
+            polyline_project_join(
+                spark,
+                docs.select("doc_id", "lat", "lon", "cell_id"),
+                [{"line_id": 1, "vertices": [[48.5, 1.8], [48.9, 2.4], [49.3, 3.0]]}],
+                0.01,
             ),
         )
     )
@@ -227,11 +247,13 @@ def main() -> None:
     for rid, cell_s, _lvl, _interior in cov:
         u = cell_s & 0xFFFFFFFFFFFFFFFF
         lsb = u & (-u & 0xFFFFFFFFFFFFFFFF)
-
-        def _sig(v):
-            return v - (1 << 64) if v >= 1 << 63 else v
-
-        rrows.append((int(rid), _sig(u - (lsb - 1)), _sig(u + (lsb - 1))))
+        rrows.append(
+            (
+                int(rid),
+                cid.to_signed_scalar(u - (lsb - 1)),
+                cid.to_signed_scalar(u + (lsb - 1)),
+            )
+        )
     spark.createDataFrame(
         rrows, "region_id long, cell_min long, cell_max long"
     ).createOrReplaceTempView("ex_cov_ranges")
