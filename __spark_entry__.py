@@ -1292,7 +1292,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         Gopher-style repetition signals + benchmark-decontamination
         flag + DSIR importance score in one row per doc (merges r2's
         lang_id / quality / token_count; r4 adds functions/
-        quality_gates.repetition_columns, functions/decontaminate and
+        quality_gates.repetition_columns_ppm, functions/decontaminate and
         functions/importance — benchmark AND DSIR target are the
         deterministic doc_id % 83 slice, n=3 / 512 buckets because
         the synthetic vocabulary is tiny).  The importance score is
@@ -1322,12 +1322,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = decontaminate(docs, bench, n=3, mode="flag")
         wts = bucket_weights(bench, docs, n_buckets=TA_DSIR_BUCKETS)
         docs = importance_scores(docs, wts, n_buckets=TA_DSIR_BUCKETS)
-        # r5: the quality/repetition ratios ship as PPM BIGINTs
-        # (pure integer arithmetic in BOTH engines) — the float
-        # `round(x, 6)` forms are value-identical locally but
-        # hash-fragile across engine versions, and this row went
-        # red in CORRECTNESS_r04 despite a full-precision local
-        # match.  Integer-exact columns remove the entire class.
+        # The quality/repetition ratios are PPM BIGINTs (pure integer
+        # arithmetic in BOTH engines), the one definition the corpus
+        # pipeline's gates also read.  The float `round(x, 6)` forms
+        # they replaced were hash-fragile across engine versions.
         cols = quality_columns_ppm("text")
         rep = repetition_columns_ppm("text")
         base = docs.select(

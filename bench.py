@@ -26,7 +26,7 @@ def _run_suite(spark, sf_dir: str) -> tuple[dict, dict]:
     from s2_geometry_library_php_spark.functions.dedup import minhash_band_pairs
     from s2_geometry_library_php_spark.functions.text import (
         lang_id_column,
-        quality_columns,
+        quality_columns_ppm,
         token_count_column,
     )
     from s2_geometry_library_php_spark.operators import (
@@ -495,7 +495,7 @@ def _run_suite(spark, sf_dir: str) -> tuple[dict, dict]:
     extras["release_survivors"] = n_release
 
     def text_pipeline():
-        cols = quality_columns("text")
+        cols = quality_columns_ppm("text")
         return (
             docs.select(
                 "doc_id",
@@ -504,7 +504,7 @@ def _run_suite(spark, sf_dir: str) -> tuple[dict, dict]:
                 *[c.alias(n) for n, c in cols.items()],
             )
             .groupBy("lang_pred")
-            .agg(F.sum("n_tokens"), F.avg("punct_ratio"))
+            .agg(F.sum("n_tokens"), F.avg("punct_ratio_ppm"))
             .count()
         )
 
@@ -809,8 +809,10 @@ def scaling_compare(
 
 
 def main() -> None:
+    from s2_geometry_library_php_spark.plans import default_cores
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     scaling = "--scaling" in sys.argv

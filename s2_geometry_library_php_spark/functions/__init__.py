@@ -20,6 +20,4 @@ from .udfs import (  # noqa: F401
     s2_cell_id,
     s2_cell_vertices_udf,
     s2_distance_rad,
-    s2_id_from_token_udf,
-    s2_token_udf,
 )

@@ -1,9 +1,12 @@
 """Repetition-based quality gates for web-corpus cleaning
 (Gopher / C4-style rules: Rae et al. 2021 §A1.1, Raffel et al. 2020).
 
-Five per-document repetition signals, each a pure native Spark SQL
-expression (JVM-side, whole-stage codegen — no Python in the hot
-path) with an exact DuckDB twin for the driver's oracle checks:
+Five per-document repetition signals, each an integer in parts per
+million — ``(numerator * 1_000_000) // denominator`` on BIGINTs, no
+doubles anywhere — with one definition spelled three ways: native
+Spark Columns (:func:`repetition_columns_ppm`), DuckDB text for the
+driver's oracle (:func:`repetition_duckdb_ppm`) and the Python kernel
+of the Arrow gate (:func:`repetition_signals_ppm`):
 
 - ``dup_line_fraction``        — fraction of lines that repeat an
   earlier line (Gopher's duplicate-line rule; lines split on ``\\n``).
@@ -21,14 +24,21 @@ path) with an exact DuckDB twin for the driver's oracle checks:
 - ``dup_5gram_fraction``       — fraction of word 5-gram occurrences
   that repeat an earlier one.
 
+Decision rule: thresholds stay ratios in the API
+(:data:`DEFAULT_THRESHOLDS`, ``clean_corpus(repetition_thresholds=,
+max_punct_ratio=)``); each becomes ``round(t * 1_000_000)`` once per
+gate build, and the gate is an exact integer comparison — a document
+is kept iff ``signal_ppm < limit_ppm`` for every repetition signal
+(``punct_ratio_ppm <= limit_ppm`` for the punctuation gate).  The
+earlier float rule rounded the ratio half-up to 6 decimals and then
+compared; the two rules can disagree only when a ratio lies within
+1e-6 of its threshold, which for two-decimal thresholds needs a
+denominator above 10^4 characters, lines or grams.
+
 Scale shape: every signal is a per-row projection — linear in corpus
-size, no shuffle, no UDF.  Per-document cost is O(g log g) in the
-grams of that document (array_sort + one aggregate scan for the
-top-``n``-gram argmax; the duplicate-line char sum is a linear
-identity) — round 4 replaced the original per-distinct ``filter``
-counts, which were quadratic in document length and pathological on
-repetitive megabyte pages; at 100 TB everything rides the same single
-scan as the rest of the quality columns.
+size, no shuffle.  Per-document cost is O(g log g) in the grams of
+that document (array_sort + one aggregate scan for the top-``n``-gram
+argmax; the duplicate-line char sum is a linear identity).
 
 There is no reference counterpart (the reference is a geometry
 library); these rules come from the published corpus-cleaning
@@ -40,6 +50,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .text import PPM, _idiv
 
 # Gopher-flavoured default thresholds (Rae et al. 2021 table A1,
 # adapted: our synthetic corpus has no newlines so the line rules
@@ -69,38 +81,18 @@ def _grams(words: Column, n: int) -> Column:
     return F.transform(seq, lambda i: F.concat_ws(" ", F.slice(words, i, n)))
 
 
-def _top_gram_char_fraction(grams: Column, n_chars: Column) -> Column:
-    """count(most frequent gram) * length(gram) / total chars.
-
-    Deterministic argmax on both engines: max count, ties to the
-    lexicographically smallest gram.
-
-    Formulation: one ``aggregate`` scan over the *sorted* gram array,
-    tracking the current run length and the best (count, gram) so far;
-    the strict ``>`` update keeps the smallest gram among equal-count
-    runs because sorted order visits it first.  O(G log G) in the
-    grams per document — replaces the per-distinct-gram ``filter``
-    count, which was O(distinct x total) and quadratic in document
-    length (pathological on repetitive megabyte documents; corpus
-    scale is unaffected either way, this is a per-row bound).  Values
-    are identical — the hypothesis fuzz pins both against the
-    pure-Python twin.  The DuckDB twin keeps the per-distinct-count
-    spelling (it is an oracle, not a scale path).
-    """
-    best = _top_gram_best(grams)
-    return F.when(
-        (F.size(grams) > 0) & (best["best_c"] >= 2),
-        F.round(
-            (best["best_c"] * F.length(best["best_g"])).cast("double")
-            / F.greatest(n_chars, F.lit(1)),
-            6,
-        ),
-    ).otherwise(F.lit(0.0))
-
-
 def _top_gram_best(grams: Column) -> Column:
-    """The deterministic (best_c, best_g) argmax struct shared by the
-    float and ppm top-gram signals."""
+    """count(most frequent gram) and that gram, as a ``(best_c,
+    best_g)`` struct: max count, ties to the lexicographically smallest
+    gram.
+
+    One ``aggregate`` scan over the *sorted* gram array, tracking the
+    current run length and the best (count, gram) so far; the strict
+    ``>`` update keeps the smallest gram among equal-count runs because
+    sorted order visits it first.  O(G log G) in the grams per document
+    (a per-distinct-gram ``filter`` count would be quadratic in
+    document length).  The DuckDB twin keeps the per-distinct-count
+    spelling (it is an oracle, not a scale path)."""
     sorted_g = F.array_sort(grams)
     init = F.struct(
         F.lit("").alias("cur_g"),
@@ -127,65 +119,12 @@ def _top_gram_best(grams: Column) -> Column:
     return F.aggregate(sorted_g, init, _merge)
 
 
-def _dup_occurrence_fraction(grams: Column) -> Column:
-    """(occurrences - distinct) / occurrences — the fraction of gram
-    occurrences that repeat an earlier one."""
-    n = F.size(grams)
-    return F.when(
-        n > 0,
-        F.round(
-            (n - F.size(F.array_distinct(grams))).cast("double") / n, 6
-        ),
-    ).otherwise(F.lit(0.0))
-
-
-def repetition_columns(text_col: str = "text") -> dict[str, Column]:
-    """The five repetition signals as named native Columns."""
-    text = F.col(text_col)
-    n_chars = F.length(text)
-    words = F.split(text, " ")
-    lines = F.split(text, "\n")
-
-    n_lines = F.size(lines)
-    dup_line_fraction = F.round(
-        (n_lines - F.size(F.array_distinct(lines))).cast("double")
-        / F.greatest(n_lines, F.lit(1)),
-        6,
-    )
-    # chars contributed by occurrences beyond each line's first one:
-    # sum over distinct lines of (count-1)*len == total line chars
-    # minus the chars of one representative per distinct line — an
-    # O(L) identity that replaces the per-distinct-line filter count
-    # (O(distinct x lines), quadratic in document length)
-    line_chars = _sum_long(F.transform(lines, F.length))
-    rep_chars = line_chars - _sum_long(
-        F.transform(F.array_distinct(lines), F.length)
-    )
-    dup_line_char_fraction = F.round(
-        rep_chars.cast("double") / F.greatest(line_chars, F.lit(1)), 6
-    )
-
-    return {
-        "dup_line_fraction": dup_line_fraction,
-        "dup_line_char_fraction": dup_line_char_fraction,
-        "top2gram_char_fraction": _top_gram_char_fraction(
-            _grams(words, 2), n_chars
-        ),
-        "top3gram_char_fraction": _top_gram_char_fraction(
-            _grams(words, 3), n_chars
-        ),
-        "dup_5gram_fraction": _dup_occurrence_fraction(_grams(words, 5)),
-    }
-
-
 def repetition_columns_ppm(text_col: str = "text") -> dict[str, Column]:
-    """Integer-exact (parts-per-million BIGINT) twins of
-    :func:`repetition_columns` — every signal is ``(numerator * 1e6)
-    DIV denominator`` in pure integer arithmetic, bit-identical across
-    engines and engine versions (see text.quality_columns_ppm).  Used
-    by the driver's ``text_analysis`` hash row."""
-    from s2_geometry_library_php_spark.functions.text import PPM, _idiv
-
+    """The five repetition signals as named native BIGINT Columns —
+    every signal is ``(numerator * 1e6) DIV denominator`` in pure
+    integer arithmetic, bit-identical across engines and engine
+    versions (see text.quality_columns_ppm).  Used by the driver's
+    ``text_analysis`` hash row."""
     text = F.col(text_col)
     n_chars = F.length(text).cast("long")
     words = F.split(text, " ")
@@ -195,6 +134,10 @@ def repetition_columns_ppm(text_col: str = "text") -> dict[str, Column]:
 
     n_lines = F.size(lines).cast("long")
     dup_lines = n_lines - F.size(F.array_distinct(lines)).cast("long")
+    # chars contributed by occurrences beyond each line's first one:
+    # sum over distinct lines of (count-1)*len == total line chars
+    # minus the chars of one representative per distinct line, an O(L)
+    # identity
     line_chars = _sum_long(F.transform(lines, F.length))
     rep_chars = line_chars - _sum_long(
         F.transform(F.array_distinct(lines), F.length)
@@ -232,8 +175,6 @@ def repetition_columns_ppm(text_col: str = "text") -> dict[str, Column]:
 def repetition_duckdb_ppm(text_col: str = "text") -> dict[str, str]:
     """DuckDB twins of :func:`repetition_columns_ppm` (`//` floor
     division on BIGINTs, all operands non-negative)."""
-    from s2_geometry_library_php_spark.functions.text import PPM
-
     lines = f"string_split({text_col}, chr(10))"
     g5 = _ddb_grams(text_col, 5)
     rep_chars = (
@@ -275,23 +216,7 @@ def repetition_duckdb_ppm(text_col: str = "text") -> dict[str, str]:
     }
 
 
-def repetition_gate_column(
-    text_col: str = "text",
-    thresholds: dict[str, float] | None = None,
-) -> Column:
-    """True when the document passes ALL repetition thresholds
-    (strictly below each) — the keep-side of a Gopher-style gate."""
-    th = dict(DEFAULT_THRESHOLDS)
-    if thresholds:
-        th.update(thresholds)
-    cols = repetition_columns(text_col)
-    keep = F.lit(True)
-    for name, limit in th.items():
-        keep = keep & (cols[name] < F.lit(float(limit)))
-    return keep
-
-
-# --- Arrow-vectorized twin (the pipeline hot path) ----------------------------
+# --- Arrow-vectorized gate (the pipeline hot path) ---------------------------
 #
 # The native-Column signals above are built from Spark's higher-order
 # collection functions (``transform`` / ``aggregate`` lambdas).  Those
@@ -306,38 +231,22 @@ def repetition_gate_column(
 # Pandas UDF beats the "built-ins only" rule, because the built-in
 # here is not actually codegen'd.
 #
-# Exactness: the gate decision must be BIT-IDENTICAL to the native
-# Column gate (the release pipeline's survivor set is pinned by tests
-# and the bench).  Spark's ``round(x, 6)`` on DoubleType is
-# ``BigDecimal.valueOf(x).setScale(6, HALF_UP)`` where
-# ``BigDecimal.valueOf`` parses ``Double.toString`` — the SHORTEST
-# decimal representation.  Python's ``repr(float)`` is the same
-# shortest representation, so ``Decimal(repr(x)).quantize(1e-6,
-# ROUND_HALF_UP)`` reproduces Spark's rounding exactly (note plain
-# Python ``round`` would NOT: it is half-even).  String tie-breaks
-# compare code points in Python vs UTF-8 bytes in Spark's
-# ``array_sort`` — identical orders, since UTF-8 byte order preserves
-# code-point order.  ``str.split`` / ``len`` count code points like
-# Spark's ``split`` / ``length``.  test_quality_gates.py pins the
-# arrow gate against the native gate on fixtures, real testdata, and
-# a hypothesis fuzz.
+# The kernel computes the same integers as the Columns: Python's ``//``
+# on non-negative ints is BIGINT DIV, string tie-breaks compare code
+# points in Python vs UTF-8 bytes in Spark's ``array_sort`` (identical
+# orders, since UTF-8 byte order preserves code-point order), and
+# ``str.split`` / ``len`` count code points like Spark's ``split`` /
+# ``length``.  test_quality_gates.py pins the kernel and the gate
+# against the Columns on fixtures, real testdata, and a hypothesis
+# fuzz.
 
 
-def repetition_signals_exact(text: str) -> dict[str, float]:
-    """Pure-Python twin of :func:`repetition_columns`, bit-exact
-    including Spark's ROUND HALF_UP semantics (see block comment)."""
+def repetition_signals_ppm(text: str) -> dict[str, int]:
+    """Pure-Python twin of :func:`repetition_columns_ppm` (same keys,
+    same integers)."""
     return {
-        name: sig()
-        for name, sig in _signal_thunks(text).items()
+        f"{name}_ppm": sig() for name, sig in _signal_thunks(text).items()
     }
-
-
-def _round6(x: float) -> float:
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-    )
 
 
 def _signal_thunks(text: str) -> dict:
@@ -348,13 +257,13 @@ def _signal_thunks(text: str) -> dict:
     lines = text.split("\n")
     n_lines = len(lines)
 
-    def dup_line_fraction() -> float:
-        return _round6((n_lines - len(set(lines))) / max(n_lines, 1))
+    def dup_line_fraction() -> int:
+        return (n_lines - len(set(lines))) * PPM // max(n_lines, 1)
 
-    def dup_line_char_fraction() -> float:
+    def dup_line_char_fraction() -> int:
         line_chars = sum(map(len, lines))
         rep_chars = line_chars - sum(map(len, set(lines)))
-        return _round6(rep_chars / max(line_chars, 1))
+        return rep_chars * PPM // max(line_chars, 1)
 
     # words/grams built lazily and cached across the gram signals
     state: dict = {}
@@ -368,16 +277,16 @@ def _signal_thunks(text: str) -> dict:
         w = words()
         return [" ".join(w[i : i + n]) for i in range(len(w) - n + 1)]
 
-    def dup_5gram_fraction() -> float:
+    def dup_5gram_fraction() -> int:
         g = grams(5)
         if not g:
-            return 0.0
-        return _round6((len(g) - len(set(g))) / len(g))
+            return 0
+        return (len(g) - len(set(g))) * PPM // len(g)
 
-    def top_gram(n: int) -> float:
+    def top_gram(n: int) -> int:
         g = grams(n)
         if not g:
-            return 0.0
+            return 0
         counts: dict = {}
         for x in g:
             counts[x] = counts.get(x, 0) + 1
@@ -385,8 +294,8 @@ def _signal_thunks(text: str) -> dict:
         best_c, best_g = min((-c, s) for s, c in counts.items())
         best_c = -best_c
         if best_c < 2:
-            return 0.0
-        return _round6(best_c * len(best_g) / max(len(text), 1))
+            return 0
+        return best_c * len(best_g) * PPM // max(len(text), 1)
 
     return {
         "dup_line_fraction": dup_line_fraction,
@@ -401,19 +310,18 @@ def repetition_gate_arrow(
     text_col: str = "text",
     thresholds: dict[str, float] | None = None,
 ) -> Column:
-    """Arrow-batched twin of :func:`repetition_gate_column` — same
-    keep/drop decision on every document (null text ⇒ dropped by both:
-    the native gate yields NULL, this one False; ``WHERE`` treats them
-    alike), ~40x cheaper per row than the interpreted-lambda Columns.
-    Use in pipeline hot paths; keep the native Columns where the
-    driver's oracle needs a per-signal SQL surface."""
+    """True when the document passes ALL repetition thresholds
+    (``signal_ppm < round(threshold * 1e6)`` for each) — the keep-side
+    of a Gopher-style gate.  ``thresholds`` overrides entries of
+    :data:`DEFAULT_THRESHOLDS`; an unknown signal name raises
+    ``KeyError``.  Null text is dropped."""
     th = dict(DEFAULT_THRESHOLDS)
     if thresholds:
         th.update(thresholds)
-    limits = {k: float(v) for k, v in th.items()}
-    unknown = set(limits) - set(_signal_thunks("").keys())
-    if unknown:  # same loud failure as the native gate's cols[name]
+    unknown = set(th) - set(_signal_thunks(""))
+    if unknown:
         raise KeyError(f"unknown repetition signal(s): {sorted(unknown)}")
+    limits = {k: round(v * PPM) for k, v in th.items()}
 
     @F.pandas_udf("boolean")
     def _gate(batch: pd.Series) -> pd.Series:
@@ -422,7 +330,7 @@ def repetition_gate_arrow(
                 return False
             # thunk order = cheapest first; short-circuit on failure
             for name, sig in _signal_thunks(text).items():
-                if name in limits and not sig() < limits[name]:
+                if not sig() < limits[name]:
                     return False
             return True
 
@@ -439,46 +347,3 @@ def _ddb_grams(text_col: str, n: int) -> str:
         f"list_transform(range(1, len({w}) - {n} + 2), "
         f"i -> array_to_string({w}[i:i+{n - 1}], ' '))"
     )
-
-
-def _ddb_top(text_col: str, n: int) -> str:
-    g = _ddb_grams(text_col, n)
-    best = (
-        f"list_sort(list_transform(list_distinct({g}), "
-        f"gg -> {{'nc': -len(list_filter({g}, x -> x = gg)), 'g': gg}}))[1]"
-    )
-    return (
-        f"CASE WHEN len({g}) > 0 AND -({best}.nc) >= 2 THEN "
-        f"round((-({best}.nc) * length({best}.g)) / "
-        f"CAST(greatest(length({text_col}), 1) AS DOUBLE), 6) "
-        f"ELSE 0.0 END"
-    )
-
-
-def repetition_duckdb(text_col: str = "text") -> dict[str, str]:
-    """DuckDB twins of :func:`repetition_columns` — value-identical
-    SQL for the driver's side-by-side oracle."""
-    lines = f"string_split({text_col}, chr(10))"
-    g5 = _ddb_grams(text_col, 5)
-    rep_chars = (
-        f"list_sum(list_transform(list_distinct({lines}), "
-        f"l -> (len(list_filter({lines}, x -> x = l)) - 1) * length(l)))"
-    )
-    line_chars = f"list_sum(list_transform({lines}, x -> length(x)))"
-    return {
-        "dup_line_fraction": (
-            f"round((len({lines}) - len(list_distinct({lines}))) / "
-            f"CAST(greatest(len({lines}), 1) AS DOUBLE), 6)"
-        ),
-        "dup_line_char_fraction": (
-            f"round(coalesce({rep_chars}, 0) / "
-            f"CAST(greatest(coalesce({line_chars}, 0), 1) AS DOUBLE), 6)"
-        ),
-        "top2gram_char_fraction": _ddb_top(text_col, 2),
-        "top3gram_char_fraction": _ddb_top(text_col, 3),
-        "dup_5gram_fraction": (
-            f"CASE WHEN len({g5}) > 0 THEN "
-            f"round((len({g5}) - len(list_distinct({g5}))) / "
-            f"CAST(len({g5}) AS DOUBLE), 6) ELSE 0.0 END"
-        ),
-    }

@@ -3,7 +3,11 @@ quality scoring, token counting, document fingerprinting.
 
 All implemented as native Spark SQL expressions (JVM-side, whole-stage
 codegen) with exact DuckDB twins for the driver's oracle checks —
-each ``*_SQL`` / ``*_DUCKDB`` pair computes identical values.
+each Column builder and its ``*_duckdb`` twin compute identical
+values.  The quality ratios are integer parts per million
+(``(numerator * 1_000_000) // denominator`` on BIGINTs), the one
+definition the pipeline gates, the driver hash row and the oracle all
+read.
 """
 
 from __future__ import annotations
@@ -63,19 +67,6 @@ def _quote_list_sql(words: list[str]) -> str:
 
 
 # --- language ID -----------------------------------------------------------------
-def lang_id_sql_spark(text_col: str = "text") -> str:
-    """argmax of marker-word votes; CJK codepoints force 'zh';
-    all-zero votes -> 'und'."""
-    votes = []
-    lowered = f"translate({text_col}, '{ASCII_UPPER}', '{ASCII_LOWER}')"
-    for lang, markers in LANG_MARKERS.items():
-        votes.append(
-            f"size(filter(split({lowered}, ' '), "
-            f"w -> array_contains(array({_quote_list_sql(markers)}), w))) AS v_{lang}"
-        )
-    return votes
-
-
 def _membership(markers: list[str]):
     # NB: the lambda must take exactly one arg — a two-arg lambda makes
     # F.filter pass (element, index).
@@ -89,8 +80,6 @@ def lang_id_column(text_col: str = "text") -> Column:
         for lang, markers in LANG_MARKERS.items()
     }
     has_cjk = F.col(text_col).rlike("[\\u4e00-\\u9fff]")
-    best = None
-    best_votes = None
     # deterministic argmax: iterate in fixed order, strict > to switch
     expr = F.lit("und")
     max_v = F.lit(0)
@@ -98,7 +87,6 @@ def lang_id_column(text_col: str = "text") -> Column:
         v = votes[lang]
         expr = F.when(v > max_v, F.lit(lang)).otherwise(expr)
         max_v = F.greatest(max_v, v)
-    _ = best, best_votes
     return F.when(has_cjk, F.lit("zh")).otherwise(expr)
 
 
@@ -140,66 +128,16 @@ _ALNUM_SPACE = (
 
 
 # --- quality scoring ----------------------------------------------------------------
-def quality_columns(text_col: str = "text") -> dict[str, Column]:
-    """Length / punctuation / stopword-ratio quality signals."""
-    text = F.col(text_col)
-    words = F.split(text, " ")
-    n_chars = F.length(text)
-    n_words = F.size(words)
-    n_punct = F.length(F.translate(text, _ALNUM_SPACE, ""))
-    punct_ratio = F.round(
-        n_punct.cast("double") / F.greatest(n_chars, F.lit(1)), 6
-    )
-    stop_hits = F.size(F.filter(words, lambda w: w.isin(STOPWORDS)))
-    stopword_ratio = F.round(
-        stop_hits.cast("double") / F.greatest(n_words, F.lit(1)), 6
-    )
-    mean_word_len = F.round(
-        F.length(F.translate(text, " ", "")).cast("double")
-        / F.greatest(n_words, F.lit(1)),
-        6,
-    )
-    return {
-        "n_chars_computed": n_chars.cast("long"),
-        "n_words": n_words.cast("long"),
-        "punct_ratio": punct_ratio,
-        "stopword_ratio": stopword_ratio,
-        "mean_word_len": mean_word_len,
-    }
-
-
-def quality_duckdb(text_col: str = "text") -> dict[str, str]:
-    stop = _quote_list_sql(STOPWORDS)
-    n_chars = f"length({text_col})"
-    n_words = f"len(string_split({text_col}, ' '))"
-    alnum = f"length(regexp_replace({text_col}, '[^A-Za-z0-9 ]', '', 'g'))"
-    return {
-        "n_chars_computed": f"CAST({n_chars} AS BIGINT)",
-        "n_words": f"CAST({n_words} AS BIGINT)",
-        "punct_ratio": f"round(({n_chars} - {alnum}) / CAST(greatest({n_chars}, 1) AS DOUBLE), 6)",
-        "stopword_ratio": (
-            f"round(len(list_filter(string_split({text_col}, ' '), "
-            f"w -> list_contains([{stop}], w))) / CAST(greatest({n_words}, 1) AS DOUBLE), 6)"
-        ),
-        "mean_word_len": (
-            f"round(length(replace({text_col}, ' ', '')) / "
-            f"CAST(greatest({n_words}, 1) AS DOUBLE), 6)"
-        ),
-    }
-
-
 PPM = 1_000_000  # parts-per-million scale for integer-exact ratios
 
 
 def quality_columns_ppm(text_col: str = "text") -> dict[str, Column]:
-    """Integer-exact twins of :func:`quality_columns`: every ratio is
-    ``(numerator * 1e6) DIV denominator`` in PURE BIGINT arithmetic —
-    no doubles anywhere, so the values are bit-identical across
-    engines, engine VERSIONS, and partitionings (the float ``round(x,
-    6)`` spelling is correct but hash-fragile: a driver environment
-    with a different banker's-rounding half-case in either engine
-    flips the last digit).  Used by the driver's ``text_analysis``
-    hash row; the float forms remain the library API for gates."""
+    """Length / punctuation / stopword-ratio quality signals.  Every
+    ratio is ``(numerator * 1e6) DIV denominator`` in PURE BIGINT
+    arithmetic — no doubles anywhere, so the values are bit-identical
+    across engines, engine versions and partitionings.  Read by
+    ``corpus_pipeline``'s quality gate and the driver's
+    ``text_analysis`` hash row."""
     text = F.col(text_col)
     words = F.split(text, " ")
     n_chars = F.length(text).cast("long")
@@ -269,10 +207,6 @@ def token_count_column(text_col: str = "text") -> Column:
 
 def token_count_duckdb(text_col: str = "text") -> str:
     return f"CAST(len(regexp_extract_all({text_col}, '{TOKEN_REGEX}')) AS BIGINT)"
-
-
-def whitespace_token_count_column(text_col: str = "text") -> Column:
-    return F.size(F.split(F.col(text_col), WS_CLASS + "+")).cast("long")
 
 
 # --- fingerprinting -----------------------------------------------------------------

@@ -18,11 +18,11 @@ from pyspark.sql.types import (
     ArrayType,
     DoubleType,
     LongType,
-    StringType,
 )
 
 from ..s2core import cellid as cid
 from ..s2core import geom
+from .sql_bitops import sql_s2_token
 
 
 @F.pandas_udf(LongType())
@@ -31,19 +31,6 @@ def s2_cell_id(lat: pd.Series, lng: pd.Series) -> pd.Series:
     ids = cid.cell_id_from_latlng_degrees(
         lat.to_numpy(np.float64), lng.to_numpy(np.float64)
     )
-    return pd.Series(cid.to_signed(ids))
-
-
-@F.pandas_udf(StringType())
-def s2_token_udf(cell_id: pd.Series) -> pd.Series:
-    """UDF twin of the native-SQL token expression (API uniformity)."""
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
-    return pd.Series(cid.token_from_id(ids))
-
-
-@F.pandas_udf(LongType())
-def s2_id_from_token_udf(token: pd.Series) -> pd.Series:
-    ids = cid.id_from_token(token.tolist())
     return pd.Series(cid.to_signed(ids))
 
 
@@ -206,41 +193,23 @@ def s2_rect_contains_cols(lat, lon, lat_lo, lat_hi, lng_lo, lng_hi):
     return lat_ok & lng_ok
 
 
-def make_loop_contains_udf(vertices_latlng_deg):
-    """Factory: a pandas UDF `f(lat, lon) -> bool` bound to one loop
-    (vertices broadcast in the closure) — the standalone surface of
-    the refine kernel for users who want a WHERE-clause predicate
-    instead of the covering join."""
-    v = np.asarray(vertices_latlng_deg, dtype=np.float64)
-    verts = geom.normalize(
-        geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-    )
-    origin_inside = geom.loop_origin_inside(verts)
-
-    from pyspark.sql.types import BooleanType
-
-    @F.pandas_udf(BooleanType())
-    def loop_contains(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        if len(lat) == 0:
-            return pd.Series([], dtype=bool)
-        pts = geom.latlng_to_xyz(
-            np.radians(lat.to_numpy(np.float64)),
-            np.radians(lon.to_numpy(np.float64)),
-        )
-        return pd.Series(geom.loop_contains_points(verts, origin_inside, pts))
-
-    return loop_contains
-
-
 def register_sql_functions(spark) -> None:
     """Register the §2.11 public API under SQL names so `spark.sql`
-    users get the same surface as the DataFrame API.  Integer bit ops
-    (s2_level/parent/range/token) additionally have pure-SQL text
-    twins in functions.sql_bitops for hot paths — these registrations
-    are the API-uniformity forms."""
+    users get the same surface as the DataFrame API.  The token codec
+    is SQL-bodied (native expressions, no Python crossing): the token
+    text is ``sql_bitops.sql_s2_token``, and a token that is not 1-16
+    hex digits (``'X'``, garbage, null) decodes to 0 like
+    ``cellid.id_from_token``."""
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION s2_token(cell_id BIGINT) "
+        f"RETURNS STRING RETURN {sql_s2_token('cell_id')}"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION s2_id_from_token(token STRING) "
+        "RETURNS BIGINT RETURN CASE WHEN token RLIKE '^[0-9a-fA-F]{1,16}$' "
+        "THEN CAST(conv(rpad(token, 16, '0'), 16, -10) AS BIGINT) ELSE 0 END"
+    )
     spark.udf.register("s2_cell_id", s2_cell_id)
-    spark.udf.register("s2_token", s2_token_udf)
-    spark.udf.register("s2_id_from_token", s2_id_from_token_udf)
     spark.udf.register("s2_cell_center_lat", s2_cell_center_lat)
     spark.udf.register("s2_cell_center_lng", s2_cell_center_lng)
     spark.udf.register("s2_edge_neighbors", s2_edge_neighbors_udf)

@@ -34,7 +34,7 @@ is the LLM-data-pipeline layer (SURVEY "beyond the reference").
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import s2_cell_id
@@ -45,14 +45,28 @@ from ..functions.paragraph_dedup import strip_duplicate_paragraphs
 from ..functions.urltools import url_dedup
 from ..functions.pii import redact_pii as redact_pii_stage
 from ..functions.text import (
+    PPM,
     lang_id_column,
-    quality_columns,
+    quality_columns_ppm,
     token_count_column,
 )
 
 #: default quality gates — deliberately loose; real corpora tune these
 DEFAULT_MIN_TOKENS = 3
 DEFAULT_MAX_PUNCT_RATIO = 0.5
+
+
+def quality_gate(
+    min_tokens: int = DEFAULT_MIN_TOKENS,
+    max_punct_ratio: float = DEFAULT_MAX_PUNCT_RATIO,
+) -> Column:
+    """Keep-side of the token-count and punctuation gate over
+    :func:`annotate_corpus`'s columns: an exact integer comparison
+    against ``round(max_punct_ratio * 1e6)`` (see the decision-rule
+    note in ``functions/quality_gates``)."""
+    return (F.col("n_tokens") >= F.lit(min_tokens)) & (
+        F.col("punct_ratio_ppm") <= F.lit(round(max_punct_ratio * PPM))
+    )
 
 
 def min_label_components(
@@ -124,10 +138,10 @@ def min_label_components(
 
 def annotate_corpus(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Attach the standard per-document signals as columns: language
-    guess, quality ratios, token count, leaf cell id.  Pure native-SQL
-    expressions — stays inside WholeStageCodegen."""
+    guess, quality ratios (integer ppm), token count, leaf cell id.
+    Pure native-SQL expressions — stays inside WholeStageCodegen."""
     out = docs.withColumn("lang_guess", lang_id_column(text_col))
-    for name, col in quality_columns(text_col).items():
+    for name, col in quality_columns_ppm(text_col).items():
         out = out.withColumn(name, col)
     out = out.withColumn("n_tokens", token_count_column(text_col))
     if "lat" in docs.columns and "lon" in docs.columns:
@@ -208,16 +222,13 @@ def clean_corpus(
         docs = strip_duplicate_spans(docs, text_col, k=strip_substr_dups_k)
     annotated = annotate_corpus(docs, text_col)
 
-    gated = annotated.where(
-        (F.col("n_tokens") >= F.lit(min_tokens))
-        & (F.col("punct_ratio") <= F.lit(max_punct_ratio))
-    )
+    gated = annotated.where(quality_gate(min_tokens, max_punct_ratio))
     if langs is not None:
         gated = gated.where(F.col("lang_guess").isin(list(langs)))
     if repetition_thresholds is not None:
         # Gopher-style repetition gate (quality_gates.py); pass {} for
-        # the published default thresholds.  Arrow-batched twin of the
-        # native-Column gate: same keep/drop decision (parity-pinned in
+        # the published default thresholds.  Arrow-batched: the same
+        # integers as the native ppm Columns (parity-pinned in
         # test_quality_gates.py), ~40x cheaper per row because the
         # native signals ride interpreted higher-order lambdas, not
         # codegen (tools/cold_attribution.py measured them at 111.3s of

@@ -220,8 +220,7 @@ def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
     if not b_cells:
         return [x & 0xFFFFFFFFFFFFFFFF for x in a_cells]
     b_ranges = sorted(
-        ((c - ((c & -c) - 1)) & 0xFFFFFFFFFFFFFFFF,
-         (c + ((c & -c) - 1)) & 0xFFFFFFFFFFFFFFFF)
+        tuple(r & 0xFFFFFFFFFFFFFFFF for r in cid.range_scalar(c))
         for c in (x & 0xFFFFFFFFFFFFFFFF for x in b_cells)
     )
 
@@ -240,17 +239,14 @@ def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
     out: list[int] = []
 
     def rec(c: int) -> None:
-        lsb = c & (-c & 0xFFFFFFFFFFFFFFFF)
-        state = overlaps(c - (lsb - 1), c + (lsb - 1))
+        state = overlaps(*cid.range_scalar(c))
         if state == "full":
             return
-        if state == "none" or lsb == 1:  # a partial leaf is kept
+        if state == "none" or cid.lsb_scalar(c) == 1:  # a partial leaf is kept
             out.append(c)
             return
-        child = c - lsb + (lsb >> 2)
-        step = (lsb >> 2) << 1
-        for k in range(4):
-            rec(child + k * step)
+        for child in cid.children_scalar(c):
+            rec(child)
 
     for c in (x & 0xFFFFFFFFFFFFFFFF for x in a_cells):
         rec(c)

@@ -324,35 +324,6 @@ def salted_repartition_planned(
     return docs.repartition(prefix, salt)
 
 
-def collapse_full_sibling_tiles(
-    tiles: DataFrame, level: int, tile_col: str = "tile_id"
-) -> DataFrame:
-    """Distributed S2CellUnion.normalize step for data-driven tilings
-    (S2CellUnion.php:619-643 semantics at scale): replace complete
-    4-sibling groups at ``level`` by their parent.  One groupBy per
-    level; callers loop level-by-level.
-
-    Returns a DataFrame with the same schema where any complete group
-    of 4 siblings is replaced by one parent row (other columns
-    aggregated by sum for counts)."""
-    parent = s2_parent(F.col(tile_col), level - 1).alias("_parent")
-    grouped = tiles.groupBy(parent).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("doc_count").alias("doc_count"),
-        F.collect_list(tile_col).alias("_members"),
-    )
-    collapsed = grouped.where(F.col("_n") == 4).select(
-        F.col("_parent").alias(tile_col), "doc_count"
-    )
-    kept = (
-        grouped.where(F.col("_n") < 4)
-        .select(F.explode("_members").alias(tile_col))
-        .join(tiles, tile_col, "inner")
-        .select(tile_col, "doc_count")
-    )
-    return collapsed.unionByName(kept)
-
-
 def plan_adaptive_tiling(
     docs: DataFrame,
     target_rows_per_tile: int,

@@ -88,8 +88,9 @@ def trajectory_stats(
         F.col("_x"), F.col("_y"), F.col("_z"),
     )
     stepped = pt.withColumn("_step", step)
-    # endpoints via min/max(struct): ts-ordered with the xyz fields as
-    # a deterministic tiebreak (coincident-timestamp endpoints pick
+    endpoint_key = ("_ts", *order_cols, "_x", "_y", "_z")
+    # endpoints via min/max(struct) in the path order (_ts, *order_cols),
+    # the xyz fields a last deterministic tiebreak (coincident keys pick
     # the lexicographically extreme point — a pure function of input)
     agg = (
         stepped.groupBy("entity")
@@ -101,8 +102,8 @@ def trajectory_stats(
             ),
             F.min("_ts").alias("t_start"),
             F.max("_ts").alias("t_end"),
-            F.min(F.struct("_ts", "_x", "_y", "_z")).alias("_first"),
-            F.max(F.struct("_ts", "_x", "_y", "_z")).alias("_last"),
+            F.min(F.struct(*endpoint_key)).alias("_first"),
+            F.max(F.struct(*endpoint_key)).alias("_last"),
         )
     )
     net = _angle_rad(

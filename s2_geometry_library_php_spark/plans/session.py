@@ -12,6 +12,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``local[N]`` width: ``SPARK_GRAFT_CPUS`` when set, else the CPUs
+    this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, in MiB (``SPARK_DRIVER_MEM`` overrides)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // (1 << 20)}m"
+
+
 def get_spark(
     app_name: str = "s2-spark-engine",
     master: str | None = None,
@@ -41,7 +54,7 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
         )
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
@@ -57,7 +70,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Broadcast the covering table even if stats are conservative.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")

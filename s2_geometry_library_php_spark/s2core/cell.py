@@ -907,10 +907,7 @@ class Cell:
         S2Cell.php:180-212; built from child ids — identical uv bounds)."""
         if self.level >= cid.MAX_LEVEL:
             return []
-        lsb = self.id & (-self.id & 0xFFFFFFFFFFFFFFFF)
-        child = self.id - lsb + (lsb >> 2)
-        step = (lsb >> 2) << 1
-        return [Cell(child + k * step) for k in range(4)]
+        return [Cell(c) for c in cid.children_scalar(self.id)]
 
     def exact_area(self) -> float:
         """(S2Cell.php:306-319)."""

@@ -278,10 +278,6 @@ def cell_id_from_latlng_degrees(lat: np.ndarray, lng: np.ndarray) -> np.ndarray:
 
 
 # --- decode ------------------------------------------------------------------
-def face_of(ids: np.ndarray) -> np.ndarray:
-    return (np.asarray(ids, dtype=np.uint64) >> _U64(POS_BITS)).astype(np.int64)
-
-
 def cell_to_face_ij_orientation(
     ids: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -549,15 +545,50 @@ def decode_scalar(cell_id: int) -> tuple[int, int, int, int]:
     return face, i, j, bits
 
 
+def lsb_scalar(cell_id: int) -> int:
+    """Lowest set bit: the cell's level marker."""
+    return cell_id & (-cell_id & 0xFFFFFFFFFFFFFFFF)
+
+
 def level_scalar(cell_id: int) -> int:
-    lsb = cell_id & (-cell_id & 0xFFFFFFFFFFFFFFFF)
-    return MAX_LEVEL - ((lsb.bit_length() - 1) >> 1)
+    return MAX_LEVEL - ((lsb_scalar(cell_id).bit_length() - 1) >> 1)
 
 
 def parent1_scalar(cell_id: int) -> int:
     """Parent one level up (S2CellId.php:330-340 with level - 1)."""
-    new_lsb = (cell_id & (-cell_id & 0xFFFFFFFFFFFFFFFF)) << 2
+    new_lsb = lsb_scalar(cell_id) << 2
     return (cell_id & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
+
+
+def parent_scalar(cell_id: int, level: int) -> int:
+    """Ancestor at ``level``; the cell itself when it is already at or
+    above that level (S2CellId.php:330-340)."""
+    if level_scalar(cell_id) <= level:
+        return cell_id
+    new_lsb = 1 << (2 * (MAX_LEVEL - level))
+    return (cell_id & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
+
+
+def range_scalar(cell_id: int) -> tuple[int, int]:
+    """(rangeMin, rangeMax): the leaf span of the cell
+    (S2CellId.php:293-302)."""
+    lsb = lsb_scalar(cell_id)
+    return cell_id - (lsb - 1), cell_id + (lsb - 1)
+
+
+def contains_scalar(a: int, b: int) -> bool:
+    """Whether cell ``a`` contains cell ``b`` (``b`` in ``a``'s range)."""
+    lo, hi = range_scalar(a)
+    return lo <= b <= hi
+
+
+def children_scalar(cell_id: int) -> list[int]:
+    """The four children in traversal order (childBegin() stepping
+    by next())."""
+    lsb = lsb_scalar(cell_id)
+    child = cell_id - lsb + (lsb >> 2)
+    step = (lsb >> 2) << 1
+    return [child + k * step for k in range(4)]
 
 
 def to_signed_scalar(cell_id: int) -> int:

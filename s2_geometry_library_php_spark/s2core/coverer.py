@@ -241,14 +241,14 @@ def normalize_cell_union(ids: list[int]) -> list[int]:
     for raw in arr:
         i = raw
         # contained by previous?
-        if output and _contains(output[-1], i):
+        if output and cid.contains_scalar(output[-1], i):
             continue
-        while output and _contains(i, output[-1]):
+        while output and cid.contains_scalar(i, output[-1]):
             output.pop()
         while len(output) >= 3:
             if (output[-3] ^ output[-2] ^ output[-1]) != i:
                 break
-            mask = _lsb(i) << 1
+            mask = cid.lsb_scalar(i) << 1
             mask = ~(mask + (mask << 1)) & 0xFFFFFFFFFFFFFFFF
             masked = i & mask
             if (
@@ -266,22 +266,8 @@ def normalize_cell_union(ids: list[int]) -> list[int]:
     return output
 
 
-def _lsb(i: int) -> int:
-    return i & (-i & 0xFFFFFFFFFFFFFFFF)
-
-
 def _is_face(i: int) -> bool:
     return (i & ((1 << 60) - 1)) == 0
-
-
-def _range(i: int) -> tuple[int, int]:
-    lsb = _lsb(i)
-    return i - (lsb - 1), i + (lsb - 1)
-
-
-def _contains(a: int, b: int) -> bool:
-    lo, hi = _range(a)
-    return lo <= b <= hi
 
 
 def denormalize(ids: list[int], min_level: int, level_mod: int) -> list[int]:
@@ -315,9 +301,9 @@ def expand_cell_union(ids: list[int], level: int) -> list[int]:
     ids = list(ids)
     while i >= 0:
         cell = ids[i]
-        if _lsb(cell) < level_lsb:
-            cell = _parent_at(cell, level)
-            while i > 0 and _contains(cell, ids[i - 1]):
+        if cid.lsb_scalar(cell) < level_lsb:
+            cell = cid.parent_scalar(cell, level)
+            while i > 0 and cid.contains_scalar(cell, ids[i - 1]):
                 i -= 1
         output.append(cell)
         nbrs = cid.all_neighbors(np.asarray([cell], dtype=np.uint64))
@@ -344,7 +330,7 @@ def expand_by_radius(
 def simple_covering(region: Region, start_id: int, level: int) -> list[int]:
     """Fixed-level flood fill from a seed cell
     (S2RegionCoverer.php:478-503)."""
-    start = _parent_at(start_id, level)
+    start = cid.parent_scalar(start_id, level)
     seen = {start}
     frontier = [start]
     output: list[int] = []
@@ -359,22 +345,6 @@ def simple_covering(region: Region, start_id: int, level: int) -> list[int]:
                 seen.add(nbr)
                 frontier.append(nbr)
     return sorted(output)
-
-
-def _parent_at(i: int, level: int) -> int:
-    if cid.level_scalar(i) <= level:
-        return i
-    new_lsb = 1 << (2 * (cid.MAX_LEVEL - level))
-    return (i & (-new_lsb & 0xFFFFFFFFFFFFFFFF)) | new_lsb
-
-
-def covering_area_ratio(region: Region, covering: list[int]) -> float:
-    """Covering area / region area diagnostic (the accuracy metric in
-    S2RegionCoverer.php:172-176)."""
-    total = 0.0
-    for i in covering:
-        total += Cell(i).exact_area()
-    return total
 
 
 # --- cell union measures ------------------------------------------------------

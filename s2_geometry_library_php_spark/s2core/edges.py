@@ -352,13 +352,6 @@ def edge_closest_point(
     return np.where(on_segment[:, None], proj, endpoint)
 
 
-def polyline_length(vertices: np.ndarray) -> float:
-    """Total geodesic length (radians) of an open vertex chain."""
-    return float(
-        np.sum(geom.angle_between(vertices[:-1], vertices[1:]))
-    )
-
-
 def polyline_interpolate(vertices: np.ndarray, fraction: float) -> np.ndarray:
     """Point at ``fraction`` of the polyline's length
     (S2Polyline.interpolate semantics): walk cumulative edge lengths,

@@ -170,17 +170,6 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.readStream.schema(schema).format("parquet").load(stage)
 
 
-def duckdb_documents_cte(sf_dir_or_view: str = "documents") -> str:
-    """The same derivation as a DuckDB CTE body over the pre-registered
-    ``documents`` view — prepend as
-    ``WITH docs AS ({this}) SELECT ... FROM docs``."""
-    return (
-        f"SELECT *, {URL_SQL_DUCKDB} AS url, "
-        f"{GEOCODE_LAT_SQL} AS lat, {GEOCODE_LON_SQL} AS lon "
-        f"FROM {sf_dir_or_view}"
-    )
-
-
 def geocode_numpy(doc_id: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Numpy twin of GEOCODE_*_SQL — identical double arithmetic, used
     to generate kernel-backed oracle fixtures.  Must stay in lockstep

@@ -16,9 +16,10 @@ def spark():
     # parallelism or shuffle fan-out, so CI-style sweeps can rerun
     # the suite at e.g. SPARK_TESTS_MASTER=local[2]
     # SPARK_TESTS_SHUFFLE=3 (odd counts catch boundary assumptions).
+    # Unset, the master is get_spark's host-sized local[N].
     spark = get_spark(
         app_name="s2-tests",
-        master=os.environ.get("SPARK_TESTS_MASTER", "local[8]"),
+        master=os.environ.get("SPARK_TESTS_MASTER"),
         shuffle_partitions=int(
             os.environ.get("SPARK_TESTS_SHUFFLE", "8")
         ),

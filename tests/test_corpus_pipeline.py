@@ -89,7 +89,7 @@ def test_stage_counts_monotone_on_real_docs(spark):
 def test_annotate_adds_signals_without_touching_rows(spark, corpus):
     ann = annotate_corpus(corpus)
     assert ann.count() == corpus.count()
-    for c in ("lang_guess", "punct_ratio", "n_tokens", "cell_id"):
+    for c in ("lang_guess", "punct_ratio_ppm", "n_tokens", "cell_id"):
         assert c in ann.columns
     langs = {r.doc_id: r.lang_guess for r in ann.collect()}
     assert langs[0] == "en" and langs[4] == "de"

@@ -1,6 +1,7 @@
 """Repetition-quality gates (functions/quality_gates.py): crafted
 webtext fixtures vs a pure-Python twin, Spark vs DuckDB twin
-equivalence on real testdata, and the pipeline gate behavior."""
+equivalence on real testdata, and the pipeline gate behavior.  Every
+signal is an integer in parts per million, compared exactly."""
 
 import os
 from collections import Counter
@@ -8,27 +9,41 @@ from collections import Counter
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from s2_geometry_library_php_spark.functions.quality_gates import (
     DEFAULT_THRESHOLDS,
-    repetition_columns,
-    repetition_duckdb,
-    repetition_gate_column,
+    repetition_columns_ppm,
+    repetition_duckdb_ppm,
+    repetition_gate_arrow,
 )
+from s2_geometry_library_php_spark.functions.text import PPM
 
 SF = "/root/testdata/sf0.001"
 
 NAMES = [
-    "dup_line_fraction",
-    "dup_line_char_fraction",
-    "top2gram_char_fraction",
-    "top3gram_char_fraction",
-    "dup_5gram_fraction",
+    "dup_line_fraction_ppm",
+    "dup_line_char_fraction_ppm",
+    "top2gram_char_fraction_ppm",
+    "top3gram_char_fraction_ppm",
+    "dup_5gram_fraction_ppm",
 ]
 
 
-def ref_signals(text: str) -> dict[str, float]:
-    """Pure-Python twin of repetition_columns."""
+def native_gate(thresholds=None):
+    """The Spark ppm Columns checked against the same integer limits
+    as the Arrow gate: keep iff every signal_ppm < round(t * 1e6)."""
+    limits = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
+    cols = repetition_columns_ppm("text")
+    keep = F.lit(True)
+    for name, t in limits.items():
+        keep = keep & (cols[name + "_ppm"] < F.lit(round(t * PPM)))
+    return keep
+
+
+def ref_signals(text: str) -> dict[str, int]:
+    """Pure-Python twin of repetition_columns_ppm, written
+    independently of the gate's kernel."""
     lines = text.split("\n")
     n_lines = len(lines)
     lc = Counter(lines)
@@ -37,34 +52,34 @@ def ref_signals(text: str) -> dict[str, float]:
     words = text.split(" ")
     n_chars = len(text)
 
-    def top(n: int) -> float:
+    def top(n: int) -> int:
         grams = [
             " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
         ]
         if not grams:
-            return 0.0
+            return 0
         cnt = Counter(grams)
         nc, g = min((-c, g) for g, c in cnt.items())
         if -nc < 2:
-            return 0.0
-        return round(-nc * len(g) / max(n_chars, 1), 6)
+            return 0
+        return -nc * len(g) * PPM // max(n_chars, 1)
 
-    def dup(n: int) -> float:
+    def dup(n: int) -> int:
         grams = [
             " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
         ]
         if not grams:
-            return 0.0
-        return round((len(grams) - len(set(grams))) / len(grams), 6)
+            return 0
+        return (len(grams) - len(set(grams))) * PPM // len(grams)
 
     return {
-        "dup_line_fraction": round(
-            (n_lines - len(set(lines))) / max(n_lines, 1), 6
+        "dup_line_fraction_ppm": (
+            (n_lines - len(set(lines))) * PPM // max(n_lines, 1)
         ),
-        "dup_line_char_fraction": round(rep_chars / max(line_chars, 1), 6),
-        "top2gram_char_fraction": top(2),
-        "top3gram_char_fraction": top(3),
-        "dup_5gram_fraction": dup(5),
+        "dup_line_char_fraction_ppm": rep_chars * PPM // max(line_chars, 1),
+        "top2gram_char_fraction_ppm": top(2),
+        "top3gram_char_fraction_ppm": top(3),
+        "dup_5gram_fraction_ppm": dup(5),
     }
 
 
@@ -90,9 +105,7 @@ def fixture_df(spark):
 
 
 def _collect_signals(df):
-    from pyspark.sql import functions as F
-
-    cols = repetition_columns("text")
+    cols = repetition_columns_ppm("text")
     rows = (
         df.select(
             "doc_id", *[c.alias(n) for n, c in cols.items()]
@@ -108,34 +121,30 @@ def test_fixtures_match_python_twin(fixture_df):
     for doc_id, text in FIXTURES:
         want = ref_signals(text)
         for n in NAMES:
-            assert got[doc_id][n] == pytest.approx(want[n], abs=1.5e-6), (
-                doc_id,
-                n,
-                text,
-            )
+            assert got[doc_id][n] == want[n], (doc_id, n, text)
 
 
 def test_fixture_values_sanity(fixture_df):
     got = _collect_signals(fixture_df)
     # 3 of 4 lines identical
-    assert got[1]["dup_line_fraction"] == pytest.approx(0.5)
-    assert got[1]["dup_line_char_fraction"] > 0.4
+    assert got[1]["dup_line_fraction_ppm"] == 500_000
+    assert got[1]["dup_line_char_fraction_ppm"] > 400_000
     # "spam spam" covers nearly all of doc 2
-    assert got[2]["top2gram_char_fraction"] > 0.2
-    assert got[4]["dup_5gram_fraction"] > 0.5
+    assert got[2]["top2gram_char_fraction_ppm"] > 200_000
+    assert got[4]["dup_5gram_fraction_ppm"] > 500_000
     # degenerate docs -> all zeros
     for doc_id in (5, 6):
         for n in NAMES:
-            assert got[doc_id][n] == 0.0
+            assert got[doc_id][n] == 0
     # unique lines -> zero line dup
-    assert got[3]["dup_line_fraction"] == 0.0
+    assert got[3]["dup_line_fraction_ppm"] == 0
 
 
 def test_spark_duckdb_twins_on_fixtures(fixture_df, tmp_path):
     pq = os.path.join(str(tmp_path), "fx.parquet")
     fixture_df.toPandas().to_parquet(pq)
     con = duckdb.connect()
-    exprs = repetition_duckdb("text")
+    exprs = repetition_duckdb_ppm("text")
     sql = "SELECT doc_id, " + ", ".join(
         f"{e} AS {n}" for n, e in exprs.items()
     ) + f" FROM read_parquet('{pq}') ORDER BY doc_id"
@@ -144,34 +153,33 @@ def test_spark_duckdb_twins_on_fixtures(fixture_df, tmp_path):
     for row in ddb:
         doc_id = row[0]
         for i, n in enumerate(NAMES):
-            assert got[doc_id][n] == pytest.approx(row[i + 1], abs=1e-9), (
-                doc_id,
-                n,
-            )
+            assert got[doc_id][n] == row[i + 1], (doc_id, n)
 
 
 def test_spark_duckdb_twins_on_testdata(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     got = _collect_signals(docs)
     con = duckdb.connect()
-    exprs = repetition_duckdb("text")
+    exprs = repetition_duckdb_ppm("text")
     sql = "SELECT doc_id, " + ", ".join(
         f"{e} AS {n}" for n, e in exprs.items()
     ) + f" FROM read_parquet('{SF}/documents.parquet') ORDER BY doc_id"
     mismatches = 0
     for row in con.execute(sql).fetchall():
         for i, n in enumerate(NAMES):
-            if got[row[0]][n] != pytest.approx(row[i + 1], abs=1e-9):
+            if got[row[0]][n] != row[i + 1]:
                 mismatches += 1
     assert mismatches == 0
+    # every signal is a BIGINT in Spark, not a float that compares equal
+    assert all(isinstance(x, int) for v in got.values() for x in v.values())
     # the word-gram signals must be non-trivial on the corpus
-    assert any(v["top2gram_char_fraction"] > 0.05 for v in got.values())
+    assert any(v["top2gram_char_fraction_ppm"] > 50_000 for v in got.values())
 
 
 def test_repetition_gate_keeps_and_drops(fixture_df):
     kept = {
         r["doc_id"]
-        for r in fixture_df.where(repetition_gate_column("text")).collect()
+        for r in fixture_df.where(repetition_gate_arrow("text")).collect()
     }
     # spam/repeat docs fail the gate, clean docs pass
     assert 2 not in kept          # one hot 2-gram
@@ -187,9 +195,36 @@ def test_gate_custom_threshold_overrides(fixture_df):
     # overlapping-gram char fractions can exceed 1.0)
     loose = {n: 10.0 for n in DEFAULT_THRESHOLDS}
     kept = fixture_df.where(
-        repetition_gate_column("text", loose)
+        repetition_gate_arrow("text", loose)
     ).count()
     assert kept == len(FIXTURES)
+
+
+def test_gate_boundary_repetition_strict_punct_inclusive(spark):
+    """A ratio exactly at its threshold: the repetition gate keeps
+    only signal_ppm < limit, so it drops the document; the punctuation
+    gate keeps punct_ratio_ppm <= limit, so it keeps it."""
+    from s2_geometry_library_php_spark.operators.corpus_pipeline import (
+        clean_corpus,
+    )
+
+    # two identical lines: dup_line_fraction == 1/2 exactly
+    rep = spark.createDataFrame([(1, "x y\nx y")], "doc_id long, text string")
+    loose = {n: 10.0 for n in DEFAULT_THRESHOLDS}
+
+    def kept(df, **kw):
+        out = clean_corpus(spark, df, langs=None, near_dup_threshold=None, **kw)
+        return out.count()
+
+    assert kept(rep, repetition_thresholds={**loose, "dup_line_fraction": 0.5}) == 0
+    assert (
+        kept(rep, repetition_thresholds={**loose, "dup_line_fraction": 0.500001})
+        == 1
+    )
+    # one of two characters is punctuation: punct_ratio == 1/2 exactly
+    punct = spark.createDataFrame([(1, "a!")], "doc_id long, text string")
+    assert kept(punct, min_tokens=1, max_punct_ratio=0.5) == 1
+    assert kept(punct, min_tokens=1, max_punct_ratio=0.499999) == 0
 
 
 def test_clean_corpus_repetition_gate_wires_through(spark):
@@ -254,71 +289,10 @@ def test_repetition_fuzz_matches_python_twin(spark, texts):
     )
     got = _collect_signals(df)
     for i, t in enumerate(texts):
-        want = ref_signals(t)
-        for n in NAMES:
-            assert got[i][n] == pytest.approx(want[n], abs=1.5e-6), (n, t)
+        assert got[i] == ref_signals(t), t
 
 
-# --- r5: integer-exact (ppm) twins --------------------------------------------------
-PPM_NAMES = [n + "_ppm" for n in NAMES]
-
-
-def test_ppm_twins_bit_exact_fixtures_and_testdata(spark, fixture_df, tmp_path):
-    """repetition_columns_ppm == repetition_duckdb_ppm by EXACT
-    integer equality (no approx) on the crafted fixtures AND the
-    sf0.001 corpus — plus floor(float_signal * 1e6) consistency
-    within 1 ulp of the ppm value."""
-    from s2_geometry_library_php_spark.functions.quality_gates import (
-        repetition_columns_ppm,
-        repetition_duckdb_ppm,
-    )
-
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    fx = fixture_df.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    both = fx.unionByName(docs.where("doc_id < 200"))
-    cols = repetition_columns_ppm("text")
-    rows = (
-        both.select("doc_id", *[c.alias(n) for n, c in cols.items()])
-        .orderBy("doc_id")
-        .collect()
-    )
-    got = {r["doc_id"]: {n: r[n] for n in PPM_NAMES} for r in rows}
-    # all BIGINT
-    for v in got.values():
-        for n in PPM_NAMES:
-            assert isinstance(v[n], int), n
-
-    pq = os.path.join(str(tmp_path), "both.parquet")
-    both.toPandas().to_parquet(pq)
-    con = duckdb.connect()
-    exprs = repetition_duckdb_ppm("text")
-    sql = (
-        "SELECT doc_id, "
-        + ", ".join(f"{e} AS {n}" for n, e in exprs.items())
-        + f" FROM read_parquet('{pq}') ORDER BY doc_id"
-    )
-    for row in con.execute(sql).fetchall():
-        for i, n in enumerate(PPM_NAMES):
-            assert got[row[0]][n] == row[i + 1], (row[0], n)
-
-    # cross-check against the float signals (same numerators):
-    # ppm DIV result must equal floor(numer*1e6/denom) which the
-    # rounded float reproduces within 1 at the 1e-6 scale
-    fgot = _collect_signals(both)
-    for doc_id, v in fgot.items():
-        for n in NAMES:
-            assert abs(got[doc_id][n + "_ppm"] - v[n] * 1e6) <= 1.0, (
-                doc_id,
-                n,
-            )
-
-
+# --- integer-exact (ppm) twins ------------------------------------------------------
 def test_quality_ppm_twins_bit_exact(spark, tmp_path):
     """text.quality_columns_ppm == text.quality_duckdb_ppm exactly on
     the sf0.001 corpus plus unicode/empty edge rows."""
@@ -364,8 +338,7 @@ def test_quality_ppm_twins_bit_exact(spark, tmp_path):
 
 # --- Arrow gate parity (the pipeline hot path) ---------------------------------------
 from s2_geometry_library_php_spark.functions.quality_gates import (  # noqa: E402
-    repetition_gate_arrow,
-    repetition_signals_exact,
+    repetition_signals_ppm,
 )
 
 # adversarial shapes for the exact twin: words containing newlines
@@ -387,22 +360,18 @@ def parity_df(spark):
 
 
 def test_signals_exact_twin_bit_identical(parity_df):
-    """repetition_signals_exact == the native Columns with EXACT float
-    equality (not approx) — pins the HALF_UP round twin."""
+    """repetition_signals_ppm (the Arrow gate's kernel) == the native
+    ppm Columns, integer for integer."""
     got = _collect_signals(parity_df.where("text is not null"))
     for doc_id, text in FIXTURES + ADVERSARIAL:
-        want = repetition_signals_exact(text)
-        for n in NAMES:
-            assert got[doc_id][n] == want[n], (doc_id, n, text)
+        assert got[doc_id] == repetition_signals_ppm(text), (doc_id, text)
 
 
 def test_arrow_gate_matches_native_on_fixtures(parity_df):
     for th in (None, {}, {"top2gram_char_fraction": 0.11}):
         kept_native = {
             r["doc_id"]
-            for r in parity_df.where(
-                repetition_gate_column("text", th)
-            ).collect()
+            for r in parity_df.where(native_gate(th)).collect()
         }
         kept_arrow = {
             r["doc_id"]
@@ -418,7 +387,7 @@ def test_arrow_gate_matches_native_on_testdata(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     kept_native = {
         r["doc_id"]
-        for r in docs.where(repetition_gate_column("text")).collect()
+        for r in docs.where(native_gate()).collect()
     }
     kept_arrow = {
         r["doc_id"]
@@ -442,7 +411,7 @@ def test_arrow_gate_fuzz_matches_native(spark, texts):
     # tight thresholds so the fuzz actually exercises both branches
     th = {n: 0.12 for n in DEFAULT_THRESHOLDS}
     kept_native = {
-        r["doc_id"] for r in df.where(repetition_gate_column("text", th)).collect()
+        r["doc_id"] for r in df.where(native_gate(th)).collect()
     }
     kept_arrow = {
         r["doc_id"] for r in df.where(repetition_gate_arrow("text", th)).collect()

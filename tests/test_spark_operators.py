@@ -11,7 +11,6 @@ from s2_geometry_library_php_spark.functions import (
     s2_range_max,
     s2_range_min,
     s2_token_sql,
-    s2_token_udf,
 )
 from s2_geometry_library_php_spark.s2core import cellid as cid
 from s2_geometry_library_php_spark.s2core import geom
@@ -27,7 +26,6 @@ def test_sql_bitops_match_kernels(docs):
         s2_range_min(F.col("cell_id")).alias("rmin"),
         s2_range_max(F.col("cell_id")).alias("rmax"),
         s2_token_sql("cell_id").alias("tok"),
-        s2_token_udf(F.col("cell_id")).alias("tok_udf"),
     ).toPandas()
     ids = cid.from_signed(pdf.cell_id.to_numpy(np.int64))
     assert (pdf.lvl == 30).all()
@@ -41,7 +39,6 @@ def test_sql_bitops_match_kernels(docs):
         cid.from_signed(pdf.rmax.to_numpy(np.int64)), cid.range_max(ids)
     )
     assert list(pdf.tok) == cid.token_from_id(ids)
-    assert list(pdf.tok) == list(pdf.tok_udf)
 
 
 def test_spatial_join_matches_brute_force(spark, docs):
@@ -763,6 +760,33 @@ def test_sql_registered_api_surface(spark, docs):
     for r in rows:
         assert r.cid is not None and len(r.tok) >= 1 and -90 <= r.clat <= 90
         assert 0 <= r.d <= np.pi
+    # the SQL-bodied token codec: one cell per level 0-30 plus id 0,
+    # equal to the kernels, round-tripping, and with no Python node
+    leaves = cid.from_signed(
+        docs.select("cell_id").limit(31).toPandas().cell_id.to_numpy(np.int64)
+    )
+    ids = np.array(
+        [0] + [int(cid.parent(leaves[k : k + 1], k)[0]) for k in range(31)],
+        dtype=np.uint64,
+    )
+    spark.createDataFrame(
+        [(int(i),) for i in cid.to_signed(ids)], "cell_id long"
+    ).createOrReplaceTempView("api_cells")
+    codec = spark.sql(
+        "SELECT cell_id, s2_token(cell_id) AS tok, "
+        "s2_id_from_token(s2_token(cell_id)) AS back FROM api_cells"
+    )
+    got = codec.toPandas()
+    assert "ArrowEvalPython" not in (
+        codec._jdf.queryExecution().executedPlan().toString()
+    )
+    assert list(got.tok) == cid.token_from_id(ids)
+    assert (got.back == got.cell_id).all()
+    bad = ["X", "zzz", "", "89c25" * 4]
+    decoded = spark.sql(
+        "SELECT " + ", ".join(f"s2_id_from_token('{t}')" for t in bad)
+    ).first()
+    assert [int(v) for v in decoded] == [int(v) for v in cid.id_from_token(bad)]
     # native region predicates equal the kernels on the corpus
     import math
 

@@ -4,8 +4,10 @@ twin pairs (functions/text.py).
 The driver's oracle hash-check exercises the twins on realistic corpus
 text; this suite pins them on the inputs most likely to diverge between
 the two engines (and between formulations — round 4 switched
-``punct_ratio`` / ``mean_word_len`` from ``regexp_replace`` to
-``translate``, which must count code points identically):
+the punctuation count behind ``punct_ratio_ppm`` / ``mean_word_len_ppm``
+from ``regexp_replace`` to ``translate``, which must count code points
+identically).  Every compared value is an integer or a string, so the
+twins must agree exactly:
 
 * non-BMP characters (emoji — 2 UTF-16 units, 1 code point),
 * CJK (forces 'zh' through the rlike branch),
@@ -26,8 +28,8 @@ from s2_geometry_library_php_spark.functions.text import (
     fingerprint_duckdb,
     lang_id_column,
     lang_id_duckdb,
-    quality_columns,
-    quality_duckdb,
+    quality_columns_ppm,
+    quality_duckdb_ppm,
     token_count_column,
     token_count_duckdb,
 )
@@ -74,7 +76,7 @@ def fixture_path(spark, tmp_path_factory):
 
 def _spark_rows(spark, path):
     df = spark.read.parquet(path)
-    cols = quality_columns("text")
+    cols = quality_columns_ppm("text")
     out = df.select(
         "doc_id",
         lang_id_column("text").alias("lang_pred"),
@@ -86,7 +88,7 @@ def _spark_rows(spark, path):
 
 
 def _duck_rows(path):
-    q = quality_duckdb("text")
+    q = quality_duckdb_ppm("text")
     sql = (
         "SELECT doc_id, "
         f"{lang_id_duckdb('text')} AS lang_pred, "
@@ -107,11 +109,4 @@ def test_text_twins_match_on_adversarial_unicode(spark, fixture_path):
     assert len(got) == len(want) == len(ADVERSARIAL)
     for g, w in zip(got, want):
         for k in w:
-            if isinstance(w[k], float):
-                assert g[k] == pytest.approx(w[k], abs=1e-9), (
-                    g["doc_id"], k, ADVERSARIAL[g["doc_id"]],
-                )
-            else:
-                assert g[k] == w[k], (
-                    g["doc_id"], k, ADVERSARIAL[g["doc_id"]],
-                )
+            assert g[k] == w[k], (g["doc_id"], k, ADVERSARIAL[g["doc_id"]])

@@ -134,6 +134,27 @@ def test_tie_break_determinism(spark):
     assert abs(r1["path_rad"] - math.pi) < 1e-12
 
 
+def test_endpoints_follow_order_cols_on_ts_ties(spark):
+    # both endpoint timestamps tie, and seq order disagrees with xyz
+    # order at each: net_rad must join the first and last points of
+    # the (ts, seq) path, not the xyz-extreme points of the tied ts
+    rows = [
+        (1, 0, 0.0, 0.0, 1),
+        (1, 0, 0.0, 90.0, 2),
+        (1, 1, 10.0, 45.0, 0),
+        (1, 2, 0.0, 120.0, 1),
+        (1, 2, 30.0, 0.0, 0),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, ts long, lat double, lon double, seq long"
+    )
+    (r,) = trajectory_stats(df, order_cols=("seq",)).collect()
+    path = sorted(rows, key=lambda row: (row[1], row[4]))
+    want = _angle(_xyz(*path[0][2:4]), _xyz(*path[-1][2:4]))
+    assert abs(r["net_rad"] - want) < 1e-12
+    assert abs(want - 2 * math.pi / 3) < 1e-12
+
+
 def test_tile_path_compression(spark):
     from s2_geometry_library_php_spark.functions import s2_cell_id
 

@@ -36,6 +36,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from s2_geometry_library_php_spark.plans import default_cores  # noqa: E402
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
@@ -51,7 +53,7 @@ def main() -> None:
     ap.add_argument(
         "--cpus",
         type=int,
-        default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        default=default_cores(),
     )
     args = ap.parse_args()
 
@@ -76,8 +78,7 @@ def main() -> None:
     from s2_geometry_library_php_spark.operators.corpus_pipeline import (
         annotate_corpus,
         clean_corpus,
-        DEFAULT_MIN_TOKENS,
-        DEFAULT_MAX_PUNCT_RATIO,
+        quality_gate,
     )
     from s2_geometry_library_php_spark.sources import load_documents
 
@@ -123,11 +124,7 @@ def main() -> None:
 
     def p_gates(d):
         g = annotate_corpus(p_url(d))
-        return g.where(
-            (F.col("n_tokens") >= F.lit(DEFAULT_MIN_TOKENS))
-            & (F.col("punct_ratio") <= F.lit(DEFAULT_MAX_PUNCT_RATIO))
-            & F.col("lang_guess").isin(["en"])
-        )
+        return g.where(quality_gate() & F.col("lang_guess").isin(["en"]))
 
     def p_rep(d):
         return p_gates(d).where(repetition_gate_arrow("text", {}))

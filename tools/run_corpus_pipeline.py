@@ -73,6 +73,7 @@ def main() -> None:
     from s2_geometry_library_php_spark.operators import annotate_corpus
     from s2_geometry_library_php_spark.operators.corpus_pipeline import (
         min_label_components,
+        quality_gate,
     )
     from s2_geometry_library_php_spark.plans.lineage import LineageLog
     from s2_geometry_library_php_spark.sources import load_documents
@@ -86,10 +87,7 @@ def main() -> None:
 
     def gate_and_exact_dedup(df):
         ann = annotate_corpus(df)
-        gated = ann.where(
-            (F.col("n_tokens") >= args.min_tokens)
-            & (F.col("punct_ratio") <= 0.5)
-        )
+        gated = ann.where(quality_gate(args.min_tokens))
         if langs:
             gated = gated.where(F.col("lang_guess").isin(langs))
         keepers = exact_duplicate_groups(gated).select(
