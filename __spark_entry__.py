@@ -487,7 +487,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         return polyline_region_crossing_join(
-            spark, CROSSING_POLYLINES, region_fixtures(), brute=False
+            spark, CROSSING_POLYLINES, region_fixtures()
         ).select("line_id", "region_id", "n_crossings")
 
     def q_polyline_self_crossings(spark, sf):
@@ -498,9 +498,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             polyline_self_crossing_join,
         )
 
-        return polyline_self_crossing_join(
-            spark, CROSSING_POLYLINES, brute=False
-        ).select("line_a", "line_b", "n_crossings")
+        return polyline_self_crossing_join(spark, CROSSING_POLYLINES).select(
+            "line_a", "line_b", "n_crossings"
+        )
 
     def q_region_measures(spark, sf):
         """Loop/polygon area + true centroid as a native-SQL triangle

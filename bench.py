@@ -339,9 +339,7 @@ def _run_suite(spark, sf_dir: str) -> tuple[dict, dict]:
     _lines_1k = synth_grid_lines(1024)
 
     def polyline_self_join():
-        return polyline_self_crossing_join(
-            spark, _lines_1k, brute=False
-        ).count()
+        return polyline_self_crossing_join(spark, _lines_1k).count()
 
     n_line_pairs = timed("polyline_self_join_1k", polyline_self_join)
     extras["polyline_crossing_pairs"] = n_line_pairs

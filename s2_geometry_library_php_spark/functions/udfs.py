@@ -157,6 +157,47 @@ def s2_vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# --- native sphere columns (one definition for every operator) ----------------------
+def xyz_cols(prefix: str) -> list:
+    """The ``{prefix}x``/``y``/``z`` columns of a stored unit vector."""
+    return [F.col(f"{prefix}{c}") for c in "xyz"]
+
+
+def unit_vector_cols(lat_r, lng_r) -> list:
+    """Unit vector of radian latlng columns (S2LatLng.php:138-143)."""
+    return [F.cos(lng_r) * F.cos(lat_r), F.sin(lng_r) * F.cos(lat_r), F.sin(lat_r)]
+
+
+def dot3(u, v):
+    return u[0] * v[0] + u[1] * v[1] + u[2] * v[2]
+
+
+def cross3(u, v) -> list:
+    return [
+        u[1] * v[2] - u[2] * v[1],
+        u[2] * v[0] - u[0] * v[2],
+        u[0] * v[1] - u[1] * v[0],
+    ]
+
+
+def norm3(u):
+    return F.sqrt(dot3(u, u))
+
+
+def angle3(u, v):
+    """Exact angle ``atan2(|u x v|, u.v)`` between two vectors — the
+    stable small-angle form of S2Point.angle (S2Point.php:110-112)."""
+    return F.atan2(norm3(cross3(u, v)), dot3(u, v))
+
+
+def latlng_angle_cols(plat, plon, qlat, qlon):
+    """Exact great-circle angle between two latlng-DEGREE column pairs."""
+    return angle3(
+        unit_vector_cols(F.radians(plat), F.radians(plon)),
+        unit_vector_cols(F.radians(qlat), F.radians(qlon)),
+    )
+
+
 # --- region-predicate native columns (SURVEY §2.11 API surface) ---------------------
 def s2_cap_contains_cols(lat, lon, axis_lat_deg, axis_lng_deg, angle_rad):
     """Native-SQL cap containment (S2Cap.php:225-228 chord test,
@@ -169,10 +210,7 @@ def s2_cap_contains_cols(lat, lon, axis_lat_deg, axis_lng_deg, angle_rad):
     ay = math.sin(math.radians(axis_lng_deg)) * math.cos(math.radians(axis_lat_deg))
     az = math.sin(math.radians(axis_lat_deg))
     h = 1.0 - math.cos(angle_rad)
-    lat_r, lon_r = F.radians(lat), F.radians(lon)
-    px = F.cos(lon_r) * F.cos(lat_r)
-    py = F.sin(lon_r) * F.cos(lat_r)
-    pz = F.sin(lat_r)
+    px, py, pz = unit_vector_cols(F.radians(lat), F.radians(lon))
     dx, dy, dz = px - F.lit(ax), py - F.lit(ay), pz - F.lit(az)
     return (dx * dx + dy * dy + dz * dz) <= F.lit(2.0 * h)
 

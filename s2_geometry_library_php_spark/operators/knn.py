@@ -33,29 +33,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.sql_bitops import s2_parent
-from ..functions.udfs import distinct_rings
+from ..functions.udfs import distinct_rings, latlng_angle_cols
 from ..s2core import cellid as cid
 from ..s2core.metric import MIN_WIDTH
-
-
-def _exact_distance(plat, plon, dlat, dlon):
-    """Great-circle angle via native columns: the chord/atan2 form
-    sin/cos expansion of S2Point.angle — stable for small angles."""
-    # angle = atan2(|p x q|, p.q); expand via lat/lon trig, all JVM-side.
-    plat_r, plon_r = F.radians(plat), F.radians(plon)
-    dlat_r, dlon_r = F.radians(dlat), F.radians(dlon)
-    px = F.cos(plon_r) * F.cos(plat_r)
-    py = F.sin(plon_r) * F.cos(plat_r)
-    pz = F.sin(plat_r)
-    qx = F.cos(dlon_r) * F.cos(dlat_r)
-    qy = F.sin(dlon_r) * F.cos(dlat_r)
-    qz = F.sin(dlat_r)
-    cx = py * qz - pz * qy
-    cy = pz * qx - px * qz
-    cz = px * qy - py * qx
-    cross = F.sqrt(cx * cx + cy * cy + cz * cz)
-    dot = px * qx + py * qy + pz * qz
-    return F.atan2(cross, dot)
 
 
 def knn_brute_force(
@@ -73,7 +53,7 @@ def knn_brute_force(
         F.col("lon").alias("_plon"),
     )
     joined = docs.crossJoin(F.broadcast(p))
-    dist = _exact_distance(
+    dist = latlng_angle_cols(
         F.col("_plat"), F.col("_plon"), F.col("lat"), F.col("lon")
     ).alias("dist_rad")
     w = Window.partitionBy(probe_id).orderBy(
@@ -197,7 +177,7 @@ def ring_round_topk(
         F.col("_cand_cell") == F.col("_dcell"),
         "inner",
     )
-    dist = _exact_distance(
+    dist = latlng_angle_cols(
         F.col("_plat"), F.col("_plon"), F.col("lat"), F.col("lon")
     ).alias("dist_rad")
     w = Window.partitionBy(probe_id).orderBy(

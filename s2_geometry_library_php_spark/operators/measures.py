@@ -31,6 +31,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.udfs import angle3, cross3, dot3, norm3, xyz_cols
+
 FAN_SCHEMA = (
     "region_id long, loop_idx int, loop_sign double, "
     "ax double, ay double, az double, "
@@ -119,30 +121,6 @@ def region_measure_frames(
     )
 
 
-def _v(p):
-    return [F.col(f"{p}x"), F.col(f"{p}y"), F.col(f"{p}z")]
-
-
-def _dot3(u, v):
-    return u[0] * v[0] + u[1] * v[1] + u[2] * v[2]
-
-
-def _cross3(u, v):
-    return [
-        u[1] * v[2] - u[2] * v[1],
-        u[2] * v[0] - u[0] * v[2],
-        u[0] * v[1] - u[1] * v[0],
-    ]
-
-
-def _norm3(u):
-    return F.sqrt(_dot3(u, u))
-
-
-def _angle3(u, v):
-    return F.atan2(_norm3(_cross3(u, v)), _dot3(u, v))
-
-
 def triangle_measure_cols():
     """(signed_area, centroid x/y/z) native columns over FAN_SCHEMA.
 
@@ -151,10 +129,10 @@ def triangle_measure_cols():
     are never in the robustCCW uncertainty band for real loops).
     Centroid: trueCentroid, premultiplied by signed area by
     construction (S2.php:429-450)."""
-    a, b, c = _v("a"), _v("b"), _v("c")
-    sa = _angle3(b, c)
-    sb = _angle3(c, a)
-    sc = _angle3(a, b)
+    a, b, c = xyz_cols("a"), xyz_cols("b"), xyz_cols("c")
+    sa = angle3(b, c)
+    sb = angle3(c, a)
+    sc = angle3(a, b)
     s = F.lit(0.5) * (sa + sb + sc)
     area = F.lit(4.0) * F.atan(
         F.sqrt(
@@ -167,12 +145,12 @@ def triangle_measure_cols():
             )
         )
     )
-    det = _dot3(_cross3(a, b), c)
+    det = dot3(cross3(a, b), c)
     signed_area = F.signum(det) * area
     # trueCentroid: rX = asin(sinX)/sinX per opposite edge
-    sina = _norm3(_cross3(b, c))
-    sinb = _norm3(_cross3(c, a))
-    sinc = _norm3(_cross3(a, b))
+    sina = norm3(cross3(b, c))
+    sinb = norm3(cross3(c, a))
+    sinc = norm3(cross3(a, b))
     ra = F.when(sina == 0, F.lit(1.0)).otherwise(
         F.asin(F.least(F.lit(1.0), sina)) / sina
     )
@@ -187,9 +165,9 @@ def triangle_measure_cols():
     z = [a[2], b[2], c[2]]
     r = [ra, rb, rc]
     cen = [
-        F.lit(0.5) * _dot3(_cross3(y, z), r),
-        F.lit(0.5) * _dot3(_cross3(z, x), r),
-        F.lit(0.5) * _dot3(_cross3(x, y), r),
+        F.lit(0.5) * dot3(cross3(y, z), r),
+        F.lit(0.5) * dot3(cross3(z, x), r),
+        F.lit(0.5) * dot3(cross3(x, y), r),
     ]
     return signed_area, cen
 

@@ -8,6 +8,17 @@ exact crossing/distance): polylines are covered edge-by-edge
 probed with the same banded-prefix equi-join as the point-in-region
 join; survivors are refined with the exact point-to-edge distance
 kernel (S2EdgeUtil.php:271-309).
+
+Edge-crossing joins (``S2EdgeIndex::findCandidateCrossings``,
+S2EdgeIndex.php:225-244): the polyline-vs-region-boundary join and
+the polyline self-crossing join are two thin callers of one set of
+parts: :func:`edge_table` (edges and their covering cells),
+``_cell_keys`` (raw and ancestor-or-self join keys), an equi-join
+candidate step, and ``_crossing_counts`` (the exact ``robustCrossing``
+refine and per-pair count).  Neither has a brute all-pairs arm: the
+reference's brute-vs-index crossover (S2EdgeIndex.php:197-204) is a
+single-machine cost switch, every production caller already forced
+the index path, and no benchmark workload measured either side.
 """
 
 from __future__ import annotations
@@ -18,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
+from ..functions.sql_bitops import s2_level
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.coverer import expand_by_radius
@@ -41,11 +53,10 @@ def _polyline_candidates(
     verts_by_line: dict[int, np.ndarray] = {}
     for spec in polylines:
         lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts_by_line[lid] = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+        verts_by_line[lid] = _unit_vertices(spec["vertices"])
+        cov = expand_by_radius(
+            polyline_covering(spec["vertices"]), max_distance_rad, 6
         )
-        cov = expand_by_radius(polyline_covering(v), max_distance_rad, 6)
         for c in cov:
             cov_rows.append((lid, cid.to_signed_scalar(c), cid.level_scalar(c)))
     cov_df = spark.createDataFrame(
@@ -158,28 +169,100 @@ def polyline_project_join(
     )
 
 
-# --- edge-vs-edge crossing join (S2EdgeIndex probe shape) ---------------------------
-def _ancestors(cell: int) -> list[int]:
-    """cell + every proper ancestor up to the face (driver-side)."""
-    out = [cell]
-    c = cell
-    while cid.level_scalar(c) > 0:
-        c = cid.parent1_scalar(c)
-        out.append(c)
+# --- edge-vs-edge crossing joins (S2EdgeIndex probe shape) -------------------------
+EDGE_SCHEMA = (
+    "owner long, edge long, ax double, ay double, az double, "
+    "bx double, by double, bz double, cells array<long>"
+)
+
+
+def _unit_vertices(vertices) -> np.ndarray:
+    """Unit vectors of a ``[[lat, lng] deg, ...]`` vertex list."""
+    v = np.asarray(vertices, dtype=np.float64)
+    return geom.normalize(
+        geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
+    )
+
+
+def _polyline_chains(polylines: list[dict]) -> list[tuple]:
+    """(line_id, unit vertices, closed=False) per polyline."""
+    return [
+        (int(s["line_id"]), _unit_vertices(s["vertices"]), False)
+        for s in polylines
+    ]
+
+
+def _boundary_chains(region_specs: list[dict]) -> list[tuple]:
+    """(region_id, unit vertices, closed=True) per boundary loop of each
+    loop/polygon region; caps and rects have no vertex chain."""
+    from ..s2core.region import region_from_params
+
+    out = []
+    for spec in region_specs:
+        if spec["kind"] not in ("loop", "polygon"):
+            continue
+        reg = region_from_params(
+            spec["kind"], spec["params"], spec.get("loop_offsets")
+        )
+        for lp in [reg] if spec["kind"] == "loop" else reg.loops:
+            out.append((int(spec["region_id"]), lp.vertices, True))
     return out
 
 
-def use_edge_index(n_data_edges: int, n_query_edges: int) -> bool:
-    """Cost-based brute-vs-index crossover, mirroring the reference's
-    adaptive index build (S2EdgeIndex.php:197-204: compute the quad
-    tree only once ``getNumEdges() > 100 && queryCount + n > 30``;
-    below that, m*n robustCrossing calls are cheaper than building the
-    index).  Distributed analogue: below the crossover we skip the
-    per-edge covering computation and the candidate equi-joins
-    entirely and feed ALL pairs straight to the vectorized
-    ``robustCrossing`` refine — for tiny inputs the covering build
-    dominates, exactly as costInsert dominates in the reference."""
-    return n_data_edges > 100 and n_query_edges > 30
+def edge_table(spark: SparkSession, chains: list[tuple]) -> DataFrame:
+    """One EDGE_SCHEMA row per edge of each ``(owner, vertices, closed)``
+    chain: its endpoints and its covering cells
+    (``edges.edge_covering``, S2EdgeIndex.php:306-375).  Edge ids are
+    unique across the table.  Built on the driver, which holds the
+    edge list anyway."""
+    from ..s2core.edges import edge_covering
+
+    rows = []
+    for owner, verts, closed in chains:
+        m = len(verts)
+        for i in range(m if closed else m - 1):
+            a, b = verts[i], verts[(i + 1) % m]
+            cells, _ = edge_covering(a, b)
+            rows.append(
+                (
+                    owner, len(rows), *map(float, a), *map(float, b),
+                    [cid.to_signed_scalar(c) for c in cells],
+                )
+            )
+    return spark.createDataFrame(rows, EDGE_SCHEMA)
+
+
+def _parent_dyn(cell, level):
+    """Parent at a DYNAMIC level column (sql_bitops.s2_parent takes a
+    python int): lsb_l = 1 << (2*(30-l)); (cell & -lsb) | lsb.
+    shiftleft needs a literal count, so the power of two comes from
+    pow(2, .) — exact in double through 2^60, exact long cast."""
+    lsb = F.pow(F.lit(2.0), (F.lit(60) - level * F.lit(2)).cast("double")).cast(
+        "long"
+    )
+    return cell.bitwiseAND(-lsb).bitwiseOR(lsb)
+
+
+def _cell_keys(
+    edges: DataFrame, owner: str, edge: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(owner, edge, cell)`` join keys of an edge table: its raw
+    covering cells, and their ancestor-or-self cells (the parent at
+    every level from 0 to the cell's own, natively), distinct."""
+    raw = edges.select(
+        F.col("owner").alias(owner),
+        F.col("edge").alias(edge),
+        F.explode("cells").alias("cell"),
+    )
+    levels = F.sequence(F.lit(0), s2_level(F.col("cell")))
+    anc = raw.select(
+        owner,
+        edge,
+        F.explode(
+            F.transform(levels, lambda lv: _parent_dyn(F.col("cell"), lv))
+        ).alias("cell"),
+    ).distinct()
+    return raw, anc
 
 
 @F.pandas_udf(BooleanType())
@@ -196,21 +279,35 @@ def _crosses(*cols: pd.Series) -> pd.Series:
     return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
 
 
-def _count_crossings(pairs: DataFrame, *keys: str) -> DataFrame:
-    """Edge pairs with a proper crossing, counted per ``keys``."""
+def _crossing_counts(
+    cand: DataFrame,
+    a_edges: DataFrame,
+    b_edges: DataFrame,
+    a_key: str,
+    b_key: str,
+) -> DataFrame:
+    """Refine candidate edge pairs ``(a_key, edge_a, b_key, edge_b)``:
+    fetch edge_a's endpoints from ``a_edges`` and edge_b's from
+    ``b_edges``, keep the pairs with a proper ``robustCrossing`` and
+    count them per ``(a_key, b_key)``."""
+    ends_a = a_edges.select(
+        F.col("edge").alias("edge_a"), "ax", "ay", "az", "bx", "by", "bz"
+    )
+    ends_b = b_edges.select(
+        F.col("edge").alias("edge_b"),
+        *[F.col(p + x).alias(q + x) for p, q in ("ac", "bd") for x in "xyz"],
+    )
+    pairs = cand.join(ends_a, "edge_a").join(ends_b, "edge_b")
     endpoints = [F.col(p + x) for p in "abcd" for x in "xyz"]
     return (
         pairs.where(_crosses(*endpoints))
-        .groupBy(*keys)
+        .groupBy(a_key, b_key)
         .agg(F.count(F.lit(1)).alias("n_crossings"))
     )
 
 
 def polyline_region_crossing_join(
-    spark: SparkSession,
-    polylines: list[dict],
-    region_specs: list[dict],
-    brute: bool | None = None,
+    spark: SparkSession, polylines: list[dict], region_specs: list[dict]
 ) -> DataFrame:
     """Which polylines cross which region BOUNDARIES — the full
     ``S2EdgeIndex::findCandidateCrossings`` probe shape
@@ -218,146 +315,33 @@ def polyline_region_crossing_join(
     indexed in PARENT cells (getEdgesInParentCells) and in DESCENDANT
     cells (getEdgesInChildrenCells), refine with ``robustCrossing``.
 
-    Distributed realization: region boundary edges (dimension-sized)
-    are covered driver-side and broadcast twice — once as raw covering
-    cells, once expanded to their ancestor chains.  Polyline edges (the
-    data side) explode their covering cells; candidate pairs come from
-    the UNION of two hash equi-joins:
+    Candidate pairs are the union of two hash equi-joins against the
+    broadcast region boundary edges (dimension-sized):
 
-      * polyline ancestor-chain keys  vs  raw region cells
+      * polyline ancestor-or-self keys  vs  raw region cells
         (region cell is equal-or-descendant of a polyline cell), and
-      * raw polyline cells  vs  region ancestor-chain keys
+      * raw polyline cells  vs  region ancestor-or-self keys
         (polyline cell is descendant of a region cell).
 
     Both arms are pure equi-joins — no range probe, no nested loop;
-    expanding each side's own ancestor CHAIN (<= 30 cells) never
+    expanding each side's own ancestor CHAIN (<= 31 cells) never
     explodes the way expanding subtrees would.  Output: (line_id,
     region_id, n_crossings) for pairs with >= 1 proper crossing.
-
     Only loop/polygon regions participate (caps/rects have no
-    boundary vertex chain).
-
-    ``brute=None`` applies the reference's cost-based crossover
-    (``use_edge_index``): below m>100 data edges / n>30 query edges
-    the covering build is skipped and every (polyline edge, region
-    edge) pair goes straight to the refine kernel — the region side is
-    broadcast either way, so the tiny path is a broadcast
-    nested-loop by DESIGN, never the scale path."""
-    from ..s2core.edges import edge_covering
-    from ..s2core.region import region_from_params
-
-    # --- broadcast side: region boundary edges -------------------------------
-    redge_xyz = []  # (region_id, redge, c, d) in numpy
-    for spec in region_specs:
-        if spec["kind"] not in ("loop", "polygon"):
-            continue
-        rid = int(spec["region_id"])
-        reg = region_from_params(
-            spec["kind"], spec["params"], spec.get("loop_offsets")
-        )
-        loops = [reg] if spec["kind"] == "loop" else reg.loops
-        redge = 0
-        for lp in loops:
-            verts = lp.vertices
-            m = len(verts)
-            for i in range(m):
-                redge_xyz.append((rid, redge, verts[i], verts[(i + 1) % m]))
-                redge += 1
-
-    # --- data side: polyline edges -------------------------------------------
-    ledge_xyz = []  # (line_id, k, a, b)
-    for spec in polylines:
-        lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
-        for k in range(len(verts) - 1):
-            ledge_xyz.append((lid, k, verts[k], verts[k + 1]))
-
-    if brute is None:
-        brute = not use_edge_index(len(redge_xyz), len(ledge_xyz))
-
-    redges = spark.createDataFrame(
-        [
-            (rid, re, *[float(x) for x in c], *[float(x) for x in d])
-            for rid, re, c, d in redge_xyz
-        ],
-        "region_id long, redge long, cx double, cy double, cz double, "
-        "dx double, dy double, dz double",
+    boundary vertex chain)."""
+    lines = edge_table(spark, _polyline_chains(polylines))
+    bounds = edge_table(spark, _boundary_chains(region_specs))
+    line_raw, line_anc = _cell_keys(lines, "line_id", "edge_a")
+    bound_raw, bound_anc = _cell_keys(bounds, "region_id", "edge_b")
+    cand = (
+        line_anc.join(F.broadcast(bound_raw), "cell")
+        .unionByName(line_raw.join(F.broadcast(bound_anc), "cell"))
+        .drop("cell")
+        .distinct()
     )
-
-    if brute:
-        # tiny path: all pairs, no index build (S2EdgeIndex brute arm)
-        ledges = spark.createDataFrame(
-            [
-                (lid, k, *[float(x) for x in a], *[float(x) for x in b])
-                for lid, k, a, b in ledge_xyz
-            ],
-            "line_id long, ledge long, ax double, ay double, az double, "
-            "bx double, by double, bz double",
-        )
-        cand = ledges.select("line_id", "ledge").crossJoin(
-            F.broadcast(redges.select("region_id", "redge"))
-        )
-    else:
-        rcell_raw = []  # (region_id, redge, cell)
-        rcell_anc = []  # (region_id, redge, cell)
-        for rid, re, c, d in redge_xyz:
-            cov, _ = edge_covering(c, d)
-            for cell in cov:
-                rcell_raw.append((rid, re, cid.to_signed_scalar(cell)))
-                for anc in _ancestors(cell):
-                    rcell_anc.append((rid, re, cid.to_signed_scalar(anc)))
-        raw_df = spark.createDataFrame(
-            rcell_raw, "region_id long, redge long, rcell long"
-        ).distinct()
-        anc_df = spark.createDataFrame(
-            rcell_anc, "region_id long, redge long, rcell long"
-        ).distinct()
-
-        ledge_rows = []  # (line_id, ledge, ax..bz, cells, anc_cells)
-        for lid, k, a, b in ledge_xyz:
-            cov, _ = edge_covering(a, b)
-            anc = sorted({x for c in cov for x in _ancestors(c)})
-            ledge_rows.append(
-                (
-                    lid, k,
-                    *[float(x) for x in a], *[float(x) for x in b],
-                    [cid.to_signed_scalar(c) for c in cov],
-                    [cid.to_signed_scalar(c) for c in anc],
-                )
-            )
-        ledges = spark.createDataFrame(
-            ledge_rows,
-            "line_id long, ledge long, ax double, ay double, az double, "
-            "bx double, by double, bz double, cells array<long>, "
-            "anc_cells array<long>",
-        )
-
-        # --- candidate generation: two equi-join arms -----------------------
-        key_cols = ["line_id", "ledge", "region_id", "redge"]
-        arm_parent = (
-            ledges.select("line_id", "ledge", F.explode("anc_cells").alias("k"))
-            .join(F.broadcast(raw_df), F.col("k") == F.col("rcell"), "inner")
-            .select(*key_cols)
-        )
-        arm_child = (
-            ledges.select("line_id", "ledge", F.explode("cells").alias("k"))
-            .join(F.broadcast(anc_df), F.col("k") == F.col("rcell"), "inner")
-            .select(*key_cols)
-        )
-        cand = arm_parent.unionByName(arm_child).distinct()
-
-    # --- refine: vectorized robustCrossing ----------------------------------
-    pairs = cand.join(
-        ledges.select(
-            "line_id", "ledge", "ax", "ay", "az", "bx", "by", "bz"
-        ),
-        ["line_id", "ledge"],
-    ).join(F.broadcast(redges), ["region_id", "redge"])
-
-    return _count_crossings(pairs, "line_id", "region_id")
+    return _crossing_counts(
+        cand, lines, F.broadcast(bounds), "line_id", "region_id"
+    )
 
 
 def polyline_region_crossings_numpy(
@@ -402,159 +386,41 @@ def polyline_region_crossings_numpy(
 
 
 def polyline_self_crossing_join(
-    spark: SparkSession, polylines: list[dict], brute: bool | None = None
+    spark: SparkSession, polylines: list[dict]
 ) -> DataFrame:
     """Which polylines cross which OTHER polylines — the two-big-sides
-    variant of the edge-index probe: NO broadcast side.  Both arms of
-    the candidate join are shuffled hash equi-joins over covering
-    cells:
+    variant of the edge-index probe: NO broadcast side.  One shuffled
+    hash equi-join over covering cells:
 
-      raw covering cells  ⋈  ancestor-chain keys  (on the cell id)
+      ancestor-or-self keys  ⋈  raw covering cells  (on the cell id)
 
     catches every ancestor-or-equal relation between two edges'
-    covering cells in ONE join, because for an unordered pair either
-    edge may supply the ancestor side and the (line_a < line_b)
-    normalization dedupes the two orientations.  Edge coverings are
-    computed IN EXECUTORS (mapInPandas-style pandas UDF over edge
-    rows) — at 100 TB both the edge explode and the covering are
-    data-side map work, and the only shuffles are the two equi-joins
-    plus the final pair aggregation.
+    covering cells, because for an unordered pair either edge may
+    supply the ancestor side and the (line_a < line_b) normalization
+    dedupes the two orientations.
 
     Output: (line_a, line_b, n_crossings) for pairs with >= 1 proper
-    crossing between edges of DIFFERENT lines.
-
-    ``brute=None`` applies the reference's cost-based crossover
-    (``use_edge_index``, S2EdgeIndex.php:197-204): at or below 100
-    total edges the covering UDF and both equi-joins are skipped and
-    all cross-line edge pairs go straight to the refine kernel."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    rows = []
-    for spec in polylines:
-        lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
-        for k in range(len(verts) - 1):
-            a, b = verts[k], verts[k + 1]
-            rows.append(
-                (lid, k, *[float(x) for x in a], *[float(x) for x in b])
-            )
-    edges = spark.createDataFrame(
-        rows,
-        "line_id long, edge long, ax double, ay double, az double, "
-        "bx double, by double, bz double",
-    )
-
-    if brute is None:
-        brute = not use_edge_index(len(rows), len(rows))
-    if brute:
-        return _self_crossing_refine(
-            edges,
-            edges.alias("pa")
-            .select(F.col("line_id").alias("la"), F.col("edge").alias("ea"))
-            .crossJoin(
-                edges.alias("pb").select(
-                    F.col("line_id").alias("lb"), F.col("edge").alias("eb")
-                )
-            )
-            .where(F.col("la") < F.col("lb"))
-            .select(
-                F.col("la").alias("line_a"),
-                F.col("lb").alias("line_b"),
-                F.col("ea").alias("edge_a"),
-                F.col("eb").alias("edge_b"),
-            ),
-        )
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def edge_cells(*cols: pd.Series) -> pd.Series:
-        from ..s2core.edges import edge_covering
-
-        n = len(cols[0])
-        if n == 0:
-            return pd.Series([], dtype=object)
-        m = [c.to_numpy(np.float64) for c in cols]
-        a = np.stack(m[0:3], axis=1)
-        b = np.stack(m[3:6], axis=1)
-        out = []
-        for i in range(n):
-            cov, _ = edge_covering(a[i], b[i])
-            out.append([cid.to_signed_scalar(c) for c in cov])
-        return pd.Series(out)
-
-    covered = edges.withColumn(
-        "cells",
-        edge_cells(
-            F.col("ax"), F.col("ay"), F.col("az"),
-            F.col("bx"), F.col("by"), F.col("bz"),
-        ),
-    )
-    # ancestor chain natively: parent at each level <= the cell's own
-    # (garbage parents above the cell's level are filtered by level)
-    from ..functions.sql_bitops import s2_level
-
-    raw = covered.select(
-        "line_id", "edge", F.explode("cells").alias("cell")
-    )
-    anc_levels = F.sequence(F.lit(0), s2_level(F.col("cell")))
-    anc = raw.select(
-        "line_id",
-        "edge",
-        F.explode(
-            F.transform(anc_levels, lambda lv: _parent_dyn(F.col("cell"), lv))
-        ).alias("cell"),
-    ).distinct()
+    crossing between edges of DIFFERENT lines."""
+    edges = edge_table(spark, _polyline_chains(polylines))
+    raw, anc = _cell_keys(edges, "line_id", "edge")
+    pa, pb = anc.alias("pa"), raw.alias("pb")
+    a_first = F.col("pa.line_id") < F.col("pb.line_id")
+    pa_edge, pb_edge = F.col("pa.edge"), F.col("pb.edge")
     cand = (
-        anc.alias("pa")
-        .join(
-            raw.alias("pb"),
+        pa.join(
+            pb,
             (F.col("pa.cell") == F.col("pb.cell"))
             & (F.col("pa.line_id") != F.col("pb.line_id")),
         )
         .select(
             F.least("pa.line_id", "pb.line_id").alias("line_a"),
             F.greatest("pa.line_id", "pb.line_id").alias("line_b"),
-            F.when(
-                F.col("pa.line_id") < F.col("pb.line_id"), F.col("pa.edge")
-            ).otherwise(F.col("pb.edge")).alias("edge_a"),
-            F.when(
-                F.col("pa.line_id") < F.col("pb.line_id"), F.col("pb.edge")
-            ).otherwise(F.col("pa.edge")).alias("edge_b"),
+            F.when(a_first, pa_edge).otherwise(pb_edge).alias("edge_a"),
+            F.when(a_first, pb_edge).otherwise(pa_edge).alias("edge_b"),
         )
         .distinct()
     )
-    return _self_crossing_refine(edges, cand)
-
-
-def _self_crossing_refine(edges: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact-crossing refine + pair aggregation shared by the indexed
-    and brute candidate generators: fetch both edges' endpoints, keep
-    pairs with a proper ``robustCrossing``, count per line pair."""
-    ea = edges.select(
-        F.col("line_id").alias("line_a"), F.col("edge").alias("edge_a"),
-        "ax", "ay", "az", "bx", "by", "bz",
-    )
-    eb = edges.select(
-        F.col("line_id").alias("line_b"), F.col("edge").alias("edge_b"),
-        F.col("ax").alias("cx"), F.col("ay").alias("cy"),
-        F.col("az").alias("cz"), F.col("bx").alias("dx"),
-        F.col("by").alias("dy"), F.col("bz").alias("dz"),
-    )
-    pairs = cand.join(ea, ["line_a", "edge_a"]).join(eb, ["line_b", "edge_b"])
-    return _count_crossings(pairs, "line_a", "line_b")
-
-
-def _parent_dyn(cell, level):
-    """Parent at a DYNAMIC level column (sql_bitops.s2_parent takes a
-    python int): lsb_l = 1 << (2*(30-l)); (cell & -lsb) | lsb.
-    shiftleft needs a literal count, so the power of two comes from
-    pow(2, .) — exact in double through 2^60, exact long cast."""
-    lsb = F.pow(F.lit(2.0), (F.lit(60) - level * F.lit(2)).cast("double")).cast(
-        "long"
-    )
-    return cell.bitwiseAND(-lsb).bitwiseOR(lsb)
+    return _crossing_counts(cand, edges, edges, "line_a", "line_b")
 
 
 def synth_grid_lines(n: int) -> list[dict]:

@@ -36,9 +36,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.sql_bitops import s2_parent
-from ..functions.udfs import s2_cell_id, s2_ring_cells_udf
+from ..functions.udfs import latlng_angle_cols, s2_cell_id, s2_ring_cells_udf
 from ..s2core.metric import MIN_WIDTH
-from .knn import _exact_distance, join_key
+from .knn import join_key
 
 
 def radius_join_level(radius_rad: float) -> int | None:
@@ -86,7 +86,7 @@ def within_radius_join(
         F.col("lat").alias("_blat"),
         F.col("lon").alias("_blon"),
     )
-    dist = _exact_distance(
+    dist = latlng_angle_cols(
         F.col("_alat"), F.col("_alon"), F.col("_blat"), F.col("_blon")
     ).alias("dist_rad")
 

@@ -25,6 +25,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.udfs import angle3, unit_vector_cols
+
 RECT_SCHEMA = (
     "region_id long, lat_lo double, lat_hi double, lng_lo double, "
     "lng_hi double, cc double"
@@ -64,21 +66,6 @@ def regions_rect_df(
             )
         )
     return spark.createDataFrame(rows, RECT_SCHEMA)
-
-
-def _angle_to(plat_r, plng_r, qlat_r, qlng_r):
-    """Great-circle angle between two (radian) latlng column pairs —
-    the stable atan2(|cross|, dot) form, native columns."""
-    px = F.cos(plng_r) * F.cos(plat_r)
-    py = F.sin(plng_r) * F.cos(plat_r)
-    pz = F.sin(plat_r)
-    qx = F.cos(qlng_r) * F.cos(qlat_r)
-    qy = F.sin(qlng_r) * F.cos(qlat_r)
-    qz = F.sin(qlat_r)
-    cx = py * qz - pz * qy
-    cy = pz * qx - px * qz
-    cz = px * qy - py * qx
-    return F.atan2(F.sqrt(cx * cx + cy * cy + cz * cz), px * qx + py * qy + pz * qz)
 
 
 def rect_distance_col(lat_col, lon_col, prefix: str = ""):
@@ -124,9 +111,10 @@ def rect_distance_col(lat_col, lon_col, prefix: str = ""):
     seg_dist = F.asin(
         F.least(F.lit(1.0), F.abs(F.cos(plat) * F.sin(dlng)))
     )
+    p = unit_vector_cols(plat, plng)
     end_dist = F.least(
-        _angle_to(plat, plng, lat_lo, a_lng),
-        _angle_to(plat, plng, lat_hi, a_lng),
+        angle3(p, unit_vector_cols(lat_lo, a_lng)),
+        angle3(p, unit_vector_cols(lat_hi, a_lng)),
     )
     meridian_dist = F.when(on_segment, seg_dist).otherwise(end_dist)
     return F.when(lng_contains, lat_clamp).otherwise(meridian_dist)
@@ -320,7 +308,8 @@ def knn_regions(
                 F.col("lon")
             )
         )
-        sb_ub = _angle_to(plat, plng, F.col("slat"), F.col("slng")) + F.col(
+        p = unit_vector_cols(plat, plng)
+        sb_ub = angle3(p, unit_vector_cols(F.col("slat"), F.col("slng"))) + F.col(
             "sangle"
         )
         # Pass 0a: per-probe k-th-distance upper bound = min over
@@ -347,7 +336,7 @@ def knn_regions(
         # the bound with the block cones (window on the probe key —
         # the same partitioning the final top-k needs), then keep
         # blocks whose folded-rect lower bound beats it.
-        blk_ub = _angle_to(plat, plng, F.col("blat"), F.col("blng")) + F.col(
+        blk_ub = angle3(p, unit_vector_cols(F.col("blat"), F.col("blng"))) + F.col(
             "bangle"
         )
         wprobe = Window.partitionBy(probe_id)

@@ -38,7 +38,7 @@ At 100 TB scale: stage 2 is map-side only (scan -> project -> BHJ);
 the only shuffles in a typical pipeline are the caller's final
 aggregations.  Skewed hot tiles don't matter for the join itself
 (broadcast joins don't shuffle by key); skew handling matters for the
-downstream groupBys and is provided by ``tiling.salted_repartition``.
+downstream groupBys and is provided by ``tiling.salted_repartition_planned``.
 """
 
 from __future__ import annotations
@@ -400,19 +400,20 @@ def spatial_join(
     lon_col: str = "lon",
     leaf_col: str = "cell_id",
     max_cells: int = 8,
-    prefilter: bool = True,
 ) -> DataFrame:
     """docs x regions point-in-region join.
 
     Returns ``docs`` columns + ``region_id``.  ``docs`` must already
-    carry the leaf ``cell_id`` (from ``functions.s2_cell_id``).
+    carry the leaf ``cell_id`` (from ``functions.s2_cell_id``).  Docs
+    outside every region's rect bound are dropped first
+    (``bbox_prefilter_expr``); the prefilter is conservative, so it
+    never changes the output.
     """
     cov_rows = compute_coverings(regions, max_cells=max_cells)
     levels = sorted({lvl for _, _, lvl, _ in cov_rows})
     cov = spark.createDataFrame(cov_rows, COVERING_SCHEMA)
 
-    if prefilter:
-        docs = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
+    docs = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
     joined = covering_candidates(docs, cov, levels, leaf_col)
 
     # Covering rows are disjoint per region, so no dedup is needed.

@@ -16,19 +16,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.sql_bitops import s2_parent, s2_token_sql, sql_s2_parent
+from ..functions.udfs import unit_vector_cols
 
 MAX_LEVEL = 30
 
 
 def with_xyz(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
     """Unit-vector columns from degrees (S2LatLng.php:138-143), native."""
-    lat_r = F.radians(F.col(lat_col))
-    lon_r = F.radians(F.col(lon_col))
-    return (
-        df.withColumn("_x", F.cos(lon_r) * F.cos(lat_r))
-        .withColumn("_y", F.sin(lon_r) * F.cos(lat_r))
-        .withColumn("_z", F.sin(lat_r))
-    )
+    lat_r, lon_r = F.radians(F.col(lat_col)), F.radians(F.col(lon_col))
+    x, y, z = unit_vector_cols(lat_r, lon_r)
+    return df.withColumn("_x", x).withColumn("_y", y).withColumn("_z", z)
 
 
 def tile_aggregate(
@@ -54,14 +51,9 @@ def tile_aggregate(
     ]
     if distinct_col is not None:
         aggs.append(F.approx_count_distinct(distinct_col).alias("approx_distinct"))
-    out = base.agg(*aggs)
-    norm = F.sqrt(
-        F.col("_sx") * F.col("_sx")
-        + F.col("_sy") * F.col("_sy")
-        + F.col("_sz") * F.col("_sz")
-    )
-    out = (
-        out.withColumn(
+    return (
+        base.agg(*aggs)
+        .withColumn(
             "centroid_lat",
             F.degrees(F.atan2(F.col("_sz"), F.hypot(F.col("_sx"), F.col("_sy")))),
         )
@@ -69,8 +61,6 @@ def tile_aggregate(
         .withColumn("tile_token", s2_token_sql("tile_id"))
         .drop("_sx", "_sy", "_sz")
     )
-    _ = norm  # centroid via atan2 needs no explicit normalization
-    return out
 
 
 def tile_rollup(
@@ -234,26 +224,6 @@ def tile_polygons(tiles: DataFrame, tile_col: str = "tile_id") -> DataFrame:
         .withColumn("vertices", s2_cell_vertices_udf(F.col(tile_col)))
         .withColumn("center_lat", s2_cell_center_lat(F.col(tile_col)))
         .withColumn("center_lon", s2_cell_center_lng(F.col(tile_col)))
-    )
-
-
-def salted_repartition(
-    docs: DataFrame,
-    level: int,
-    salt_buckets: int = 8,
-    leaf_col: str = "cell_id",
-) -> DataFrame:
-    """Defuse hot-tile skew before a wide tile aggregation: spread each
-    level-L prefix over ``salt_buckets`` partitions (north rule:
-    'salted repartitioning on cell-ID prefixes').
-
-    The aggregation that follows still produces correct results —
-    partial aggregation per partition combines at the final stage —
-    this just balances the map-side work for skewed tiles (20% of the
-    synthetic corpus sits in 3 hot tiles, FIXTURES.md §1)."""
-    salt = (F.xxhash64(F.col(leaf_col)) % salt_buckets).cast("int")
-    return docs.repartition(
-        s2_parent(F.col(leaf_col), level), salt
     )
 
 

@@ -36,28 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.sql_bitops import s2_parent
-
-
-def _unit_xyz(lat_col, lon_col):
-    """Unit-sphere vector from degree columns — native SQL."""
-    la = F.radians(lat_col)
-    lo = F.radians(lon_col)
-    return (
-        F.cos(la) * F.cos(lo),
-        F.cos(la) * F.sin(lo),
-        F.sin(la),
-    )
-
-
-def _angle_rad(ax, ay, az, bx, by, bz):
-    """Exact great-circle angle ``atan2(|a x b|, a.b)`` (the stable
-    small-angle form, reference S2Point.php:110-112) — native SQL."""
-    cx = ay * bz - az * by
-    cy = az * bx - ax * bz
-    cz = ax * by - ay * bx
-    cross = F.sqrt(cx * cx + cy * cy + cz * cz)
-    dot = ax * bx + ay * by + az * bz
-    return F.atan2(cross, dot)
+from ..functions.udfs import angle3, unit_vector_cols, xyz_cols
 
 
 def trajectory_stats(
@@ -75,7 +54,7 @@ def trajectory_stats(
     (start->end displacement), ``sinuosity`` (path/net; null when the
     path closes on itself or has <2 points), ``t_start``, ``t_end``.
     """
-    ax, ay, az = _unit_xyz(F.col(lat_col), F.col(lon_col))
+    ax, ay, az = unit_vector_cols(F.radians(lat_col), F.radians(lon_col))
     pt = events.select(
         F.col(entity_col).alias("entity"),
         F.col(ts_col).alias("_ts"),
@@ -83,10 +62,7 @@ def trajectory_stats(
         ax.alias("_x"), ay.alias("_y"), az.alias("_z"),
     )
     w2 = Window.partitionBy("entity").orderBy("_ts", *order_cols)
-    step = _angle_rad(
-        F.lag("_x").over(w2), F.lag("_y").over(w2), F.lag("_z").over(w2),
-        F.col("_x"), F.col("_y"), F.col("_z"),
-    )
+    step = angle3([F.lag(c).over(w2) for c in xyz_cols("_")], xyz_cols("_"))
     stepped = pt.withColumn("_step", step)
     endpoint_key = ("_ts", *order_cols, "_x", "_y", "_z")
     # endpoints via min/max(struct) in the path order (_ts, *order_cols),
@@ -106,10 +82,7 @@ def trajectory_stats(
             F.max(F.struct(*endpoint_key)).alias("_last"),
         )
     )
-    net = _angle_rad(
-        F.col("_first._x"), F.col("_first._y"), F.col("_first._z"),
-        F.col("_last._x"), F.col("_last._y"), F.col("_last._z"),
-    )
+    net = angle3(xyz_cols("_first._"), xyz_cols("_last._"))
     return (
         agg.withColumn("net_rad", net)
         .withColumn(

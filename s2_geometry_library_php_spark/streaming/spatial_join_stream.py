@@ -32,7 +32,6 @@ def streaming_spatial_join(
     lon_col: str = "lon",
     leaf_col: str = "cell_id",
     max_cells: int = 8,
-    prefilter: bool = True,
 ) -> DataFrame:
     """Streaming docs (carrying lat/lon + leaf ``cell_id``) x regions
     -> streaming (docs columns + region_id), ready for writeStream in
@@ -50,5 +49,4 @@ def streaming_spatial_join(
         lon_col=lon_col,
         leaf_col=leaf_col,
         max_cells=max_cells,
-        prefilter=prefilter,
     )

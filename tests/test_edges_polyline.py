@@ -222,49 +222,48 @@ def test_robust_crossing_vec_matches_scalar():
         assert vec2[i] == geom.robust_crossing(a[i], b[i], b[i], c[i])
 
 
+# Two straight lines and a chain crossing line 1 twice, around the quad
+# loop of region 7: shared by the crossing-join tests.
+THREE_LINES = [
+    dict(line_id=1, vertices=[[42.0, -77.0], [42.0, -72.0]]),
+    dict(line_id=2, vertices=[[40.0, -74.5], [44.0, -74.5]]),
+    dict(line_id=4, vertices=[[41.0, -76.0], [43.0, -75.0], [41.0, -74.0]]),
+]
+QUAD_LOOP = dict(
+    region_id=7,
+    kind="loop",
+    params=[40.0, -75.0, 40.0, -70.0, 45.0, -70.0, 45.0, -75.0],
+    loop_offsets=None,
+)
+
+
 def test_polyline_region_crossing_join_counts(spark):
-    """The covering-join crossing counts equal the brute-force kernel
-    on a polyline that enters a quad loop through its west meridian
-    edge and ends inside (odd parity => exactly one crossing)."""
+    """The covering-join crossing counts equal the brute-force kernel:
+    a polyline that enters a quad loop through its west meridian edge
+    and ends inside (odd parity => exactly one crossing), one that
+    passes fully through (two), and the three-line fixture."""
     from s2_geometry_library_php_spark.operators.polyline_join import (
         polyline_region_crossing_join,
         polyline_region_crossings_numpy,
     )
 
-    lines = [dict(line_id=1, vertices=[[42.0, -77.0], [42.0, -72.0]])]
-    regions = [
-        dict(
-            region_id=7,
-            kind="loop",
-            params=[40.0, -75.0, 40.0, -70.0, 45.0, -70.0, 45.0, -75.0],
-            loop_offsets=None,
-        )
-    ]
-    got = {
-        (r.line_id, r.region_id): r.n_crossings
-        for r in polyline_region_crossing_join(
-            spark, lines, regions, brute=False
-        ).collect()
-    }
-    want = {
-        (lid, rid): n
-        for lid, rid, n in polyline_region_crossings_numpy(lines, regions)
-    }
-    assert got == want == {(1, 7): 1}
-
-    # a line that passes fully through crosses twice
+    enters = [dict(line_id=1, vertices=[[42.0, -77.0], [42.0, -72.0]])]
     through = [dict(line_id=2, vertices=[[42.0, -77.0], [42.0, -68.0]])]
-    got2 = {
-        (r.line_id, r.region_id): r.n_crossings
-        for r in polyline_region_crossing_join(
-            spark, through, regions, brute=False
-        ).collect()
-    }
-    want2 = {
-        (lid, rid): n
-        for lid, rid, n in polyline_region_crossings_numpy(through, regions)
-    }
-    assert got2 == want2 == {(2, 7): 2}
+    # line 4 turns at a vertex on the west edge: one crossing
+    three = {(1, 7): 1, (2, 7): 1, (4, 7): 1}
+    expected = [{(1, 7): 1}, {(2, 7): 2}, three]
+    for lines, exp in zip([enters, through, THREE_LINES], expected):
+        got = {
+            (r.line_id, r.region_id): r.n_crossings
+            for r in polyline_region_crossing_join(
+                spark, lines, [QUAD_LOOP]
+            ).collect()
+        }
+        want = {
+            (lid, rid): n
+            for lid, rid, n in polyline_region_crossings_numpy(lines, [QUAD_LOOP])
+        }
+        assert got == want == exp
 
 
 def test_wedge_contains_or_intersects_cases():
@@ -312,93 +311,61 @@ def test_wedge_contains_or_intersects_cases():
 
 
 def test_polyline_self_crossing_join_no_broadcast(spark):
-    """Both-sides-distributed crossing join: counts equal brute force,
-    and the plan contains no BroadcastNestedLoopJoin/CartesianProduct
-    (the whole point of the two-arm shuffled equi-join)."""
+    """Both-sides-distributed crossing join: counts equal brute force
+    on a four-line fixture and the three-line fixture, and the plan
+    contains no BroadcastNestedLoopJoin/CartesianProduct (the whole
+    point of the shuffled equi-join)."""
     from s2_geometry_library_php_spark.operators.polyline_join import (
         polyline_self_crossing_join,
         polyline_self_crossings_numpy,
     )
 
-    lines = [
-        dict(line_id=1, vertices=[[42.0, -77.0], [42.0, -72.0]]),
-        dict(line_id=2, vertices=[[40.0, -74.5], [44.0, -74.5]]),
-        dict(line_id=3, vertices=[[10.0, 10.0], [20.0, 20.0]]),
-        # chain crossing line 1 twice
-        dict(
-            line_id=4,
-            vertices=[[41.0, -76.0], [43.0, -75.0], [41.0, -74.0]],
-        ),
-    ]
-    df = polyline_self_crossing_join(spark, lines, brute=False)
-    got = {(r.line_a, r.line_b): r.n_crossings for r in df.collect()}
-    want = {
-        (a, b): n for a, b, n in polyline_self_crossings_numpy(lines)
-    }
-    assert got == want
-    assert (1, 2) in got and got[(1, 4)] == 2
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    four = THREE_LINES + [dict(line_id=3, vertices=[[10.0, 10.0], [20.0, 20.0]])]
+    for lines in (four, THREE_LINES):
+        df = polyline_self_crossing_join(spark, lines)
+        got = {(r.line_a, r.line_b): r.n_crossings for r in df.collect()}
+        want = {
+            (a, b): n for a, b, n in polyline_self_crossings_numpy(lines)
+        }
+        assert got == want
+        assert (1, 2) in got and got[(1, 4)] == 2
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_cost_based_crossover_brute_matches_indexed(spark):
-    """The reference builds its edge index only past the measured
-    crossover (S2EdgeIndex.php:197-204: >100 data edges AND >30
-    queries); below it, brute m*n robustCrossing wins.  Our
-    distributed twin must (a) dispatch the same way and (b) return
-    identical answers on both paths."""
-    from s2_geometry_library_php_spark.operators.polyline_join import (
-        polyline_region_crossing_join,
-        polyline_self_crossing_join,
-        use_edge_index,
-    )
-
-    # the reference thresholds, exactly
-    assert not use_edge_index(100, 1000)
-    assert not use_edge_index(1000, 30)
-    assert use_edge_index(101, 31)
-
-    lines = [
-        dict(line_id=1, vertices=[[42.0, -77.0], [42.0, -72.0]]),
-        dict(line_id=2, vertices=[[40.0, -74.5], [44.0, -74.5]]),
-        dict(
-            line_id=4,
-            vertices=[[41.0, -76.0], [43.0, -75.0], [41.0, -74.0]],
-        ),
-    ]
-    regions = [
-        dict(
-            region_id=7,
-            kind="loop",
-            params=[40.0, -75.0, 40.0, -70.0, 45.0, -70.0, 45.0, -75.0],
-            loop_offsets=None,
+def _self_crossings_vec(lines):
+    """Numpy oracle: every cross-line edge pair through
+    ``geom.robust_crossing_vec``, the lower line's edge first."""
+    owner, a, b = [], [], []
+    for spec in lines:
+        v = np.asarray(spec["vertices"], dtype=np.float64)
+        p = geom.normalize(
+            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
         )
-    ]
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    # region join: auto-dispatch (tiny => brute) == forced-index == forced-brute
-    auto = polyline_region_crossing_join(spark, lines, regions)
-    idx = polyline_region_crossing_join(spark, lines, regions, brute=False)
-    brt = polyline_region_crossing_join(spark, lines, regions, brute=True)
-    assert rows(auto) == rows(idx) == rows(brt)
-
-    # self join: same three-way agreement
-    auto_s = polyline_self_crossing_join(spark, lines)
-    idx_s = polyline_self_crossing_join(spark, lines, brute=False)
-    brt_s = polyline_self_crossing_join(spark, lines, brute=True)
-    assert rows(auto_s) == rows(idx_s) == rows(brt_s)
-    assert len(rows(auto_s)) > 0
+        owner += [spec["line_id"]] * (len(p) - 1)
+        a.append(p[:-1])
+        b.append(p[1:])
+    owner, a, b = np.asarray(owner), np.concatenate(a), np.concatenate(b)
+    out = {}
+    for i in range(len(owner)):
+        j = np.nonzero(owner > owner[i])[0]
+        shape = (len(j), 3)
+        hit = geom.robust_crossing_vec(
+            np.broadcast_to(a[i], shape), np.broadcast_to(b[i], shape), a[j], b[j]
+        ) > 0
+        for lb in owner[j[hit]]:
+            key = (int(owner[i]), int(lb))
+            out[key] = out.get(key, 0) + 1
+    return out
 
 
 def test_polyline_self_crossing_join_1k_lines(spark):
     """Scale fixture through the SHUFFLED raw-vs-ancestor path (1024
-    lines, brute=False): (a) full equality against the operator's own
-    brute arm (vectorized refine over all cross-line pairs), (b) exact
-    equality against the independent numpy robust_crossing oracle on a
-    64-line subsample, (c) still no Cartesian/BNLJ in the plan."""
+    lines): (a) full equality against the numpy ``robust_crossing_vec``
+    oracle over all cross-line edge pairs, (b) exact equality against
+    the scalar numpy oracle on a 64-line subsample, (c) no
+    Cartesian/BNLJ in the plan."""
     from s2_geometry_library_php_spark.operators.polyline_join import (
         polyline_self_crossing_join,
         polyline_self_crossings_numpy,
@@ -406,23 +373,16 @@ def test_polyline_self_crossing_join_1k_lines(spark):
     )
 
     lines = synth_grid_lines(1024)
-    df = polyline_self_crossing_join(spark, lines, brute=False)
+    df = polyline_self_crossing_join(spark, lines)
     got = {(r.line_a, r.line_b): r.n_crossings for r in df.collect()}
     assert len(got) > 500  # sparse but non-trivial crossing graph
+    assert got == _self_crossings_vec(lines)
 
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-    brute = {
-        (r.line_a, r.line_b): r.n_crossings
-        for r in polyline_self_crossing_join(
-            spark, lines, brute=True
-        ).collect()
-    }
-    assert got == brute
-
-    # independent kernel oracle on a deterministic subsample
+    # independent scalar kernel oracle on a deterministic subsample
     sub_ids = {lid for lid in range(1, 1025) if lid % 16 == 3}
     sub = [ln for ln in lines if ln["line_id"] in sub_ids]
     want = {

@@ -7,7 +7,8 @@ second ArrowEvalPython (the optimizer's inferred ``isnotnull(join key)``
 pushed below the projection that computes the key would evaluate the
 UDF twice).  The covering joins (point-in-region, its region-table
 twin, polyline projection) explode banded prefixes into a broadcast
-equi-join and cross into Python once, for the refine."""
+equi-join and cross into Python once, for the refine; so do the
+edge-crossing joins, whose region side is broadcast."""
 
 import re
 
@@ -23,7 +24,11 @@ from s2_geometry_library_php_spark.operators.knn import (
     probe_ring_frame,
     ring_round_topk,
 )
-from s2_geometry_library_php_spark.operators.polyline_join import polyline_project_join
+from s2_geometry_library_php_spark.operators.polyline_join import (
+    polyline_project_join,
+    polyline_region_crossing_join,
+    polyline_self_crossing_join,
+)
 from s2_geometry_library_php_spark.operators.radius_join import within_radius_join
 from s2_geometry_library_php_spark.operators.spatial_join import (
     regions_to_df,
@@ -39,9 +44,16 @@ PYTHON_NODES = re.compile(r"(ArrowEvalPython|MapIn\w+|FlatMapGroupsIn\w+)\b")
 def _executed_nodes(df):
     """(depth, node text) of the executed physical plan, top-down."""
     df.collect()
+    return _planned_nodes(df)
+
+
+def _planned_nodes(df):
+    """(depth, node text) of the physical plan, top-down: the final plan
+    once ``df`` ran, else the plan as planned, before adaptive execution
+    re-plans joins from run-time sizes."""
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()  # the final plan, not the initial one
+        plan = plan.executedPlan()
     tree = plan.treeString()
     nodes = []
     for line in tree.splitlines():
@@ -186,3 +198,27 @@ def test_polyline_project_join_projects_once(spark, encoded):
     assert len(python) == 1 and python[0].startswith("ArrowEvalPython")
     assert _udf_filters_under_python(nodes) == []
     _assert_banded_prefix_join(nodes)
+
+
+def test_crossing_joins_broadcast_the_region_side_and_refine_once(spark):
+    """The region join plans the boundary edges (both key arms and the
+    endpoint fetch) only through broadcasts, before any run-time
+    re-planning; each crossing join crosses into Python once, for the
+    robustCrossing refine."""
+    lines = [
+        {"line_id": 1, "vertices": [[42.0, -77.0], [42.0, -72.0]]},
+        {"line_id": 2, "vertices": [[40.0, -74.5], [44.0, -74.5]]},
+    ]
+    df = polyline_region_crossing_join(spark, lines, region_fixtures())
+    region = _planned_nodes(df)
+    region_side = [
+        i
+        for i, (_, t) in enumerate(region)
+        if t.startswith("Project") and re.search(r" AS (region_id|cx)#", t)
+    ]
+    assert len(region_side) >= 2
+    for i in region_side:
+        assert any(t.startswith("BroadcastExchange") for t in _ancestors(region, i))
+    for nodes in (_executed_nodes(df), _executed_nodes(polyline_self_crossing_join(spark, lines))):
+        python = _python_nodes(nodes)
+        assert len(python) == 1 and python[0].startswith("ArrowEvalPython [_crosses(")

@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from s2_geometry_library_php_spark.operators.knn import _exact_distance
+from s2_geometry_library_php_spark.functions.udfs import latlng_angle_cols
 from s2_geometry_library_php_spark.operators.radius_join import (
     radius_join_level,
     self_radius_pairs,
@@ -23,7 +23,7 @@ def _brute_pairs(left, right, radius, left_id="a_id", right_id="b_id"):
     r = right.select(
         F.col(right_id), F.col("lat").alias("_blat"), F.col("lon").alias("_blon")
     )
-    dist = _exact_distance(
+    dist = latlng_angle_cols(
         F.col("_alat"), F.col("_alon"), F.col("_blat"), F.col("_blon")
     ).alias("dist_rad")
     return (

@@ -281,23 +281,6 @@ def test_tile_polygons_contain_centers(spark, docs):
         # antimeridian — lat containment is the meaningful invariant)
 
 
-def test_salted_repartition_preserves_aggregates(spark, docs):
-    from s2_geometry_library_php_spark.operators import tile_aggregate
-    from s2_geometry_library_php_spark.operators.tiling import (
-        salted_repartition,
-    )
-
-    base = {
-        (r.tile_token, r.doc_count)
-        for r in tile_aggregate(docs, 8).collect()
-    }
-    salted = {
-        (r.tile_token, r.doc_count)
-        for r in tile_aggregate(salted_repartition(docs, 8, 4), 8).collect()
-    }
-    assert base == salted
-
-
 def test_ann_lsh_recall(spark):
     from s2_geometry_library_php_spark.operators.similarity import (
         ann_lsh_topk,
@@ -896,7 +879,6 @@ def test_scale_critical_plans_have_no_nested_loops(spark, docs):
             spark,
             [dict(line_id=1, vertices=[[42.0, -77.0], [42.0, -72.0]])],
             region_fixtures(),
-            brute=False,  # gate the INDEXED (scale) plan shape
         ),
     }
     for name, df in frames.items():

@@ -58,7 +58,7 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'"
         )
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

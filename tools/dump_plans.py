@@ -7,6 +7,9 @@ and cited in README:
   (refine) -> two-exchange aggregate with partial aggregation;
 * polyline project join: the same banded-prefix BroadcastHashJoin
   with a single ArrowEvalPython (projection + distance refine);
+* edge-crossing joins: hash equi-joins of ancestor-or-self keys
+  against raw covering cells (the region join broadcasts its boundary
+  side, the self join shuffles both) and one ArrowEvalPython refine;
 * parquet scans show PushedFilters / narrow ReadSchema (column
   pruning drops text/html when not selected);
 * bitwise tile math stays inside WholeStageCodegen (no Python).
@@ -53,7 +56,7 @@ def main() -> None:
         region_fixtures,
     )
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = load_documents(spark, SF).withColumn(
@@ -82,6 +85,9 @@ def main() -> None:
     )
     from s2_geometry_library_php_spark.operators.polyline_join import (
         polyline_project_join,
+        polyline_region_crossing_join,
+        polyline_self_crossing_join,
+        synth_grid_lines,
     )
 
     plans.append(
@@ -96,6 +102,27 @@ def main() -> None:
                 [{"line_id": 1, "vertices": [[48.5, 1.8], [48.9, 2.4], [49.3, 3.0]]}],
                 0.01,
             ),
+        )
+    )
+    plans.append(
+        (
+            "polyline x region-boundary crossing join (driver-built edge "
+            "table; polyline ancestor-or-self keys x broadcast raw boundary "
+            "cells UNION raw polyline cells x broadcast boundary ancestor "
+            "keys, distinct; endpoint fetch, the boundary side broadcast; "
+            "one ArrowEvalPython robustCrossing refine)",
+            polyline_region_crossing_join(
+                spark, synth_grid_lines(64), region_fixtures()
+            ),
+        )
+    )
+    plans.append(
+        (
+            "polyline self-crossing join (driver-built edge table; "
+            "ancestor-or-self keys x raw cells on a shuffled equi-join, no "
+            "broadcast hint, pairs normalized to line_a < line_b; one "
+            "ArrowEvalPython robustCrossing refine)",
+            polyline_self_crossing_join(spark, synth_grid_lines(1024)),
         )
     )
     plans.append(
@@ -473,7 +500,8 @@ def main() -> None:
 
     out = ["# EXPLAIN — physical plans of the headline operators\n"]
     out.append(
-        "Generated by tools/dump_plans.py at sf0.01 on local[8]; the\n"
+        "Generated by tools/dump_plans.py at sf0.01 on "
+        f"{spark.sparkContext.master}; the\n"
         "shapes (not the statistics) are what hold at cluster scale.\n"
         "Each header ends with the plan's Python-node count\n"
         "(ArrowEvalPython, MapIn*, FlatMapGroupsIn*): one crossing into a\n"

@@ -72,7 +72,7 @@ def main() -> None:
     stage_dir = log.run_stage(
         "region_join",
         docs,
-        lambda df: spatial_join(spark, df, regions, prefilter=False),
+        lambda df: spatial_join(spark, df, regions),
         lineage_level=args.lineage_level,
     )
 
