@@ -14,8 +14,10 @@ output is byte-reproducible):
    the digit-bearing local parts ("john1984@…") can never be
    half-eaten by the phone pattern.
 2. **IPv4** — four 1-3 digit octets joined by dots, word-bounded →
-   ``<IP>``.  Runs before phones so dotted quads never match the
-   digit-run pattern.
+   ``<IP>``.  A second form takes a trailing ``.`` followed by the end
+   or a non-digit, so a sentence-final address (``at 1.2.3.4.``) is
+   redacted while a five-part dotted run is not.  Runs before phones
+   so dotted quads never match the digit-run pattern.
 3. **phone** — either a separator-form number ``\\d{3}[ -]\\d{3,4}
    [ -]\\d{4}`` (US/EU convention) or an E.164 international form
    ``+\\d{7,15}`` → ``<PHONE>``.  Deliberately conservative: bare
@@ -35,9 +37,12 @@ on digit runs adjacent to non-ASCII letters.  Boundaries are
 therefore explicit ASCII context classes ``(^|[^0-9A-Za-z_])``
 captured and re-inserted by the replacement ($1 in Java, \\1 in
 RE2), so the Spark output and the DuckDB twin are identical on any
-input.  (Consequence, identical in both engines: two PII spans
-separated by a single character share one context char and only the
-first is redacted in that pass.)
+input.  Two PII spans separated by a single character share one
+context char, so one pass redacts only the first; every rule
+therefore runs twice, in both engines alike.  The second pass
+catches every span the first skipped (the skipped spans now sit
+between placeholders, which hold no digits), and a third would change
+nothing.
 
 Scale shape: a per-row projection that rides the ingest scan — no
 shuffle, no UDF.  Counting twins (:func:`pii_count_columns`) let a
@@ -74,6 +79,12 @@ PII_RULES: tuple[tuple[str, str, str, str], ...] = (
         r"\1<IP>\3",
     ),
     (
+        "ipv4",
+        r"(^|[^0-9A-Za-z_.])((?:\d{1,3}\.){3}\d{1,3})\.($|[^0-9])",
+        "$1<IP>.$3",
+        r"\1<IP>.\3",
+    ),
+    (
         "phone",
         r"(^|[^0-9A-Za-z_])(\d{3}[ \-]\d{3,4}[ \-]\d{4})($|[^0-9A-Za-z_])",
         "$1<PHONE>$3",
@@ -90,23 +101,25 @@ PII_RULES: tuple[tuple[str, str, str, str], ...] = (
 
 def redact_pii_column(text_col) -> Column:
     """``text_col`` with every PII span replaced by its typed
-    placeholder — one native ``regexp_replace`` per rule, applied in
-    the documented order."""
+    placeholder — two native ``regexp_replace`` passes per rule,
+    applied in the documented order."""
     out = F.col(text_col) if isinstance(text_col, str) else text_col
     for _, pattern, repl, _duck in PII_RULES:
-        out = F.regexp_replace(out, pattern, repl)
+        out = F.regexp_replace(F.regexp_replace(out, pattern, repl), pattern, repl)
     return out
 
 
 def pii_count_columns(text_col) -> dict[str, Column]:
     """Per-type span counts on the ORIGINAL text (``n_email``,
     ``n_ipv4``, ``n_phone``) — native ``regexp_count``, same
-    patterns (same-name rules sum).  Count before redacting: after
-    replacement the spans are gone."""
+    patterns (same-name rules sum), counting both passes of each rule.
+    Count before redacting: after replacement the spans are gone."""
     col = F.col(text_col) if isinstance(text_col, str) else text_col
     out: dict[str, Column] = {}
-    for name, pattern, _repl, _duck in PII_RULES:
-        c = F.regexp_count(col, F.lit(pattern))
+    for name, pattern, repl, _duck in PII_RULES:
+        c = F.regexp_count(col, F.lit(pattern)) + F.regexp_count(
+            F.regexp_replace(col, pattern, repl), F.lit(pattern)
+        )
         key = f"n_{name}"
         out[key] = (out[key] + c) if key in out else c
     return out
@@ -118,7 +131,8 @@ def redact_pii_duckdb(text_expr: str) -> str:
     are single-quote-free so plain literal embedding is safe)."""
     out = text_expr
     for _, pattern, _repl, duck_repl in PII_RULES:
-        out = f"regexp_replace({out}, '{pattern}', '{duck_repl}', 'g')"
+        for _pass in range(2):
+            out = f"regexp_replace({out}, '{pattern}', '{duck_repl}', 'g')"
     return out
 
 
@@ -127,9 +141,11 @@ def pii_count_duckdb(text_expr: str) -> dict[str, str]:
     ``regexp_extract_all`` list length == Spark ``regexp_count``;
     same-name rules sum)."""
     out: dict[str, str] = {}
-    for name, pattern, _repl, _duck in PII_RULES:
+    for name, pattern, _repl, duck_repl in PII_RULES:
+        once = f"regexp_replace({text_expr}, '{pattern}', '{duck_repl}', 'g')"
         term = (
-            f"len(regexp_extract_all({text_expr}, '{pattern}'))"
+            f"len(regexp_extract_all({text_expr}, '{pattern}')) + "
+            f"len(regexp_extract_all({once}, '{pattern}'))"
         )
         key = f"n_{name}"
         out[key] = f"{out[key]} + {term}" if key in out else term

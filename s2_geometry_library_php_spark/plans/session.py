@@ -54,12 +54,14 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             pkg_root + os.pathsep + os.environ.get("PYTHONPATH", "")
         )
+    # spark-submit starts the JVM before this process and hands it over
+    # through PYSPARK_GATEWAY_PORT: its master and driver JVM options are
+    # already fixed, so keep them.
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
     cpus = default_cores()
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         # AQE: runtime coalescing + skew-join splitting (hot tiles).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -70,10 +72,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Broadcast the covering table even if stats are conservative.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
-        )
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
@@ -81,16 +79,35 @@ def get_spark(
         # locality wait only adds scheduling jitter.
         .config("spark.locality.wait", "0s")
         .config("spark.ui.enabled", "false")
-        # Many distinct generated WholeStageCodegen classes across a
-        # query suite overflow the default 240MB JIT code cache, after
-        # which the JVM silently stops compiling and later queries run
-        # interpreted (observed 10-30x slowdowns mid-suite).
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Djava.net.preferIPv4Stack=true -XX:ReservedCodeCacheSize=2g "
-            "-XX:+UseCodeCacheFlushing",
-        )
     )
+    if master or not submitted:
+        builder = builder.master(master or f"local[{cpus}]")
+    if not submitted:
+        builder = (
+            builder.config(
+                "spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+            )
+            # Many distinct generated WholeStageCodegen classes across a
+            # query suite overflow the default 240MB JIT code cache, after
+            # which the JVM silently stops compiling and later queries run
+            # interpreted (observed 10-30x slowdowns mid-suite).
+            .config(
+                "spark.driver.extraJavaOptions",
+                "-Djava.net.preferIPv4Stack=true -XX:ReservedCodeCacheSize=2g "
+                "-XX:+UseCodeCacheFlushing",
+            )
+            # Workers import the installed pyspark instead of re-reading
+            # pyspark.zip, the py4j zip and the spark-core jar on every task
+            # (s2_geometry_library_php_spark/_daemon.py; it keeps the zips
+            # when the installed pyspark is missing or another version).
+            # It is importable here through the PYTHONPATH set above; under
+            # spark-submit the workers see the --py-files zip only per task,
+            # after the daemon starts, so they keep the stock daemon.
+            .config(
+                "spark.python.daemon.module", "s2_geometry_library_php_spark._daemon"
+            )
+        )
     return builder.getOrCreate()
 
 

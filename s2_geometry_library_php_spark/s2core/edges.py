@@ -327,6 +327,14 @@ def polygon_is_valid(loops: list) -> tuple[bool, str]:
 
 
 # --- polyline operators (S2Polyline.php:3-21 doc; body is commented Java) -----------
+def _unit3(v: np.ndarray) -> np.ndarray:
+    """``v / |v|`` for one 3-vector, with ``|v|`` summed in the
+    reference's x, y, z order.  ``np.linalg.norm`` of a 1-D vector is
+    OpenBLAS ``ddot``, whose rounding depends on the operand's memory
+    alignment, so a worker and the driver could disagree in the last bit."""
+    return v / np.sqrt(v[0] * v[0] + v[1] * v[1] + v[2] * v[2])
+
+
 def edge_closest_point(
     x: np.ndarray, a: np.ndarray, b: np.ndarray
 ) -> np.ndarray:
@@ -336,7 +344,7 @@ def edge_closest_point(
     nearer endpoint."""
     x = np.atleast_2d(x)
     ab = geom.robust_cross_prod(a, b)
-    ab_unit = ab / np.linalg.norm(ab)
+    ab_unit = _unit3(ab)
     # geom.dot keeps each row's bits batch-invariant (edge_distance_radians)
     proj = x - np.outer(geom.dot(x, ab_unit), ab_unit)
     pn = np.linalg.norm(proj, axis=1)
@@ -372,7 +380,7 @@ def polyline_interpolate(vertices: np.ndarray, fraction: float) -> np.ndarray:
             sa = np.sin((1.0 - t) * ang)
             sb = np.sin(t * ang)
             p = sa * a + sb * b
-            return p / np.linalg.norm(p)
+            return _unit3(p)
         acc += float(edge_len[k])
     return vertices[-1]
 

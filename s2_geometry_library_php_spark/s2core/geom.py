@@ -100,8 +100,15 @@ def latlng_to_xyz(lat_rad: np.ndarray, lng_rad: np.ndarray) -> np.ndarray:
 
 
 def xyz_to_latlng(p: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """atan2-based, accurate near poles (S2LatLng.php:41-55)."""
-    x, y, z = p[..., 0], p[..., 1], p[..., 2]
+    """atan2-based, accurate near poles (S2LatLng.php:41-55).
+
+    The components are copied out contiguous.  numpy bounds a strided
+    input's memory by stride x length, which overshoots its last
+    element; when the allocator puts the output in that overshoot,
+    numpy's overlap check sends ``arctan2`` down its scalar loop, whose
+    last bit can differ from the SIMD loop's.  A Spark worker and the
+    driver would then disagree on the same point."""
+    x, y, z = (p[..., k].copy() for k in range(3))
     return np.arctan2(z, np.sqrt(x * x + y * y)), np.arctan2(y, x)
 
 

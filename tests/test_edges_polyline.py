@@ -171,6 +171,76 @@ def test_polyline_project_is_batch_invariant():
         assert np.array_equal(got, want[perm])
 
 
+def _at_offset(arr, offset):
+    """A copy of ``arr`` whose data starts ``offset`` bytes past a
+    64-byte boundary."""
+    buf = np.zeros(arr.nbytes + 128, dtype=np.uint8)
+    start = (-buf.ctypes.data) % 64 + offset
+    out = buf[start : start + arr.nbytes].view(arr.dtype).reshape(arr.shape)
+    out[...] = arr
+    return out
+
+
+def test_edge_closest_point_bits_do_not_depend_on_alignment(monkeypatch):
+    """The same inputs, and the edge normal the kernel derives from
+    them, copied at 0/8/16/24-byte offsets give the same bits.  A BLAS
+    norm (``np.linalg.norm`` of a 1-D vector) fails this, and with it
+    the bit-exact Spark-vs-numpy projection test, depending on where
+    the allocator put the normal in each process."""
+    rng = np.random.default_rng(7)
+    n = 1500
+    a = geom.normalize(rng.normal(size=(n, 3)))
+    b = geom.normalize(a + rng.normal(scale=0.05, size=(n, 3)))
+    x = geom.normalize(a + rng.normal(scale=0.05, size=(n, 3)))
+    cross = geom.robust_cross_prod
+    runs = []
+    for off in (0, 8, 16, 24):
+        monkeypatch.setattr(
+            geom, "robust_cross_prod", lambda p, q, off=off: _at_offset(cross(p, q), off)
+        )
+        runs.append([
+            edges.edge_closest_point(
+                _at_offset(x[i : i + 1], off), _at_offset(a[i], off), _at_offset(b[i], off)
+            )
+            for i in range(n)
+        ])
+    for other in runs[1:]:
+        for want, got in zip(runs[0], other):
+            assert np.array_equal(want, got)
+
+
+def test_xyz_to_latlng_bits_do_not_depend_on_output_placement(monkeypatch):
+    """numpy bounds a strided input's memory by stride x length; an
+    ``arctan2`` output that lands in the overshoot past the input's
+    last element takes the scalar loop, whose last bit can differ from
+    the SIMD loop's (doc 15 of the polyline projection test came back
+    as 48.86299894528857 from the worker and 48.862998945288574 from
+    the driver).  Here every ``arctan2`` output sits one element behind
+    the buffer that holds its first input: as close as the allocator
+    can put it, since a malloc chunk header separates two buffers."""
+    real = np.arctan2
+
+    def arctan2_behind_input(a, b):
+        owner = a if a.base is None else a.base
+        offset = (a.ctypes.data - owner.ctypes.data) // 8
+        buf = np.empty(owner.size + 1 + a.size)
+        buf[: owner.size] = owner.ravel()
+        moved = np.lib.stride_tricks.as_strided(
+            buf[offset:], shape=a.shape, strides=a.strides
+        )
+        return real(moved, b, out=buf[owner.size + 1 :])
+
+    rng = np.random.default_rng(3)
+    p = geom.normalize(rng.normal(size=(4000, 3)))
+    want = (
+        real(p[:, 2].copy(), np.sqrt(p[:, 0] * p[:, 0] + p[:, 1] * p[:, 1])),
+        real(p[:, 1].copy(), p[:, 0].copy()),
+    )
+    monkeypatch.setattr(geom.np, "arctan2", arctan2_behind_input)
+    for got, exp in zip(geom.xyz_to_latlng(p), want):
+        assert np.array_equal(got, exp)
+
+
 def test_polyline_interpolate_project_roundtrip():
     import numpy as np
 

@@ -42,6 +42,14 @@ REDACT_CASES = [
     # ipv4
     ("server 192.168.0.1 down", "server <IP> down"),
     ("edge 1.2.3.4, end", "edge <IP>, end"),
+    ("server at 1.2.3.4.", "server at <IP>."),
+    ("hosts 10.0.0.1. Then 10.0.0.2.x", "hosts <IP>. Then <IP>.x"),
+    # adjacent spans share a context char; the second pass gets them
+    ("ips 1.1.1.1 2.2.2.2 3.3.3.3 4.4.4.4 end",
+     "ips <IP> <IP> <IP> <IP> end"),
+    ("1.1.1.1 2.2.2.2.", "<IP> <IP>."),
+    ("555-123-4567 555-765-4321 +4915112345678 +4915112345679",
+     "<PHONE> <PHONE> <PHONE> <PHONE>"),
     # phones: separator form and E.164
     ("call 555-123-4567 today", "call <PHONE> today"),
     ("call 555 1234 4567 today", "call <PHONE> today"),
@@ -49,6 +57,7 @@ REDACT_CASES = [
     # decoys that must survive untouched
     ("order #1234567890 total", "order #1234567890 total"),
     ("version v1.2.3 released", "version v1.2.3 released"),
+    ("run 1.2.3.4.5. end", "run 1.2.3.4.5. end"),
     ("year 2026 and pi 3.14159", "year 2026 and pi 3.14159"),
     ("just @ nothing here", "just @ nothing here"),
     # email absorbs its digits before the phone rule can see them
@@ -137,6 +146,36 @@ def test_count_columns_parity(spark):
     # generator branches: exactly one PII span in branches 0-3, none in 4
     for d, (ne, ni, np_) in spark_rows.items():
         assert ne + ni + np_ == (0 if d % 5 == 4 else 1), d
+
+
+def test_counts_match_redactions_on_adjacent_spans(spark):
+    """Each engine counts both passes of each rule: every span the
+    redaction removes, including sentence-final and shared-context
+    ones."""
+    texts = {
+        "server at 1.2.3.4.": (0, 1, 0),
+        "ips 1.1.1.1 2.2.2.2 3.3.3.3 4.4.4.4.": (0, 4, 0),
+        "a@b.co c@d.io 555-123-4567 555-765-4321": (2, 0, 2),
+        "run 1.2.3.4.5. end": (0, 0, 0),
+    }
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    counts = pii_count_columns("text")
+    got = {
+        r["text"]: (r["n_email"], r["n_ipv4"], r["n_phone"])
+        for r in df.select("text", *[c.alias(n) for n, c in counts.items()]).collect()
+    }
+    twins = pii_count_duckdb("text")
+    con = duckdb.connect()
+    duck = {
+        t: con.execute(
+            f"SELECT {twins['n_email']}, {twins['n_ipv4']}, {twins['n_phone']} "
+            "FROM (SELECT ? AS text)",
+            [t],
+        ).fetchone()
+        for t in texts
+    }
+    assert got == texts
+    assert duck == texts
 
 
 def test_redact_pii_frame_helper(spark):

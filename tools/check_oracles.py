@@ -19,6 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
+import pandas as pd  # noqa: E402
 
 #: driver gate runs at sf0.01; override for scale cross-checks
 SF = os.environ.get("CHECK_ORACLES_SF", "/root/testdata/sf0.01")
@@ -48,6 +49,31 @@ def rows_to_multiset(cols, rows):
     return out
 
 
+def print_versions(spark) -> None:
+    """The engine versions the hashes depend on, and where a Python
+    worker imported pyspark from: the installed package or Spark's
+    shipped pyspark.zip."""
+    import numpy
+    import pyarrow
+    import pyspark
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("string")
+    def pyspark_origin(x: pd.Series) -> pd.Series:
+        import pyspark
+
+        return pd.Series([pyspark.__file__] * len(x))
+
+    worker = spark.range(1).select(pyspark_origin("id")).first()[0]
+    where = "zip" if ".zip" + os.sep in worker else "installed"
+    print(
+        f"versions: pyspark {pyspark.__version__}, duckdb {duckdb.__version__}, "
+        f"pyarrow {pyarrow.__version__}, pandas {pd.__version__}, "
+        f"numpy {numpy.__version__}"
+    )
+    print(f"worker pyspark: {where} ({os.path.dirname(worker)})")
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
     from s2_geometry_library_php_spark.plans import get_spark
@@ -60,6 +86,7 @@ def main() -> None:
 
     spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
+    print_versions(spark)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     args = [a for a in sys.argv[1:] if a != "--exact"]

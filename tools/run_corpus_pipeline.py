@@ -21,7 +21,8 @@ content fingerprints stay honest).  Stage 3: survivors written as a
 parquet table bucketed on tile_id, ready for shuffle-free recurring
 joins (sources/bucketed.py).  Prints one JSON metrics line.
 
-Master is inherited from spark-submit — the script never sets one."""
+The session comes from ``plans.get_spark``, which keeps the master
+spark-submit set."""
 
 from __future__ import annotations
 
@@ -54,16 +55,11 @@ def main() -> None:
     ap.add_argument("--redact-pii", action="store_true")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("s2-corpus-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from s2_geometry_library_php_spark.plans import get_spark
+
+    spark = get_spark(app_name="s2-corpus-pipeline")
 
     from s2_geometry_library_php_spark.functions import s2_cell_id
     from s2_geometry_library_php_spark.functions.dedup import (

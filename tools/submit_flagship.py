@@ -14,7 +14,8 @@ tile-partitioned parquet.  Re-running with the same --out resumes:
 completed lineage prefixes are skipped (plans/lineage.py, dynamic
 partition overwrite).  Prints one JSON metrics line on stdout.
 
-Master is inherited from spark-submit — the script never sets one."""
+The session comes from ``plans.get_spark``, which keeps the master
+spark-submit set."""
 
 from __future__ import annotations
 
@@ -36,16 +37,11 @@ def main() -> None:
     # Workers import the engine from the --py-files zip too: Spark
     # adds it to the executors' PYTHONPATH automatically; the driver
     # side gets it from spark-submit's sys.path injection.
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.appName("s2-flagship-submit")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    from s2_geometry_library_php_spark.plans import get_spark
+
+    spark = get_spark(app_name="s2-flagship-submit")
 
     from s2_geometry_library_php_spark.functions import s2_cell_id
     from s2_geometry_library_php_spark.functions.sql_bitops import (
