@@ -34,6 +34,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.sql_bitops import s2_parent
 from ..functions.udfs import distinct_rings, latlng_angle_cols
+from ..plans.session import local_relation
 from ..s2core import cellid as cid
 from ..s2core.metric import MIN_WIDTH
 
@@ -147,13 +148,13 @@ def _local_relation(
     spark: SparkSession, table: pa.Table, id_field: StructField
 ) -> DataFrame:
     """A driver-built probe table (probe id first, then coordinates and
-    cell ids) as a local relation: no Spark job, no Python worker.  The
+    cell ids) as a local relation (``plans.local_relation``).  The
     probe id keeps the caller's Spark type."""
     spark_type = {pa.float64(): DoubleType(), pa.int64(): LongType()}
     fields = [StructField(id_field.name, id_field.dataType)] + [
         StructField(f.name, spark_type[f.type]) for f in list(table.schema)[1:]
     ]
-    return spark.createDataFrame(table, StructType(fields))
+    return local_relation(spark, table, StructType(fields))
 
 
 def ring_round_topk(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from ..functions.sql_bitops import s2_level
+from ..plans.session import local_relation
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.coverer import expand_by_radius
@@ -59,8 +60,8 @@ def _polyline_candidates(
         )
         for c in cov:
             cov_rows.append((lid, cid.to_signed_scalar(c), cid.level_scalar(c)))
-    cov_df = spark.createDataFrame(
-        cov_rows, "line_id long, cov_cell long, cov_level int"
+    cov_df = local_relation(
+        spark, cov_rows, "line_id long, cov_cell long, cov_level int"
     )
     levels = sorted({r[2] for r in cov_rows})
     return covering_candidates(docs, cov_df, levels, leaf_col), verts_by_line
@@ -229,7 +230,7 @@ def edge_table(spark: SparkSession, chains: list[tuple]) -> DataFrame:
                     [cid.to_signed_scalar(c) for c in cells],
                 )
             )
-    return spark.createDataFrame(rows, EDGE_SCHEMA)
+    return local_relation(spark, rows, EDGE_SCHEMA)
 
 
 def _parent_dyn(cell, level):

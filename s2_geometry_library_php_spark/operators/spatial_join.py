@@ -10,23 +10,27 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
    kernel) — the filter/refine optimization the reference encodes as
    interior coverings (S2RegionCoverer.php:257-267).
 
-2. **Broadcast equi-join on banded prefixes**: each covering cell at
-   level L matches probes via ``s2_parent(leaf_id, L) = cell_id`` — a
-   pure hash equi-join per distinct level (few: coverings hold <=
-   max_cells cells across ~4-6 levels), unioned via ``explode`` of a
-   per-probe prefix array.  No theta/range join, no shuffle of the
-   (big) probe side: the covering table is broadcast
-   (north rule: "broadcast of covering-cell polygon indexes").
+2. **Covering lookup inside the scan** (:func:`spatial_join`): the
+   covering rows, sorted by cell, and the region specs ride in one
+   pandas UDF's closure.  Per Arrow batch it encodes the leaves and
+   finds each leaf's parent at every covering level with a binary
+   search (``np.searchsorted``), so the region lookup needs no join:
+   with a driver-sized region set it belongs in the scan (Raptor,
+   VLDB'19, makes the same argument for raster x vector).
 
-3. **Refine**: survivors matched through a boundary cell run the
-   vectorized ``contains_points`` kernel (loop parity / cap chord /
-   rect interval) via a pandas UDF over Arrow batches; interior
-   matches pass through untouched.
+3. **Refine in the same crossing**: pairs matched through a boundary
+   cell run the vectorized ``contains_points`` kernel (loop parity /
+   cap chord / rect interval); interior matches pass through
+   untouched.  Each point leaves Python with its sorted containing
+   region ids, exploded into one row per region.
 
-Each step has one definition, shared by :func:`spatial_join`, its
-region-table twin :func:`spatial_join_region_table` and the polyline
-joins: :func:`covering_rows` (cover one region), :func:`covering_candidates`
-(prefix explode + equi-join) and ``_refine_points`` (the refine kernel).
+The distributed twin :func:`spatial_join_region_table` and the
+polyline joins keep a **broadcast equi-join on banded prefixes**
+(:func:`covering_candidates`): each covering cell at level L matches
+probes via ``s2_parent(leaf_id, L) = cell_id``, a pure hash equi-join
+over a per-probe prefix array, because their coverings are computed
+in executors or unbounded.  All paths share :func:`covering_rows`
+(cover one region) and ``_refine_points`` (the refine kernel).
 
 Driver-side coverings are memoized in process and on disk under
 ``$TMPDIR/s2spark_covering_cache``, keyed on the region specs, the
@@ -34,11 +38,12 @@ coverer parameters and a digest of the s2core sources: a change to the
 coverer, cell or region code re-keys the cache, so it never serves
 coverings computed by other code.
 
-At 100 TB scale: stage 2 is map-side only (scan -> project -> BHJ);
-the only shuffles in a typical pipeline are the caller's final
-aggregations.  Skewed hot tiles don't matter for the join itself
-(broadcast joins don't shuffle by key); skew handling matters for the
-downstream groupBys and is provided by ``tiling.salted_repartition_planned``.
+At 100 TB scale: the point join is map-side only (scan -> filter ->
+one ArrowEvalPython -> generate), with no exchange and no join; the
+only shuffles in a typical pipeline are the caller's final
+aggregations.  Skewed hot tiles don't matter for the join itself (it
+never partitions by key); skew handling matters for the downstream
+groupBys and is provided by ``tiling.salted_repartition_planned``.
 """
 
 from __future__ import annotations
@@ -55,6 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     IntegerType,
     LongType,
@@ -64,6 +70,7 @@ from pyspark.sql.types import (
 
 from .. import s2core
 from ..functions.sql_bitops import s2_parent
+from ..plans.session import local_relation
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.cell import Cell
@@ -256,56 +263,60 @@ def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
 def build_covering_table(
     spark: SparkSession, regions: list[dict], **kwargs
 ) -> DataFrame:
-    rows = compute_coverings(regions, **kwargs)
-    return spark.createDataFrame(rows, COVERING_SCHEMA)
+    """The driver-side covering rows (:func:`compute_coverings`) as a
+    local relation in COVERING_SCHEMA."""
+    return local_relation(spark, compute_coverings(regions, **kwargs), COVERING_SCHEMA)
 
 
 def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
     """Cheap OR-of-rect-bounds prefilter — the reference's own first
     optimization (every region op starts with a rect/cap bound check,
     S2Loop.php:382-389, S2Cap.php:176-180), lifted to a whole-stage-
-    codegen scalar predicate evaluated BEFORE the prefix explode and
-    broadcast join.  Probes outside every region's lat/lng bound skip
-    the join entirely, cutting the exploded-row volume by the bbox
-    selectivity.  Conservative: bounds widened by 1e-9 degrees against
+    codegen scalar predicate evaluated BEFORE the Python crossing.
+    Probes outside every region's lat/lng bound never reach Python.
+    Conservative: bounds widened by 1e-9 degrees against
     radian->degree rounding.  The longitude compare mirrors the refine
     kernel's lng==-pi -> +pi remap (a doc at exactly lon=-180 must not
     be dropped by the prefilter when a region's interval ends at
-    +180)."""
+    +180).
+
+    The predicate is built as one SQL string and parsed in one
+    ``F.expr`` call: composing it from Column operators costs a py4j
+    round trip per operator (over 2,000 for a dozen regions), the
+    string costs the same few calls for any region count.  Doubles are
+    written as ``repr(x) + "D"`` literals, which round-trip exactly."""
     import math
 
+    def col(name: str) -> str:
+        return ".".join(f"`{part}`" for part in name.split("."))
+
+    def lit(x: float) -> str:
+        return repr(float(x)) + "D"
+
     eps = 1e-9
+    lat = col(lat_col)
+    # normalize -180 to +180 before comparing, matching the refine
+    # kernel's atan2-based longitude (never returns -pi for points
+    # remapped to +pi by the S1Interval convention)
+    lon = f"(CASE WHEN {col(lon_col)} = -180.0D THEN 180.0D ELSE {col(lon_col)} END)"
     terms = []
     for spec in regions:
         reg = region_from_params(
             spec["kind"], spec["params"], spec.get("loop_offsets")
         )
         bound = reg.get_rect_bound()
-        lat_lo = math.degrees(bound.lat.lo) - eps
-        lat_hi = math.degrees(bound.lat.hi) + eps
-        t = (F.col(lat_col) >= F.lit(lat_lo)) & (
-            F.col(lat_col) <= F.lit(lat_hi)
-        )
+        lat_lo = lit(math.degrees(bound.lat.lo) - eps)
+        lat_hi = lit(math.degrees(bound.lat.hi) + eps)
+        t = f"{lat} >= {lat_lo} AND {lat} <= {lat_hi}"
         if not bound.lng.is_full():
-            lng_lo = math.degrees(bound.lng.lo) - eps
-            lng_hi = math.degrees(bound.lng.hi) + eps
-            # normalize -180 to +180 before comparing, matching the
-            # refine kernel's atan2-based longitude (never returns -pi
-            # for points remapped to +pi by the S1Interval convention)
-            lon_n = F.when(
-                F.col(lon_col) == F.lit(-180.0), F.lit(180.0)
-            ).otherwise(F.col(lon_col))
+            lng_lo = lit(math.degrees(bound.lng.lo) - eps)
+            lng_hi = lit(math.degrees(bound.lng.hi) + eps)
             if bound.lng.is_inverted():
-                t = t & (
-                    (lon_n >= F.lit(lng_lo)) | (lon_n <= F.lit(lng_hi))
-                )
+                t += f" AND ({lon} >= {lng_lo} OR {lon} <= {lng_hi})"
             else:
-                t = t & (lon_n >= F.lit(lng_lo)) & (lon_n <= F.lit(lng_hi))
-        terms.append(t)
-    out = terms[0]
-    for t in terms[1:]:
-        out = out | t
-    return out
+                t += f" AND {lon} >= {lng_lo} AND {lon} <= {lng_hi}"
+        terms.append(f"({t})")
+    return F.expr(" OR ".join(terms))
 
 
 def _refine_points(
@@ -344,9 +355,17 @@ def _refine_points(
     return pd.Series(out)
 
 
-def _refine_udf(regions: list[dict]):
-    """Refine UDF with the regions in its closure: rebuilt once per
-    executor (closure serialization)."""
+def region_hits(regions: list[dict], cov_rows: list[tuple]):
+    """The point-in-region kernel of :func:`spatial_join`:
+    ``hits(lat, lon)`` (degree arrays) -> one sorted int64 array of
+    containing region ids per point.
+
+    The covering rows (:func:`compute_coverings`) are held sorted by
+    cell.  Per batch: encode the leaves; look up each leaf's parent at
+    every covering level with ``np.searchsorted`` left/right, so several
+    regions may share a cell; pass interior matches through and refine
+    boundary matches with ``_refine_points``.  Coverings are disjoint
+    per region, so a point matches each region at most once."""
     specs = {int(r["region_id"]): r for r in regions}
     cache: dict[int, Region] = {}
 
@@ -356,16 +375,58 @@ def _refine_udf(regions: list[dict]):
             spec["kind"], spec["params"], spec.get("loop_offsets")
         )
 
-    @F.pandas_udf(BooleanType())
-    def refine(
-        lat: pd.Series,
-        lon: pd.Series,
-        region_id: pd.Series,
-        is_interior: pd.Series,
-    ) -> pd.Series:
-        return _refine_points(lat, lon, region_id, is_interior, cache, build)
+    cov = np.array(cov_rows, dtype=np.int64).reshape(-1, 4)
+    order = np.argsort(cid.from_signed(cov[:, 1]), kind="stable")
+    cov = cov[order]
+    cells = cid.from_signed(cov[:, 1])
+    cov_rid, cov_interior = cov[:, 0], cov[:, 3].astype(bool)
+    levels = sorted({int(x) for x in cov[:, 2]})
 
-    return refine
+    def hits(lat: np.ndarray, lon: np.ndarray) -> pd.Series:
+        n = len(lat)
+        # Non-finite coordinates have no leaf cell: they match nothing.
+        finite = np.isfinite(lat) & np.isfinite(lon)
+        leaf = cid.cell_id_from_latlng_degrees(
+            np.where(finite, lat, 0.0), np.where(finite, lon, 0.0)
+        )
+        pairs_pt, pairs_cov = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+        for lvl in levels:
+            parent = cid.parent(leaf, lvl)
+            lo = np.searchsorted(cells, parent, "left")
+            count = np.where(finite, np.searchsorted(cells, parent, "right") - lo, 0)
+            pt = np.repeat(np.arange(n), count)
+            # Each point's run of matching covering rows: lo, lo+1, ...
+            run_start = np.repeat(np.cumsum(count) - count, count)
+            pairs_pt.append(pt)
+            pairs_cov.append(lo[pt] + np.arange(len(pt)) - run_start)
+        pt, idx = np.concatenate(pairs_pt), np.concatenate(pairs_cov)
+        rid = cov_rid[idx]
+        keep = _refine_points(
+            pd.Series(lat[pt]), pd.Series(lon[pt]), pd.Series(rid),
+            pd.Series(cov_interior[idx]), cache, build,
+        ).to_numpy(bool)
+        pt, rid = pt[keep], rid[keep]
+        by_point = np.lexsort((rid, pt))
+        pt, rid = pt[by_point], rid[by_point]
+        bounds = np.searchsorted(pt, np.arange(n + 1))
+        return pd.Series(
+            [rid[bounds[i]:bounds[i + 1]] for i in range(n)], dtype=object
+        )
+
+    return hits
+
+
+def _hits_udf(regions: list[dict], cov_rows: list[tuple]):
+    """:func:`region_hits` as a pandas UDF with the coverings and the
+    region specs in its closure: shipped once per executor (closure
+    serialization), no covering table and no join."""
+    kernel = region_hits(regions, cov_rows)
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def hits(lat: pd.Series, lon: pd.Series) -> pd.Series:
+        return kernel(lat.to_numpy(np.float64), lon.to_numpy(np.float64))
+
+    return hits
 
 
 def covering_candidates(
@@ -398,37 +459,31 @@ def spatial_join(
     regions: list[dict],
     lat_col: str = "lat",
     lon_col: str = "lon",
-    leaf_col: str = "cell_id",
     max_cells: int = 8,
 ) -> DataFrame:
     """docs x regions point-in-region join.
 
-    Returns ``docs`` columns + ``region_id``.  ``docs`` must already
-    carry the leaf ``cell_id`` (from ``functions.s2_cell_id``).  Docs
-    outside every region's rect bound are dropped first
-    (``bbox_prefilter_expr``); the prefilter is conservative, so it
-    never changes the output.
+    Returns ``docs`` columns + ``region_id``: one row per doc and
+    containing region.  ``docs`` needs only the ``lat_col``/``lon_col``
+    degree columns; the join encodes the leaf inside its one Python
+    crossing (:func:`region_hits`).  Docs outside every region's rect
+    bound are dropped first (``bbox_prefilter_expr``); the prefilter
+    is conservative, so it never changes the output.  When ``docs``
+    computes its own ``s2_cell_id`` over the same columns, Catalyst
+    evaluates both UDFs in one ArrowEvalPython node.
     """
-    cov_rows = compute_coverings(regions, max_cells=max_cells)
-    levels = sorted({lvl for _, _, lvl, _ in cov_rows})
-    cov = spark.createDataFrame(cov_rows, COVERING_SCHEMA)
-
-    docs = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
-    joined = covering_candidates(docs, cov, levels, leaf_col)
-
-    # Covering rows are disjoint per region, so no dedup is needed.
-    # SINGLE pass: the refine kernel receives is_interior and passes
-    # interior matches through untouched (masked, zero kernel work) —
-    # avoids a union that would re-execute the probe subtree twice.
-    refine = _refine_udf(regions)
-    return joined.where(
-        refine(
-            F.col(lat_col),
-            F.col(lon_col),
-            F.col("region_id"),
-            F.col("is_interior"),
-        )
-    ).select(*docs.columns, "region_id")
+    hits = _hits_udf(regions, compute_coverings(regions, max_cells=max_cells))
+    # explode_outer + an explicit not-null filter, not an inner explode:
+    # for an inner explode the optimizer infers size(_hits) > 0 and
+    # pushes it below the projection, evaluating the UDF a second time
+    # in its own ArrowEvalPython node (the trap knn.join_key avoids).
+    return (
+        docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
+        .withColumn("_hits", hits(F.col(lat_col), F.col(lon_col)))
+        .withColumn("region_id", F.explode_outer("_hits"))
+        .where(F.col("region_id").isNotNull())
+        .select(*docs.columns, "region_id")
+    )
 
 
 # --- distributed region path (large region sets, SURVEY.md §3.2) ---------------
@@ -450,7 +505,7 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
         )
         for r in regions
     ]
-    return spark.createDataFrame(rows, REGION_TABLE_SCHEMA)
+    return local_relation(spark, rows, REGION_TABLE_SCHEMA)
 
 
 def _region_from_row(kind, params, loop_offsets) -> Region:

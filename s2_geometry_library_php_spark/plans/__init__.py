@@ -1,1 +1,1 @@
-from .session import default_cores, get_spark, stop_spark  # noqa: F401
+from .session import default_cores, get_spark, local_relation, stop_spark  # noqa: F401

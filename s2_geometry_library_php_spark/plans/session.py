@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the engine.
+"""SparkSession factory tuned for the engine, and the helper that
+hands a driver-built table to Spark as a local relation.
 
 Local sandbox runs on ``local[N]``; the same config block is what we
 would pass to ``spark-submit`` on a real cluster (AQE on, skew join
@@ -9,7 +10,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def default_cores() -> int:
@@ -115,3 +119,24 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+
+
+def local_relation(
+    spark: SparkSession, data: pa.Table | list[tuple], schema: StructType | str
+) -> DataFrame:
+    """A driver-built table (coverings, region specs, edges, probe
+    rings) as a local relation: its Arrow batches go to the JVM once
+    and plan as a ``LocalTableScan``, so no action on it runs a Spark
+    job or a Python worker.  ``spark.createDataFrame(list_of_tuples)``
+    instead plans a ``PythonRDD`` scan that pickles the rows through
+    the workers on every action.  ``data`` is a pyarrow Table or row
+    tuples in ``schema``'s field order."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        columns = list(zip(*data)) if data else [()] * len(arrow)
+        data = pa.table(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(data, schema)

@@ -2,19 +2,18 @@
 point-in-region covering join run inside a structured stream.
 
 Every stage of the batch operator is stateless per row — the bbox
-prefilter is a whole-stage-codegen scalar predicate, the prefix-array
-explode is a narrow projection, the covering join is a broadcast
-stream-STATIC equi-join (the region dimension is batch-built exactly
-as in the batch plan), and the refine kernel is a deterministic Arrow
-UDF.  The identical plan therefore lifts into a micro-batch stream
-with no state store and no watermark, and an ``availableNow`` pass
-over a static source is row-for-row the batch join — the equality the
-driver's oracle checks.
+prefilter is a whole-stage-codegen scalar predicate, and the covering
+lookup and refine are one deterministic Arrow UDF whose closure holds
+the driver-built coverings (batch-built exactly as in the batch plan),
+exploded into one row per containing region.  The identical plan
+therefore lifts into a micro-batch stream with no state store and no
+watermark, and an ``availableNow`` pass over a static source is
+row-for-row the batch join — the equality the driver's oracle checks.
 
 At scale this is the shape for joining a live crawl firehose against
 a (slowly-changing) region dimension: per-batch work is proportional
-to batch size only, the broadcast covering table is reused across
-micro-batches, and nothing accumulates on the stream side.
+to batch size only, the coverings ship once per executor in the UDF's
+closure, and nothing accumulates on the stream side.
 """
 
 from __future__ import annotations
@@ -30,10 +29,9 @@ def streaming_spatial_join(
     regions: list[dict],
     lat_col: str = "lat",
     lon_col: str = "lon",
-    leaf_col: str = "cell_id",
     max_cells: int = 8,
 ) -> DataFrame:
-    """Streaming docs (carrying lat/lon + leaf ``cell_id``) x regions
+    """Streaming docs (carrying lat/lon degree columns) x regions
     -> streaming (docs columns + region_id), ready for writeStream in
     append mode (stateless: every output row is final on arrival)."""
     if not stream_docs.isStreaming:
@@ -47,6 +45,5 @@ def streaming_spatial_join(
         regions,
         lat_col=lat_col,
         lon_col=lon_col,
-        leaf_col=leaf_col,
         max_cells=max_cells,
     )

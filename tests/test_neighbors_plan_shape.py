@@ -5,10 +5,14 @@ relation); the radius join evaluates the left encode and the fused
 right ring kernel.  No filter on a Python UDF's output may sit under a
 second ArrowEvalPython (the optimizer's inferred ``isnotnull(join key)``
 pushed below the projection that computes the key would evaluate the
-UDF twice).  The covering joins (point-in-region, its region-table
-twin, polyline projection) explode banded prefixes into a broadcast
+UDF twice).  The point-in-region join crosses into Python once, for
+the fused covering lookup and refine, with no join at all; when its
+input computes the leaf encode over the same columns, both UDFs share
+that one node.  The other covering joins (the region-table twin,
+polyline projection) explode banded prefixes into a broadcast
 equi-join and cross into Python once, for the refine; so do the
-edge-crossing joins, whose region side is broadcast."""
+edge-crossing joins, whose region side is broadcast.  Driver-built
+tables (coverings, region specs, edges) plan as local relations."""
 
 import re
 
@@ -25,12 +29,15 @@ from s2_geometry_library_php_spark.operators.knn import (
     ring_round_topk,
 )
 from s2_geometry_library_php_spark.operators.polyline_join import (
+    _unit_vertices,
+    edge_table,
     polyline_project_join,
     polyline_region_crossing_join,
     polyline_self_crossing_join,
 )
 from s2_geometry_library_php_spark.operators.radius_join import within_radius_join
 from s2_geometry_library_php_spark.operators.spatial_join import (
+    build_covering_table,
     regions_to_df,
     spatial_join,
     spatial_join_region_table,
@@ -175,10 +182,45 @@ def test_radius_join_evaluates_each_kernel_once(spark, points):
 
 
 def test_spatial_join_crosses_once_for_the_refine(spark, encoded):
+    """One ArrowEvalPython (the fused covering lookup and refine), no
+    join of either kind, and no filter that re-evaluates the UDF."""
     nodes = _executed_nodes(spatial_join(spark, encoded, region_fixtures()))
     python = _python_nodes(nodes)
-    assert len(python) == 1 and python[0].startswith("ArrowEvalPython [refine(")
-    _assert_banded_prefix_join(nodes)
+    assert len(python) == 1 and python[0].startswith("ArrowEvalPython [hits(")
+    assert _names(nodes, "BroadcastHashJoin") == []
+    assert _names(nodes, "SortMergeJoin") == []
+    assert _udf_filters_under_python(nodes) == []
+
+
+def test_spatial_join_shares_the_encodes_python_node(spark, points):
+    """An encode that is not written to disk and the join's kernel are
+    both pandas UDFs over (lat, lon): Catalyst evaluates them in one
+    ArrowEvalPython node, so each row crosses into Python once."""
+    docs = points.withColumn("cell_id", s2_cell_id("lat", "lon"))
+    nodes = _executed_nodes(spatial_join(spark, docs, region_fixtures()))
+    python = _python_nodes(nodes)
+    assert len(python) == 1, python
+    assert "s2_cell_id(" in python[0] and "hits(" in python[0]
+    assert _udf_filters_under_python(nodes) == []
+
+
+def test_driver_built_tables_are_local_relations(spark, encoded):
+    """Coverings, region specs and edges ship as Arrow local relations:
+    no PythonRDD scan that pickles rows through the workers."""
+    regions = region_fixtures()
+    lines = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]}]
+    frames = [
+        build_covering_table(spark, regions),
+        regions_to_df(spark, regions),
+        edge_table(spark, [(1, _unit_vertices(lines[0]["vertices"]), False)]),
+    ]
+    for df in frames:
+        plan = [t for _, t in _planned_nodes(df)]
+        assert len(plan) == 1 and plan[0].startswith("LocalTableScan"), plan
+    # The polyline covering side of the project join.
+    nodes = _executed_nodes(polyline_project_join(spark, encoded, lines, 0.2))
+    assert _names(nodes, "LocalTableScan")
+    assert _names(nodes, "Scan ExistingRDD") == []
 
 
 def test_region_table_join_covers_in_one_map_and_refines_once(spark, encoded):

@@ -1,0 +1,165 @@
+"""The fused point-in-region kernel of ``spatial_join``
+(``region_hits``: covering lookup and refine in one Python crossing).
+On adversarial points (the poles, lon = +-180, points inside several
+overlapping fixtures, leaves at and just outside the range ends of
+covering cells) it agrees with brute-force containment and with the
+region-table join, one row per containing region; its answer does not
+depend on how the rows are batched; and the bbox prefilter it runs
+behind is built in the same number of py4j calls for any region count."""
+
+from collections import Counter
+
+import numpy as np
+import py4j.clientserver
+import pytest
+
+from s2_geometry_library_php_spark.functions import s2_cell_id
+from s2_geometry_library_php_spark.operators.spatial_join import (
+    bbox_prefilter_expr,
+    compute_coverings,
+    region_hits,
+    regions_to_df,
+    spatial_join,
+    spatial_join_region_table,
+)
+from s2_geometry_library_php_spark.s2core import cellid as cid
+from s2_geometry_library_php_spark.s2core import geom
+from s2_geometry_library_php_spark.s2core.region import region_from_params
+from s2_geometry_library_php_spark.sources import region_fixtures
+
+MAX_CELLS = 8  # spatial_join's default covering size
+
+
+def _region(spec):
+    return region_from_params(spec["kind"], spec["params"], spec.get("loop_offsets"))
+
+
+def _boundary_leaves(regions):
+    """Leaves at range_min / range_max of every covering cell, and the
+    leaves just before and after each range (the next leaf id is 2
+    away); ids that leave the six faces are dropped."""
+    cells = cid.from_signed([r[1] for r in compute_coverings(regions, max_cells=MAX_CELLS)])
+    two = np.uint64(2)
+    lo, hi = cid.range_min(cells), cid.range_max(cells)
+    leaves = np.concatenate([lo, hi, lo - two, hi + two])
+    return leaves[(leaves >> np.uint64(61)) < 6]
+
+
+@pytest.fixture(scope="module")
+def adversarial():
+    rng = np.random.default_rng(9)
+    regions = region_fixtures()
+    lat, lon = [], []
+
+    def add(a, b):
+        lat.extend(np.ravel(a))
+        lon.extend(np.ravel(b))
+
+    add(np.degrees(np.arcsin(rng.uniform(-1, 1, 1500))), rng.uniform(-180, 180, 1500))
+    edge_lon = np.array([-180.0, -90.0, 0.0, 45.0, 180.0])
+    add(np.full(5, 90.0), edge_lon)
+    add(np.full(5, -90.0), edge_lon)
+    edge_lat = np.array([-15.0, -10.0, 0.0, 5.0, 14.9, 15.0, 45.0, 85.0])
+    add(edge_lat, np.full(8, 180.0))
+    add(edge_lat, np.full(8, -180.0))
+    # Inside each region's rect bound, where the fixtures overlap.
+    for spec in regions:
+        b = _region(spec).get_rect_bound()
+        la = rng.uniform(b.lat.lo, b.lat.hi, 150)
+        span = (b.lng.hi - b.lng.lo) % (2 * np.pi) or 2 * np.pi
+        ln = (b.lng.lo + rng.uniform(0, span, 150) + np.pi) % (2 * np.pi) - np.pi
+        add(np.degrees(la), np.degrees(ln))
+    leaves = _boundary_leaves(regions)
+    la, ln = cid.cell_id_to_center_latlng(leaves)
+    add(np.degrees(la), np.degrees(ln))
+    lat, lon = np.asarray(lat), np.asarray(lon)
+    # The boundary points really sit in the boundary leaves.
+    tail = slice(len(lat) - len(leaves), None)
+    assert np.array_equal(cid.cell_id_from_latlng_degrees(lat[tail], lon[tail]), leaves)
+    return regions, lat, lon
+
+
+def _brute_hits(regions, lat, lon):
+    pts = geom.latlng_to_xyz(np.radians(lat), np.radians(lon))
+    hits = [[] for _ in lat]
+    for spec in regions:
+        for i in np.nonzero(_region(spec).contains_points(pts))[0]:
+            hits[i].append(int(spec["region_id"]))
+    return [sorted(h) for h in hits]
+
+
+def _kernel(regions):
+    return region_hits(regions, compute_coverings(regions, max_cells=MAX_CELLS))
+
+
+def test_region_hits_matches_brute_force(adversarial):
+    regions, lat, lon = adversarial
+    got = [list(h) for h in _kernel(regions)(lat, lon)]
+    expected = _brute_hits(regions, lat, lon)
+    assert got == expected
+    # The fixtures overlap: some points lie in several regions.
+    assert max(len(h) for h in expected) >= 2
+    assert sum(len(h) for h in expected) > 1000
+
+
+def test_region_hits_do_not_depend_on_batching(adversarial):
+    regions, lat, lon = adversarial
+    whole = [list(h) for h in _kernel(regions)(lat, lon)]
+    for size in (1, 7):
+        kernel = _kernel(regions)  # a fresh per-worker region cache
+        sliced = [
+            list(h)
+            for i in range(0, len(lat), size)
+            for h in kernel(lat[i:i + size], lon[i:i + size])
+        ]
+        assert sliced == whole, size
+    assert list(_kernel(regions)(lat[:0], lon[:0])) == []
+    nan = _kernel(regions)(np.array([np.nan, 40.7]), np.array([-74.0, np.inf]))
+    assert [list(h) for h in nan] == [[], []]
+
+
+def test_spatial_join_matches_brute_force_and_region_table(spark, adversarial):
+    regions, lat, lon = adversarial
+    docs = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))],
+        "doc_id long, lat double, lon double",
+    )
+    fused = Counter(
+        (r.doc_id, r.region_id)
+        for r in spatial_join(spark, docs, regions).select("doc_id", "region_id").collect()
+    )
+    table = Counter(
+        (r.doc_id, r.region_id)
+        for r in spatial_join_region_table(
+            spark,
+            docs.withColumn("cell_id", s2_cell_id("lat", "lon")),
+            regions_to_df(spark, regions),
+        )
+        .select("doc_id", "region_id")
+        .collect()
+    )
+    expected = Counter(
+        (i, rid) for i, h in enumerate(_brute_hits(regions, lat, lon)) for rid in h
+    )
+    assert set(fused.values()) == {1}  # one row per containing region
+    assert fused == expected
+    assert table == expected
+
+
+def test_prefilter_py4j_calls_do_not_grow_with_regions(spark, monkeypatch):
+    regions = region_fixtures()
+    assert len(regions) == 12
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    counts = []
+    for subset in (regions[:1], regions):
+        calls.clear()
+        bbox_prefilter_expr(subset, "lat", "lon")
+        counts.append(len(calls))
+    assert counts[0] == counts[1] > 0

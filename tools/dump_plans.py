@@ -2,11 +2,12 @@
 
 The plan-shape assertions that matter at 100 TB, checked by eye here
 and cited in README:
-* flagship spatial join: scan -> project (prefix array explode) ->
-  BroadcastHashJoin (no shuffle of the probe side) -> ArrowEvalPython
-  (refine) -> two-exchange aggregate with partial aggregation;
-* polyline project join: the same banded-prefix BroadcastHashJoin
-  with a single ArrowEvalPython (projection + distance refine);
+* flagship spatial join: scan -> bbox prefilter -> ONE ArrowEvalPython
+  (the docs encode and the fused covering lookup + refine) ->
+  explode_outer; no join and no exchange;
+* polyline project join: a banded-prefix BroadcastHashJoin against
+  the driver-built covering (a LocalTableScan) with a single
+  ArrowEvalPython (projection + distance refine);
 * edge-crossing joins: hash equi-joins of ancestor-or-self keys
   against raw covering cells (the region join broadcasts its boundary
   side, the self join shuffles both) and one ArrowEvalPython refine;
@@ -75,7 +76,10 @@ def main() -> None:
     )
     plans.append(
         (
-            "flagship spatial join (broadcast banded-prefix + refine)",
+            "flagship spatial join (bbox prefilter below one "
+            "ArrowEvalPython shared by the docs encode and the fused "
+            "covering lookup + refine; explode_outer into one row per "
+            "region; no join, no exchange)",
             spatial_join(
                 spark,
                 docs.select("doc_id", "lat", "lon", "cell_id"),
