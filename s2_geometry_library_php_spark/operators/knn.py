@@ -16,26 +16,39 @@ adaptive brute-force-vs-index switch, S2EdgeIndex.php:162-204).
 
 Python crossings: the probe side never reaches a Python worker.  The
 probes are collected once and encoded, parented and ring-expanded on
-the driver with the numpy kernels; each round's rings ship as a
-broadcast local relation.  A round evaluates one pandas UDF, the
-caller's docs encode, once per doc row (the docs-side join key is
-non-nullable, see ``join_key``), and the driver decides satisfied /
-failed / retry level from one collected per-probe stats frame.
+the driver with the numpy kernels.  A round evaluates one Arrow UDF,
+the ring kernel (:func:`ring_topk`), once per doc row: with the
+round's ring cells, probe unit vectors and ``k`` in its closure it
+encodes the doc, finds the probes whose ring holds the doc's level-L
+cell, and keeps per probe only the pairs within a slack of the batch's
+k-th smallest numpy distance.  The survivors join the round's probe
+table (a broadcast local relation), and the JVM computes the exact
+``latlng_angle_cols`` distance and the window top-k on them alone.
+The driver decides satisfied / failed / retry level from one collected
+per-probe stats frame.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
 
-from ..functions.sql_bitops import s2_parent
 from ..functions.udfs import distinct_rings, latlng_angle_cols
 from ..plans.session import local_relation
 from ..s2core import cellid as cid
+from ..s2core import geom
 from ..s2core.metric import MIN_WIDTH
 
 
@@ -111,72 +124,198 @@ def _estimate_count(docs: DataFrame, max_partitions: int = 8) -> int:
     return max(1, int(per_part * n_parts))
 
 
-def join_key(col):
-    """An engine-built cell equi-join key, made non-nullable.  A
-    nullable key makes the optimizer infer ``isnotnull(key)`` for the
-    join and push it below the projection that computes the key; when
-    that projection evaluates a pandas UDF (the leaf encode), the pushed
-    filter evaluates the UDF a second time in its own ArrowEvalPython
-    node.  A non-nullable key carries the constraint already, so no
-    filter is inferred.  The answer is unchanged: the encode never
-    returns null, and a null caller cell id becomes 0, which is no
-    valid cell id and so matches no ring cell, as a null key would."""
-    return F.coalesce(col, F.lit(0).cast("long"))
+# Bound on |numpy angle - JVM angle| for one (probe, doc) pair
+# (``geom.angle_xyz`` against ``latlng_angle_cols``): both
+# sides compute atan2(|u x v|, u.v) in the same operation order over
+# unit vectors whose components carry a few ulps of sin/cos error, so
+# they differ by a few ulps of the angle (measured: at most 4.4e-16 rad
+# over 200k random, near, identical and antipodal pairs; 14% differ at
+# all).  The ring kernel keeps pairs within RANK_SLACK >= 2 x ANGLE_ERROR
+# of its k-th numpy angle, so a pair it drops has k docs strictly closer
+# in the JVM metric too.
+ANGLE_ERROR = 1e-13
+RANK_SLACK = 2 * ANGLE_ERROR
+# Pairs per kernel chunk: bounds the worker's pair arrays (about twenty
+# arrays of this length) whatever the batch size and ring fan-out.  On
+# the benchmark's round (50k docs, 200 probes, level 2) 4k pairs ran 3%
+# slower than the fastest size, 8k, at half its peak RSS (0.8 MB).
+CHUNK_PAIRS = 1 << 12
 
 
-def probe_ring_frame(
+class ProbeRing(NamedTuple):
+    """One round's probes and their distinct 3x3 rings at one level.
+    ``probes`` is the (probe_id, _plat, _plon, _pidx) local relation the
+    survivors join; the kernel holds the rest: the ring cells (uint64,
+    sorted), each cell's probe index (``owner``) and the probes' unit
+    vectors (three contiguous arrays)."""
+
+    probes: DataFrame
+    cells: np.ndarray
+    owner: np.ndarray
+    xyz: tuple[np.ndarray, np.ndarray, np.ndarray]
+
+
+def probe_rings(
     spark: SparkSession,
     probes: pa.Table,
     leaf: np.ndarray,
     level: int,
     id_field: StructField,
-) -> DataFrame:
-    """Each probe's distinct 3x3 ring at ``level`` (its own cell
-    included) as a local relation of (probe_id, _plat, _plon,
-    _cand_cell) rows, built on the driver: ``probes`` holds the
-    (probe_id, _plat, _plon) columns and ``leaf`` their leaf cell ids
-    (uint64).  No Spark job and no Python worker."""
+) -> ProbeRing:
+    """The round's :class:`ProbeRing`, built on the driver: ``probes``
+    holds the (probe_id, _plat, _plon) columns and ``leaf`` their leaf
+    cell ids (uint64).  No Spark job and no Python worker."""
     values, offsets = distinct_rings(cid.parent(leaf, level), True)
-    rows = np.repeat(np.arange(len(leaf)), np.diff(offsets))
-    table = probes.take(pa.array(rows)).append_column(
-        "_cand_cell", pa.array(values)
+    owner = np.repeat(np.arange(len(leaf), dtype=np.int32), np.diff(offsets))
+    cells = cid.from_signed(values)
+    order = np.argsort(cells, kind="stable")
+    table = probes.append_column(
+        "_pidx", pa.array(np.arange(len(leaf), dtype=np.int32))
     )
-    return _local_relation(spark, table, id_field)
+    xyz = geom.latlng_to_xyz(
+        np.radians(probes.column("_plat").to_numpy(zero_copy_only=False)),
+        np.radians(probes.column("_plon").to_numpy(zero_copy_only=False)),
+    )
+    return ProbeRing(
+        _local_relation(spark, table, id_field),
+        cells[order],
+        owner[order],
+        tuple(np.ascontiguousarray(xyz.T)),
+    )
 
 
 def _local_relation(
     spark: SparkSession, table: pa.Table, id_field: StructField
 ) -> DataFrame:
     """A driver-built probe table (probe id first, then coordinates and
-    cell ids) as a local relation (``plans.local_relation``).  The
+    probe indices) as a local relation (``plans.local_relation``).  The
     probe id keeps the caller's Spark type."""
-    spark_type = {pa.float64(): DoubleType(), pa.int64(): LongType()}
+    spark_type = {pa.float64(): DoubleType(), pa.int32(): IntegerType()}
     fields = [StructField(id_field.name, id_field.dataType)] + [
         StructField(f.name, spark_type[f.type]) for f in list(table.schema)[1:]
     ]
     return local_relation(spark, table, StructType(fields))
 
 
+def ring_topk(ring: ProbeRing, k: int, level: int, chunk_pairs: int):
+    """The docs side of a ring round: ``kernel(lat, lon)`` (degree
+    arrays) -> (offsets, probe indices), the probes each doc is kept
+    for as a flattened list column (doc ``i``'s are
+    ``values[offsets[i]:offsets[i + 1]]``, in ring-cell order).
+
+    Per batch: encode the leaves as ``s2_cell_id`` does (non-finite
+    coordinates included) and take the level-L parent; find every ring
+    cell equal to it with ``np.searchsorted`` left/right (one per probe
+    whose ring holds it).  Then, docs in chunks of about
+    ``chunk_pairs`` pairs, a numpy angle per (doc, probe) pair: each
+    chunk's k smallest finite angles per probe merge into the batch's
+    running k smallest, and the chunk keeps the pairs within RANK_SLACK
+    of the running k-th; at the end of the batch the kept pairs are cut
+    to its final k-th.  A NaN angle (non-finite or null coordinates; the
+    JVM ranks a null first and a NaN last) is always kept.  A dropped
+    pair has k docs strictly closer in the JVM metric, so the kept set
+    holds each probe's exact top k of the batch, and the union over
+    batches the global top k."""
+    # The kernel calls only numpy and s2core, which every worker imports
+    # already: a helper from this module would make each worker import
+    # the whole operators package (~1.7 MB of RSS per worker).
+    cells, owner = ring.cells, ring.owner
+    px, py, pz = ring.xyz
+    n_probes = len(px)
+
+    def kernel(lat: np.ndarray, lon: np.ndarray):
+        n = len(lat)
+        if k <= 0:  # the window keeps no rank
+            return np.zeros(n + 1, np.int64), owner[:0]
+        with np.errstate(invalid="ignore"):
+            leaf = cid.cell_id_from_latlng_degrees(lat, lon)
+            xyz = geom.latlng_to_xyz(np.radians(lat), np.radians(lon))
+        dx, dy, dz = np.ascontiguousarray(xyz.T)
+        parent = cid.parent(leaf, level)
+        lo = np.searchsorted(cells, parent, "left")
+        count = np.searchsorted(cells, parent, "right") - lo
+        total = int(count.sum())
+        cuts = np.searchsorted(
+            np.cumsum(count), np.arange(chunk_pairs, total, chunk_pairs), "right"
+        )
+        # Each probe's k smallest finite angles in the batch so far.
+        best = np.full((n_probes, k), np.inf)
+        kept = []
+        for a, b in zip(np.r_[0, cuts], np.r_[cuts, n]):
+            c = count[a:b]
+            pt = np.repeat(np.arange(a, b), c)
+            # Each doc's run of matching ring cells: lo, lo+1, ...
+            run_start = np.repeat(np.cumsum(c) - c, c)
+            j = owner[lo[pt] + np.arange(len(pt)) - run_start]
+            d = geom.angle_xyz((px[j], py[j], pz[j]), (dx[pt], dy[pt], dz[pt]))
+            # Merge the chunk's k smallest per probe into ``best``.
+            d_rank = np.where(np.isfinite(d), d, np.inf)
+            by = np.lexsort((d_rank, j))
+            js = j[by]
+            rank = np.arange(len(js)) - np.searchsorted(js, js)
+            top = rank < k
+            rows = np.unique(js[top])
+            merged = np.full((len(rows), 2 * k), np.inf)
+            merged[:, :k] = best[rows]
+            merged[np.searchsorted(rows, js[top]), k + rank[top]] = d_rank[by][top]
+            merged.sort(axis=1)
+            best[rows] = merged[:, :k]
+            keep = ~(d > best[j, k - 1] + RANK_SLACK)
+            kept.append((pt[keep], j[keep], d[keep]))
+        # The chunks kept against the k-th smallest so far; cut to the
+        # batch's k-th smallest.  ``not >`` keeps the NaN angles.
+        doc, probe, d = (np.concatenate(x) for x in zip(*kept))
+        keep = ~(d > best[probe, k - 1] + RANK_SLACK)
+        doc, probe = doc[keep], probe[keep]
+        return np.searchsorted(doc, np.arange(n + 1)), probe
+
+    return kernel
+
+
+def _ring_topk_udf(ring: ProbeRing, k: int, level: int):
+    """:func:`ring_topk` as an Arrow UDF with the ring in its closure:
+    shipped once per executor, no ring table and no join."""
+    kernel = ring_topk(ring, k, level, CHUNK_PAIRS)
+
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def ring_topk_udf(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        offsets, probes = kernel(
+            lat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+            lon.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+        )
+        return pa.ListArray.from_arrays(
+            pa.array(offsets.astype(np.int32)), pa.array(probes)
+        )
+
+    return ring_topk_udf
+
+
 def ring_round_topk(
-    ring: DataFrame,
+    ring: ProbeRing,
     docs: DataFrame,
     k: int,
     level: int,
     probe_id: str = "probe_id",
     doc_id: str = "doc_id",
-    leaf_col: str = "cell_id",
 ) -> DataFrame:
-    """One ring-expansion round: the probes' 3x3 cell neighborhoods at
-    ``level`` (``ring``: one (probe_id, _plat, _plon, _cand_cell) row
-    per probe and ring cell, see probe_ring_frame) equi-joined
-    (broadcast, no doc shuffle) against the docs' level-L prefix,
-    exact re-rank, window top-k."""
-    cand = F.broadcast(ring).join(
-        docs.withColumn(
-            "_dcell", join_key(s2_parent(F.col(leaf_col), level))
-        ),
-        F.col("_cand_cell") == F.col("_dcell"),
-        "inner",
+    """One ring-expansion round: the docs' level-L cells against the
+    probes' 3x3 rings at ``level`` (``ring``, see probe_rings), with a
+    batch-local numpy top-k in the same Arrow crossing
+    (:func:`ring_topk`); the surviving (doc, probe) pairs join the
+    broadcast probe table, and the JVM re-ranks them with the exact
+    distance and keeps the window top-k.  ``docs`` needs only
+    (doc_id, lat, lon)."""
+    kept = _ring_topk_udf(ring, k, level)
+    # explode_outer + an explicit not-null filter, not an inner explode:
+    # for an inner explode the optimizer infers size(_kept) > 0 and
+    # pushes it below the projection, evaluating the UDF a second time
+    # in its own ArrowEvalPython node.
+    cand = (
+        docs.select(doc_id, "lat", "lon")
+        .withColumn("_kept", kept(F.col("lat"), F.col("lon")))
+        .withColumn("_pidx", F.explode_outer("_kept"))
+        .where(F.col("_pidx").isNotNull())
+        .join(F.broadcast(ring.probes), "_pidx")
     )
     dist = latlng_angle_cols(
         F.col("_plat"), F.col("_plon"), F.col("lat"), F.col("lon")
@@ -199,22 +338,23 @@ def knn_join(
     start_level: int | None = None,
     probe_id: str = "probe_id",
     doc_id: str = "doc_id",
-    leaf_col: str = "cell_id",
     max_rounds: int = 3,
     n_docs_hint: int | None = None,
 ) -> DataFrame:
-    """Scalable kNN: equi-join docs' level-L prefix against each
-    probe's 3x3 ring, exact re-rank, provable-exactness check, coarser
-    retry for unsatisfied probes, brute-force for stragglers (the
-    reference's adaptive brute-vs-index spirit, S2EdgeIndex.php:162-204).
+    """Scalable kNN: match the docs' level-L cells against each probe's
+    3x3 ring, exact re-rank, provable-exactness check, coarser retry for
+    unsatisfied probes, brute-force for stragglers (the reference's
+    adaptive brute-vs-index spirit, S2EdgeIndex.php:162-204).
 
-    ``docs`` must carry the leaf ``cell_id``; probes need (probe_id,
-    lat, lon).  The probes are the SMALL side by contract: they are
-    collected once, encoded and ring-expanded on the driver with the
-    numpy kernels, and each round ships its rings as a broadcast local
-    relation, so the probe side costs no Python worker at all.  The big
-    ``docs`` side is only ever hash-probed, never shuffled.  Each round
-    runs one pinned top-k job and one collect of its per-probe stats.
+    ``docs`` needs (doc_id, lat, lon); probes need (probe_id, lat, lon).
+    The probes are the SMALL side by contract: they are collected once,
+    encoded and ring-expanded on the driver with the numpy kernels, and
+    each round ships its rings in the docs-side kernel's closure and its
+    probe table as a broadcast local relation, so the probe side costs
+    no Python worker at all.  The big ``docs`` side is only ever
+    scanned, never shuffled; only each batch's top-k survivors reach the
+    JVM window.  Each round runs one pinned top-k job and one collect of
+    its per-probe stats.
     """
     if start_level is None:
         # auto_start_level only needs the ORDER OF MAGNITUDE of the
@@ -246,17 +386,14 @@ def knn_join(
         # probe-sized (<= P x k rows) and read twice (the stats collect
         # below and the final union), so it is materialized EAGERLY with
         # a lineage cut (localCheckpoint): a lazy frame would rerun the
-        # docs-side join and encode for each reader.  Keep the next
+        # docs-side kernel and join for each reader.  Keep the next
         # round's rings a fresh local relation, never derived from this
         # frame: a round's plan nested inside the next round's broadcast
         # build runs pathologically (a measured 6-25x wall blow-up).
         guarantee = float(MIN_WIDTH.get_value(level))
-        ring = probe_ring_frame(spark, todo, leaf, level, id_field)
+        ring = probe_rings(spark, todo, leaf, level, id_field)
         topk = (
-            ring_round_topk(
-                ring, docs, k, level,
-                probe_id=probe_id, doc_id=doc_id, leaf_col=leaf_col,
-            )
+            ring_round_topk(ring, docs, k, level, probe_id=probe_id, doc_id=doc_id)
             .withColumn("_n", F.count(F.lit(1)).over(by_probe))
             .withColumn("_kth", F.max("dist_rad").over(by_probe))
             .withColumn(

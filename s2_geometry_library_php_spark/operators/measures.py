@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import angle3, cross3, dot3, norm3, xyz_cols
+from ..plans.session import local_relation
 
 FAN_SCHEMA = (
     "region_id long, loop_idx int, loop_sign double, "
@@ -57,7 +58,7 @@ def _loop_fan_rows(
     origin = vertices[0].copy()
     axis = (int(geom.largest_abs_component(origin[None, :])[0]) + 1) % 3
     origin[axis] += math.e * 1e-10
-    origin = origin / np.linalg.norm(origin)
+    origin = origin / geom.norm(origin)
     rows = []
     m = len(vertices)
     for i in range(m):
@@ -116,8 +117,8 @@ def region_measure_frames(
                     )
                 )
     return (
-        spark.createDataFrame(fan_rows, FAN_SCHEMA),
-        spark.createDataFrame(param_rows, PARAM_SCHEMA),
+        local_relation(spark, fan_rows, FAN_SCHEMA),
+        local_relation(spark, param_rows, PARAM_SCHEMA),
     )
 
 
@@ -367,7 +368,7 @@ def tile_clipped_fan_frame(
                 )
         # else: may_intersect false positive -> zero contribution
         _ = geom
-    return spark.createDataFrame(rows, TILE_FAN_SCHEMA)
+    return local_relation(spark, rows, TILE_FAN_SCHEMA)
 
 
 TILE_FAN_SCHEMA = (

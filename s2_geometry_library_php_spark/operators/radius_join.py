@@ -38,7 +38,19 @@ from pyspark.sql import functions as F
 from ..functions.sql_bitops import s2_parent
 from ..functions.udfs import latlng_angle_cols, s2_cell_id, s2_ring_cells_udf
 from ..s2core.metric import MIN_WIDTH
-from .knn import join_key
+
+
+def join_key(col):
+    """An engine-built cell equi-join key, made non-nullable.  A
+    nullable key makes the optimizer infer ``isnotnull(key)`` for the
+    join and push it below the projection that computes the key; when
+    that projection evaluates a pandas UDF (the leaf encode), the pushed
+    filter evaluates the UDF a second time in its own ArrowEvalPython
+    node.  A non-nullable key carries the constraint already, so no
+    filter is inferred.  The answer is unchanged: the encode never
+    returns null, and a null caller cell id becomes 0, which is no
+    valid cell id and so matches no ring cell, as a null key would."""
+    return F.coalesce(col, F.lit(0).cast("long"))
 
 
 def radius_join_level(radius_rad: float) -> int | None:

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.udfs import angle3, unit_vector_cols
+from ..plans.session import local_relation
+from ..s2core import geom
 
 RECT_SCHEMA = (
     "region_id long, lat_lo double, lat_hi double, lng_lo double, "
@@ -65,7 +67,7 @@ def regions_rect_df(
                 float(b.lng.complement_center()),
             )
         )
-    return spark.createDataFrame(rows, RECT_SCHEMA)
+    return local_relation(spark, rows, RECT_SCHEMA)
 
 
 def rect_distance_col(lat_col, lon_col, prefix: str = ""):
@@ -186,9 +188,9 @@ def region_block_summaries(
 
     def cone(axes):
         axis = axes.mean(axis=0)
-        n = np.linalg.norm(axis)
+        n = float(geom.norm(axis))
         axis = axis / n if n > 0 else np.array([1.0, 0.0, 0.0])
-        dots = np.clip(axes @ axis, -1.0, 1.0)
+        dots = np.clip(geom.dot(axes, axis), -1.0, 1.0)
         return axis, float(np.arccos(dots.min()))
 
     block_rows, blocks_meta = [], []
@@ -232,11 +234,11 @@ def region_block_summaries(
         assert all(m[0] == si for m in mine)
         axes = np.vstack([m[1] for m in mine])
         saxis = axes.mean(axis=0)
-        nn = np.linalg.norm(saxis)
+        nn = float(geom.norm(saxis))
         saxis = saxis / nn if nn > 0 else np.array([1.0, 0.0, 0.0])
         # cone must cover every member CONE, not just its axis
         sradius = max(
-            float(np.arccos(np.clip(float(m[1] @ saxis), -1.0, 1.0))) + m[2]
+            float(np.arccos(np.clip(float(geom.dot(m[1], saxis)), -1.0, 1.0))) + m[2]
             for m in mine
         )
         lat_i, lng_i = mine[0][3], mine[0][4]
@@ -300,8 +302,8 @@ def knn_regions(
         block_rows, sb_rows = region_block_summaries(
             bounds, max(block_size, k), sb_size
         )
-        blocks = spark.createDataFrame(block_rows, BLOCK_SCHEMA)
-        sblocks = spark.createDataFrame(sb_rows, SB_SCHEMA)
+        blocks = local_relation(spark, block_rows, BLOCK_SCHEMA)
+        sblocks = local_relation(spark, sb_rows, SB_SCHEMA)
         plat = F.radians(F.col("lat"))
         plng = F.radians(
             F.when(F.col("lon") == F.lit(-180.0), F.lit(180.0)).otherwise(

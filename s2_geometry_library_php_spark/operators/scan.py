@@ -42,6 +42,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from ..plans.session import local_relation
+
 DEFAULT_BUDGET = 2048
 
 
@@ -89,9 +91,7 @@ def global_running_sum(
     for r in sorted(totals, key=lambda r: r["__bucket"]):
         offsets.append((r["__bucket"], running))
         running += r["__total"] or 0
-    off_df = spark.createDataFrame(
-        offsets, "__bucket int, __offset long"
-    )
+    off_df = local_relation(spark, offsets, "__bucket int, __offset long")
     w = Window.partitionBy("__bucket").orderBy(F.col(order_col).asc())
     return (
         bucketed.join(F.broadcast(off_df), "__bucket")

@@ -476,7 +476,7 @@ def spatial_join(
     # explode_outer + an explicit not-null filter, not an inner explode:
     # for an inner explode the optimizer infers size(_hits) > 0 and
     # pushes it below the projection, evaluating the UDF a second time
-    # in its own ArrowEvalPython node (the trap knn.join_key avoids).
+    # in its own ArrowEvalPython node (the trap radius_join.join_key avoids).
     return (
         docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
         .withColumn("_hits", hits(F.col(lat_col), F.col(lon_col)))

@@ -15,17 +15,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.sql_bitops import s2_parent, s2_token_sql, sql_s2_parent
-from ..functions.udfs import unit_vector_cols
+from ..functions.sql_bitops import s2_parent, s2_token_sql, sql_s2_parent, sql_s2_token
 
 MAX_LEVEL = 30
 
 
-def with_xyz(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon") -> DataFrame:
-    """Unit-vector columns from degrees (S2LatLng.php:138-143), native."""
-    lat_r, lon_r = F.radians(F.col(lat_col)), F.radians(F.col(lon_col))
-    x, y, z = unit_vector_cols(lat_r, lon_r)
-    return df.withColumn("_x", x).withColumn("_y", y).withColumn("_z", z)
+def _sql_col(name: str) -> str:
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _xyz_sql(lat_col: str, lon_col: str) -> list[str]:
+    """Unit vectors of two degree columns (S2LatLng.php:138-143) as SQL
+    text, in ``unit_vector_cols``' operation order: _x, _y, _z."""
+    lat, lon = f"radians({_sql_col(lat_col)})", f"radians({_sql_col(lon_col)})"
+    return [
+        f"cos({lon}) * cos({lat}) AS _x",
+        f"sin({lon}) * cos({lat}) AS _y",
+        f"sin({lat}) AS _z",
+    ]
 
 
 def tile_aggregate(
@@ -38,28 +45,33 @@ def tile_aggregate(
 ) -> DataFrame:
     """Per-tile stats at one level: count, centroid, approx distinct.
 
-    Output: (tile_id, tile_token, doc_count, centroid_lat, centroid_lon
-    [, approx_distinct]).
+    Output: (tile_id, doc_count[, approx_distinct], centroid_lat,
+    centroid_lon, tile_token).
+
+    The plan is built from SQL text (the ``sql_s2_*`` twins), one
+    ``selectExpr`` per step: a Column expression costs a py4j round
+    trip per operator, the text the same few calls for any expression.
     """
-    tile = s2_parent(F.col(leaf_col), level).alias("tile_id")
-    base = with_xyz(docs, lat_col, lon_col).groupBy(tile)
-    aggs = [
-        F.count(F.lit(1)).alias("doc_count"),
-        F.sum("_x").alias("_sx"),
-        F.sum("_y").alias("_sy"),
-        F.sum("_z").alias("_sz"),
+    pre = [
+        f"{sql_s2_parent(_sql_col(leaf_col), level)} AS tile_id",
+        *_xyz_sql(lat_col, lon_col),
     ]
+    aggs = ["count(1) AS doc_count", "sum(_x) AS _sx", "sum(_y) AS _sy", "sum(_z) AS _sz"]
+    out = ["tile_id", "doc_count"]
     if distinct_col is not None:
-        aggs.append(F.approx_count_distinct(distinct_col).alias("approx_distinct"))
+        pre.append(f"{_sql_col(distinct_col)} AS _distinct")
+        aggs.append("approx_count_distinct(_distinct) AS approx_distinct")
+        out.append("approx_distinct")
     return (
-        base.agg(*aggs)
-        .withColumn(
-            "centroid_lat",
-            F.degrees(F.atan2(F.col("_sz"), F.hypot(F.col("_sx"), F.col("_sy")))),
+        docs.selectExpr(*pre)
+        .groupBy("tile_id")
+        .agg(*(F.expr(e) for e in aggs))
+        .selectExpr(
+            *out,
+            "degrees(atan2(_sz, hypot(_sx, _sy))) AS centroid_lat",
+            "degrees(atan2(_sy, _sx)) AS centroid_lon",
+            f"{sql_s2_token('tile_id')} AS tile_token",
         )
-        .withColumn("centroid_lon", F.degrees(F.atan2(F.col("_sy"), F.col("_sx"))))
-        .withColumn("tile_token", s2_token_sql("tile_id"))
-        .drop("_sx", "_sy", "_sz")
     )
 
 
@@ -76,32 +88,32 @@ def tile_rollup(
     plans exactly one exchange.  Re-aggregating the previous LAZY level
     instead would replay every finer rollup inside each branch (1 + 2 +
     ... + n exchanges for n levels); the sums are integer counts, so
-    rolling from the finest level gives identical rows.
+    rolling from the finest level gives identical rows.  Every level is
+    built from SQL text, as in :func:`tile_aggregate`.
 
     Output: union over levels of (level, tile_id, tile_token,
     doc_count)."""
-    finest = tiles.select(
-        F.lit(from_level).alias("level"),
-        F.col(tile_col).alias("tile_id"),
-        F.col(count_col).alias("doc_count"),
+    finest = tiles.selectExpr(
+        f"{int(from_level)} AS level",
+        f"{_sql_col(tile_col)} AS tile_id",
+        f"{_sql_col(count_col)} AS doc_count",
     )
     # Materialize the finest level once (lazy local checkpoint): the
     # union output otherwise embeds the full upstream chain (scan +
     # encode + aggregation) into EVERY level's branch — verified via
     # .explain, the static plan showed 3 copies of the scan subtree.
     finest = finest.localCheckpoint(eager=False)
-    out = finest.withColumn("tile_token", s2_token_sql("tile_id"))
+    token = f"{sql_s2_token('tile_id')} AS tile_token"
+    out = finest.selectExpr("*", token)
     for lvl in sorted(to_levels, reverse=True):
         if lvl >= from_level:
             continue
         rolled = (
-            finest.groupBy(s2_parent(F.col("tile_id"), lvl).alias("tile_id"))
-            .agg(F.sum("doc_count").alias("doc_count"))
-            .select(F.lit(lvl).alias("level"), "tile_id", "doc_count")
+            finest.groupBy(F.expr(f"{sql_s2_parent('tile_id', lvl)} AS tile_id"))
+            .agg(F.expr("sum(doc_count) AS doc_count"))
+            .selectExpr(f"{int(lvl)} AS level", "tile_id", "doc_count", token)
         )
-        out = out.unionByName(
-            rolled.withColumn("tile_token", s2_token_sql("tile_id"))
-        )
+        out = out.unionByName(rolled)
     return out
 
 

@@ -57,6 +57,19 @@ def angle_between(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.arctan2(norm(cross(a, b)), dot(a, b))
 
 
+def angle_xyz(u, v) -> np.ndarray:
+    """``angle_between`` of points given as (x, y, z) tuples of
+    contiguous component arrays, the sums written out in the
+    reference's order: no reduction over a length-3 axis and no strided
+    input to ``arctan2``.  The same operations, in the same order, as
+    the Spark column twin ``functions.udfs.angle3``."""
+    (ux, uy, uz), (vx, vy, vz) = u, v
+    cx, cy, cz = uy * vz - uz * vy, uz * vx - ux * vz, ux * vy - uy * vx
+    return np.arctan2(
+        np.sqrt(cx * cx + cy * cy + cz * cz), ux * vx + uy * vy + uz * vz
+    )
+
+
 def largest_abs_component(p: np.ndarray) -> np.ndarray:
     ax, ay, az = np.abs(p[..., 0]), np.abs(p[..., 1]), np.abs(p[..., 2])
     return np.where(ax > ay, np.where(ax > az, 0, 2), np.where(ay > az, 1, 2))

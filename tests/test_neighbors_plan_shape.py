@@ -1,7 +1,8 @@
 """Plan shape of the neighbors and covering-join operators: every
 Python kernel crosses into Python once per row.  A kNN round evaluates
-only the caller's docs encode (its probe rings are a driver-built local
-relation); the radius join evaluates the left encode and the fused
+only its ring kernel (ring lookup and batch-local top-k over the docs'
+lat/lon; an unused caller encode is pruned), and sorts only the kernel's
+survivors; the radius join evaluates the left encode and the fused
 right ring kernel.  No filter on a Python UDF's output may sit under a
 second ArrowEvalPython (the optimizer's inferred ``isnotnull(join key)``
 pushed below the projection that computes the key would evaluate the
@@ -25,7 +26,7 @@ from pyspark.sql.types import LongType, StructField
 from s2_geometry_library_php_spark.functions import s2_cell_id
 from s2_geometry_library_php_spark.operators.knn import (
     knn_join,
-    probe_ring_frame,
+    probe_rings,
     ring_round_topk,
 )
 from s2_geometry_library_php_spark.operators.polyline_join import (
@@ -35,7 +36,16 @@ from s2_geometry_library_php_spark.operators.polyline_join import (
     polyline_region_crossing_join,
     polyline_self_crossing_join,
 )
+from s2_geometry_library_php_spark.operators.measures import (
+    region_measure_frames,
+    tile_clipped_fan_frame,
+)
 from s2_geometry_library_php_spark.operators.radius_join import within_radius_join
+from s2_geometry_library_php_spark.operators.region_distance import (
+    knn_regions,
+    regions_rect_df,
+)
+from s2_geometry_library_php_spark.operators.scan import global_running_sum
 from s2_geometry_library_php_spark.operators.spatial_join import (
     build_covering_table,
     regions_to_df,
@@ -138,7 +148,17 @@ def _assert_banded_prefix_join(nodes):
     assert _names(nodes, "SortMergeJoin") == []
 
 
-def test_knn_round_evaluates_only_the_docs_encode(spark, points):
+def _descendants(nodes, i):
+    """Node texts in the subtree under node ``i``."""
+    out = []
+    for depth, text in nodes[i + 1:]:
+        if depth <= nodes[i][0]:
+            break
+        out.append(text)
+    return out
+
+
+def test_knn_round_crosses_once_for_the_ring_kernel(spark, points):
     docs = points.withColumn("cell_id", s2_cell_id("lat", "lon"))
     probes = pa.table(
         {
@@ -150,11 +170,17 @@ def test_knn_round_evaluates_only_the_docs_encode(spark, points):
     leaf = cid.cell_id_from_latlng_degrees(
         probes.column("_plat").to_numpy(), probes.column("_plon").to_numpy()
     )
-    ring = probe_ring_frame(spark, probes, leaf, 6, StructField("probe_id", LongType()))
+    ring = probe_rings(spark, probes, leaf, 6, StructField("probe_id", LongType()))
     nodes = _executed_nodes(ring_round_topk(ring, docs, 3, 6))
     python = _python_nodes(nodes)
-    assert len(python) == 1 and "s2_cell_id" in python[0]
+    assert len(python) == 1 and python[0].startswith("ArrowEvalPython [ring_topk_udf(")
+    assert not any("s2_cell_id" in t for _, t in nodes)
     assert _udf_filters_under_python(nodes) == []
+    # Every sort runs above the explode of the kernel's survivors.
+    sorts = [i for i, (_, t) in enumerate(nodes) if t.startswith("Sort")]
+    assert sorts
+    for i in sorts:
+        assert any(t.startswith("Generate") for t in _descendants(nodes, i))
 
 
 def test_knn_join_result_holds_no_python_node(spark, points):
@@ -205,8 +231,9 @@ def test_spatial_join_shares_the_encodes_python_node(spark, points):
 
 
 def test_driver_built_tables_are_local_relations(spark, encoded):
-    """Coverings, region specs and edges ship as Arrow local relations:
-    no PythonRDD scan that pickles rows through the workers."""
+    """Coverings, region specs, edges, measure fans, region rects and
+    blocks, and running-sum offsets ship as Arrow local relations: no
+    PythonRDD scan that pickles rows through the workers."""
     regions = region_fixtures()
     lines = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]}]
     frames = [
@@ -214,9 +241,27 @@ def test_driver_built_tables_are_local_relations(spark, encoded):
         regions_to_df(spark, regions),
         edge_table(spark, [(1, _unit_vertices(lines[0]["vertices"]), False)]),
     ]
+    loop = next(r for r in regions if r["kind"] == "loop")
+    frames += [
+        *region_measure_frames(spark, regions),
+        tile_clipped_fan_frame(spark, loop, 6),
+        regions_rect_df(spark, regions),
+    ]
     for df in frames:
         plan = [t for _, t in _planned_nodes(df)]
         assert len(plan) == 1 and plan[0].startswith("LocalTableScan"), plan
+    # The region block summaries of the pruned k-nearest-regions plan
+    # and the bucket offsets of the global running sum.
+    probes = spark.range(3).selectExpr("id AS probe_id", "10.0 AS lat", "20.0 AS lon")
+    for df in (
+        knn_regions(
+            spark, probes, regions, 1, prune_threshold=0, block_size=2, sb_size=2
+        ),
+        global_running_sum(spark.range(20), "id", "id"),
+    ):
+        nodes = _executed_nodes(df)
+        assert _names(nodes, "LocalTableScan")
+        assert _names(nodes, "Scan ExistingRDD") == []
     # The polyline covering side of the project join.
     nodes = _executed_nodes(polyline_project_join(spark, encoded, lines, 0.2))
     assert _names(nodes, "LocalTableScan")

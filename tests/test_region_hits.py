@@ -153,7 +153,10 @@ def test_prefilter_py4j_calls_do_not_grow_with_regions(spark, monkeypatch):
     send = py4j.clientserver.ClientServerConnection.send_command
 
     def counting(self, command):
-        calls.append(command)
+        # Not the deletes of garbage-collected proxies: they arrive
+        # whenever the collector runs, not from building the filter.
+        if not command.startswith("m\n"):
+            calls.append(command)
         return send(self, command)
 
     monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)

@@ -250,6 +250,59 @@ def test_tile_rollup_conserves_counts(docs):
     assert sums == {10: n, 8: n, 4: n, 0: n}
 
 
+def test_tile_plans_are_built_from_sql_text(spark, docs, monkeypatch):
+    """tile_aggregate and tile_rollup build their plans from the
+    ``sql_s2_*`` text twins: the same rows as the Column-built
+    expressions, in a few py4j round trips per level."""
+    import py4j.clientserver
+
+    from s2_geometry_library_php_spark.functions import s2_parent, s2_token_sql
+    from s2_geometry_library_php_spark.functions.udfs import unit_vector_cols
+    from s2_geometry_library_php_spark.operators import (
+        tile_aggregate,
+        tile_rollup,
+    )
+
+    x, y, z = unit_vector_cols(F.radians(F.col("lat")), F.radians(F.col("lon")))
+    columns = (
+        docs.groupBy(s2_parent(F.col("cell_id"), 10).alias("tile_id"))
+        .agg(
+            F.count(F.lit(1)).alias("doc_count"),
+            F.approx_count_distinct("lang").alias("approx_distinct"),
+            F.sum(x).alias("_sx"), F.sum(y).alias("_sy"), F.sum(z).alias("_sz"),
+        )
+        .select(
+            "tile_id", "doc_count", "approx_distinct",
+            F.degrees(F.atan2("_sz", F.hypot("_sx", "_sy"))).alias("centroid_lat"),
+            F.degrees(F.atan2("_sy", "_sx")).alias("centroid_lon"),
+            s2_token_sql("tile_id").alias("tile_token"),
+        )
+    )
+    text = tile_aggregate(docs, 10, distinct_col="lang")
+    assert text.columns == columns.columns
+    assert sorted(map(tuple, text.collect())) == sorted(map(tuple, columns.collect()))
+
+    calls = []
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        # Not the deletes of garbage-collected proxies: they arrive
+        # whenever the collector runs, not from building the plan.
+        if not command.startswith("m\n"):
+            calls.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(py4j.clientserver.ClientServerConnection, "send_command", counting)
+    tiles = tile_aggregate(docs, 12)
+    assert len(calls) <= 60  # 306 when built from Column operators
+    counts = []
+    for levels in ([10], [10, 8, 6, 4, 2]):
+        calls.clear()
+        tile_rollup(tiles, 12, levels)
+        counts.append(len(calls))
+    assert (counts[1] - counts[0]) / 4 <= 40  # 113 per level from Columns
+
+
 def test_tile_centroid_is_unit_consistent(docs):
     from s2_geometry_library_php_spark.operators import tile_aggregate
 

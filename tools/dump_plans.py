@@ -8,6 +8,9 @@ and cited in README:
 * polyline project join: a banded-prefix BroadcastHashJoin against
   the driver-built covering (a LocalTableScan) with a single
   ArrowEvalPython (projection + distance refine);
+* kNN ring round: ONE ArrowEvalPython (the ring kernel: encode, ring
+  lookup and batch-local top-k) -> explode_outer of the survivors ->
+  broadcast probe join; the window's sorts see only the survivors;
 * edge-crossing joins: hash equi-joins of ancestor-or-self keys
   against raw covering cells (the region join broadcasts its boundary
   side, the self join shuffles both) and one ArrowEvalPython refine;
@@ -143,7 +146,7 @@ def main() -> None:
     from pyspark.sql.types import LongType, StructField
 
     from s2_geometry_library_php_spark.operators.knn import (
-        probe_ring_frame,
+        probe_rings,
         ring_round_topk,
     )
     from s2_geometry_library_php_spark.s2core import cellid as cid
@@ -155,7 +158,7 @@ def main() -> None:
             "_plon": pa.array([2.35, 151.2]),
         }
     )
-    ring = probe_ring_frame(
+    ring = probe_rings(
         spark,
         probes,
         cid.cell_id_from_latlng_degrees(
@@ -166,10 +169,12 @@ def main() -> None:
     )
     plans.append(
         (
-            "kNN ring round (driver-built 3x3 probe rings as a broadcast "
-            "local relation -> equi-join on level-8 prefix -> exact "
-            "re-rank -> window top-k; docs never shuffled, the docs "
-            "encode is the only Python node)",
+            "kNN ring round (one Arrow UDF over the docs' lat/lon: "
+            "encode, level-8 ring lookup in the driver-built 3x3 probe "
+            "rings, batch-local numpy top-k -> explode the survivors -> "
+            "broadcast join with the probe table -> exact re-rank -> "
+            "window top-k on the survivors only; docs never shuffled, "
+            "the unused cell_id encode pruned)",
             ring_round_topk(
                 ring, docs.select("doc_id", "lat", "lon", "cell_id"), 5, 8
             ),
