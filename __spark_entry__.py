@@ -717,8 +717,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         # exact-substring span dedup (Lee et al. ExactSubstr,
         # functions/exact_substr.py): islands over the doc's real
-        # text + a deterministic shared suffix; native md5 gram
-        # formulation so the DuckDB oracle hashes byte-identically
+        # text + a deterministic shared suffix; the rows are span
+        # positions, so the DuckDB oracle's md5 grams and the Arrow
+        # path's 64-bit rolling hashes give the same rows
         from s2_geometry_library_php_spark.functions.exact_substr import (
             duplicate_spans,
         )
@@ -731,7 +732,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         es_docs = doc_text.select("doc_id", es_text.alias("text"))
         es = (
-            duplicate_spans(es_docs, k=ES_K, native=True)
+            duplicate_spans(es_docs, k=ES_K)
             .groupBy("doc_id")
             .agg(
                 F.sum(

@@ -24,13 +24,10 @@ duplicated span" behaviour without any global sort.
 
 Scale shape (the 100 TB story):
 
-* one gram scan per document — two formulations, same observable
-  output (repo convention, see ``functions/dedup.py``): a native SQL
-  ``transform(slice+concat_ws+md5)`` form (the cross-engine twin,
-  ``native=True``) and the DEFAULT Arrow path, a vectorized numpy
-  rolling polynomial hash emitting int64 keys (8-byte shuffle keys
-  vs 32-char digests; the native higher-order form is
-  CodegenFallback and measured ~9x slower);
+* one gram scan per document: an Arrow UDF, a vectorized numpy
+  rolling polynomial hash emitting int64 keys (8-byte shuffle keys;
+  a native ``transform(slice+concat_ws+md5)`` form was
+  CodegenFallback and measured ~9x slower, and is gone);
 * gram-frequency ``groupBy(gram)`` — ``count`` and
   ``min(struct(doc_id, pos))`` both partial-aggregate map-side, so
   shuffle volume is ~distinct grams x 8-byte keys, not text;
@@ -51,6 +48,13 @@ the smallest global ``(doc_id, pos)`` survives, so exactly one copy
 of every duplicated region remains in the corpus (Lee et al. cut all
 copies; one-copy retention is the variant used in practice so the
 content itself is not lost).
+
+Hash collisions: grams are compared by their 64-bit hash, not their
+text.  Two distinct grams that collide are taken for one duplicated
+gram, and one of them is cut from its document (a false deletion).
+Treating the hashes as uniform, the chance that any pair among G
+distinct grams collides is about G^2 / 2^65: about 3e-8 for a million
+distinct grams, and about 0.5 near four billion.
 
 No reference counterpart (the reference is a geometry library); the
 rule comes from the published dedup literature.
@@ -117,32 +121,12 @@ def _rolling_gram_hashes(text: str, k: int, cache: dict) -> list[int]:
     return acc.view(np.int64).tolist()
 
 
-def _gram_hashes(text_col: str, k: int):
-    """Array of md5 digests, one per k-token window (``[]`` when the
-    document has fewer than k tokens).  Tokenization is the module
-    family's whitespace convention (single-space split, empty tokens
-    preserved) so twins agree byte-for-byte."""
-    w = F.split(F.col(text_col), " ")
-    n = F.size(w)
-    grams = F.transform(
-        F.sequence(F.lit(0), n - F.lit(k)),
-        lambda i: F.md5(
-            F.concat_ws(" ", F.slice(w, i + F.lit(1), F.lit(k))).cast(
-                "binary"
-            )
-        ),
-    )
-    return F.when(n >= F.lit(k), grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def _gram_hashes_arrow(k: int):
-    """Vectorized Arrow twin of :func:`_gram_hashes` — int64 rolling
-    polynomial hashes instead of md5 strings (8-byte shuffle keys vs
-    32-char digests, and no interpreted higher-order expression: the
-    native ``transform(slice+concat_ws+md5)`` form is CodegenFallback
-    and measured ~9x slower on the sf0.1 corpus).  Default path."""
+    """int64 rolling polynomial hash per k-token window of each
+    document (``[]`` when it has fewer than k tokens), in one pandas
+    UDF.  Tokenization is the module family's whitespace convention
+    (single-space split, empty tokens preserved), shared with the
+    pure-Python twin (:func:`_rolling_gram_hashes`)."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def kernel(texts: pd.Series) -> pd.Series:
@@ -186,16 +170,10 @@ def _gram_hashes_arrow(k: int):
     return kernel
 
 
-def _doc_grams(
-    docs: DataFrame, text_col: str, k: int, native: bool = False
-) -> DataFrame:
-    grams = (
-        _gram_hashes(text_col, k)
-        if native
-        else _gram_hashes_arrow(k)(F.col(text_col))
-    )
+def _doc_grams(docs: DataFrame, text_col: str, k: int) -> DataFrame:
     return docs.select(
-        "doc_id", F.posexplode(grams).alias("pos", "gram")
+        "doc_id",
+        F.posexplode(_gram_hashes_arrow(k)(F.col(text_col))).alias("pos", "gram"),
     )
 
 
@@ -204,7 +182,6 @@ def duplicate_grams(
     text_col: str = "text",
     k: int = DEFAULT_K,
     min_count: int = DEFAULT_MIN_COUNT,
-    native: bool = False,
 ) -> DataFrame:
     """One row per duplicated k-gram: ``(gram, n_occ, first_doc_id,
     first_pos)`` — the first occurrence in global ``(doc_id, pos)``
@@ -222,7 +199,7 @@ def duplicate_grams(
     ``|doc_id| < 2^39``; overflow past that fails loudly under
     Spark's ANSI arithmetic."""
     return (
-        _doc_grams(docs, text_col, k, native)
+        _doc_grams(docs, text_col, k)
         .groupBy("gram")
         .agg(
             F.count(F.lit(1)).alias("n_occ"),
@@ -252,7 +229,6 @@ def duplicate_spans(
     k: int = DEFAULT_K,
     min_count: int = DEFAULT_MIN_COUNT,
     keep_first: bool = True,
-    native: bool = False,
 ) -> DataFrame:
     """Maximal removable spans: ``(doc_id, span_start, span_end)``
     with ``span_end`` exclusive — the merged union of ``[pos, pos+k)``
@@ -264,10 +240,10 @@ def duplicate_spans(
     The gram scan runs twice (frequency pass + mark-back pass) — the
     standard trade for not materializing the gram stream; both passes
     are stateless linear scans."""
-    dup = duplicate_grams(docs, text_col, k, min_count, native).select(
+    dup = duplicate_grams(docs, text_col, k, min_count).select(
         "gram", "first_doc_id", "first_pos"
     )
-    occ = _doc_grams(docs, text_col, k, native).join(dup, "gram")
+    occ = _doc_grams(docs, text_col, k).join(dup, "gram")
     if keep_first:
         occ = occ.where(
             ~(
@@ -305,7 +281,6 @@ def strip_duplicate_spans(
     k: int = DEFAULT_K,
     min_count: int = DEFAULT_MIN_COUNT,
     keep_first: bool = True,
-    native: bool = False,
 ) -> DataFrame:
     """``docs`` with duplicated token spans removed from ``text_col``
     (row count preserved, every other column untouched).  A document
@@ -317,9 +292,7 @@ def strip_duplicate_spans(
     by a native array ``filter`` against the doc's own islands (a few
     structs), so per-token cost is islands-bounded and there is no
     token-level explode/anti-join/reassembly shuffle."""
-    spans = duplicate_spans(
-        docs, text_col, k, min_count, keep_first, native
-    )
+    spans = duplicate_spans(docs, text_col, k, min_count, keep_first)
     per_doc = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias(
             "__islands"

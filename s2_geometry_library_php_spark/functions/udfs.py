@@ -27,7 +27,13 @@ from .sql_bitops import sql_s2_token
 
 @F.pandas_udf(LongType())
 def s2_cell_id(lat: pd.Series, lng: pd.Series) -> pd.Series:
-    """Leaf cell id from (lat, lng) degrees (S2CellId.php:99-106 chain)."""
+    """Leaf cell id from (lat, lng) degrees (S2CellId.php:99-106 chain).
+
+    Limit: a null, NaN or infinite coordinate has no leaf cell, yet it
+    encodes to the valid id ``0x4000000000000001`` (face 2's first
+    leaf, at the cube corner 35.26N 45E), not to a null.  Filter such
+    rows first where it matters; the engine's own lookups
+    (``s2core.probe.finite_leaves``) give them no cell."""
     ids = cid.cell_id_from_latlng_degrees(
         lat.to_numpy(np.float64), lng.to_numpy(np.float64)
     )

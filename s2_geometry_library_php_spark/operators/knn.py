@@ -19,13 +19,15 @@ probes are collected once and encoded, parented and ring-expanded on
 the driver with the numpy kernels.  A round evaluates one Arrow UDF,
 the ring kernel (:func:`ring_topk`), once per doc row: with the
 round's ring cells, probe unit vectors and ``k`` in its closure it
-encodes the doc, finds the probes whose ring holds the doc's level-L
-cell, and keeps per probe only the pairs within a slack of the batch's
-k-th smallest numpy distance.  The survivors join the round's probe
-table (a broadcast local relation), and the JVM computes the exact
-``latlng_angle_cols`` distance and the window top-k on them alone.
-The driver decides satisfied / failed / retry level from one collected
-per-probe stats frame.
+looks each doc's level-L cell up among the ring cells with the
+covering joins' lookup (``cellid.covering_pairs``; a doc with a null
+or non-finite coordinate has no cell), and keeps per probe only the
+pairs within a slack of the batch's k-th smallest numpy distance.
+The survivors join the round's probe table (a broadcast local
+relation), and the JVM computes the exact distance and the window
+top-k on them alone (:func:`_window_topk`, shared with
+:func:`knn_brute_force`).  The driver decides satisfied / failed /
+retry level from one collected per-probe stats frame.
 """
 
 from __future__ import annotations
@@ -50,6 +52,7 @@ from ..plans.session import local_relation
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.metric import MIN_WIDTH
+from ..s2core.probe import finite_leaves
 
 
 def knn_brute_force(
@@ -66,17 +69,30 @@ def knn_brute_force(
         F.col("lat").alias("_plat"),
         F.col("lon").alias("_plon"),
     )
-    joined = docs.crossJoin(F.broadcast(p))
+    return _window_topk(docs.crossJoin(F.broadcast(p)), k, probe_id, doc_id)
+
+
+def _window_topk(cand: DataFrame, k: int, probe_id: str, doc_id: str) -> DataFrame:
+    """The JVM tail of every kNN plan: the exact ``latlng_angle_cols``
+    distance of each candidate, then the window top-k by distance and
+    doc id.  A pair without a distance (a null or non-finite coordinate)
+    ranks after all others (nulls last, NaN above all numbers) and is
+    dropped after the window: a filter below it would be pushed into
+    the join condition and evaluate the distance twice more per pair."""
     dist = latlng_angle_cols(
         F.col("_plat"), F.col("_plon"), F.col("lat"), F.col("lon")
     ).alias("dist_rad")
     w = Window.partitionBy(probe_id).orderBy(
-        F.col("dist_rad").asc(), F.col(doc_id).asc()
+        F.col("dist_rad").asc_nulls_last(), F.col(doc_id).asc()
     )
     return (
-        joined.select(probe_id, doc_id, dist)
+        cand.select(probe_id, doc_id, dist)
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(
+            (F.col("rank") <= k)
+            & F.col("dist_rad").isNotNull()
+            & ~F.isnan("dist_rad")
+        )
     )
 
 
@@ -203,19 +219,18 @@ def ring_topk(ring: ProbeRing, k: int, level: int, chunk_pairs: int):
     for as a flattened list column (doc ``i``'s are
     ``values[offsets[i]:offsets[i + 1]]``, in ring-cell order).
 
-    Per batch: encode the leaves as ``s2_cell_id`` does (non-finite
-    coordinates included) and take the level-L parent; find every ring
-    cell equal to it with ``np.searchsorted`` left/right (one per probe
+    Per batch: encode the docs (``s2core.probe.finite_leaves``: a doc
+    with a non-finite or null coordinate has no cell and no pair) and
+    count each doc's ring cells equal to its level-L cell (one per probe
     whose ring holds it).  Then, docs in chunks of about
-    ``chunk_pairs`` pairs, a numpy angle per (doc, probe) pair: each
-    chunk's k smallest finite angles per probe merge into the batch's
-    running k smallest, and the chunk keeps the pairs within RANK_SLACK
-    of the running k-th; at the end of the batch the kept pairs are cut
-    to its final k-th.  A NaN angle (non-finite or null coordinates; the
-    JVM ranks a null first and a NaN last) is always kept.  A dropped
-    pair has k docs strictly closer in the JVM metric, so the kept set
-    holds each probe's exact top k of the batch, and the union over
-    batches the global top k."""
+    ``chunk_pairs`` pairs, expand the pairs (``cellid.covering_pairs``)
+    and compute a numpy angle per (doc, probe) pair: each chunk's k
+    smallest angles per probe merge into the batch's running k
+    smallest, and the chunk keeps the pairs within RANK_SLACK of the
+    running k-th; at the end of the batch the kept pairs are cut to its
+    final k-th.  A dropped pair has k docs strictly closer in the JVM
+    metric, so the kept set holds each probe's exact top k of the batch,
+    and the union over batches the global top k."""
     # The kernel calls only numpy and s2core, which every worker imports
     # already: a helper from this module would make each worker import
     # the whole operators package (~1.7 MB of RSS per worker).
@@ -227,45 +242,41 @@ def ring_topk(ring: ProbeRing, k: int, level: int, chunk_pairs: int):
         n = len(lat)
         if k <= 0:  # the window keeps no rank
             return np.zeros(n + 1, np.int64), owner[:0]
-        with np.errstate(invalid="ignore"):
-            leaf = cid.cell_id_from_latlng_degrees(lat, lon)
+        leaf, finite = finite_leaves(lat, lon)
+        with np.errstate(invalid="ignore"):  # unpaired non-finite docs
             xyz = geom.latlng_to_xyz(np.radians(lat), np.radians(lon))
         dx, dy, dz = np.ascontiguousarray(xyz.T)
-        parent = cid.parent(leaf, level)
-        lo = np.searchsorted(cells, parent, "left")
-        count = np.searchsorted(cells, parent, "right") - lo
-        total = int(count.sum())
+        # Doc-aligned chunk cuts from each doc's pair count.
+        key = cid.parent(leaf, level)
+        count = np.searchsorted(cells, key, "right") - np.searchsorted(cells, key)
+        count *= finite
         cuts = np.searchsorted(
-            np.cumsum(count), np.arange(chunk_pairs, total, chunk_pairs), "right"
+            np.cumsum(count), np.arange(chunk_pairs, count.sum(), chunk_pairs), "right"
         )
-        # Each probe's k smallest finite angles in the batch so far.
+        # Each probe's k smallest angles in the batch so far.
         best = np.full((n_probes, k), np.inf)
         kept = []
         for a, b in zip(np.r_[0, cuts], np.r_[cuts, n]):
-            c = count[a:b]
-            pt = np.repeat(np.arange(a, b), c)
-            # Each doc's run of matching ring cells: lo, lo+1, ...
-            run_start = np.repeat(np.cumsum(c) - c, c)
-            j = owner[lo[pt] + np.arange(len(pt)) - run_start]
+            pt, idx = cid.covering_pairs(cells, leaf[a:b], (level,), finite[a:b])
+            pt, j = pt + a, owner[idx]
             d = geom.angle_xyz((px[j], py[j], pz[j]), (dx[pt], dy[pt], dz[pt]))
             # Merge the chunk's k smallest per probe into ``best``.
-            d_rank = np.where(np.isfinite(d), d, np.inf)
-            by = np.lexsort((d_rank, j))
+            by = np.lexsort((d, j))
             js = j[by]
             rank = np.arange(len(js)) - np.searchsorted(js, js)
             top = rank < k
             rows = np.unique(js[top])
             merged = np.full((len(rows), 2 * k), np.inf)
             merged[:, :k] = best[rows]
-            merged[np.searchsorted(rows, js[top]), k + rank[top]] = d_rank[by][top]
+            merged[np.searchsorted(rows, js[top]), k + rank[top]] = d[by][top]
             merged.sort(axis=1)
             best[rows] = merged[:, :k]
-            keep = ~(d > best[j, k - 1] + RANK_SLACK)
+            keep = d <= best[j, k - 1] + RANK_SLACK
             kept.append((pt[keep], j[keep], d[keep]))
         # The chunks kept against the k-th smallest so far; cut to the
-        # batch's k-th smallest.  ``not >`` keeps the NaN angles.
+        # batch's k-th smallest.
         doc, probe, d = (np.concatenate(x) for x in zip(*kept))
-        keep = ~(d > best[probe, k - 1] + RANK_SLACK)
+        keep = d <= best[probe, k - 1] + RANK_SLACK
         doc, probe = doc[keep], probe[keep]
         return np.searchsorted(doc, np.arange(n + 1)), probe
 
@@ -317,17 +328,7 @@ def ring_round_topk(
         .where(F.col("_pidx").isNotNull())
         .join(F.broadcast(ring.probes), "_pidx")
     )
-    dist = latlng_angle_cols(
-        F.col("_plat"), F.col("_plon"), F.col("lat"), F.col("lon")
-    ).alias("dist_rad")
-    w = Window.partitionBy(probe_id).orderBy(
-        F.col("dist_rad").asc(), F.col(doc_id).asc()
-    )
-    return (
-        cand.select(probe_id, doc_id, dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _window_topk(cand, k, probe_id, doc_id)
 
 
 def knn_join(

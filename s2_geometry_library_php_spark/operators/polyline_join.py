@@ -3,11 +3,16 @@
 The distributed realization of the reference's edge index probe
 (S2EdgeIndex.php:85-147: cover data edges, probe by cell, refine with
 exact crossing/distance): polylines are covered edge-by-edge
-(s2core.edges.edge_covering), buffered by D via the restored
-``S2CellUnion.expand`` (S2CellUnion.php:354-415), broadcast, and
-probed with the same banded-prefix equi-join as the point-in-region
-join; survivors are refined with the exact point-to-edge distance
-kernel (S2EdgeUtil.php:271-309).
+(s2core.edges.edge_covering) and buffered by D via the restored
+``S2CellUnion.expand`` (S2CellUnion.php:354-415) on the driver.  The
+buffered coverings ride in one Python UDF's closure with the flagship
+point-in-region join's kernel (``s2core.probe.CoveringProbe``): per
+Arrow batch it encodes the docs, binary-searches each leaf's parents
+among the covering cells, and refines the matches with the exact
+point-to-edge distance (S2EdgeUtil.php:271-309).  No covering table,
+no join; a worker that unpickles the kernel imports no operator
+module.  :func:`polyline_project_join` runs the same lookup and the
+projection in that one crossing.
 
 Edge-crossing joins (``S2EdgeIndex::findCandidateCrossings``,
 S2EdgeIndex.php:225-244): the polyline-vs-region-boundary join and
@@ -25,58 +30,34 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
+from pyspark.sql.types import BooleanType
 
 from ..functions.sql_bitops import s2_level
 from ..plans.session import local_relation
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.coverer import expand_by_radius
-from ..s2core.edges import polyline_covering, polyline_project
-from .spatial_join import covering_candidates
+from ..s2core.edges import PolylineBuffer, polyline_covering, polyline_project
+from ..s2core.probe import CoveringProbe
+from .spatial_join import point_hits, probe_join
 
 
-def _polyline_candidates(
-    spark: SparkSession,
-    docs: DataFrame,
-    polylines: list[dict],
-    max_distance_rad: float,
-    leaf_col: str,
-) -> tuple[DataFrame, dict[int, np.ndarray]]:
-    """Banded-prefix candidate join of ``docs`` against every polyline's
-    edge covering buffered by ``max_distance_rad``; returns the
-    candidates (docs columns + line_id) and each line's unit vertices.
-    Expanded coverings are normalized (disjoint), so each doc matches
-    at most one covering cell per line: no dedup shuffle needed."""
-    cov_rows = []
-    verts_by_line: dict[int, np.ndarray] = {}
+def line_probe(polylines: list[dict], max_distance_rad: float) -> CoveringProbe:
+    """Every polyline's edge covering buffered by ``max_distance_rad``
+    (no cell is interior), refined by the line's
+    :class:`~s2core.edges.PolylineBuffer`.  Expanded coverings are
+    normalized (disjoint), so a doc matches each line at most once."""
+    owner, cells, shapes = [], [], {}
     for spec in polylines:
         lid = int(spec["line_id"])
-        verts_by_line[lid] = _unit_vertices(spec["vertices"])
-        cov = expand_by_radius(
-            polyline_covering(spec["vertices"]), max_distance_rad, 6
-        )
-        for c in cov:
-            cov_rows.append((lid, cid.to_signed_scalar(c), cid.level_scalar(c)))
-    cov_df = local_relation(
-        spark, cov_rows, "line_id long, cov_cell long, cov_level int"
-    )
-    levels = sorted({r[2] for r in cov_rows})
-    return covering_candidates(docs, cov_df, levels, leaf_col), verts_by_line
-
-
-def _line_groups(lat: pd.Series, lon: pd.Series, line_id: pd.Series):
-    """(line_id, row mask, unit points) per line present in a batch."""
-    pts = geom.latlng_to_xyz(
-        np.radians(lat.to_numpy(np.float64)),
-        np.radians(lon.to_numpy(np.float64)),
-    )
-    lid_arr = line_id.to_numpy(np.int64)
-    for lid in np.unique(lid_arr):
-        mask = lid_arr == lid
-        yield int(lid), mask, pts[mask]
+        shapes[lid] = PolylineBuffer(_unit_vertices(spec["vertices"]), max_distance_rad)
+        cov = expand_by_radius(polyline_covering(spec["vertices"]), max_distance_rad, 6)
+        owner += [lid] * len(cov)
+        cells += cov
+    return CoveringProbe(owner, cells, np.zeros(len(cells), bool), shapes)
 
 
 def polyline_proximity_join(
@@ -86,42 +67,48 @@ def polyline_proximity_join(
     max_distance_rad: float,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    leaf_col: str = "cell_id",
 ) -> DataFrame:
     """polylines: [{line_id, vertices: [[lat,lng] deg, ...]}, ...].
     Returns docs columns + line_id for docs within max_distance_rad of
-    the polyline."""
-    joined, verts_by_line = _polyline_candidates(
-        spark, docs, polylines, max_distance_rad, leaf_col
-    )
-
-    @F.pandas_udf(BooleanType())
-    def within(lat: pd.Series, lon: pd.Series, line_id: pd.Series) -> pd.Series:
-        out = np.zeros(len(lat), dtype=bool)
-        if len(lat) == 0:
-            return pd.Series(out)
-        for lid, mask, pts in _line_groups(lat, lon, line_id):
-            verts = verts_by_line[lid]
-            best = np.full(len(pts), np.inf)
-            for k in range(len(verts) - 1):
-                d = geom.edge_distance_radians(pts, verts[k], verts[k + 1])
-                best = np.minimum(best, d)
-            out[mask] = best <= max_distance_rad
-        return pd.Series(out)
-
-    return joined.where(
-        within(F.col(lat_col), F.col(lon_col), F.col("line_id"))
-    ).select(*docs.columns, "line_id")
+    the polyline: the covering lookup and the distance refine in one
+    Python crossing (``spatial_join.point_hits``)."""
+    kernel = point_hits(line_probe(polylines, max_distance_rad))
+    return probe_join(docs, kernel, lat_col, lon_col, "line_id")
 
 
-_PROJECTION = StructType(
-    [
-        StructField("dist_rad", DoubleType()),
-        StructField("fraction", DoubleType()),
-        StructField("proj_lat", DoubleType()),
-        StructField("proj_lon", DoubleType()),
-    ]
-)
+_PROJECTION = ("line_id", "dist_rad", "fraction", "proj_lat", "proj_lon")
+
+
+def polyline_projections(polylines: list[dict], max_distance_rad: float):
+    """The kernel of :func:`polyline_project_join`: ``kernel(lat, lon)``
+    (degree arrays) -> an Arrow list array of ``_PROJECTION`` structs
+    (``line_id`` int64, the rest float64), each doc's projections onto
+    the lines within ``max_distance_rad``, by line id.  Per batch: the
+    covering lookup of :func:`line_probe`, then ``polyline_project``
+    once per line on its candidates; its distance is the refine."""
+    probe = line_probe(polylines, max_distance_rad)
+
+    def kernel(lat: np.ndarray, lon: np.ndarray) -> pa.Array:
+        pt, row = probe.pairs(lat, lon)
+        line = probe.owner[row]
+        order = np.lexsort((line, pt))
+        pt, line = pt[order], line[order]
+        xyz = geom.latlng_to_xyz(np.radians(lat[pt]), np.radians(lon[pt]))
+        out = np.zeros((4, len(pt)))
+        for lid in np.unique(line):
+            mask = line == lid
+            cp, d, fr = polyline_project(xyz[mask], probe.shapes[int(lid)].vertices)
+            plat, plng = geom.xyz_to_latlng(cp)
+            out[:, mask] = d, fr, np.degrees(plat), np.degrees(plng)
+        keep = out[0] <= max_distance_rad
+        pt, line, out = pt[keep], line[keep], out[:, keep]
+        offsets = np.searchsorted(pt, np.arange(len(lat) + 1)).astype(np.int32)
+        fields = pa.StructArray.from_arrays(
+            [pa.array(line), *map(pa.array, out)], names=list(_PROJECTION)
+        )
+        return pa.ListArray.from_arrays(pa.array(offsets), fields)
+
+    return kernel
 
 
 def polyline_project_join(
@@ -131,42 +118,30 @@ def polyline_project_join(
     max_distance_rad: float,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    leaf_col: str = "cell_id",
 ) -> DataFrame:
     """Proximity join + projection: docs within ``max_distance_rad``
     of each polyline, annotated with the exact distance, the arc-length
     fraction of the projection, and the projected point
     (S2Polyline.project / interpolate semantics via
-    s2core.edges.polyline_project).  The projection runs once on the
+    s2core.edges.polyline_project).  One Arrow UDF
+    (:func:`polyline_projections`) looks the docs up and projects the
     candidates; its distance is the proximity refine."""
-    joined, verts_by_line = _polyline_candidates(
-        spark, docs, polylines, max_distance_rad, leaf_col
-    )
+    kernel = polyline_projections(polylines, max_distance_rad)
 
-    @F.pandas_udf(_PROJECTION)
-    def project(lat: pd.Series, lon: pd.Series, line_id: pd.Series) -> pd.DataFrame:
-        out = {name: np.zeros(len(lat)) for name in _PROJECTION.fieldNames()}
-        if len(lat) == 0:
-            return pd.DataFrame(out)
-        for lid, mask, pts in _line_groups(lat, lon, line_id):
-            cp, d, fr = polyline_project(pts, verts_by_line[lid])
-            plat, plng = geom.xyz_to_latlng(cp)
-            out["dist_rad"][mask] = d
-            out["fraction"][mask] = fr
-            out["proj_lat"][mask] = np.degrees(plat)
-            out["proj_lon"][mask] = np.degrees(plng)
-        return pd.DataFrame(out)
+    @F.arrow_udf("array<struct<line_id: long, dist_rad: double, fraction: double, "
+                 "proj_lat: double, proj_lon: double>>")
+    def project(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        return kernel(
+            lat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+            lon.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+        )
 
-    # Marked nondeterministic only so the optimizer cannot push the
-    # distance filter below this projection: that would substitute the
-    # UDF into the filter and evaluate it twice.
-    proj = project.asNondeterministic()(
-        F.col(lat_col), F.col(lon_col), F.col("line_id")
-    )
+    # explode_outer + an explicit not-null filter, not an inner explode
+    # (spatial_join.probe_join): an inner explode runs the UDF twice.
     return (
-        joined.select(*docs.columns, "line_id", proj.alias("_p"))
-        .where(F.col("_p.dist_rad") <= F.lit(max_distance_rad))
-        .select(*docs.columns, "line_id", "_p.*")
+        docs.withColumn("_p", F.explode_outer(project(F.col(lat_col), F.col(lon_col))))
+        .where(F.col("_p").isNotNull())
+        .select(*docs.columns, "_p.*")
     )
 
 
@@ -357,10 +332,7 @@ def polyline_region_crossings_numpy(
     out = []
     for spec in polylines:
         lid = int(spec["line_id"])
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        verts = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
+        verts = _unit_vertices(spec["vertices"])
         for rspec in region_specs:
             if rspec["kind"] not in ("loop", "polygon"):
                 continue
@@ -447,10 +419,7 @@ def polyline_self_crossings_numpy(polylines: list[dict]) -> list[tuple]:
     """Brute all-pairs oracle for :func:`polyline_self_crossing_join`."""
     chains = {}
     for spec in polylines:
-        v = np.asarray(spec["vertices"], dtype=np.float64)
-        chains[int(spec["line_id"])] = geom.normalize(
-            geom.latlng_to_xyz(np.radians(v[:, 0]), np.radians(v[:, 1]))
-        )
+        chains[int(spec["line_id"])] = _unit_vertices(spec["vertices"])
     ids = sorted(chains)
     out = []
     for i, la in enumerate(ids):

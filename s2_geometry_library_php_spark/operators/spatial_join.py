@@ -11,12 +11,13 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
    interior coverings (S2RegionCoverer.php:257-267).
 
 2. **Covering lookup inside the scan** (:func:`spatial_join`): the
-   covering rows, sorted by cell, and the region specs ride in one
-   pandas UDF's closure.  Per Arrow batch it encodes the leaves and
-   finds each leaf's parent at every covering level with a binary
-   search (``np.searchsorted``), so the region lookup needs no join:
-   with a driver-sized region set it belongs in the scan (Raptor,
-   VLDB'19, makes the same argument for raster x vector).
+   covering rows, sorted by cell, and the regions ride in one pandas
+   UDF's closure (:func:`region_hits`).  Per Arrow batch it
+   encodes the leaves and finds each leaf's parent at every covering
+   level with a binary search (``cellid.covering_pairs``), so the
+   region lookup needs no join: with a driver-sized region set it
+   belongs in the scan (Raptor, VLDB'19, makes the same argument for
+   raster x vector).
 
 3. **Refine in the same crossing**: pairs matched through a boundary
    cell run the vectorized ``contains_points`` kernel (loop parity /
@@ -24,13 +25,16 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
    untouched.  Each point leaves Python with its sorted containing
    region ids, exploded into one row per region.
 
-The distributed twin :func:`spatial_join_region_table` and the
-polyline joins keep a **broadcast equi-join on banded prefixes**
-(:func:`covering_candidates`): each covering cell at level L matches
-probes via ``s2_parent(leaf_id, L) = cell_id``, a pure hash equi-join
-over a per-probe prefix array, because their coverings are computed
-in executors or unbounded.  All paths share :func:`covering_rows`
-(cover one region) and ``_refine_points`` (the refine kernel).
+Steps 2 and 3 are ``s2core.probe.CoveringProbe``; the polyline
+proximity join runs it with the same UDF shell (:func:`point_hits`,
+:func:`probe_join`) over buffered polyline coverings.
+
+The distributed twin :func:`spatial_join_region_table` keeps a
+**broadcast equi-join on banded prefixes**: each covering cell at
+level L matches probes via ``s2_parent(leaf_id, L) = cell_id``,
+because its coverings are computed in executors, where no driver
+closure can hold them.  It shares :func:`covering_rows` (cover one
+region) and ``s2core.probe.refine`` with the driver path.
 
 Driver-side coverings are memoized in process and on disk under
 ``$TMPDIR/s2spark_covering_cache``, keyed on the region specs, the
@@ -72,9 +76,10 @@ from .. import s2core
 from ..functions.sql_bitops import s2_parent
 from ..plans.session import local_relation
 from ..s2core import cellid as cid
-from ..s2core import geom
 from ..s2core.cell import Cell
 from ..s2core.coverer import RegionCoverer, normalize_cell_union
+from ..s2core.probe import CoveringProbe
+from ..s2core.probe import refine as refine_pairs
 from ..s2core.region import Region, region_from_params
 
 COVERING_SCHEMA = StructType(
@@ -319,138 +324,64 @@ def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
     return F.expr(" OR ".join(terms))
 
 
-def _refine_points(
-    lat: pd.Series,
-    lon: pd.Series,
-    region_id: pd.Series,
-    is_interior: pd.Series,
-    cache: dict[int, Region],
-    build,
-) -> pd.Series:
-    """Refine kernel shared by both covering joins: exact containment
-    for (lat, lon, region_id) batches, one vectorized kernel call per
-    region present in the batch.  ``build(rid, mask)`` rebuilds a
-    region missing from the per-worker ``cache``."""
-    n = len(lat)
-    out = np.zeros(n, dtype=bool)
-    if n == 0:
-        return pd.Series(out)
-    # Interior-covering matches are containment-certain: pass
-    # through with zero kernel work (the filter/refine split).
-    interior = is_interior.to_numpy(bool)
-    out[interior] = True
-    todo = ~interior
-    if not np.any(todo):
-        return pd.Series(out)
-    rid_arr = region_id.to_numpy(np.int64)
-    pts = geom.latlng_to_xyz(
-        np.radians(lat.to_numpy(np.float64)),
-        np.radians(lon.to_numpy(np.float64)),
-    )
-    for rid in np.unique(rid_arr[todo]):
-        mask = todo & (rid_arr == rid)
-        if int(rid) not in cache:
-            cache[int(rid)] = build(int(rid), mask)
-        out[mask] = cache[int(rid)].contains_points(pts[mask])
-    return pd.Series(out)
-
-
 def region_hits(regions: list[dict], cov_rows: list[tuple]):
     """The point-in-region kernel of :func:`spatial_join`:
-    ``hits(lat, lon)`` (degree arrays) -> one sorted int64 array of
-    containing region ids per point.
-
-    The covering rows (:func:`compute_coverings`) are held sorted by
-    cell.  Per batch: encode the leaves; look up each leaf's parent at
-    every covering level with ``np.searchsorted`` left/right, so several
-    regions may share a cell; pass interior matches through and refine
-    boundary matches with ``_refine_points``.  Coverings are disjoint
-    per region, so a point matches each region at most once."""
-    specs = {int(r["region_id"]): r for r in regions}
-    cache: dict[int, Region] = {}
-
-    def build(rid: int, _mask) -> Region:
-        spec = specs[rid]
-        return region_from_params(
-            spec["kind"], spec["params"], spec.get("loop_offsets")
-        )
-
+    :func:`point_hits` over the covering rows
+    (:func:`compute_coverings`) and the regions, built on the driver
+    (the closure ships them built: a worker does not re-validate a
+    loop per task)."""
     cov = np.array(cov_rows, dtype=np.int64).reshape(-1, 4)
-    order = np.argsort(cid.from_signed(cov[:, 1]), kind="stable")
-    cov = cov[order]
-    cells = cid.from_signed(cov[:, 1])
-    cov_rid, cov_interior = cov[:, 0], cov[:, 3].astype(bool)
-    levels = sorted({int(x) for x in cov[:, 2]})
+    shapes = {
+        int(r["region_id"]): region_from_params(
+            r["kind"], r["params"], r.get("loop_offsets")
+        )
+        for r in regions
+    }
+    return point_hits(
+        CoveringProbe(
+            cov[:, 0], cid.from_signed(cov[:, 1]), cov[:, 3].astype(bool), shapes
+        )
+    )
+
+
+def point_hits(probe: CoveringProbe):
+    """``hits(lat, lon)`` (degree arrays) -> one sorted int64 array of
+    owners per point (``probe.hits``).  The closure holds the probe,
+    numpy and pandas alone: a worker that unpickles it imports no
+    operator module."""
 
     def hits(lat: np.ndarray, lon: np.ndarray) -> pd.Series:
-        n = len(lat)
-        # Non-finite coordinates have no leaf cell: they match nothing.
-        finite = np.isfinite(lat) & np.isfinite(lon)
-        leaf = cid.cell_id_from_latlng_degrees(
-            np.where(finite, lat, 0.0), np.where(finite, lon, 0.0)
-        )
-        pairs_pt, pairs_cov = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
-        for lvl in levels:
-            parent = cid.parent(leaf, lvl)
-            lo = np.searchsorted(cells, parent, "left")
-            count = np.where(finite, np.searchsorted(cells, parent, "right") - lo, 0)
-            pt = np.repeat(np.arange(n), count)
-            # Each point's run of matching covering rows: lo, lo+1, ...
-            run_start = np.repeat(np.cumsum(count) - count, count)
-            pairs_pt.append(pt)
-            pairs_cov.append(lo[pt] + np.arange(len(pt)) - run_start)
-        pt, idx = np.concatenate(pairs_pt), np.concatenate(pairs_cov)
-        rid = cov_rid[idx]
-        keep = _refine_points(
-            pd.Series(lat[pt]), pd.Series(lon[pt]), pd.Series(rid),
-            pd.Series(cov_interior[idx]), cache, build,
-        ).to_numpy(bool)
-        pt, rid = pt[keep], rid[keep]
-        by_point = np.lexsort((rid, pt))
-        pt, rid = pt[by_point], rid[by_point]
-        bounds = np.searchsorted(pt, np.arange(n + 1))
+        pt, owner = probe.hits(lat, lon)
+        bounds = np.searchsorted(pt, np.arange(len(lat) + 1))
         return pd.Series(
-            [rid[bounds[i]:bounds[i + 1]] for i in range(n)], dtype=object
+            [owner[bounds[i]:bounds[i + 1]] for i in range(len(lat))],
+            dtype=object,
         )
 
     return hits
 
 
-def _hits_udf(regions: list[dict], cov_rows: list[tuple]):
-    """:func:`region_hits` as a pandas UDF with the coverings and the
-    region specs in its closure: shipped once per executor (closure
-    serialization), no covering table and no join."""
-    kernel = region_hits(regions, cov_rows)
+def probe_join(
+    docs: DataFrame, kernel, lat_col: str, lon_col: str, out_col: str
+) -> DataFrame:
+    """``docs`` columns + ``out_col``: one row per doc and owner that
+    ``kernel`` (:func:`point_hits`) returns, in one pandas UDF with the
+    kernel in its closure: no covering table and no join."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def hits(lat: pd.Series, lon: pd.Series) -> pd.Series:
         return kernel(lat.to_numpy(np.float64), lon.to_numpy(np.float64))
 
-    return hits
-
-
-def covering_candidates(
-    docs: DataFrame,
-    cov: DataFrame,
-    levels,
-    leaf_col: str,
-    broadcast: bool = True,
-) -> DataFrame:
-    """Banded-prefix candidate join: ``docs`` rows x covering rows whose
-    ``cov_cell`` is an ancestor of the row's leaf.
-
-    Probe side: one prefix key per covering level (a plain long-array
-    explode; stays narrow, no shuffle).  A single equi-key suffices: a
-    cell id's lowest set bit encodes its level (S2CellId.php:211-243),
-    so s2_parent(leaf, L') = cov_cell already implies L' = cov_level —
-    no second join key, no struct materialization through the exploded
-    rows.  With ``broadcast`` the covering side is broadcast."""
-    prefixes = F.array(*[s2_parent(F.col(leaf_col), lvl) for lvl in levels])
-    probe = docs.withColumn("_prefix", F.explode(prefixes))
-    cov_side = cov.drop("cov_level")
-    if broadcast:
-        cov_side = F.broadcast(cov_side)
-    return probe.join(cov_side, F.col("_prefix") == F.col("cov_cell"), "inner")
+    # explode_outer + an explicit not-null filter, not an inner explode:
+    # for an inner explode the optimizer infers size(_hits) > 0 and
+    # pushes it below the projection, evaluating the UDF a second time
+    # in its own ArrowEvalPython node (the trap radius_join.join_key avoids).
+    return (
+        docs.withColumn("_hits", hits(F.col(lat_col), F.col(lon_col)))
+        .withColumn(out_col, F.explode_outer("_hits"))
+        .where(F.col(out_col).isNotNull())
+        .select(*docs.columns, out_col)
+    )
 
 
 def spatial_join(
@@ -472,18 +403,9 @@ def spatial_join(
     computes its own ``s2_cell_id`` over the same columns, Catalyst
     evaluates both UDFs in one ArrowEvalPython node.
     """
-    hits = _hits_udf(regions, compute_coverings(regions, max_cells=max_cells))
-    # explode_outer + an explicit not-null filter, not an inner explode:
-    # for an inner explode the optimizer infers size(_hits) > 0 and
-    # pushes it below the projection, evaluating the UDF a second time
-    # in its own ArrowEvalPython node (the trap radius_join.join_key avoids).
-    return (
-        docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
-        .withColumn("_hits", hits(F.col(lat_col), F.col(lon_col)))
-        .withColumn("region_id", F.explode_outer("_hits"))
-        .where(F.col("region_id").isNotNull())
-        .select(*docs.columns, "region_id")
-    )
+    kernel = region_hits(regions, compute_coverings(regions, max_cells=max_cells))
+    prefiltered = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
+    return probe_join(prefiltered, kernel, lat_col, lon_col, "region_id")
 
 
 # --- distributed region path (large region sets, SURVEY.md §3.2) ---------------
@@ -549,7 +471,8 @@ def _refine_udf_from_table():
     """Refine UDF for the distributed-region path: region geometry
     arrives per-row (joined from the region table) instead of via a
     driver closure, so the region set size is unbounded.  Regions are
-    rebuilt from their first row in a batch and memoized per worker."""
+    rebuilt from their first boundary row in a batch and memoized per
+    worker."""
     cache: dict[int, Region] = {}
 
     @F.pandas_udf(BooleanType())
@@ -562,13 +485,19 @@ def _refine_udf_from_table():
         params: pd.Series,
         loop_offsets: pd.Series,
     ) -> pd.Series:
-        def build(_rid: int, mask) -> Region:
-            i = int(np.argmax(mask))
-            return _region_from_row(
-                kind.iloc[i], params.iloc[i], loop_offsets.iloc[i]
+        rid, interior = region_id.to_numpy(np.int64), is_interior.to_numpy(bool)
+        todo = np.flatnonzero(~interior)
+        for r, i in zip(*np.unique(rid[todo], return_index=True)):
+            if int(r) not in cache:
+                i = todo[i]
+                cache[int(r)] = _region_from_row(
+                    kind.iloc[i], params.iloc[i], loop_offsets.iloc[i]
+                )
+        return pd.Series(
+            refine_pairs(
+                lat.to_numpy(np.float64), lon.to_numpy(np.float64), rid, interior, cache
             )
-
-        return _refine_points(lat, lon, region_id, is_interior, cache, build)
+        )
 
     return refine
 
@@ -589,15 +518,23 @@ def spatial_join_region_table(
     per-row region geometry.  With ``broadcast_covering`` the covering
     and region tables are broadcast (the common case); otherwise both
     joins fall back to shuffle joins and the path scales to region
-    sets far beyond driver memory."""
-    cov = build_covering_table_distributed(regions_df, max_cells=max_cells)
-    joined = covering_candidates(
-        docs, cov, JOIN_LEVEL_GRID, leaf_col, broadcast_covering
+    sets far beyond driver memory.
+
+    Candidates: one prefix key per covering level (a narrow explode).
+    One equi-key suffices, since a cell id's lowest set bit encodes its
+    level (S2CellId.php:211-243), and disjoint coverings need no dedup."""
+    cov = build_covering_table_distributed(regions_df, max_cells=max_cells).drop(
+        "cov_level"
     )
     reg_side = regions_df
     if broadcast_covering:
-        reg_side = F.broadcast(reg_side)
-    joined = joined.join(reg_side, "region_id", "inner")
+        cov, reg_side = F.broadcast(cov), F.broadcast(reg_side)
+    prefixes = F.array(*[s2_parent(F.col(leaf_col), lvl) for lvl in JOIN_LEVEL_GRID])
+    joined = (
+        docs.withColumn("_prefix", F.explode(prefixes))
+        .join(cov, F.col("_prefix") == F.col("cov_cell"), "inner")
+        .join(reg_side, "region_id", "inner")
+    )
     refine = _refine_udf_from_table()
     return joined.where(
         refine(

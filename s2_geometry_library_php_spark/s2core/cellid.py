@@ -376,6 +376,24 @@ def parent(ids: np.ndarray, level) -> np.ndarray:
     return (ids & (~new_lsb + _ONE)) | new_lsb
 
 
+def covering_pairs(
+    cells: np.ndarray, leaf: np.ndarray, levels, valid: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every ``(row, idx)`` with ``cells[idx]`` the parent of
+    ``leaf[row]`` at one of ``levels``, by binary search in ``cells``
+    (uint64, sorted, a cell repeated once per owner).  A row where
+    ``valid`` is false matches nothing.  Pairs come level by level, in
+    row order, each row's run of equal cells in index order."""
+    key = parent(leaf, np.asarray(levels)[:, None]).ravel()
+    lo = np.searchsorted(cells, key, "left")
+    count = np.searchsorted(cells, key, "right") - lo
+    count *= np.tile(valid, len(levels))
+    row = np.repeat(np.tile(np.arange(len(leaf)), len(levels)), count)
+    # Each key's run is lo, lo + 1, ...: the pair's position in the
+    # output, less the run's start there, plus lo.
+    return row, np.arange(len(row)) + np.repeat(lo - (np.cumsum(count) - count), count)
+
+
 def range_min(ids: np.ndarray) -> np.ndarray:
     ids = np.asarray(ids, dtype=np.uint64)
     return ids - (lowest_on_bit(ids) - _ONE)

@@ -328,11 +328,9 @@ def polygon_is_valid(loops: list) -> tuple[bool, str]:
 
 # --- polyline operators (S2Polyline.php:3-21 doc; body is commented Java) -----------
 def _unit3(v: np.ndarray) -> np.ndarray:
-    """``v / |v|`` for one 3-vector, with ``|v|`` summed in the
-    reference's x, y, z order.  ``np.linalg.norm`` of a 1-D vector is
-    OpenBLAS ``ddot``, whose rounding depends on the operand's memory
-    alignment, so a worker and the driver could disagree in the last bit."""
-    return v / np.sqrt(v[0] * v[0] + v[1] * v[1] + v[2] * v[2])
+    """``v / |v|`` for one 3-vector, ``|v|`` from ``geom.dot3`` (not the
+    alignment-dependent BLAS ``np.linalg.norm``)."""
+    return v / np.sqrt(geom.dot3(v, v))
 
 
 def edge_closest_point(
@@ -412,3 +410,20 @@ def polyline_project(
     along = geom.angle_between(vertices[best_edge], best_p)
     fraction = (cum[best_edge] + along) / total
     return best_p, best_d, np.clip(fraction, 0.0, 1.0)
+
+
+class PolylineBuffer:
+    """The points within ``radius`` radians of a polyline with unit
+    ``vertices``: the refine shape of the polyline proximity join (the
+    minimum point-to-edge distance, S2EdgeUtil.php:271-309)."""
+
+    def __init__(self, vertices: np.ndarray, radius: float):
+        self.vertices = vertices
+        self.radius = radius
+
+    def contains_points(self, x: np.ndarray) -> np.ndarray:
+        v = self.vertices
+        best = np.full(len(x), np.inf)
+        for k in range(len(v) - 1):
+            best = np.minimum(best, geom.edge_distance_radians(x, v[k], v[k + 1]))
+        return best <= self.radius

@@ -33,6 +33,13 @@ def dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.sum(a * b, axis=-1)
 
 
+def dot3(a, b) -> float:
+    """a.b of two 3-vectors as a float, summed x, y, z as the reference
+    does: 1-D ``np.dot`` is a BLAS ``ddot`` whose rounding depends on
+    the operands' alignment, so a sign tier could flip near zero."""
+    return float(a[0] * b[0] + a[1] * b[1] + a[2] * b[2])
+
+
 def cross(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.cross(a, b)
 
@@ -157,24 +164,24 @@ def expensive_ccw(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> int:
     """Stable recompute + symbolic perturbation (S2.php:566-659)."""
     if _points_equal(a, b) or _points_equal(b, c) or _points_equal(c, a):
         return 0
-    sab = -1.0 if float(np.dot(a, b)) > 0 else 1.0
-    sbc = -1.0 if float(np.dot(b, c)) > 0 else 1.0
-    sca = -1.0 if float(np.dot(c, a)) > 0 else 1.0
+    sab = -1.0 if dot3(a, b) > 0 else 1.0
+    sbc = -1.0 if dot3(b, c) > 0 else 1.0
+    sca = -1.0 if dot3(c, a) > 0 else 1.0
     vab = a + sab * b
     vbc = b + sbc * c
     vca = c + sca * a
-    dab = float(np.dot(vab, vab))
-    dbc = float(np.dot(vbc, vbc))
-    dca = float(np.dot(vca, vca))
+    dab = dot3(vab, vab)
+    dbc = dot3(vbc, vbc)
+    dca = dot3(vca, vca)
     if dca < dbc or (dca == dbc and _less_than(a, b)):
         if dab < dbc or (dab == dbc and _less_than(a, c)):
-            sign = float(np.dot(np.cross(vab, vca), a)) * sab  # BC longest
+            sign = dot3(np.cross(vab, vca), a) * sab  # BC longest
         else:
-            sign = float(np.dot(np.cross(vca, vbc), c)) * sca  # AB longest
+            sign = dot3(np.cross(vca, vbc), c) * sca  # AB longest
     elif dab < dca or (dab == dca and _less_than(b, c)):
-        sign = float(np.dot(np.cross(vbc, vab), b)) * sbc  # CA longest
+        sign = dot3(np.cross(vbc, vab), b) * sbc  # CA longest
     else:
-        sign = float(np.dot(np.cross(vca, vbc), c)) * sca  # AB longest
+        sign = dot3(np.cross(vca, vbc), c) * sca  # AB longest
     if sign > 0:
         return 1
     if sign < 0:
@@ -191,7 +198,7 @@ def expensive_ccw(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> int:
 
 def robust_ccw(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> int:
     """Scalar tiered robustCCW (S2.php:496-555)."""
-    det = float(np.dot(np.cross(a, b), c))
+    det = dot3(np.cross(a, b), c)
     if det > CCW_THRESHOLD:
         return 1
     if det < -CCW_THRESHOLD:
@@ -239,7 +246,7 @@ def robust_crossing(a, b, c, d) -> int:
     a_cross_b = np.cross(a, b)
 
     def ccw_with(axb, p, q, r):
-        det = float(np.dot(axb, r))
+        det = dot3(axb, r)
         if det > CCW_THRESHOLD:
             return 1
         if det < -CCW_THRESHOLD:
@@ -514,10 +521,11 @@ def edge_distance_radians(
     on_segment = simple_ccw_vec(a_cross_b, a, x) & simple_ccw_vec(
         x, b, a_cross_b
     )
-    # geom.dot, not ``x @``: a BLAS matrix-vector product rounds a row
-    # differently depending on its position in the batch, and Spark
-    # hands this kernel batches of arbitrary composition.
-    sin_dist = np.abs(dot(x, a_cross_b)) / np.linalg.norm(a_cross_b)
+    # geom.dot, not ``x @``, and dot3, not ``np.linalg.norm``: a BLAS
+    # product rounds a row differently depending on its position in the
+    # batch and a vector differently depending on its alignment, and
+    # Spark hands this kernel batches of arbitrary composition.
+    sin_dist = np.abs(dot(x, a_cross_b)) / np.sqrt(dot3(a_cross_b, a_cross_b))
     seg_dist = np.arcsin(np.minimum(1.0, sin_dist))
     lin2 = np.minimum(norm2(x - a), norm2(x - b))
     end_dist = 2.0 * np.arcsin(np.minimum(1.0, 0.5 * np.sqrt(lin2)))

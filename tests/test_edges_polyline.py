@@ -209,6 +209,69 @@ def test_edge_closest_point_bits_do_not_depend_on_alignment(monkeypatch):
             assert np.array_equal(want, got)
 
 
+def test_edge_distance_bits_do_not_depend_on_alignment_or_batch(monkeypatch):
+    """The proximity refine's distance, row by row with the inputs and
+    the edge normal at 0/8/16/24-byte offsets, and for the whole batch
+    against one edge, gives the same bits (a BLAS ``np.linalg.norm`` of
+    the normal does not)."""
+    rng = np.random.default_rng(11)
+    n = 1500
+    a = geom.normalize(rng.normal(size=(n, 3)))
+    b = geom.normalize(a + rng.normal(scale=0.05, size=(n, 3)))
+    x = geom.normalize(a + rng.normal(scale=0.05, size=(n, 3)))
+    cross = geom.robust_cross_prod
+    runs = []
+    for off in (0, 8, 16, 24):
+        monkeypatch.setattr(
+            geom, "robust_cross_prod", lambda p, q, off=off: _at_offset(cross(p, q), off)
+        )
+        runs.append(np.concatenate([
+            geom.edge_distance_radians(
+                _at_offset(x[i : i + 1], off), _at_offset(a[i], off), _at_offset(b[i], off)
+            )
+            for i in range(n)
+        ]))
+        one_edge = [
+            geom.edge_distance_radians(_at_offset(x[i : i + 1], off), a[0], b[0])
+            for i in range(n)
+        ]
+        assert np.array_equal(
+            np.concatenate(one_edge), geom.edge_distance_radians(x, a[0], b[0])
+        )
+    for other in runs[1:]:
+        assert np.array_equal(runs[0], other)
+
+
+def test_ccw_determinants_near_zero_do_not_depend_on_alignment(monkeypatch):
+    """Points a few ulps off the great circle through a and b put
+    ``robust_ccw``'s determinant inside the uncertainty band; every
+    determinant and dot product its tiers compute, and the sign, are
+    the same with the inputs at 0/8/16/24-byte offsets."""
+    rng = np.random.default_rng(13)
+    n = 400
+    a = geom.normalize(rng.normal(size=(n, 3)))
+    b = geom.normalize(a + rng.normal(scale=0.1, size=(n, 3)))
+    t = rng.uniform(-0.5, 1.5, size=(n, 1))
+    c = geom.normalize(a * (1 - t) + b * t + rng.normal(scale=1e-16, size=(n, 3)))
+    near = np.abs(geom.dot(np.cross(a, b), c)) <= geom.CCW_THRESHOLD
+    assert near.sum() > n // 2
+    real = geom.dot3
+    runs = []
+    for off in (0, 8, 16, 24):
+        seen = []
+        monkeypatch.setattr(
+            geom, "dot3", lambda p, q: seen.append(real(p, q)) or seen[-1]
+        )
+        signs = [
+            geom.robust_ccw(*(_at_offset(v[i], off) for v in (a, b, c)))
+            for i in range(n)
+        ]
+        runs.append((signs, seen))
+    assert len(runs[0][1]) > n
+    for other in runs[1:]:
+        assert other == runs[0]
+
+
 def test_xyz_to_latlng_bits_do_not_depend_on_output_placement(monkeypatch):
     """numpy bounds a strided input's memory by stride x length; an
     ``arctan2`` output that lands in the overshoot past the input's

@@ -114,24 +114,10 @@ def test_matches_python_twin_on_handwritten_corpus(spark):
         (12, REGION),
         (13, f"{REGION} {REGION}"),
         (14, PRE_A),
+        (15, ""),
     ]
     out = _collect(strip_duplicate_spans(_mkdocs(spark, rows), k=K))
     assert out == strip_duplicate_spans_py(rows, k=K)
-
-
-def test_native_and_arrow_paths_agree(spark):
-    rows = [
-        (10, f"{PRE_A} {REGION} {POST_A}"),
-        (11, f"{PRE_B} {REGION} {POST_B}"),
-        (12, REGION),
-        (13, f"{REGION} {REGION}"),
-        (14, PRE_A),
-        (15, ""),
-    ]
-    df = _mkdocs(spark, rows)
-    arrow = _collect(strip_duplicate_spans(df, k=K))
-    native = _collect(strip_duplicate_spans(df, k=K, native=True))
-    assert arrow == native
 
 
 @given(

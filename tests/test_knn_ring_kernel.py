@@ -1,12 +1,13 @@
 """The kNN round's ring kernel (``ring_topk``: ring lookup and a
 batch-local numpy top-k inside the docs' Arrow batch) followed by the
 JVM re-rank returns exactly the rows of the JVM window over every ring
-candidate, ``dist_rad`` bits included: on exact ties and 1-ulp
-near-ties at rank k, probes with fewer than k candidates, the poles,
-lon = +-180, a cube corner, NaN / inf / null coordinates, and for any
-Arrow batch size and kernel chunk size.  The kernel itself keeps
-exactly each batch's numpy top k (within the slack) and nothing else,
-and its numpy angle stays within ``ANGLE_ERROR`` of the JVM's."""
+candidate with a distance, ``dist_rad`` bits included: on exact ties
+and 1-ulp near-ties at rank k, probes with fewer than k candidates, the
+poles, lon = +-180, a cube corner, NaN / inf / null coordinates (no
+cell, no distance, never a neighbor), and for any Arrow batch size and
+kernel chunk size.  The kernel itself keeps exactly each batch's numpy
+top k (within the slack) and nothing else, and its numpy angle stays
+within ``ANGLE_ERROR`` of the JVM's."""
 
 import os
 import struct
@@ -56,7 +57,7 @@ PROBES = [
     (5, 10.0, -179.99),
     (6, 35.264389682754654, 45.0),  # cube corner (faces 0, 1, 2)
     (7, -50.0, -120.0),  # two candidates only
-    (8, NAN_LAT, NAN_LON),  # the NaN / null docs are its candidates
+    (8, NAN_LAT, NAN_LON),  # where the NaN / null docs would encode
 ]
 
 
@@ -118,9 +119,10 @@ def _leaf(table):
 
 
 def _all_candidates_topk(spark, probes, docs, k, level):
-    """The JVM window over every ring candidate: each probe's distinct
-    3x3 ring joined with the docs' ``s2_parent(s2_cell_id(lat, lon))``,
-    exact distance, top k."""
+    """The JVM window over every ring candidate with a distance: each
+    probe's distinct 3x3 ring joined with the docs'
+    ``s2_parent(s2_cell_id(lat, lon))``, exact distance, null and NaN
+    distances dropped, top k."""
     table = _probe_table(probes)
     values, offsets = distinct_rings(cid.parent(_leaf(table), level), True)
     owner = np.repeat(np.arange(len(probes)), np.diff(offsets))
@@ -141,6 +143,7 @@ def _all_candidates_topk(spark, probes, docs, k, level):
     )
     return (
         cand.select("probe_id", "doc_id", dist)
+        .where(F.col("dist_rad").isNotNull() & ~F.isnan("dist_rad"))
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
@@ -188,9 +191,11 @@ def test_round_equals_the_window_over_all_candidates(
         assert sorted(r[1] for r in by_probe[0]) == ties[:K]
         assert len(by_probe[7]) == 2
     if level == 18:
-        # Every non-finite coordinate encodes to the cube corner: null
-        # ranks first, NaN last.
-        assert [r[3] for r in by_probe[8]][::2] == ["None", "nan", "nan"]
+        # Every non-finite coordinate encodes to the cube corner, beside
+        # probe 8: it gets the finite docs there and no other.
+        finite = {r[0] for r in _adversarial_docs() if _finite(r[1], r[2])}
+        assert by_probe[8]
+        assert all(r[1] in finite and isinstance(r[3], int) for r in by_probe[8])
     if level == 2:
         near = [r[2:] for r in by_probe[1]][2:]
         assert near[-1][1] - near[0][1] <= 2  # ranks 3..k within 2 ulps
@@ -203,16 +208,22 @@ def test_empty_docs_or_k_0_give_no_rows(spark, docs):
     assert ring_round_topk(ring, docs, 0, 6).count() == 0
 
 
+def _finite(lat, lon):
+    return lat is not None and np.isfinite(lat) and np.isfinite(lon)
+
+
 def _numpy_candidates(table, level, lat, lon):
     """(doc, probe) ring candidates by brute membership, with their
-    numpy angles."""
+    numpy angles; a doc with a non-finite coordinate has no cell."""
     values, offsets = distinct_rings(cid.parent(_leaf(table), level), True)
     with np.errstate(invalid="ignore"):
         leaf = cid.cell_id_from_latlng_degrees(lat, lon)
         cell = cid.to_signed(cid.parent(leaf, level))
+        finite = np.isfinite(lat) & np.isfinite(lon)
         doc, probe = [], []
         for p in range(table.num_rows):
-            hit = np.flatnonzero(np.isin(cell, values[offsets[p]:offsets[p + 1]]))
+            ring = values[offsets[p]:offsets[p + 1]]
+            hit = np.flatnonzero(np.isin(cell, ring) & finite)
             doc.append(hit)
             probe.append(np.full(len(hit), p))
         doc, probe = np.concatenate(doc), np.concatenate(probe)
@@ -231,8 +242,8 @@ def _numpy_candidates(table, level, lat, lon):
 )
 def test_kernel_keeps_each_batch_top_k_and_nothing_else(spark, chunk, batch):
     """Per batch the kernel keeps exactly the pairs whose numpy angle is
-    within RANK_SLACK of the probe's k-th smallest finite angle in the
-    batch, plus the NaN ones; chunk edges do not change that set."""
+    within RANK_SLACK of the probe's k-th smallest angle in the batch;
+    chunk edges do not change that set."""
     rows = _adversarial_docs()
     lat = np.array([np.nan if r[1] is None else r[1] for r in rows])
     lon = np.array([r[2] for r in rows])
@@ -252,9 +263,9 @@ def test_kernel_keeps_each_batch_top_k_and_nothing_else(spark, chunk, batch):
         want = set()
         for p in range(len(PROBES)):
             mine = probe == p
-            finite = np.sort(d[mine][np.isfinite(d[mine])])
-            kth = finite[K - 1] if len(finite) >= K else np.inf
-            keep = mine & ~(d > kth + RANK_SLACK)
+            mine_d = np.sort(d[mine])
+            kth = mine_d[K - 1] if len(mine_d) >= K else np.inf
+            keep = mine & (d <= kth + RANK_SLACK)
             want |= {(a + int(i), p) for i in doc[keep]}
         assert got == want, (a, b)
         if a == len(lat):  # the empty batch
@@ -281,6 +292,20 @@ def test_kernel_unpickles_without_the_operators_package(spark, tmp_path):
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.stdout.strip() == "[]"
+
+
+def test_brute_force_ranks_no_doc_without_a_distance(spark):
+    """A null latitude has no distance: ascending, it would rank first
+    for every probe."""
+    probes = local_relation(
+        spark, [(0, 10.0, 20.0)], "probe_id long, lat double, lon double"
+    )
+    docs = local_relation(
+        spark, [(1, None, 20.0), (2, 10.0, 20.0), (3, float("nan"), 20.0)],
+        "doc_id long, lat double, lon double",
+    )
+    rows = knn_brute_force(probes, docs, 2).collect()
+    assert [(r.doc_id, r.rank, r.dist_rad) for r in rows] == [(2, 1, 0.0)]
 
 
 def test_numpy_angle_is_within_the_stated_bound_of_the_jvm(spark):

@@ -9,11 +9,12 @@ pushed below the projection that computes the key would evaluate the
 UDF twice).  The point-in-region join crosses into Python once, for
 the fused covering lookup and refine, with no join at all; when its
 input computes the leaf encode over the same columns, both UDFs share
-that one node.  The other covering joins (the region-table twin,
-polyline projection) explode banded prefixes into a broadcast
-equi-join and cross into Python once, for the refine; so do the
-edge-crossing joins, whose region side is broadcast.  Driver-built
-tables (coverings, region specs, edges) plan as local relations."""
+that one node.  The polyline proximity and projection joins run the
+same kind of kernel, one Python node and no join.  The region-table
+twin explodes banded prefixes into a broadcast equi-join and crosses
+into Python once, for the refine; so do the edge-crossing joins, whose
+region side is broadcast.  Driver-built tables (coverings, region
+specs, edges) plan as local relations."""
 
 import re
 
@@ -33,6 +34,7 @@ from s2_geometry_library_php_spark.operators.polyline_join import (
     _unit_vertices,
     edge_table,
     polyline_project_join,
+    polyline_proximity_join,
     polyline_region_crossing_join,
     polyline_self_crossing_join,
 )
@@ -262,10 +264,12 @@ def test_driver_built_tables_are_local_relations(spark, encoded):
         nodes = _executed_nodes(df)
         assert _names(nodes, "LocalTableScan")
         assert _names(nodes, "Scan ExistingRDD") == []
-    # The polyline covering side of the project join.
-    nodes = _executed_nodes(polyline_project_join(spark, encoded, lines, 0.2))
-    assert _names(nodes, "LocalTableScan")
-    assert _names(nodes, "Scan ExistingRDD") == []
+    # The polyline joins build no table at all: the buffered coverings
+    # ride in the kernel's closure.
+    for join in (polyline_proximity_join, polyline_project_join):
+        nodes = _executed_nodes(join(spark, encoded, lines, 0.2))
+        assert _names(nodes, "LocalTableScan") == []
+        assert _names(nodes, "Scan ExistingRDD") == []
 
 
 def test_region_table_join_covers_in_one_map_and_refines_once(spark, encoded):
@@ -279,12 +283,19 @@ def test_region_table_join_covers_in_one_map_and_refines_once(spark, encoded):
 
 
 def test_polyline_project_join_projects_once(spark, encoded):
+    """Both polyline joins cross into Python once, for the covering
+    lookup and the refine (the proximity join) or the projection, with
+    no join of either kind and no filter that re-evaluates the UDF."""
     lines = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]}]
-    nodes = _executed_nodes(polyline_project_join(spark, encoded, lines, 0.2))
-    python = _python_nodes(nodes)
-    assert len(python) == 1 and python[0].startswith("ArrowEvalPython")
-    assert _udf_filters_under_python(nodes) == []
-    _assert_banded_prefix_join(nodes)
+    joins = ((polyline_proximity_join, "hits("), (polyline_project_join, "project("))
+    for join, udf in joins:
+        nodes = _executed_nodes(join(spark, encoded, lines, 0.2))
+        python = _python_nodes(nodes)
+        assert len(python) == 1 and python[0].startswith("ArrowEvalPython [" + udf)
+        assert _names(nodes, "BroadcastHashJoin") == []
+        assert _names(nodes, "SortMergeJoin") == []
+        assert _names(nodes, "Scan ExistingRDD") == []
+        assert _udf_filters_under_python(nodes) == []
 
 
 def test_crossing_joins_broadcast_the_region_side_and_refine_once(spark):

@@ -4,9 +4,15 @@ On adversarial points (the poles, lon = +-180, points inside several
 overlapping fixtures, leaves at and just outside the range ends of
 covering cells) it agrees with brute-force containment and with the
 region-table join, one row per containing region; its answer does not
-depend on how the rows are batched; and the bbox prefilter it runs
-behind is built in the same number of py4j calls for any region count."""
+depend on how the rows are batched; a worker unpickles it, and the
+polyline kernels built on the same lookup, without importing any
+operator module; and the bbox prefilter it runs behind is built in the
+same number of py4j calls for any region count."""
 
+import os
+import pickle
+import subprocess
+import sys
 from collections import Counter
 
 import numpy as np
@@ -14,9 +20,14 @@ import py4j.clientserver
 import pytest
 
 from s2_geometry_library_php_spark.functions import s2_cell_id
+from s2_geometry_library_php_spark.operators.polyline_join import (
+    line_probe,
+    polyline_projections,
+)
 from s2_geometry_library_php_spark.operators.spatial_join import (
     bbox_prefilter_expr,
     compute_coverings,
+    point_hits,
     region_hits,
     regions_to_df,
     spatial_join,
@@ -116,6 +127,42 @@ def test_region_hits_do_not_depend_on_batching(adversarial):
     assert list(_kernel(regions)(lat[:0], lon[:0])) == []
     nan = _kernel(regions)(np.array([np.nan, 40.7]), np.array([-74.0, np.inf]))
     assert [list(h) for h in nan] == [[], []]
+
+
+def test_workers_unpickle_the_kernels_without_operator_modules(adversarial, tmp_path):
+    """The flagship's ``hits`` kernel and the polyline kernels hold
+    numpy, pandas, pyarrow and s2core alone: a fresh interpreter loads
+    and runs them with no ``operators`` module imported (a module-level
+    helper from ``operators`` in a closure would import all of them)."""
+    from pyspark import cloudpickle
+
+    regions, lat, lon = adversarial
+    lines = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]}]
+    kernels = [
+        _kernel(regions),
+        point_hits(line_probe(lines, 0.2)),
+        polyline_projections(lines, 0.2),
+    ]
+    path = tmp_path / "kernels.pkl"
+    path.write_bytes(cloudpickle.dumps((kernels, lat, lon)))
+    code = (
+        "import pickle, sys\n"
+        "kernels, lat, lon = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "out = [k(lat, lon) for k in kernels]\n"
+        "pickle.dump(out, open(sys.argv[1] + '.out', 'wb'))\n"
+        "print(sorted(m for m in sys.modules if m.startswith("
+        "'s2_geometry_library_php_spark.operators')))"
+    )
+    run = subprocess.run(
+        [sys.executable, "-c", code, str(path)],
+        capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    assert run.stdout.strip() == "[]"
+    hits, near, projected = pickle.loads((tmp_path / "kernels.pkl.out").read_bytes())
+    assert [list(h) for h in hits] == _brute_hits(regions, lat, lon)
+    assert sum(len(h) for h in near) > 0
+    assert projected.equals(kernels[2](lat, lon))
 
 
 def test_spatial_join_matches_brute_force_and_region_table(spark, adversarial):

@@ -5,9 +5,9 @@ and cited in README:
 * flagship spatial join: scan -> bbox prefilter -> ONE ArrowEvalPython
   (the docs encode and the fused covering lookup + refine) ->
   explode_outer; no join and no exchange;
-* polyline project join: a banded-prefix BroadcastHashJoin against
-  the driver-built covering (a LocalTableScan) with a single
-  ArrowEvalPython (projection + distance refine);
+* polyline project join: the flagship's shape with the buffered
+  polyline coverings in the closure of ONE ArrowEvalPython (covering
+  lookup + projection, cut to the distance) -> explode_outer; no join;
 * kNN ring round: ONE ArrowEvalPython (the ring kernel: encode, ring
   lookup and batch-local top-k) -> explode_outer of the survivors ->
   broadcast probe join; the window's sorts see only the survivors;
@@ -99,10 +99,11 @@ def main() -> None:
 
     plans.append(
         (
-            "polyline project join (buffered edge coverings on the same "
-            "banded-prefix BroadcastHashJoin; one ArrowEvalPython projects "
-            "the candidates and its distance is the proximity refine, the "
-            "docs encode is the only other Python node)",
+            "polyline project join (buffered edge coverings in the closure "
+            "of one ArrowEvalPython, which looks the docs up and projects "
+            "the candidates, its distance the proximity refine; "
+            "explode_outer, no join; the docs encode is the only other "
+            "Python node)",
             polyline_project_join(
                 spark,
                 docs.select("doc_id", "lat", "lon", "cell_id"),
