@@ -1240,10 +1240,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def q_spatial_join_distributed(spark, sf):
-        """Fully-distributed region path: coverings computed in
-        executors (mapInPandas over the region table), refine from
-        per-row geometry — for region sets beyond driver memory.
-        Same independent brute-force oracle as spatial_join."""
+        """Region-table path: coverings computed in executors
+        (mapInPandas over the region table), collected with the region
+        specs into spatial_join's covering lookup and refine.  Same
+        independent brute-force oracle as spatial_join."""
         from s2_geometry_library_php_spark.operators.spatial_join import (
             regions_to_df,
             spatial_join_region_table,

@@ -29,12 +29,13 @@ Steps 2 and 3 are ``s2core.probe.CoveringProbe``; the polyline
 proximity join runs it with the same UDF shell (:func:`point_hits`,
 :func:`probe_join`) over buffered polyline coverings.
 
-The distributed twin :func:`spatial_join_region_table` keeps a
-**broadcast equi-join on banded prefixes**: each covering cell at
-level L matches probes via ``s2_parent(leaf_id, L) = cell_id``,
-because its coverings are computed in executors, where no driver
-closure can hold them.  It shares :func:`covering_rows` (cover one
-region) and ``s2core.probe.refine`` with the driver path.
+The region-table twin :func:`spatial_join_region_table` runs the same
+core over a region dimension table: its coverings are computed in
+executors (:func:`build_covering_table_distributed`), then the covering
+rows and the region specs are each collected once as Arrow and feed the
+same prefilter and kernel.  Each entry point builds every region once
+(:func:`build_regions`); the prefilter bounds and the kernel's shapes
+both come from that map.
 
 Driver-side coverings are memoized in process and on disk under
 ``$TMPDIR/s2spark_covering_cache``, keyed on the region specs, the
@@ -73,13 +74,11 @@ from pyspark.sql.types import (
 )
 
 from .. import s2core
-from ..functions.sql_bitops import s2_parent
 from ..plans.session import local_relation
 from ..s2core import cellid as cid
 from ..s2core.cell import Cell
 from ..s2core.coverer import RegionCoverer, normalize_cell_union
 from ..s2core.probe import CoveringProbe
-from ..s2core.probe import refine as refine_pairs
 from ..s2core.region import Region, region_from_params
 
 COVERING_SCHEMA = StructType(
@@ -93,9 +92,9 @@ COVERING_SCHEMA = StructType(
 
 
 # Banded level grid for the join coverings: every covering cell sits
-# at one of these levels, so the probe side only materializes 4 prefix
-# keys per row (the "banded-prefix equi-join" of SURVEY.md §2.7)
-# instead of one per arbitrary level.  The coverer's own
+# at one of these levels, so the in-batch lookup binary-searches each
+# point's parent at 4 levels (SURVEY.md §2.7) instead of one per
+# arbitrary level.  The coverer's own
 # min_level/level_mod machinery (S2RegionCoverer.php:107-146,
 # denormalize S2CellUnion.php:111-135) produces grid-conformant
 # coverings natively: min 4, mod 3 -> levels {4, 7, 10, 13}.
@@ -273,23 +272,40 @@ def build_covering_table(
     return local_relation(spark, compute_coverings(regions, **kwargs), COVERING_SCHEMA)
 
 
+def build_regions(specs) -> dict[int, Region]:
+    """region_id -> Region of region specs (FIXTURES.md §2 encoding:
+    dicts, or region-table rows as dicts), each built once, validated."""
+    return {
+        int(r["region_id"]): region_from_params(
+            r["kind"], r["params"], r.get("loop_offsets")
+        )
+        for r in specs
+    }
+
+
 def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
-    """Cheap OR-of-rect-bounds prefilter — the reference's own first
-    optimization (every region op starts with a rect/cap bound check,
-    S2Loop.php:382-389, S2Cap.php:176-180), lifted to a whole-stage-
-    codegen scalar predicate evaluated BEFORE the Python crossing.
-    Probes outside every region's lat/lng bound never reach Python.
-    Conservative: bounds widened by 1e-9 degrees against
-    radian->degree rounding.  The longitude compare mirrors the refine
-    kernel's lng==-pi -> +pi remap (a doc at exactly lon=-180 must not
-    be dropped by the prefilter when a region's interval ends at
-    +180).
+    """:func:`rect_prefilter_expr` of region specs."""
+    return rect_prefilter_expr(build_regions(regions).values(), lat_col, lon_col)
+
+
+def rect_prefilter_expr(shapes, lat_col: str, lon_col: str):
+    """Cheap OR-of-rect-bounds prefilter over built regions — the
+    reference's own first optimization (every region op starts with a
+    rect/cap bound check, S2Loop.php:382-389, S2Cap.php:176-180),
+    lifted to a whole-stage-codegen scalar predicate evaluated BEFORE
+    the Python crossing.  Probes outside every region's lat/lng bound
+    never reach Python.  Conservative: bounds widened by 1e-9 degrees
+    against radian->degree rounding.  The longitude compare mirrors the
+    refine kernel's lng==-pi -> +pi remap (a doc at exactly lon=-180
+    must not be dropped by the prefilter when a region's interval ends
+    at +180).
 
     The predicate is built as one SQL string and parsed in one
     ``F.expr`` call: composing it from Column operators costs a py4j
     round trip per operator (over 2,000 for a dozen regions), the
     string costs the same few calls for any region count.  Doubles are
-    written as ``repr(x) + "D"`` literals, which round-trip exactly."""
+    written as ``repr(x) + "D"`` literals, which round-trip exactly.
+    No regions give ``FALSE``."""
     import math
 
     def col(name: str) -> str:
@@ -305,10 +321,7 @@ def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
     # remapped to +pi by the S1Interval convention)
     lon = f"(CASE WHEN {col(lon_col)} = -180.0D THEN 180.0D ELSE {col(lon_col)} END)"
     terms = []
-    for spec in regions:
-        reg = region_from_params(
-            spec["kind"], spec["params"], spec.get("loop_offsets")
-        )
+    for reg in shapes:
         bound = reg.get_rect_bound()
         lat_lo = lit(math.degrees(bound.lat.lo) - eps)
         lat_hi = lit(math.degrees(bound.lat.hi) + eps)
@@ -321,22 +334,17 @@ def bbox_prefilter_expr(regions: list[dict], lat_col: str, lon_col: str):
             else:
                 t += f" AND {lon} >= {lng_lo} AND {lon} <= {lng_hi}"
         terms.append(f"({t})")
-    return F.expr(" OR ".join(terms))
+    return F.expr(" OR ".join(terms) or "FALSE")
 
 
-def region_hits(regions: list[dict], cov_rows: list[tuple]):
+def region_hits(shapes: dict[int, Region], cov_rows):
     """The point-in-region kernel of :func:`spatial_join`:
-    :func:`point_hits` over the covering rows
-    (:func:`compute_coverings`) and the regions, built on the driver
-    (the closure ships them built: a worker does not re-validate a
-    loop per task)."""
+    :func:`point_hits` over covering rows (``COVERING_SCHEMA`` order:
+    region_id, cov_cell, cov_level, is_interior; a list of tuples or an
+    (n, 4) int64 array) and the built regions (:func:`build_regions`;
+    the closure ships them built: a worker does not re-validate a loop
+    per task)."""
     cov = np.array(cov_rows, dtype=np.int64).reshape(-1, 4)
-    shapes = {
-        int(r["region_id"]): region_from_params(
-            r["kind"], r["params"], r.get("loop_offsets")
-        )
-        for r in regions
-    }
     return point_hits(
         CoveringProbe(
             cov[:, 0], cid.from_signed(cov[:, 1]), cov[:, 3].astype(bool), shapes
@@ -397,15 +405,24 @@ def spatial_join(
     Returns ``docs`` columns + ``region_id``: one row per doc and
     containing region.  ``docs`` needs only the ``lat_col``/``lon_col``
     degree columns; the join encodes the leaf inside its one Python
-    crossing (:func:`region_hits`).  Docs outside every region's rect
-    bound are dropped first (``bbox_prefilter_expr``); the prefilter
-    is conservative, so it never changes the output.  When ``docs``
-    computes its own ``s2_cell_id`` over the same columns, Catalyst
-    evaluates both UDFs in one ArrowEvalPython node.
+    crossing (:func:`region_hits`).  A doc with a null, NaN or infinite
+    coordinate is in no region.  Docs outside every region's rect
+    bound are dropped first (:func:`rect_prefilter_expr`); the
+    prefilter is conservative, so it never changes the output.  When
+    ``docs`` computes its own ``s2_cell_id`` over the same columns,
+    Catalyst evaluates both UDFs in one ArrowEvalPython node.
     """
-    kernel = region_hits(regions, compute_coverings(regions, max_cells=max_cells))
-    prefiltered = docs.where(bbox_prefilter_expr(regions, lat_col, lon_col))
-    return probe_join(prefiltered, kernel, lat_col, lon_col, "region_id")
+    cov_rows = compute_coverings(regions, max_cells=max_cells)
+    return _point_join(docs, build_regions(regions), cov_rows, lat_col, lon_col)
+
+
+def _point_join(docs, shapes, cov_rows, lat_col, lon_col) -> DataFrame:
+    """The join core: rect prefilter, then :func:`region_hits` in one
+    :func:`probe_join` crossing."""
+    prefiltered = docs.where(rect_prefilter_expr(shapes.values(), lat_col, lon_col))
+    return probe_join(
+        prefiltered, region_hits(shapes, cov_rows), lat_col, lon_col, "region_id"
+    )
 
 
 # --- distributed region path (large region sets, SURVEY.md §3.2) ---------------
@@ -430,14 +447,6 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
     return local_relation(spark, rows, REGION_TABLE_SCHEMA)
 
 
-def _region_from_row(kind, params, loop_offsets) -> Region:
-    return region_from_params(
-        kind,
-        [float(x) for x in params],
-        None if loop_offsets is None else [int(x) for x in loop_offsets],
-    )
-
-
 def build_covering_table_distributed(
     regions_df: DataFrame,
     max_cells: int = 8,
@@ -447,17 +456,17 @@ def build_covering_table_distributed(
 ) -> DataFrame:
     """Distributed twin of :func:`build_covering_table`: the coverer
     kernel runs INSIDE executors via mapInPandas over the region
-    dimension table, so a region set of any size (the driver-side path
-    assumes O(10^2..10^6) regions fit on the driver) covers in
-    parallel.  Output schema matches COVERING_SCHEMA."""
+    dimension table, so a large region set covers in parallel.  Output
+    schema matches COVERING_SCHEMA."""
 
     def gen(batches):
         for pdf in batches:
             rows = []
             for row in pdf.itertuples(index=False):
+                offsets = None if row.loop_offsets is None else list(row.loop_offsets)
                 rows.extend(
                     covering_rows(
-                        _region_from_row(row.kind, row.params, row.loop_offsets),
+                        region_from_params(row.kind, list(row.params), offsets),
                         int(row.region_id),
                         max_cells, min_level, max_level, level_mod,
                     )
@@ -467,79 +476,23 @@ def build_covering_table_distributed(
     return regions_df.mapInPandas(gen, COVERING_SCHEMA)
 
 
-def _refine_udf_from_table():
-    """Refine UDF for the distributed-region path: region geometry
-    arrives per-row (joined from the region table) instead of via a
-    driver closure, so the region set size is unbounded.  Regions are
-    rebuilt from their first boundary row in a batch and memoized per
-    worker."""
-    cache: dict[int, Region] = {}
-
-    @F.pandas_udf(BooleanType())
-    def refine(
-        lat: pd.Series,
-        lon: pd.Series,
-        region_id: pd.Series,
-        is_interior: pd.Series,
-        kind: pd.Series,
-        params: pd.Series,
-        loop_offsets: pd.Series,
-    ) -> pd.Series:
-        rid, interior = region_id.to_numpy(np.int64), is_interior.to_numpy(bool)
-        todo = np.flatnonzero(~interior)
-        for r, i in zip(*np.unique(rid[todo], return_index=True)):
-            if int(r) not in cache:
-                i = todo[i]
-                cache[int(r)] = _region_from_row(
-                    kind.iloc[i], params.iloc[i], loop_offsets.iloc[i]
-                )
-        return pd.Series(
-            refine_pairs(
-                lat.to_numpy(np.float64), lon.to_numpy(np.float64), rid, interior, cache
-            )
-        )
-
-    return refine
-
-
 def spatial_join_region_table(
     spark: SparkSession,
     docs: DataFrame,
     regions_df: DataFrame,
     lat_col: str = "lat",
     lon_col: str = "lon",
-    leaf_col: str = "cell_id",
     max_cells: int = 8,
-    broadcast_covering: bool = True,
 ) -> DataFrame:
-    """Fully-distributed point-in-region join over a region DIMENSION
-    TABLE (schema REGION_TABLE_SCHEMA): coverings computed in
-    executors, candidate equi-join on banded prefixes, refine with
-    per-row region geometry.  With ``broadcast_covering`` the covering
-    and region tables are broadcast (the common case); otherwise both
-    joins fall back to shuffle joins and the path scales to region
-    sets far beyond driver memory.
-
-    Candidates: one prefix key per covering level (a narrow explode).
-    One equi-key suffices, since a cell id's lowest set bit encodes its
-    level (S2CellId.php:211-243), and disjoint coverings need no dedup."""
-    cov = build_covering_table_distributed(regions_df, max_cells=max_cells).drop(
-        "cov_level"
+    """:func:`spatial_join` over a region DIMENSION TABLE (schema
+    REGION_TABLE_SCHEMA), with its coverings computed in executors
+    (:func:`build_covering_table_distributed`).  The covering rows and
+    the region specs are each collected once as Arrow; the join is then
+    :func:`spatial_join`'s: rect prefilter and one Python crossing for
+    the covering lookup and refine, with no join."""
+    table = build_covering_table_distributed(regions_df, max_cells=max_cells).toArrow()
+    cov_rows = np.column_stack(
+        [table.column(c).to_numpy().astype(np.int64) for c in COVERING_SCHEMA.fieldNames()]
     )
-    reg_side = regions_df
-    if broadcast_covering:
-        cov, reg_side = F.broadcast(cov), F.broadcast(reg_side)
-    prefixes = F.array(*[s2_parent(F.col(leaf_col), lvl) for lvl in JOIN_LEVEL_GRID])
-    joined = (
-        docs.withColumn("_prefix", F.explode(prefixes))
-        .join(cov, F.col("_prefix") == F.col("cov_cell"), "inner")
-        .join(reg_side, "region_id", "inner")
-    )
-    refine = _refine_udf_from_table()
-    return joined.where(
-        refine(
-            F.col(lat_col), F.col(lon_col), F.col("region_id"),
-            F.col("is_interior"), F.col("kind"), F.col("params"),
-            F.col("loop_offsets"),
-        )
-    ).select(*docs.columns, "region_id")
+    shapes = build_regions(regions_df.toArrow().to_pylist())
+    return _point_join(docs, shapes, cov_rows, lat_col, lon_col)

@@ -1,9 +1,9 @@
 """Ad-hoc SQL range-predicate rewrite: ``leaf BETWEEN cell_min AND
 cell_max`` θ-joins become banded-prefix hash equi-joins.
 
-The operator API (``operators.spatial_join``) already emits the
-equi-join form directly, but a SQL user writing the natural range
-predicate against a covering table gets a BroadcastNestedLoopJoin —
+The operator API (``operators.spatial_join``) looks coverings up
+inside the scan and needs no join, but a SQL user writing the natural
+range predicate against a covering table gets a BroadcastNestedLoopJoin —
 every probe row tested against every range (the exact shape the
 reference's contiguous-range trick exists to avoid,
 S2CellId.php:293-324, S2EdgeIndex.php:385-420).  SURVEY §4.2 marks

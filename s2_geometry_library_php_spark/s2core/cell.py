@@ -349,11 +349,11 @@ class LatLngRect:
         )
         ab = geom.robust_cross_prod(a, b)
         direction = np.cross(ab, np.array([0.0, 0.0, 1.0]))
-        da = float(np.dot(direction, a))
-        db = float(np.dot(direction, b))
+        da = geom.dot3(direction, a)
+        db = geom.dot3(direction, b)
         if da * db >= 0:
             return r  # extremum at a vertex
-        abs_lat = math.acos(abs(float(ab[2]) / float(np.linalg.norm(ab))))
+        abs_lat = math.acos(abs(float(ab[2]) / float(geom.norm(ab))))
         if da < 0:
             return LatLngRect(R1Interval(r.lat.lo, abs_lat), r.lng)
         return LatLngRect(R1Interval(-abs_lat, r.lat.hi), r.lng)
@@ -566,7 +566,7 @@ class Cap:
 
     def interior_contains_point(self, p: np.ndarray) -> bool:
         d = self.axis - p
-        return self.is_full() or float(np.dot(d, d)) < 2 * self.height
+        return self.is_full() or geom.dot3(d, d) < 2 * self.height
 
     def add_point(self, p) -> "Cap":
         if self.is_empty():
@@ -928,9 +928,7 @@ class Cell:
         if self.level < 2:
             return self.average_area()
         v = self.get_vertices()
-        flat = 0.5 * float(
-            np.linalg.norm(np.cross(v[2] - v[0], v[3] - v[1]))
-        )
+        flat = 0.5 * float(geom.norm(np.cross(v[2] - v[0], v[3] - v[1])))
         return flat * 2.0 / (1.0 + math.sqrt(1.0 - min(flat / math.pi, 1.0)))
 
 

@@ -498,7 +498,7 @@ def loop_area_centroid(vertices: np.ndarray) -> tuple[float, np.ndarray]:
     origin = vertices[0].copy()
     axis = (int(largest_abs_component(origin[None, :])[0]) + 1) % 3
     origin[axis] += math.e * 1e-10
-    origin = origin / np.linalg.norm(origin)
+    origin = origin / norm(origin)
     area_sum = 0.0
     centroid_sum = np.zeros(3)
     for i in range(m):
@@ -555,10 +555,9 @@ def chain_rect_bound(vertices: np.ndarray) -> tuple[float, float, float, float]:
         a = vertices[e]
         b = vertices[(e + 1) % m]
         n = robust_cross_prod(a, b)
-        nn = np.linalg.norm(n)
+        nn = norm(n)
         if nn == 0:
             continue
-        max_lat = float(np.arccos(min(1.0, abs(n[2]) / nn)))
         # The latitude extremum point on the great circle: gradient of
         # z constrained to the circle; it's attained at unit vector u
         # with u.z extremal: u = normalize(n x (n x z_axis))-ish.  Use
@@ -568,7 +567,7 @@ def chain_rect_bound(vertices: np.ndarray) -> tuple[float, float, float, float]:
         # extremum longitude point m = n x (0,0,1) x n.
         z_axis = np.array([0.0, 0.0, 1.0])
         u = np.cross(n, np.cross(z_axis, n))
-        un = np.linalg.norm(u)
+        un = norm(u)
         if un == 0:
             continue
         u = u / un  # northernmost point of the great circle

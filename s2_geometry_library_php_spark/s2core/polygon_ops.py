@@ -49,8 +49,8 @@ def edge_intersection(
     n_a = geom.robust_cross_prod(a0, a1)
     n_b = geom.robust_cross_prod(b0, b1)
     x = geom.robust_cross_prod(n_a, n_b)
-    x = x / np.linalg.norm(x)
-    if float(np.dot(x, a0 + a1 + b0 + b1)) < 0.0:
+    x = x / geom.norm(x)
+    if geom.dot3(x, a0 + a1 + b0 + b1) < 0.0:
         x = -x
     return x
 
@@ -119,7 +119,7 @@ def _interiors_same_side(
             float(geom.edge_distance_radians(mid[None, :], w0, w1)[0])
             <= ON_BOUNDARY_EPS
         ):
-            d_sign = 1.0 if float(np.dot(w1 - w0, v1 - v0)) >= 0.0 else -1.0
+            d_sign = 1.0 if geom.dot3(w1 - w0, v1 - v0) >= 0.0 else -1.0
             s_a = -1.0 if a_odd else 1.0
             s_b = (-1.0 if bodd else 1.0) * d_sign
             return s_a == s_b
@@ -194,7 +194,7 @@ def clip_boundary(
         flip = reverse ^ odd
         for i in range(len(chain) - 1):
             mid = chain[i] + chain[i + 1]
-            mid = mid / np.linalg.norm(mid)
+            mid = mid / geom.norm(mid)
             inside = bool(b.contains_points(mid[None, :])[0])
             if (
                 boundary_inside is not None
@@ -237,7 +237,7 @@ def snap_pieces(
     def rep(p: np.ndarray) -> np.ndarray:
         for r in reps:
             d = p - r
-            if float(np.dot(d, d)) <= snap_radius * snap_radius:
+            if geom.dot3(d, d) <= snap_radius * snap_radius:
                 return r
         reps.append(p)
         return p

@@ -242,6 +242,31 @@ def test_edge_distance_bits_do_not_depend_on_alignment_or_batch(monkeypatch):
         assert np.array_equal(runs[0], other)
 
 
+def test_chain_rect_bound_bits_do_not_depend_on_alignment_or_batch(monkeypatch):
+    """The loop rect bound the join prefilter reads, chain by chain with
+    the vertices, the edge normals and the latitude-extremum vectors at
+    0/8/16/24-byte offsets, and for each chain read as a view of one
+    batch of chains, gives the same bits (a BLAS ``np.linalg.norm`` of
+    the extremum vector does not)."""
+    rng = np.random.default_rng(17)
+    chains = []
+    for _ in range(700):
+        center = geom.normalize(rng.normal(size=3))
+        m = int(rng.integers(3, 9))
+        chains.append(geom.normalize(center + rng.normal(scale=0.3, size=(m, 3))))
+    batch = np.concatenate(chains)
+    starts = np.cumsum([0] + [len(c) for c in chains])
+    want = [geom.chain_rect_bound(batch[starts[i] : starts[i + 1]]) for i in range(len(chains))]
+    cross_prod, cross = geom.robust_cross_prod, np.cross
+    for off in (0, 8, 16, 24):
+        monkeypatch.setattr(
+            geom, "robust_cross_prod", lambda p, q, off=off: _at_offset(cross_prod(p, q), off)
+        )
+        monkeypatch.setattr(np, "cross", lambda p, q, off=off: _at_offset(cross(p, q), off))
+        got = [geom.chain_rect_bound(_at_offset(c, off)) for c in chains]
+        assert got == want, off
+
+
 def test_ccw_determinants_near_zero_do_not_depend_on_alignment(monkeypatch):
     """Points a few ulps off the great circle through a and b put
     ``robust_ccw``'s determinant inside the uncertainty band; every

@@ -9,12 +9,12 @@ pushed below the projection that computes the key would evaluate the
 UDF twice).  The point-in-region join crosses into Python once, for
 the fused covering lookup and refine, with no join at all; when its
 input computes the leaf encode over the same columns, both UDFs share
-that one node.  The polyline proximity and projection joins run the
-same kind of kernel, one Python node and no join.  The region-table
-twin explodes banded prefixes into a broadcast equi-join and crosses
-into Python once, for the refine; so do the edge-crossing joins, whose
-region side is broadcast.  Driver-built tables (coverings, region
-specs, edges) plan as local relations."""
+that one node; so does the region-table twin, whose executor-built
+coverings are collected before the join is planned.  The polyline
+proximity and projection joins run the same kind of kernel, one Python
+node and no join.  The edge-crossing joins broadcast their region side
+and cross into Python once, for the refine.  Driver-built tables
+(coverings, region specs, edges) plan as local relations."""
 
 import re
 
@@ -143,13 +143,6 @@ def encoded(spark, points, tmp_path_factory):
     return spark.read.parquet(path)
 
 
-def _assert_banded_prefix_join(nodes):
-    generates = [i for i, (_, t) in enumerate(nodes) if t.startswith("Generate")]
-    assert len(generates) == 1
-    assert any(t.startswith("BroadcastHashJoin") for t in _ancestors(nodes, generates[0]))
-    assert _names(nodes, "SortMergeJoin") == []
-
-
 def _descendants(nodes, i):
     """Node texts in the subtree under node ``i``."""
     out = []
@@ -272,14 +265,22 @@ def test_driver_built_tables_are_local_relations(spark, encoded):
         assert _names(nodes, "Scan ExistingRDD") == []
 
 
-def test_region_table_join_covers_in_one_map_and_refines_once(spark, encoded):
+def test_region_table_join_shares_the_encodes_python_node(spark, points):
+    """The region-table join plans as ``spatial_join`` does: its
+    coverings are built in executors and collected before planning, so
+    with an unwritten encode the plan holds one ArrowEvalPython (the
+    encode and the kernel), no join and no covering map."""
+    docs = points.withColumn("cell_id", s2_cell_id("lat", "lon"))
     nodes = _executed_nodes(
-        spatial_join_region_table(spark, encoded, regions_to_df(spark, region_fixtures()))
+        spatial_join_region_table(spark, docs, regions_to_df(spark, region_fixtures()))
     )
-    assert len(_names(nodes, "MapInPandas")) == 1
-    assert len(_names(nodes, "ArrowEvalPython")) == 1
-    assert len(_python_nodes(nodes)) == 2
-    _assert_banded_prefix_join(nodes)
+    python = _python_nodes(nodes)
+    assert len(python) == 1 and python[0].startswith("ArrowEvalPython"), python
+    assert "s2_cell_id(" in python[0] and "hits(" in python[0]
+    assert _names(nodes, "BroadcastHashJoin") == []
+    assert _names(nodes, "SortMergeJoin") == []
+    assert _names(nodes, "MapInPandas") == []
+    assert _udf_filters_under_python(nodes) == []
 
 
 def test_polyline_project_join_projects_once(spark, encoded):

@@ -2,13 +2,15 @@
 (``region_hits``: covering lookup and refine in one Python crossing).
 On adversarial points (the poles, lon = +-180, points inside several
 overlapping fixtures, leaves at and just outside the range ends of
-covering cells) it agrees with brute-force containment and with the
-region-table join, one row per containing region; its answer does not
-depend on how the rows are batched; a worker unpickles it, and the
-polyline kernels built on the same lookup, without importing any
-operator module; and the bbox prefilter it runs behind is built in the
-same number of py4j calls for any region count."""
+covering cells, null, NaN and infinite coordinates) it agrees with
+brute-force containment and with the region-table join, one row per
+containing region; its answer does not depend on how the rows are
+batched; a worker unpickles it, and the polyline kernels built on the
+same lookup, without importing any operator module; the bbox prefilter
+it runs behind is built in the same number of py4j calls for any
+region count; and a join builds each region once."""
 
+import importlib
 import os
 import pickle
 import subprocess
@@ -26,6 +28,7 @@ from s2_geometry_library_php_spark.operators.polyline_join import (
 )
 from s2_geometry_library_php_spark.operators.spatial_join import (
     bbox_prefilter_expr,
+    build_regions,
     compute_coverings,
     point_hits,
     region_hits,
@@ -91,16 +94,23 @@ def adversarial():
 
 
 def _brute_hits(regions, lat, lon):
-    pts = geom.latlng_to_xyz(np.radians(lat), np.radians(lon))
+    """Each point's sorted containing region ids; a point with a NaN or
+    infinite coordinate (a null is NaN here) is in no region."""
+    finite = np.isfinite(lat) & np.isfinite(lon)
+    pts = geom.latlng_to_xyz(
+        np.radians(np.where(finite, lat, 0.0)), np.radians(np.where(finite, lon, 0.0))
+    )
     hits = [[] for _ in lat]
     for spec in regions:
-        for i in np.nonzero(_region(spec).contains_points(pts))[0]:
+        for i in np.nonzero(_region(spec).contains_points(pts) & finite)[0]:
             hits[i].append(int(spec["region_id"]))
     return [sorted(h) for h in hits]
 
 
 def _kernel(regions):
-    return region_hits(regions, compute_coverings(regions, max_cells=MAX_CELLS))
+    return region_hits(
+        build_regions(regions), compute_coverings(regions, max_cells=MAX_CELLS)
+    )
 
 
 def test_region_hits_matches_brute_force(adversarial):
@@ -166,11 +176,37 @@ def test_workers_unpickle_the_kernels_without_operator_modules(adversarial, tmp_
 
 
 def test_spatial_join_matches_brute_force_and_region_table(spark, adversarial):
+    """Both joins agree with brute force, one row per containing region.
+    Docs with a null, NaN or infinite coordinate are in no region, also
+    under a cap around the leaf the encode gives them (the cube corner
+    leaf 0x4000000000000001 at 35.26N 45E), whose covering cells are
+    interior: a lookup by that leaf alone would match them unrefined."""
     regions, lat, lon = adversarial
-    docs = spark.createDataFrame(
-        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))],
-        "doc_id long, lat double, lon double",
+    corner = {"region_id": 100, "kind": "cap", "params": [35.26, 45.0, 0.1]}
+    regions = [*regions, corner]
+    c_lat, c_lon = np.degrees(
+        cid.cell_id_to_center_latlng(np.array([0x4000000000000001], dtype=np.uint64))
     )
+    inf, nan = float("inf"), float("nan")
+    odd = [
+        (nan, 45.0), (None, 45.0), (35.26, None), (nan, nan), (inf, 45.0),
+        (-inf, 45.0), (35.26, inf), (35.26, -inf), (float(c_lat[0]), float(c_lon[0])),
+    ]
+    rows = [(float(a), float(b)) for a, b in zip(lat, lon)] + odd
+    docs = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)], "doc_id long, lat double, lon double"
+    )
+
+    def as_float(v):
+        return np.array([nan if x is None else x for x in v])
+
+    expected = Counter(
+        (i, rid)
+        for i, h in enumerate(_brute_hits(regions, *map(as_float, zip(*rows))))
+        for rid in h
+    )
+    assert expected[(len(rows) - 1, 100)] == 1  # the real corner point
+    assert not any(i >= len(lat) for i, _ in expected if i != len(rows) - 1)
     fused = Counter(
         (r.doc_id, r.region_id)
         for r in spatial_join(spark, docs, regions).select("doc_id", "region_id").collect()
@@ -185,12 +221,25 @@ def test_spatial_join_matches_brute_force_and_region_table(spark, adversarial):
         .select("doc_id", "region_id")
         .collect()
     )
-    expected = Counter(
-        (i, rid) for i, h in enumerate(_brute_hits(regions, lat, lon)) for rid in h
-    )
     assert set(fused.values()) == {1}  # one row per containing region
     assert fused == expected
     assert table == expected
+
+
+def test_spatial_join_builds_each_region_once(spark, monkeypatch):
+    """With the coverings cached, one join builds each region once: the
+    prefilter bounds and the kernel's shapes share one map."""
+    module = importlib.import_module(spatial_join.__module__)
+    regions = region_fixtures()
+    compute_coverings(regions, max_cells=MAX_CELLS)
+    built = []
+    real = module.region_from_params
+    monkeypatch.setattr(
+        module, "region_from_params", lambda *a, **k: built.append(a[0]) or real(*a, **k)
+    )
+    docs = spark.range(1).selectExpr("0.0 AS lat", "0.0 AS lon")
+    spatial_join(spark, docs, regions, max_cells=MAX_CELLS)
+    assert len(built) == len(regions)
 
 
 def test_prefilter_py4j_calls_do_not_grow_with_regions(spark, monkeypatch):

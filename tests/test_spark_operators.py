@@ -586,9 +586,9 @@ def test_planned_salting_targets_hot_tiles(spark, docs):
 
 
 def test_spatial_join_region_table_matches_driver_path(spark, docs):
-    """The fully-distributed region path (coverings via mapInPandas,
-    refine from per-row geometry) must reproduce the driver-side join
-    exactly — both broadcast and shuffle-join variants."""
+    """The region-table path (coverings via mapInPandas, collected with
+    the region specs into the same kernel) must reproduce the
+    driver-side join exactly."""
     from s2_geometry_library_php_spark.operators.spatial_join import (
         regions_to_df,
         spatial_join,
@@ -603,17 +603,13 @@ def test_spatial_join_region_table_matches_driver_path(spark, docs):
         .select("doc_id", "region_id")
         .collect()
     }
-    regions_df = regions_to_df(spark, region_fixtures())
-    for bc in (True, False):
-        got = {
-            (r.doc_id, r.region_id)
-            for r in spatial_join_region_table(
-                spark, d, regions_df, broadcast_covering=bc
-            )
-            .select("doc_id", "region_id")
-            .collect()
-        }
-        assert got == expected, f"broadcast_covering={bc}"
+    got = {
+        (r.doc_id, r.region_id)
+        for r in spatial_join_region_table(spark, d, regions_to_df(spark, region_fixtures()))
+        .select("doc_id", "region_id")
+        .collect()
+    }
+    assert got == expected
 
 
 def test_stateful_running_tiles_across_microbatches(spark, docs, tmp_path):

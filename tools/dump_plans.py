@@ -5,6 +5,8 @@ and cited in README:
 * flagship spatial join: scan -> bbox prefilter -> ONE ArrowEvalPython
   (the docs encode and the fused covering lookup + refine) ->
   explode_outer; no join and no exchange;
+* region-table spatial join: the flagship's plan, its executor-built
+  coverings collected before planning;
 * polyline project join: the flagship's shape with the buffered
   polyline coverings in the closure of ONE ArrowEvalPython (covering
   lookup + projection, cut to the distance) -> explode_outer; no join;
@@ -87,6 +89,24 @@ def main() -> None:
                 spark,
                 docs.select("doc_id", "lat", "lon", "cell_id"),
                 region_fixtures(),
+            ),
+        )
+    )
+    from s2_geometry_library_php_spark.operators.spatial_join import (
+        regions_to_df,
+        spatial_join_region_table,
+    )
+
+    plans.append(
+        (
+            "region-table spatial join (coverings built in executors "
+            "and collected with the region specs before planning; then "
+            "the flagship's shape: one ArrowEvalPython shared by the "
+            "docs encode and the covering lookup + refine; no join)",
+            spatial_join_region_table(
+                spark,
+                docs.select("doc_id", "lat", "lon", "cell_id"),
+                regions_to_df(spark, region_fixtures()),
             ),
         )
     )
