@@ -80,10 +80,10 @@ def within_radius_join(
     ``(left_id, right_id, dist_rad)``.
 
     ``broadcast_right=True`` hints the exploded right side (use for a
-    dimension-sized right table); with False both sides hash-shuffle
-    on the ring cell key — the two-large-tables plan.  ``level``
-    overrides the auto-picked ring level (coarser = fewer keys, more
-    refine work)."""
+    dimension-sized right table); with False no side is hinted, so two
+    large sides hash-shuffle on the ring cell key — the
+    two-large-tables plan.  ``level`` overrides the auto-picked ring
+    level (coarser = fewer keys, more refine work)."""
     if radius_rad < 0:
         raise ValueError(f"radius must be >= 0, got {radius_rad}")
     lvl = radius_join_level(radius_rad) if level is None else int(level)
@@ -120,9 +120,15 @@ def within_radius_join(
         F.explode(s2_ring_cells_udf(F.col("_blat"), F.col("_blon"), F.lit(lvl))),
     )
     if broadcast_right:
-        rk = F.broadcast(rk)
+        joined = lk.join(F.broadcast(rk), "_cell")
+    else:
+        # The ring on the left: should Spark broadcast on its own, it
+        # builds from the one row per point.  It sizes the explode as
+        # its input, so with the ring on the right it would build its
+        # hash table from ~9 ring rows per point.
+        joined = rk.join(lk, "_cell")
     return (
-        lk.join(rk, "_cell")
+        joined
         .select(left_id, right_id, dist)
         .where(F.col("dist_rad") <= F.lit(float(radius_rad)))
     )

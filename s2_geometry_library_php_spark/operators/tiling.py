@@ -82,39 +82,35 @@ def tile_rollup(
     tile_col: str = "tile_id",
     count_col: str = "doc_count",
 ) -> DataFrame:
-    """Roll a fine tiling up to coarser levels by re-grouping on the
-    parent id — each level aggregates the checkpointed finest level
-    (small: one row per occupied tile) directly, so every union branch
-    plans exactly one exchange.  Re-aggregating the previous LAZY level
-    instead would replay every finer rollup inside each branch (1 + 2 +
-    ... + n exchanges for n levels); the sums are integer counts, so
-    rolling from the finest level gives identical rows.  Every level is
-    built from SQL text, as in :func:`tile_aggregate`.
+    """Roll a fine tiling up to coarser levels in one aggregation: each
+    tile row expands to one ``(level, tile_id)`` row per output level
+    (``from_level`` itself and its parent at each distinct level of
+    ``to_levels`` below it; others are ignored), and one
+    ``groupBy(level, tile_id)`` sums the counts.  The plan has one
+    exchange for every level, with map-side partial aggregation.  The
+    sums are integer counts, so rolling every level from the finest
+    gives the same rows as rolling level by level.  Built from SQL
+    text, as in :func:`tile_aggregate`.
 
-    Output: union over levels of (level, tile_id, tile_token,
-    doc_count)."""
-    finest = tiles.selectExpr(
-        f"{int(from_level)} AS level",
-        f"{_sql_col(tile_col)} AS tile_id",
-        f"{_sql_col(count_col)} AS doc_count",
+    Input contract: one row per fine tile (a tile aggregate); repeated
+    tile rows are summed.
+
+    Output: (level, tile_id, doc_count, tile_token) over all levels."""
+    tile = _sql_col(tile_col)
+    levels = [int(from_level)] + sorted(
+        {int(lvl) for lvl in to_levels if lvl < from_level}, reverse=True
     )
-    # Materialize the finest level once (lazy local checkpoint): the
-    # union output otherwise embeds the full upstream chain (scan +
-    # encode + aggregation) into EVERY level's branch — verified via
-    # .explain, the static plan showed 3 copies of the scan subtree.
-    finest = finest.localCheckpoint(eager=False)
-    token = f"{sql_s2_token('tile_id')} AS tile_token"
-    out = finest.selectExpr("*", token)
-    for lvl in sorted(to_levels, reverse=True):
-        if lvl >= from_level:
-            continue
-        rolled = (
-            finest.groupBy(F.expr(f"{sql_s2_parent('tile_id', lvl)} AS tile_id"))
-            .agg(F.expr("sum(doc_count) AS doc_count"))
-            .selectExpr(f"{int(lvl)} AS level", "tile_id", "doc_count", token)
-        )
-        out = out.unionByName(rolled)
-    return out
+    parents = ", ".join(
+        f"named_struct('level', {lvl}, 'tile_id', "
+        f"{tile if lvl == levels[0] else sql_s2_parent(tile, lvl)})"
+        for lvl in levels
+    )
+    return (
+        tiles.selectExpr(f"inline(array({parents}))", f"{_sql_col(count_col)} AS _n")
+        .groupBy("level", "tile_id")
+        .agg(F.expr("sum(_n) AS doc_count"))
+        .selectExpr("*", f"{sql_s2_token('tile_id')} AS tile_token")
+    )
 
 
 def rasterize_tiles(

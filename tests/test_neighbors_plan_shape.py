@@ -200,6 +200,16 @@ def test_radius_join_evaluates_each_kernel_once(spark, points):
         assert sum("s2_cell_id" in t for t in python) == 1
         assert sum("s2_ring_cells_udf" in t for t in python) == 1
         assert _udf_filters_under_python(nodes) == []
+        if not broadcast_right:
+            # Spark broadcasts the small unhinted self-join on its own;
+            # it builds from one row per point, not from the ring.
+            built = [
+                i for i, (_, t) in enumerate(nodes) if t.startswith("BroadcastExchange")
+            ]
+            assert built
+            assert not any(
+                t.startswith("Generate") for i in built for t in _descendants(nodes, i)
+            )
 
 
 def test_spatial_join_crosses_once_for_the_refine(spark, encoded):

@@ -250,6 +250,53 @@ def test_tile_rollup_conserves_counts(docs):
     assert sums == {10: n, 8: n, 4: n, 0: n}
 
 
+def _rollup_reference(tile_ids, counts, from_level, to_levels):
+    """Per-level numpy rollup: {(level, unsigned tile id): count}."""
+    out = {}
+    levels = {from_level} | {lv for lv in to_levels if lv < from_level}
+    for lv in levels:
+        keys, inverse = np.unique(cid.parent(tile_ids, lv), return_inverse=True)
+        sums = np.bincount(inverse, weights=counts).astype(np.int64)
+        out.update({(lv, int(k)): int(c) for k, c in zip(keys, sums)})
+    return out
+
+
+def test_tile_rollup_is_one_aggregation(spark):
+    """Every level comes from one expand and one aggregation: the plan
+    adds one shuffle over its local-relation input, with no union and
+    no checkpoint scan, and each level's rows equal an independent
+    per-level numpy rollup.  A repeated level appears once, levels not
+    coarser than the from level are ignored, and no coarser level gives
+    the finest level alone."""
+    from s2_geometry_library_php_spark.operators import tile_rollup
+    from s2_geometry_library_php_spark.plans import local_relation
+
+    rng = np.random.default_rng(11)
+    leaves = cid.cell_id_from_latlng_degrees(
+        np.degrees(np.arcsin(rng.uniform(-1, 1, 3000))), rng.uniform(-180, 180, 3000)
+    )
+    tile_ids = np.unique(cid.parent(leaves, 10))
+    counts = rng.integers(1, 50, len(tile_ids))
+    tiles = local_relation(
+        spark,
+        list(zip(cid.to_signed(tile_ids).tolist(), counts.tolist())),
+        "tile_id long, doc_count long",
+    )
+    for to_levels in ([8, 4, 8, 0, 4], [10, 12, 6], []):
+        roll = tile_rollup(tiles, 10, to_levels)
+        assert roll.columns == ["level", "tile_id", "doc_count", "tile_token"]
+        rows = roll.collect()
+        ids = cid.from_signed(np.array([r.tile_id for r in rows], dtype=np.int64))
+        got = {(r.level, int(i)): r.doc_count for r, i in zip(rows, ids)}
+        assert len(got) == len(rows)
+        assert got == _rollup_reference(tile_ids, counts, 10, to_levels)
+        assert [r.tile_token for r in rows] == cid.token_from_id(ids)
+        plan = roll._jdf.queryExecution().executedPlan()
+        plan = plan.executedPlan().treeString()  # the final adaptive plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "Union" not in plan and "ExistingRDD" not in plan, plan
+
+
 def test_tile_plans_are_built_from_sql_text(spark, docs, monkeypatch):
     """tile_aggregate and tile_rollup build their plans from the
     ``sql_s2_*`` text twins: the same rows as the Column-built

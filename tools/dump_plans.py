@@ -18,7 +18,8 @@ and cited in README:
   side, the self join shuffles both) and one ArrowEvalPython refine;
 * parquet scans show PushedFilters / narrow ReadSchema (column
   pruning drops text/html when not selected);
-* bitwise tile math stays inside WholeStageCodegen (no Python).
+* bitwise tile math stays inside WholeStageCodegen (no Python), and
+  a tile rollup is one expand and one aggregation around one exchange.
 
 Each section header carries the plan's Python-node count
 (ArrowEvalPython, MapIn*, FlatMapGroupsIn*): every such node is one
@@ -158,8 +159,9 @@ def main() -> None:
     )
     plans.append(
         (
-            "tile rollup 8 -> 6 -> 4 (each level rolled from the "
-            "checkpointed finest level: one exchange per level)",
+            "tile rollup 8 -> 6 -> 4 (each tile expanded to its level "
+            "parents, one partial-agg groupBy(level, tile_id): one "
+            "exchange for every level, no union, no checkpoint)",
             tile_rollup(tile_aggregate(docs, 8), 8, [6, 4]),
         )
     )
@@ -428,8 +430,9 @@ def main() -> None:
         (
             "within-radius self-join (level picked from MIN_WIDTH, "
             "right side explodes to its <=9-cell neighbor ring from one "
-            "fused encode+ring kernel, hash equi-join on the ring cell, "
-            "exact-angle refine in WholeStageCodegen; no theta-join)",
+            "fused encode+ring kernel and streams, hash equi-join on the "
+            "ring cell built from one row per point, exact-angle refine "
+            "in WholeStageCodegen; no theta-join)",
             self_radius_pairs(docs.select("doc_id", "lat", "lon"), 0.001),
         )
     )
