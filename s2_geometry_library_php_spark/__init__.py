@@ -9,7 +9,7 @@ and multi-resolution tiling — implemented as
                   of truth for both the Arrow UDFs and the driver-side
                   coverer),
 * ``functions`` — Spark Column builders (native JVM bit ops) and
-                  pandas/Arrow UDFs wrapping ``s2core``,
+                  Arrow UDFs wrapping ``s2core``,
 * ``operators`` — spatial join, kNN, tiling/rollup, dedup, similarity,
 * ``sources``   — document/region loaders over the driver test parquet,
 * ``plans``     — SparkSession factory, lineage checkpointing,

@@ -1,17 +1,20 @@
-"""Arrow-batched pandas and arrow UDFs wrapping the s2core numpy kernels.
+"""Arrow UDFs wrapping the s2core numpy kernels.
 
-These are the only JVM<->Python crossings in the engine; every kernel
-is vectorized numpy over whole Arrow batches (no per-row Python, per
-BASELINE.json input_hint).  Array-valued ring kernels are arrow UDFs
-that build their ``ListArray`` from offsets: a pandas UDF would have to
-return one Python list per row.  uint64 cell ids are reinterpreted to
-int64 at the boundary (bit pattern, never value conversion).
+These are the S2 paths' JVM<->Python crossings; every kernel is
+vectorized numpy over whole Arrow batches (no per-row Python, per
+BASELINE.json input_hint).  Every S2 UDF is an Arrow UDF that reads and
+writes raw Arrow buffers through ``s2core.arrow_io``, so a Python worker
+running only S2 kernels never imports pandas (about 40 MB of RSS per
+worker); the same eval type also lets S2 UDFs that sit together share
+one ArrowEvalPython node.  The curation layer's text, dedup,
+similarity, streaming and source UDFs stay pandas UDFs.  uint64 cell
+ids are reinterpreted to int64 at the boundary (bit pattern, never
+value conversion).  A null cell id gives a null row.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -20,13 +23,15 @@ from pyspark.sql.types import (
     LongType,
 )
 
+from ..s2core import arrow_io as aio
 from ..s2core import cellid as cid
 from ..s2core import geom
+from ..s2core.cellid import distinct_rings
 from .sql_bitops import sql_s2_token
 
 
-@F.pandas_udf(LongType())
-def s2_cell_id(lat: pd.Series, lng: pd.Series) -> pd.Series:
+@F.arrow_udf(LongType())
+def s2_cell_id(lat: pa.Array, lng: pa.Array) -> pa.Array:
     """Leaf cell id from (lat, lng) degrees (S2CellId.php:99-106 chain).
 
     Limit: a null, NaN or infinite coordinate has no leaf cell, yet it
@@ -35,52 +40,34 @@ def s2_cell_id(lat: pd.Series, lng: pd.Series) -> pd.Series:
     rows first where it matters; the engine's own lookups
     (``s2core.probe.finite_leaves``) give them no cell."""
     ids = cid.cell_id_from_latlng_degrees(
-        lat.to_numpy(np.float64), lng.to_numpy(np.float64)
+        aio.float64_values(lat), aio.float64_values(lng)
     )
-    return pd.Series(cid.to_signed(ids))
+    return aio.array(cid.to_signed(ids))
 
 
-@F.pandas_udf(DoubleType())
-def s2_cell_center_lat(cell_id: pd.Series) -> pd.Series:
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
+def _cell_ids(cell_id: pa.Array):
+    """(uint64 ids, valid mask or None) of a signed cell-id column; a
+    null reads as id 0 and is masked."""
+    return cid.from_signed(aio.int64_values(cell_id)), aio.valid_mask(cell_id)
+
+
+@F.arrow_udf(DoubleType())
+def s2_cell_center_lat(cell_id: pa.Array) -> pa.Array:
+    ids, valid = _cell_ids(cell_id)
     lat, _ = cid.cell_id_to_center_latlng(ids)
-    return pd.Series(np.degrees(lat))
+    return aio.array(np.degrees(lat), valid)
 
 
-@F.pandas_udf(DoubleType())
-def s2_cell_center_lng(cell_id: pd.Series) -> pd.Series:
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
+@F.arrow_udf(DoubleType())
+def s2_cell_center_lng(cell_id: pa.Array) -> pa.Array:
+    ids, valid = _cell_ids(cell_id)
     _, lng = cid.cell_id_to_center_latlng(ids)
-    return pd.Series(np.degrees(lng))
+    return aio.array(np.degrees(lng), valid)
 
 
-def distinct_rings(
-    ids: np.ndarray, with_center: bool
-) -> tuple[np.ndarray, np.ndarray]:
-    """Each cell's same-level 3x3 neighborhood as sorted distinct
-    signed ids, flattened: cell ``i``'s ring is
-    ``values[offsets[i]:offsets[i + 1]]``.  ``with_center`` adds the
-    cell itself (the kNN / radius-join candidate ring); without it the
-    ring is the 8-neighborhood of ``s2_all_neighbors``.  Cube-corner
-    cells have fewer distinct neighbors, which the row-wise sort +
-    adjacent-difference dedupe drops with no per-row Python."""
-    ids = np.asarray(ids, dtype=np.uint64)
-    ring = cid.to_signed(cid.all_neighbors(ids))
-    if with_center:
-        ring = np.concatenate([cid.to_signed(ids)[:, None], ring], axis=1)
-    ring.sort(axis=1)
-    keep = np.ones(ring.shape, dtype=bool)
-    np.not_equal(ring[:, 1:], ring[:, :-1], out=keep[:, 1:])
-    offsets = np.zeros(len(ring) + 1, dtype=np.int32)
-    np.cumsum(keep.sum(axis=1), out=offsets[1:])
-    return ring[keep], offsets
-
-
-def _ring_list_array(ids: np.ndarray, with_center: bool, mask=None) -> pa.Array:
+def _ring_list_array(ids: np.ndarray, with_center: bool, valid=None) -> pa.Array:
     values, offsets = distinct_rings(ids, with_center)
-    return pa.ListArray.from_arrays(
-        pa.array(offsets), pa.array(values), mask=mask
-    )
+    return aio.list_array(offsets, aio.array(values), valid)
 
 
 @F.arrow_udf(ArrayType(LongType()))
@@ -88,9 +75,8 @@ def s2_all_neighbors_udf(cell_id: pa.Array) -> pa.Array:
     """Same-level 8-ring (kNN ring expansion / union buffering): the
     sorted distinct neighbors, the cell itself excluded; null in, null
     out."""
-    ids = cid.from_signed(cell_id.fill_null(0).to_numpy())
-    mask = cell_id.is_null() if cell_id.null_count else None
-    return _ring_list_array(ids, False, mask)
+    ids, valid = _cell_ids(cell_id)
+    return _ring_list_array(ids, False, valid)
 
 
 @F.arrow_udf(ArrayType(LongType()))
@@ -101,66 +87,68 @@ def s2_ring_cells_udf(lat: pa.Array, lng: pa.Array, level: pa.Array) -> pa.Array
     ``level`` is a constant column."""
     lv = int(level[0].as_py()) if len(level) else 0
     leaf = cid.cell_id_from_latlng_degrees(
-        lat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
-        lng.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
+        aio.float64_values(lat), aio.float64_values(lng)
     )
     return _ring_list_array(cid.parent(leaf, lv), True)
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def s2_edge_neighbors_udf(cell_id: pd.Series) -> pd.Series:
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
-    if len(ids) == 0:
-        return pd.Series([], dtype=object)
-    ring = cid.to_signed(cid.edge_neighbors(ids))
-    return pd.Series([row.tolist() for row in ring])
+def _fixed_lists(rows: np.ndarray, valid) -> pa.Array:
+    """A list array of the rows of a 2-D int64 or float64 array."""
+    n, width = rows.shape
+    offsets = np.arange(0, n * width + 1, width)
+    return aio.list_array(offsets, aio.array(rows.reshape(-1)), valid)
 
 
-@F.pandas_udf(ArrayType(DoubleType()))
-def s2_cell_vertices_udf(cell_id: pd.Series) -> pd.Series:
+@F.arrow_udf(ArrayType(LongType()))
+def s2_edge_neighbors_udf(cell_id: pa.Array) -> pa.Array:
+    ids, valid = _cell_ids(cell_id)
+    return _fixed_lists(cid.to_signed(cid.edge_neighbors(ids)), valid)
+
+
+@F.arrow_udf(ArrayType(DoubleType()))
+def s2_cell_vertices_udf(cell_id: pa.Array) -> pa.Array:
     """Tile polygon: [lat0,lng0,...,lat3,lng3] degrees, CCW
     (SW,SE,NE,NW; S2Cell.php:126-138) — the vector side of the
     raster<->vector tile materialization."""
     from ..s2core.cell import cell_vertices_latlng
 
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
-    if len(ids) == 0:
-        return pd.Series([], dtype=object)
+    ids, valid = _cell_ids(cell_id)
     verts = cell_vertices_latlng(ids)  # (n, 4, 2)
-    flat = verts.reshape(len(ids), 8)
-    return pd.Series([row.tolist() for row in flat])
+    return _fixed_lists(verts.reshape(len(ids), 8), valid)
 
 
-@F.pandas_udf(DoubleType())
+@F.arrow_udf(DoubleType())
 def s2_distance_rad(
-    lat1: pd.Series, lng1: pd.Series, lat2: pd.Series, lng2: pd.Series
-) -> pd.Series:
+    lat1: pa.Array, lng1: pa.Array, lat2: pa.Array, lng2: pa.Array
+) -> pa.Array:
     """Exact sphere angle between two latlng-degree points — the
-    stable atan2 form (S2Point.php:110-112), not haversine."""
+    stable atan2 form (S2Point.php:110-112), not haversine.  A null
+    coordinate gives NaN."""
     p1 = geom.latlng_to_xyz(
-        np.radians(lat1.to_numpy(np.float64)), np.radians(lng1.to_numpy(np.float64))
+        np.radians(aio.float64_values(lat1)), np.radians(aio.float64_values(lng1))
     )
     p2 = geom.latlng_to_xyz(
-        np.radians(lat2.to_numpy(np.float64)), np.radians(lng2.to_numpy(np.float64))
+        np.radians(aio.float64_values(lat2)), np.radians(aio.float64_values(lng2))
     )
-    return pd.Series(geom.angle_between(p1, p2))
+    return aio.array(geom.angle_between(p1, p2))
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def s2_vertex_neighbors_udf(cell_id: pd.Series, level: pd.Series) -> pd.Series:
+@F.arrow_udf(ArrayType(LongType()))
+def s2_vertex_neighbors_udf(cell_id: pa.Array, level: pa.Array) -> pa.Array:
     """3-4 neighbors at ``level`` sharing the cell's closest vertex
     (S2CellId.php:601-639).  Scalar kernel per row — used on small
     cell tables (coverer seeding, neighborhood inspection), not on
     corpus-sized inputs."""
-    ids = cid.from_signed(cell_id.to_numpy(np.int64))
-    lv = level.to_numpy(np.int64)
-    if len(ids) == 0:
-        return pd.Series([], dtype=object)
-    out = []
-    for k in range(len(ids)):
-        nbrs = cid.vertex_neighbors(int(ids[k]), int(lv[k]))
-        out.append([int(cid.to_signed(np.asarray([n], np.uint64))[0]) for n in nbrs])
-    return pd.Series(out)
+    ids, valid = _cell_ids(cell_id)
+    lv = aio.int64_values(level)
+    rows = [
+        [] if valid is not None and not valid[k]
+        else cid.vertex_neighbors(int(ids[k]), int(lv[k]))
+        for k in range(len(ids))
+    ]
+    offsets = np.cumsum([0] + [len(r) for r in rows])
+    values = cid.to_signed(np.array([n for r in rows for n in r], dtype=np.uint64))
+    return aio.list_array(offsets, aio.array(values), valid)
 
 
 # --- native sphere columns (one definition for every operator) ----------------------

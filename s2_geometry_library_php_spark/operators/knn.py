@@ -47,8 +47,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.udfs import distinct_rings, latlng_angle_cols
+from ..functions.udfs import latlng_angle_cols
 from ..plans.session import local_relation
+from ..s2core import arrow_io as aio
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.metric import MIN_WIDTH
@@ -181,7 +182,7 @@ def probe_rings(
     """The round's :class:`ProbeRing`, built on the driver: ``probes``
     holds the (probe_id, _plat, _plon) columns and ``leaf`` their leaf
     cell ids (uint64).  No Spark job and no Python worker."""
-    values, offsets = distinct_rings(cid.parent(leaf, level), True)
+    values, offsets = cid.distinct_rings(cid.parent(leaf, level), True)
     owner = np.repeat(np.arange(len(leaf), dtype=np.int32), np.diff(offsets))
     cells = cid.from_signed(values)
     order = np.argsort(cells, kind="stable")
@@ -260,6 +261,10 @@ def ring_topk(ring: ProbeRing, k: int, level: int, chunk_pairs: int):
             pt, idx = cid.covering_pairs(cells, leaf[a:b], (level,), finite[a:b])
             pt, j = pt + a, owner[idx]
             d = geom.angle_xyz((px[j], py[j], pz[j]), (dx[pt], dy[pt], dz[pt]))
+            # A pair beyond the running k-th can neither enter ``best``
+            # nor be kept: drop it before the sort.
+            near = d <= best[j, k - 1] + RANK_SLACK
+            pt, j, d = pt[near], j[near], d[near]
             # Merge the chunk's k smallest per probe into ``best``.
             by = np.lexsort((d, j))
             js = j[by]
@@ -290,13 +295,8 @@ def _ring_topk_udf(ring: ProbeRing, k: int, level: int):
 
     @F.arrow_udf(ArrayType(IntegerType()))
     def ring_topk_udf(lat: pa.Array, lon: pa.Array) -> pa.Array:
-        offsets, probes = kernel(
-            lat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
-            lon.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
-        )
-        return pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32)), pa.array(probes)
-        )
+        offsets, probes = kernel(aio.float64_values(lat), aio.float64_values(lon))
+        return aio.list_array(offsets, aio.array(probes))
 
     return ring_topk_udf
 

@@ -5,7 +5,7 @@ The distributed realization of the reference's edge index probe
 exact crossing/distance): polylines are covered edge-by-edge
 (s2core.edges.edge_covering) and buffered by D via the restored
 ``S2CellUnion.expand`` (S2CellUnion.php:354-415) on the driver.  The
-buffered coverings ride in one Python UDF's closure with the flagship
+buffered coverings ride in one Arrow UDF's closure with the flagship
 point-in-region join's kernel (``s2core.probe.CoveringProbe``): per
 Arrow batch it encodes the docs, binary-searches each leaf's parents
 among the covering cells, and refines the matches with the exact
@@ -29,7 +29,6 @@ the index path, and no benchmark workload measured either side.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,6 +36,7 @@ from pyspark.sql.types import BooleanType
 
 from ..functions.sql_bitops import s2_level
 from ..plans.session import local_relation
+from ..s2core import arrow_io as aio
 from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.coverer import expand_by_radius
@@ -102,13 +102,26 @@ def polyline_projections(polylines: list[dict], max_distance_rad: float):
             out[:, mask] = d, fr, np.degrees(plat), np.degrees(plng)
         keep = out[0] <= max_distance_rad
         pt, line, out = pt[keep], line[keep], out[:, keep]
-        offsets = np.searchsorted(pt, np.arange(len(lat) + 1)).astype(np.int32)
+        offsets = np.searchsorted(pt, np.arange(len(lat) + 1))
         fields = pa.StructArray.from_arrays(
-            [pa.array(line), *map(pa.array, out)], names=list(_PROJECTION)
+            [aio.array(line), *map(aio.array, out)], names=list(_PROJECTION)
         )
-        return pa.ListArray.from_arrays(pa.array(offsets), fields)
+        return aio.list_array(offsets, fields)
 
     return kernel
+
+
+def projection_udf(polylines: list[dict], max_distance_rad: float):
+    """:func:`polyline_projections` as an Arrow UDF ``project(lat, lon)``
+    with the kernel in its closure."""
+    kernel = polyline_projections(polylines, max_distance_rad)
+
+    @F.arrow_udf("array<struct<line_id: long, dist_rad: double, fraction: double, "
+                 "proj_lat: double, proj_lon: double>>")
+    def project(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        return kernel(aio.float64_values(lat), aio.float64_values(lon))
+
+    return project
 
 
 def polyline_project_join(
@@ -126,16 +139,7 @@ def polyline_project_join(
     s2core.edges.polyline_project).  One Arrow UDF
     (:func:`polyline_projections`) looks the docs up and projects the
     candidates; its distance is the proximity refine."""
-    kernel = polyline_projections(polylines, max_distance_rad)
-
-    @F.arrow_udf("array<struct<line_id: long, dist_rad: double, fraction: double, "
-                 "proj_lat: double, proj_lon: double>>")
-    def project(lat: pa.Array, lon: pa.Array) -> pa.Array:
-        return kernel(
-            lat.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
-            lon.to_numpy(zero_copy_only=False).astype(np.float64, copy=False),
-        )
-
+    project = projection_udf(polylines, max_distance_rad)
     # explode_outer + an explicit not-null filter, not an inner explode
     # (spatial_join.probe_join): an inner explode runs the UDF twice.
     return (
@@ -241,18 +245,18 @@ def _cell_keys(
     return raw, anc
 
 
-@F.pandas_udf(BooleanType())
-def _crosses(*cols: pd.Series) -> pd.Series:
+@F.arrow_udf(BooleanType())
+def _crosses(*cols: pa.Array) -> pa.Array:
     """Vectorized robustCrossing > 0 of edge AB vs edge CD, from the
     12 endpoint columns ax..bz, cx..dz."""
     if len(cols[0]) == 0:
-        return pd.Series([], dtype=bool)
-    m = [c.to_numpy(np.float64) for c in cols]
+        return aio.array(np.zeros(0, bool))
+    m = [aio.float64_values(c) for c in cols]
     a = np.stack(m[0:3], axis=1)
     b = np.stack(m[3:6], axis=1)
     c_ = np.stack(m[6:9], axis=1)
     d = np.stack(m[9:12], axis=1)
-    return pd.Series(geom.robust_crossing_vec(a, b, c_, d) > 0)
+    return aio.array(geom.robust_crossing_vec(a, b, c_, d) > 0)
 
 
 def _crossing_counts(

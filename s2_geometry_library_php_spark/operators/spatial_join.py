@@ -11,7 +11,7 @@ Design (SURVEY.md §2.7, replacing the reference's single-machine
    interior coverings (S2RegionCoverer.php:257-267).
 
 2. **Covering lookup inside the scan** (:func:`spatial_join`): the
-   covering rows, sorted by cell, and the regions ride in one pandas
+   covering rows, sorted by cell, and the regions ride in one Arrow
    UDF's closure (:func:`region_hits`).  Per Arrow batch it
    encodes the leaves and finds each leaf's parent at every covering
    level with a binary search (``cellid.covering_pairs``), so the
@@ -62,6 +62,7 @@ from importlib import resources
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -75,6 +76,7 @@ from pyspark.sql.types import (
 
 from .. import s2core
 from ..plans.session import local_relation
+from ..s2core import arrow_io as aio
 from ..s2core import cellid as cid
 from ..s2core.cell import Cell
 from ..s2core.coverer import RegionCoverer, normalize_cell_union
@@ -353,18 +355,29 @@ def region_hits(shapes: dict[int, Region], cov_rows):
 
 
 def point_hits(probe: CoveringProbe):
-    """``hits(lat, lon)`` (degree arrays) -> one sorted int64 array of
-    owners per point (``probe.hits``).  The closure holds the probe,
-    numpy and pandas alone: a worker that unpickles it imports no
-    operator module."""
+    """``hits(lat, lon)`` (degree arrays) -> ``(offsets, owners)``:
+    point ``i``'s sorted owners (``probe.hits``) are
+    ``owners[offsets[i]:offsets[i + 1]]``.  The closure holds the probe
+    and numpy alone: a worker that unpickles it imports no operator
+    module and no pandas."""
 
-    def hits(lat: np.ndarray, lon: np.ndarray) -> pd.Series:
+    def hits(lat: np.ndarray, lon: np.ndarray):
         pt, owner = probe.hits(lat, lon)
-        bounds = np.searchsorted(pt, np.arange(len(lat) + 1))
-        return pd.Series(
-            [owner[bounds[i]:bounds[i + 1]] for i in range(len(lat))],
-            dtype=object,
-        )
+        return np.searchsorted(pt, np.arange(len(lat) + 1)), owner
+
+    return hits
+
+
+def hits_udf(kernel):
+    """``kernel`` (:func:`point_hits`) as an Arrow UDF ``hits(lat, lon)``
+    with the kernel in its closure.  It builds its list column from the
+    kernel's offsets and owners (``s2core.arrow_io``), so the worker
+    imports no pandas."""
+
+    @F.arrow_udf(ArrayType(LongType()))
+    def hits(lat: pa.Array, lon: pa.Array) -> pa.Array:
+        offsets, owners = kernel(aio.float64_values(lat), aio.float64_values(lon))
+        return aio.list_array(offsets, aio.array(owners))
 
     return hits
 
@@ -373,13 +386,9 @@ def probe_join(
     docs: DataFrame, kernel, lat_col: str, lon_col: str, out_col: str
 ) -> DataFrame:
     """``docs`` columns + ``out_col``: one row per doc and owner that
-    ``kernel`` (:func:`point_hits`) returns, in one pandas UDF with the
-    kernel in its closure: no covering table and no join."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def hits(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return kernel(lat.to_numpy(np.float64), lon.to_numpy(np.float64))
-
+    ``kernel`` (:func:`point_hits`) returns, in one Arrow UDF
+    (:func:`hits_udf`): no covering table and no join."""
+    hits = hits_udf(kernel)
     # explode_outer + an explicit not-null filter, not an inner explode:
     # for an inner explode the optimizer infers size(_hits) > 0 and
     # pushes it below the projection, evaluating the UDF a second time

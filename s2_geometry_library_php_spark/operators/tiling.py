@@ -333,9 +333,11 @@ def plan_adaptive_tiling(
 
     Scale shape: ONE shuffle of the docs (the level-``max_level``
     histogram groupBy, with map-side partial aggregation); every
-    coarser histogram re-aggregates the previous level's tiny output;
-    the keep/split decisions are broadcast semi-joins on histogram-
-    sized frames.  At 10^12 rows the level-10 histogram is at most a
+    coarser level comes from one expand-and-aggregate of that tiny
+    histogram (:func:`tile_rollup`), and the keep rule is one window
+    over its output: a tile's parent count is the sum of the counts of
+    the parent's occupied children, its siblings.  No checkpoint, no
+    per-level join.  At 10^12 rows the level-10 histogram is at most a
     few million rows — driver never sees it.
 
     ``target_rows_per_tile`` is a planning scalar: at bench scale we
@@ -348,42 +350,24 @@ def plan_adaptive_tiling(
     if not min_level <= max_level:
         raise ValueError("min_level must be <= max_level")
     t = int(target_rows_per_tile)
-    counts: dict[int, DataFrame] = {}
-    fine = (
-        docs.groupBy(s2_parent(F.col(leaf_col), max_level).alias("tile_id"))
-        .agg(F.count(F.lit(1)).alias("doc_count"))
-        .localCheckpoint(eager=False)
+    fine = docs.groupBy(s2_parent(F.col(leaf_col), max_level).alias("tile_id")).agg(
+        F.count(F.lit(1)).alias("doc_count")
     )
-    counts[max_level] = fine
-    prev = fine
-    for lvl in range(max_level - 1, min_level - 1, -1):
-        prev = (
-            prev.groupBy(s2_parent(F.col("tile_id"), lvl).alias("tile_id"))
-            .agg(F.sum("doc_count").alias("doc_count"))
-            .localCheckpoint(eager=False)
+    # The parent cell at level - 1: 2 * (30 - (level - 1)) trailing bits.
+    lsb = "shiftleft(1L, 62 - 2 * level)"
+    siblings = f"PARTITION BY level, (tile_id & -{lsb}) | {lsb}"
+    return (
+        tile_rollup(fine, max_level, range(min_level, max_level))
+        .selectExpr(
+            "level", "tile_id", "doc_count",
+            f"sum(doc_count) OVER ({siblings}) AS _parent_count",
         )
-        counts[lvl] = prev
-    kept = None
-    for lvl in range(min_level, max_level + 1):
-        c = counts[lvl]
-        if lvl < max_level:
-            c = c.where(F.col("doc_count") <= t)
-        if lvl > min_level:
-            hot = (
-                counts[lvl - 1]
-                .where(F.col("doc_count") > t)
-                .select(F.col("tile_id").alias("_hot_parent"))
-            )
-            c = c.join(
-                F.broadcast(hot),
-                s2_parent(F.col("tile_id"), lvl - 1) == F.col("_hot_parent"),
-                "left_semi",
-            )
-        piece = c.select(
-            F.lit(lvl).alias("level"), "tile_id", "doc_count"
+        .where(
+            f"(level = {max_level} OR doc_count <= {t}) "
+            f"AND (level = {min_level} OR _parent_count > {t})"
         )
-        kept = piece if kept is None else kept.unionByName(piece)
-    return kept
+        .select("level", "tile_id", "doc_count")
+    )
 
 
 def assign_adaptive_tiles(

@@ -3,7 +3,7 @@ hands a driver-built table to Spark as a local relation.
 
 Local sandbox runs on ``local[N]``; the same config block is what we
 would pass to ``spark-submit`` on a real cluster (AQE on, skew join
-on, Arrow batching for the pandas UDF kernels).
+on, Arrow batching for the UDF kernels).
 """
 
 from __future__ import annotations
@@ -71,7 +71,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow IPC for pandas UDFs — the only JVM<->Python crossing.
+        # Arrow IPC for Python UDFs — the only JVM<->Python crossing.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # Broadcast the covering table even if stats are conservative.

@@ -2,6 +2,8 @@
 
 Everything is vectorized over numpy arrays; uint64 is used internally
 for cell ids and reinterpreted to int64 at the Arrow/Spark boundary.
+``arrow_io`` is that boundary: the Arrow buffer reads and writes every
+S2 UDF shares, with no pandas import.
 """
 
 from .cellid import (  # noqa: F401

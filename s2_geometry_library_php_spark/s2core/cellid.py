@@ -537,6 +537,28 @@ def all_neighbors(ids: np.ndarray) -> np.ndarray:
     return parent(out, lev)
 
 
+def distinct_rings(
+    ids: np.ndarray, with_center: bool
+) -> tuple[np.ndarray, np.ndarray]:
+    """Each cell's same-level 3x3 neighborhood as sorted distinct
+    signed ids, flattened: cell ``i``'s ring is
+    ``values[offsets[i]:offsets[i + 1]]``.  ``with_center`` adds the
+    cell itself (the kNN / radius-join candidate ring); without it the
+    ring is the 8-neighborhood of :func:`all_neighbors`.  Cube-corner
+    cells have fewer distinct neighbors, which the row-wise sort +
+    adjacent-difference dedupe drops with no per-row Python."""
+    ids = np.asarray(ids, dtype=np.uint64)
+    ring = to_signed(all_neighbors(ids))
+    if with_center:
+        ring = np.concatenate([to_signed(ids)[:, None], ring], axis=1)
+    ring.sort(axis=1)
+    keep = np.ones(ring.shape, dtype=bool)
+    np.not_equal(ring[:, 1:], ring[:, :-1], out=keep[:, 1:])
+    offsets = np.zeros(len(ring) + 1, dtype=np.int32)
+    np.cumsum(keep.sum(axis=1), out=offsets[1:])
+    return ring[keep], offsets
+
+
 # --- scalar fast paths (python ints; for driver-side Cell/coverer) -----------
 _LOOKUP_IJ_LIST = _LOOKUP_IJ.tolist()
 _LOOKUP_POS_LIST = _LOOKUP_POS.tolist()

@@ -217,3 +217,20 @@ def test_adaptive_partitioned_write_roundtrip_and_pruning(
     assert owner is not None
     lvl, anc = owner
     assert np.all(cid.parent(leaves, lvl) == anc)
+
+
+def test_plan_is_one_histogram_rollup(docs):
+    """One collect of the plan runs the fine histogram, its one
+    expand-and-aggregate and the sibling window: no checkpointed level
+    and no per-level semi-join, each of which runs as its own Spark
+    job."""
+    sc = docs.sparkSession.sparkContext
+    target = max(1, docs.count() // 64)
+    sc.setJobGroup("adaptive_tiling_plan", "plan_adaptive_tiling collect")
+    try:
+        rows = plan_adaptive_tiling(docs, target, MIN_L, MAX_L).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("adaptive_tiling_plan")
+    assert len(jobs) <= 4
+    assert sum(r.doc_count for r in rows) == docs.count()

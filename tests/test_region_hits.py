@@ -5,8 +5,9 @@ overlapping fixtures, leaves at and just outside the range ends of
 covering cells, null, NaN and infinite coordinates) it agrees with
 brute-force containment and with the region-table join, one row per
 containing region; its answer does not depend on how the rows are
-batched; a worker unpickles it, and the polyline kernels built on the
-same lookup, without importing any operator module; the bbox prefilter
+batched; a worker unpickles it, the polyline kernels built on the
+same lookup and the S2 Arrow UDF shells without importing any operator
+module or pandas; the bbox prefilter
 it runs behind is built in the same number of py4j calls for any
 region count; and a join builds each region once."""
 
@@ -19,17 +20,24 @@ from collections import Counter
 
 import numpy as np
 import py4j.clientserver
+import pyarrow as pa
 import pytest
+from pyspark.sql.types import LongType, StructField
 
 from s2_geometry_library_php_spark.functions import s2_cell_id
+from s2_geometry_library_php_spark.functions.udfs import s2_ring_cells_udf
+from s2_geometry_library_php_spark.operators.knn import _ring_topk_udf, probe_rings
 from s2_geometry_library_php_spark.operators.polyline_join import (
+    _crosses,
     line_probe,
     polyline_projections,
+    projection_udf,
 )
 from s2_geometry_library_php_spark.operators.spatial_join import (
     bbox_prefilter_expr,
     build_regions,
     compute_coverings,
+    hits_udf,
     point_hits,
     region_hits,
     regions_to_df,
@@ -113,9 +121,15 @@ def _kernel(regions):
     )
 
 
+def _lists(hits):
+    """Each point's owners of a ``point_hits`` kernel's (offsets, owners)."""
+    offsets, owners = hits
+    return [owners[a:b].tolist() for a, b in zip(offsets[:-1], offsets[1:])]
+
+
 def test_region_hits_matches_brute_force(adversarial):
     regions, lat, lon = adversarial
-    got = [list(h) for h in _kernel(regions)(lat, lon)]
+    got = _lists(_kernel(regions)(lat, lon))
     expected = _brute_hits(regions, lat, lon)
     assert got == expected
     # The fixtures overlap: some points lie in several regions.
@@ -125,25 +139,27 @@ def test_region_hits_matches_brute_force(adversarial):
 
 def test_region_hits_do_not_depend_on_batching(adversarial):
     regions, lat, lon = adversarial
-    whole = [list(h) for h in _kernel(regions)(lat, lon)]
+    whole = _lists(_kernel(regions)(lat, lon))
     for size in (1, 7):
         kernel = _kernel(regions)  # a fresh per-worker region cache
         sliced = [
-            list(h)
+            h
             for i in range(0, len(lat), size)
-            for h in kernel(lat[i:i + size], lon[i:i + size])
+            for h in _lists(kernel(lat[i:i + size], lon[i:i + size]))
         ]
         assert sliced == whole, size
-    assert list(_kernel(regions)(lat[:0], lon[:0])) == []
+    assert _lists(_kernel(regions)(lat[:0], lon[:0])) == []
     nan = _kernel(regions)(np.array([np.nan, 40.7]), np.array([-74.0, np.inf]))
-    assert [list(h) for h in nan] == [[], []]
+    assert _lists(nan) == [[], []]
 
 
-def test_workers_unpickle_the_kernels_without_operator_modules(adversarial, tmp_path):
-    """The flagship's ``hits`` kernel and the polyline kernels hold
-    numpy, pandas, pyarrow and s2core alone: a fresh interpreter loads
-    and runs them with no ``operators`` module imported (a module-level
-    helper from ``operators`` in a closure would import all of them)."""
+def test_workers_unpickle_the_kernels_without_operator_modules(spark, adversarial, tmp_path):
+    """The S2 kernels and their Arrow UDF shells hold numpy, pyarrow and
+    s2core alone: a fresh interpreter loads and runs them on pyarrow
+    arrays with no ``operators`` module and no pandas imported (a
+    module-level helper from ``operators`` in a closure would import
+    all of them; pyarrow's own numpy conversions import pandas), and
+    gets the driver's outputs."""
     from pyspark import cloudpickle
 
     regions, lat, lon = adversarial
@@ -153,26 +169,52 @@ def test_workers_unpickle_the_kernels_without_operator_modules(adversarial, tmp_
         point_hits(line_probe(lines, 0.2)),
         polyline_projections(lines, 0.2),
     ]
+    table = pa.table({"probe_id": pa.array([0, 1], pa.int64()),
+                      "_plat": [10.0, -40.0], "_plon": [20.0, 100.0]})
+    leaf = cid.cell_id_from_latlng_degrees(np.array([10.0, -40.0]), np.array([20.0, 100.0]))
+    ring = probe_rings(spark, table, leaf, 3, StructField("probe_id", LongType()))
+    a_lat, a_lon = pa.array(lat), pa.array(lon)
+    a_lat = pa.concat_arrays([a_lat, pa.array([None, 1.0], pa.float64())]).slice(1)
+    a_lon = pa.concat_arrays([a_lon, pa.array([2.0, None], pa.float64())]).slice(1)
+    level = pa.array([6] * len(a_lat), pa.int32())
+    v = np.random.default_rng(3).normal(size=(4, 200, 3))
+    v /= np.linalg.norm(v, axis=2, keepdims=True)
+    ends = [pa.array(v[e, :, c]) for e in range(4) for c in range(3)]
+    calls = [
+        (s2_cell_id.func, (a_lat, a_lon)),
+        (s2_ring_cells_udf.func, (a_lat, a_lon, level)),
+        (hits_udf(_kernel(regions)).func, (a_lat, a_lon)),
+        (_ring_topk_udf(ring, 4, 3).func, (a_lat, a_lon)),
+        (projection_udf(lines, 0.2).func, (a_lat, a_lon)),
+        (_crosses.func, ends),
+    ]
     path = tmp_path / "kernels.pkl"
-    path.write_bytes(cloudpickle.dumps((kernels, lat, lon)))
+    path.write_bytes(cloudpickle.dumps((kernels, lat, lon, calls)))
     code = (
         "import pickle, sys\n"
-        "kernels, lat, lon = pickle.load(open(sys.argv[1], 'rb'))\n"
-        "out = [k(lat, lon) for k in kernels]\n"
+        "kernels, lat, lon, calls = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "out = [k(lat, lon) for k in kernels], [f(*a) for f, a in calls]\n"
         "pickle.dump(out, open(sys.argv[1] + '.out', 'wb'))\n"
         "print(sorted(m for m in sys.modules if m.startswith("
-        "'s2_geometry_library_php_spark.operators')))"
+        "'s2_geometry_library_php_spark.operators')), 'pandas' in sys.modules)"
     )
     run = subprocess.run(
         [sys.executable, "-c", code, str(path)],
         capture_output=True, text=True, check=True,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
-    assert run.stdout.strip() == "[]"
-    hits, near, projected = pickle.loads((tmp_path / "kernels.pkl.out").read_bytes())
-    assert [list(h) for h in hits] == _brute_hits(regions, lat, lon)
-    assert sum(len(h) for h in near) > 0
+    assert run.stdout.strip() == "[] False"
+    (hits, near, projected), udf_out = pickle.loads(
+        (tmp_path / "kernels.pkl.out").read_bytes()
+    )
+    assert _lists(hits) == _brute_hits(regions, lat, lon)
+    assert len(near[1]) > 0
     assert projected.equals(kernels[2](lat, lon))
+    for got, (f, args) in zip(udf_out, calls):
+        with np.errstate(invalid="ignore"):  # the null and NaN coordinates
+            assert got.equals(f(*args)), f.__name__
+    assert len(udf_out[2].flatten()) > 0 and len(udf_out[3].flatten()) > 0
+    assert 0 < sum(udf_out[5].to_pylist()) < 200
 
 
 def test_spatial_join_matches_brute_force_and_region_table(spark, adversarial):
