@@ -491,9 +491,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("line_id", "region_id", "n_crossings")
 
     def q_polyline_self_crossings(spark, sf):
-        """Polyline x polyline crossing join with BOTH sides
-        distributed (no broadcast): shuffled hash equi-join of raw
-        covering cells against ancestor-chain keys."""
+        """Polyline x polyline crossing join: the polylines' own edges
+        are the edge index, and each edge looks up and refines its
+        crossing candidates in one Arrow UDF (no join)."""
         from s2_geometry_library_php_spark.operators.polyline_join import (
             polyline_self_crossing_join,
         )

@@ -328,9 +328,9 @@ def _run_suite(spark, sf_dir: str) -> tuple[dict, dict]:
     n_pairs = timed("radius_pairs_self_join", radius_pairs)
     extras["radius_pairs_found"] = n_pairs
 
-    # Polyline x polyline crossing join at scale: 1024 lines through
-    # the SHUFFLED raw-vs-ancestor candidate path (both sides
-    # distributed, no broadcast, no theta-join).
+    # Polyline x polyline crossing join at scale: 1024 lines, each
+    # edge's candidate lookup and robustCrossing refine in one Arrow
+    # UDF over the driver-held edge index, one exchange for the count.
     from s2_geometry_library_php_spark.operators.polyline_join import (
         polyline_self_crossing_join,
         synth_grid_lines,

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..plans.session import local_relation
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -404,4 +406,4 @@ def synth_media_table(spark, n: int = 64, real_payloads: bool = False) -> DataFr
             payload = bytes(((i * 7 + j * 13) % 251) for j in range(128 + i))
             mime = "video/mp4"
         rows.append((i, kind, payload, mime, w, h, dur))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_relation(spark, rows, MEDIA_SCHEMA)

@@ -340,7 +340,6 @@ def knn_join(
     probe_id: str = "probe_id",
     doc_id: str = "doc_id",
     max_rounds: int = 3,
-    n_docs_hint: int | None = None,
 ) -> DataFrame:
     """Scalable kNN: match the docs' level-L cells against each probe's
     3x3 ring, exact re-rank, provable-exactness check, coarser retry for
@@ -359,12 +358,10 @@ def knn_join(
     """
     if start_level is None:
         # auto_start_level only needs the ORDER OF MAGNITUDE of the
-        # corpus size (it feeds a log2), so any cheap estimate serves:
-        # pass n_docs_hint (e.g. from table stats / a prior count) to
-        # avoid any driver action; otherwise estimate from a bounded
-        # sample of partitions rather than a full-corpus count().
-        n = n_docs_hint if n_docs_hint is not None else _estimate_count(docs)
-        start_level = auto_start_level(n, k)
+        # corpus size (it feeds a log2), so a bounded sample of
+        # partitions serves rather than a full-corpus count(); pass
+        # start_level to skip the estimate's driver action.
+        start_level = auto_start_level(_estimate_count(docs), k)
 
     id_field = probes.schema[probe_id]
     todo = probes.select(

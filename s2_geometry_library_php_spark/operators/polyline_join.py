@@ -16,14 +16,18 @@ projection in that one crossing.
 
 Edge-crossing joins (``S2EdgeIndex::findCandidateCrossings``,
 S2EdgeIndex.php:225-244): the polyline-vs-region-boundary join and
-the polyline self-crossing join are two thin callers of one set of
-parts: :func:`edge_table` (edges and their covering cells),
-``_cell_keys`` (raw and ancestor-or-self join keys), an equi-join
-candidate step, and ``_crossing_counts`` (the exact ``robustCrossing``
-refine and per-pair count).  Neither has a brute all-pairs arm: the
-reference's brute-vs-index crossover (S2EdgeIndex.php:197-204) is a
-single-machine cost switch, every production caller already forced
-the index path, and no benchmark workload measured either side.
+the polyline self-crossing join run one kernel,
+:class:`~s2core.edges.EdgeProbe`.  The driver holds the index edges
+(the region boundaries, or the polylines themselves) and their
+covering cells sorted; the query edges scan as a local relation into
+one Arrow UDF (:func:`crossings_udf`) that covers each edge, finds the
+index edges in its cells' parent and child cells by binary search
+(``cellid.cell_pairs``), and refines the pairs with ``robustCrossing``;
+one ``groupBy`` counts the crossings per pair of owners.  No join and
+one exchange.  Neither has a brute all-pairs arm: the reference's
+brute-vs-index crossover (S2EdgeIndex.php:197-204) is a single-machine
+cost switch, every production caller already forced the index path,
+and no benchmark workload measured either side.
 """
 
 from __future__ import annotations
@@ -32,15 +36,18 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
+from pyspark.sql.types import ArrayType, LongType
 
-from ..functions.sql_bitops import s2_level
 from ..plans.session import local_relation
 from ..s2core import arrow_io as aio
-from ..s2core import cellid as cid
 from ..s2core import geom
 from ..s2core.coverer import expand_by_radius
-from ..s2core.edges import PolylineBuffer, polyline_covering, polyline_project
+from ..s2core.edges import (
+    EdgeProbe,
+    PolylineBuffer,
+    polyline_covering,
+    polyline_project,
+)
 from ..s2core.probe import CoveringProbe
 from .spatial_join import point_hits, probe_join
 
@@ -150,9 +157,8 @@ def polyline_project_join(
 
 
 # --- edge-vs-edge crossing joins (S2EdgeIndex probe shape) -------------------------
-EDGE_SCHEMA = (
-    "owner long, edge long, ax double, ay double, az double, "
-    "bx double, by double, bz double, cells array<long>"
+QUERY_EDGE_SCHEMA = (
+    "owner long, ax double, ay double, az double, bx double, by double, bz double"
 )
 
 
@@ -189,99 +195,57 @@ def _boundary_chains(region_specs: list[dict]) -> list[tuple]:
     return out
 
 
-def edge_table(spark: SparkSession, chains: list[tuple]) -> DataFrame:
-    """One EDGE_SCHEMA row per edge of each ``(owner, vertices, closed)``
-    chain: its endpoints and its covering cells
-    (``edges.edge_covering``, S2EdgeIndex.php:306-375).  Edge ids are
-    unique across the table.  Built on the driver, which holds the
-    edge list anyway."""
-    from ..s2core.edges import edge_covering
-
-    rows = []
-    for owner, verts, closed in chains:
-        m = len(verts)
-        for i in range(m if closed else m - 1):
-            a, b = verts[i], verts[(i + 1) % m]
-            cells, _ = edge_covering(a, b)
-            rows.append(
-                (
-                    owner, len(rows), *map(float, a), *map(float, b),
-                    [cid.to_signed_scalar(c) for c in cells],
-                )
-            )
-    return local_relation(spark, rows, EDGE_SCHEMA)
+def _edges(chains: list[tuple]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(owner, a, b) of every edge ``a[i] -> b[i]`` of each ``(owner,
+    vertices, closed)`` chain; a closed chain's last edge wraps to its
+    first vertex."""
+    owner, a, b = [], [np.zeros((0, 3))], [np.zeros((0, 3))]
+    for o, verts, closed in chains:
+        m = len(verts) if closed else max(len(verts) - 1, 0)
+        owner += [o] * m
+        a.append(verts[:m])
+        b.append(np.roll(verts, -1, axis=0)[:m])
+    return np.array(owner, dtype=np.int64), np.concatenate(a), np.concatenate(b)
 
 
-def _parent_dyn(cell, level):
-    """Parent at a DYNAMIC level column (sql_bitops.s2_parent takes a
-    python int): lsb_l = 1 << (2*(30-l)); (cell & -lsb) | lsb.
-    shiftleft needs a literal count, so the power of two comes from
-    pow(2, .) — exact in double through 2^60, exact long cast."""
-    lsb = F.pow(F.lit(2.0), (F.lit(60) - level * F.lit(2)).cast("double")).cast(
-        "long"
-    )
-    return cell.bitwiseAND(-lsb).bitwiseOR(lsb)
+def crossings_udf(probe: EdgeProbe):
+    """``probe.crossings`` as an Arrow UDF ``crossings(owner, ax, ay, az,
+    bx, by, bz)`` over query edges: each edge's crossed index owners,
+    one per crossing pair of edges.  The probe rides in its closure."""
+
+    @F.arrow_udf(ArrayType(LongType()))
+    def crossings(owner: pa.Array, *ends: pa.Array) -> pa.Array:
+        v = [aio.float64_values(c) for c in ends]
+        a, b = np.stack(v[:3], axis=1), np.stack(v[3:], axis=1)
+        q, other = probe.crossings(aio.int64_values(owner), a, b)
+        offsets = np.searchsorted(q, np.arange(len(owner) + 1))
+        return aio.list_array(offsets, aio.array(other))
+
+    return crossings
 
 
-def _cell_keys(
-    edges: DataFrame, owner: str, edge: str
-) -> tuple[DataFrame, DataFrame]:
-    """``(owner, edge, cell)`` join keys of an edge table: its raw
-    covering cells, and their ancestor-or-self cells (the parent at
-    every level from 0 to the cell's own, natively), distinct."""
-    raw = edges.select(
-        F.col("owner").alias(owner),
-        F.col("edge").alias(edge),
-        F.explode("cells").alias("cell"),
-    )
-    levels = F.sequence(F.lit(0), s2_level(F.col("cell")))
-    anc = raw.select(
-        owner,
-        edge,
-        F.explode(
-            F.transform(levels, lambda lv: _parent_dyn(F.col("cell"), lv))
-        ).alias("cell"),
-    ).distinct()
-    return raw, anc
-
-
-@F.arrow_udf(BooleanType())
-def _crosses(*cols: pa.Array) -> pa.Array:
-    """Vectorized robustCrossing > 0 of edge AB vs edge CD, from the
-    12 endpoint columns ax..bz, cx..dz."""
-    if len(cols[0]) == 0:
-        return aio.array(np.zeros(0, bool))
-    m = [aio.float64_values(c) for c in cols]
-    a = np.stack(m[0:3], axis=1)
-    b = np.stack(m[3:6], axis=1)
-    c_ = np.stack(m[6:9], axis=1)
-    d = np.stack(m[9:12], axis=1)
-    return aio.array(geom.robust_crossing_vec(a, b, c_, d) > 0)
-
-
-def _crossing_counts(
-    cand: DataFrame,
-    a_edges: DataFrame,
-    b_edges: DataFrame,
-    a_key: str,
-    b_key: str,
+def _crossing_join(
+    spark: SparkSession, chains: list[tuple], probe: EdgeProbe, names: tuple
 ) -> DataFrame:
-    """Refine candidate edge pairs ``(a_key, edge_a, b_key, edge_b)``:
-    fetch edge_a's endpoints from ``a_edges`` and edge_b's from
-    ``b_edges``, keep the pairs with a proper ``robustCrossing`` and
-    count them per ``(a_key, b_key)``."""
-    ends_a = a_edges.select(
-        F.col("edge").alias("edge_a"), "ax", "ay", "az", "bx", "by", "bz"
+    """``(names[0], names[1], n_crossings)``: the edges of ``chains`` as
+    a local relation, one Arrow UDF (:func:`crossings_udf`) that looks
+    each edge up in ``probe`` and refines the candidates, and one
+    count per pair of owners with >= 1 proper crossing."""
+    owner, a, b = _edges(chains)
+    ends = dict(zip(("ax", "ay", "az", "bx", "by", "bz"), [*a.T, *b.T]))
+    edges = local_relation(
+        spark, pa.table({"owner": owner, **ends}), QUERY_EDGE_SCHEMA
     )
-    ends_b = b_edges.select(
-        F.col("edge").alias("edge_b"),
-        *[F.col(p + x).alias(q + x) for p, q in ("ac", "bd") for x in "xyz"],
-    )
-    pairs = cand.join(ends_a, "edge_a").join(ends_b, "edge_b")
-    endpoints = [F.col(p + x) for p in "abcd" for x in "xyz"]
+    crossings = crossings_udf(probe)(*edges.columns)
+    # explode_outer + an explicit not-null filter, not an inner explode
+    # (spatial_join.probe_join): an inner explode runs the UDF twice.
     return (
-        pairs.where(_crosses(*endpoints))
-        .groupBy(a_key, b_key)
+        edges.select(
+            F.col("owner").alias(names[0]),
+            F.explode_outer(crossings).alias(names[1]),
+        )
+        .where(F.col(names[1]).isNotNull())
+        .groupBy(*names)
         .agg(F.count(F.lit(1)).alias("n_crossings"))
     )
 
@@ -289,38 +253,18 @@ def _crossing_counts(
 def polyline_region_crossing_join(
     spark: SparkSession, polylines: list[dict], region_specs: list[dict]
 ) -> DataFrame:
-    """Which polylines cross which region BOUNDARIES — the full
-    ``S2EdgeIndex::findCandidateCrossings`` probe shape
-    (S2EdgeIndex.php:225-244): cover each query edge, collect edges
-    indexed in PARENT cells (getEdgesInParentCells) and in DESCENDANT
-    cells (getEdgesInChildrenCells), refine with ``robustCrossing``.
-
-    Candidate pairs are the union of two hash equi-joins against the
-    broadcast region boundary edges (dimension-sized):
-
-      * polyline ancestor-or-self keys  vs  raw region cells
-        (region cell is equal-or-descendant of a polyline cell), and
-      * raw polyline cells  vs  region ancestor-or-self keys
-        (polyline cell is descendant of a region cell).
-
-    Both arms are pure equi-joins — no range probe, no nested loop;
-    expanding each side's own ancestor CHAIN (<= 31 cells) never
-    explodes the way expanding subtrees would.  Output: (line_id,
-    region_id, n_crossings) for pairs with >= 1 proper crossing.
-    Only loop/polygon regions participate (caps/rects have no
-    boundary vertex chain)."""
-    lines = edge_table(spark, _polyline_chains(polylines))
-    bounds = edge_table(spark, _boundary_chains(region_specs))
-    line_raw, line_anc = _cell_keys(lines, "line_id", "edge_a")
-    bound_raw, bound_anc = _cell_keys(bounds, "region_id", "edge_b")
-    cand = (
-        line_anc.join(F.broadcast(bound_raw), "cell")
-        .unionByName(line_raw.join(F.broadcast(bound_anc), "cell"))
-        .drop("cell")
-        .distinct()
-    )
-    return _crossing_counts(
-        cand, lines, F.broadcast(bounds), "line_id", "region_id"
+    """Which polylines cross which region BOUNDARIES — the
+    ``S2EdgeIndex::findCandidateCrossings`` probe
+    (S2EdgeIndex.php:225-244): the boundary edges are the index
+    (:class:`~s2core.edges.EdgeProbe`), each polyline edge looks up the
+    boundary edges whose covering cells equal, contain or lie in its
+    own, and ``robustCrossing`` (polyline edge as AB) refines them.
+    Output: (line_id, region_id, n_crossings) for pairs with >= 1
+    proper crossing.  Only loop/polygon regions participate
+    (caps/rects have no boundary vertex chain)."""
+    probe = EdgeProbe(*_edges(_boundary_chains(region_specs)))
+    return _crossing_join(
+        spark, _polyline_chains(polylines), probe, ("line_id", "region_id")
     )
 
 
@@ -330,7 +274,7 @@ def polyline_region_crossings_numpy(
     """Brute-force oracle: every polyline edge x every region boundary
     edge through the scalar robust_crossing kernel — no covering
     machinery, so a green match also certifies candidate
-    COMPLETENESS of the two-arm covering join."""
+    COMPLETENESS of the edge index lookup."""
     from ..s2core.region import region_from_params
 
     out = []
@@ -365,39 +309,16 @@ def polyline_region_crossings_numpy(
 def polyline_self_crossing_join(
     spark: SparkSession, polylines: list[dict]
 ) -> DataFrame:
-    """Which polylines cross which OTHER polylines — the two-big-sides
-    variant of the edge-index probe: NO broadcast side.  One shuffled
-    hash equi-join over covering cells:
+    """Which polylines cross which OTHER polylines: the edge index of
+    :func:`polyline_region_crossing_join` over the polylines' own
+    edges, each edge meeting only edges of a greater line id, so each
+    pair of edges is refined once, the lower line's edge as AB.
 
-      ancestor-or-self keys  ⋈  raw covering cells  (on the cell id)
-
-    catches every ancestor-or-equal relation between two edges'
-    covering cells, because for an unordered pair either edge may
-    supply the ancestor side and the (line_a < line_b) normalization
-    dedupes the two orientations.
-
-    Output: (line_a, line_b, n_crossings) for pairs with >= 1 proper
-    crossing between edges of DIFFERENT lines."""
-    edges = edge_table(spark, _polyline_chains(polylines))
-    raw, anc = _cell_keys(edges, "line_id", "edge")
-    pa, pb = anc.alias("pa"), raw.alias("pb")
-    a_first = F.col("pa.line_id") < F.col("pb.line_id")
-    pa_edge, pb_edge = F.col("pa.edge"), F.col("pb.edge")
-    cand = (
-        pa.join(
-            pb,
-            (F.col("pa.cell") == F.col("pb.cell"))
-            & (F.col("pa.line_id") != F.col("pb.line_id")),
-        )
-        .select(
-            F.least("pa.line_id", "pb.line_id").alias("line_a"),
-            F.greatest("pa.line_id", "pb.line_id").alias("line_b"),
-            F.when(a_first, pa_edge).otherwise(pb_edge).alias("edge_a"),
-            F.when(a_first, pb_edge).otherwise(pa_edge).alias("edge_b"),
-        )
-        .distinct()
-    )
-    return _crossing_counts(cand, edges, edges, "line_a", "line_b")
+    Output: (line_a, line_b, n_crossings), line_a < line_b, for pairs
+    with >= 1 proper crossing between edges of DIFFERENT lines."""
+    chains = _polyline_chains(polylines)
+    probe = EdgeProbe(*_edges(chains), ordered=True)
+    return _crossing_join(spark, chains, probe, ("line_a", "line_b"))
 
 
 def synth_grid_lines(n: int) -> list[dict]:

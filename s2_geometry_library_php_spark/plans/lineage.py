@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.sql_bitops import s2_parent
+from .session import local_relation
 
 LINEAGE_SCHEMA = (
     "job_id string, stage string, cell_prefix long, row_count long, "
@@ -55,7 +56,7 @@ class LineageLog:
     def read_metrics(self) -> DataFrame:
         path = self._metrics_path()
         if not os.path.exists(path):
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
+            return self._metrics_frame([])
         return self.spark.read.parquet(path)
 
     def completed_prefixes(self, stage: str) -> DataFrame:
@@ -70,8 +71,11 @@ class LineageLog:
             .distinct()
         )
 
+    def _metrics_frame(self, rows: list[tuple]) -> DataFrame:
+        return local_relation(self.spark, rows, LINEAGE_SCHEMA)
+
     def _append_metrics(self, rows: list[tuple]) -> None:
-        df = self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        df = self._metrics_frame(rows)
         df.coalesce(1).write.mode("append").parquet(self._metrics_path())
 
     # -- the resumable stage runner ------------------------------------------------

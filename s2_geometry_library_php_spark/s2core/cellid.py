@@ -382,16 +382,42 @@ def covering_pairs(
     """Every ``(row, idx)`` with ``cells[idx]`` the parent of
     ``leaf[row]`` at one of ``levels``, by binary search in ``cells``
     (uint64, sorted, a cell repeated once per owner).  A row where
-    ``valid`` is false matches nothing.  Pairs come level by level, in
-    row order, each row's run of equal cells in index order."""
+    ``valid`` (per row, or per level and row) is false matches nothing.
+    Pairs come level by level, in row order, each row's run of equal
+    cells in index order."""
     key = parent(leaf, np.asarray(levels)[:, None]).ravel()
     lo = np.searchsorted(cells, key, "left")
     count = np.searchsorted(cells, key, "right") - lo
-    count *= np.tile(valid, len(levels))
+    count *= np.broadcast_to(valid, (len(levels), len(leaf))).ravel()
     row = np.repeat(np.tile(np.arange(len(leaf)), len(levels)), count)
-    # Each key's run is lo, lo + 1, ...: the pair's position in the
-    # output, less the run's start there, plus lo.
-    return row, np.arange(len(row)) + np.repeat(lo - (np.cumsum(count) - count), count)
+    return row, _runs(lo, count)
+
+
+def _runs(lo: np.ndarray, count: np.ndarray) -> np.ndarray:
+    """The runs ``lo[k], lo[k] + 1, ...`` (``count[k]`` long) end to
+    end: each element's position in the output, less its run's start
+    there, plus ``lo``."""
+    start = np.repeat(lo - (np.cumsum(count) - count), count)
+    return np.arange(len(start)) + start
+
+
+def cell_pairs(
+    cells: np.ndarray, ids: np.ndarray, levels
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every ``(row, idx)`` with ``cells[idx]`` equal to, an ancestor of
+    or a descendant of ``ids[row]``, each once, by binary search in
+    ``cells`` (uint64, sorted, a cell may repeat; ``levels`` its
+    levels): the ancestors are ``ids[row]``'s parents at each of
+    ``levels`` coarser than its own (:func:`covering_pairs`), the cell
+    itself and its descendants the run of ``cells`` in its
+    ``[range_min, range_max]`` (S2EdgeIndex.php:225-244)."""
+    ids = np.asarray(ids, dtype=np.uint64)
+    coarser = np.asarray(levels, dtype=np.int64)[:, None] < level_of(ids)
+    row, idx = covering_pairs(cells, ids, levels, coarser)
+    lo = np.searchsorted(cells, range_min(ids), "left")
+    count = np.searchsorted(cells, range_max(ids), "right") - lo
+    row_in = np.repeat(np.arange(len(ids)), count)
+    return np.concatenate([row, row_in]), np.concatenate([idx, _runs(lo, count)])
 
 
 def range_min(ids: np.ndarray) -> np.ndarray:

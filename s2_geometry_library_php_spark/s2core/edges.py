@@ -1,4 +1,5 @@
-"""Edge coverings and loop-vs-loop relations (driver-side kernels).
+"""Edge coverings, the edge index and loop-vs-loop relations (numpy
+kernels).
 
 * :func:`edge_covering` — the reference's edge-index covering
   (S2EdgeIndex.php:306-375): ideal level from MIN_WIDTH of the
@@ -6,6 +7,9 @@
   tight enough, else the 4 vertex neighbors of the edge midpoint.
 * :func:`polyline_covering` — per-edge coverings, normalized; the
   build side of a polyline x region / polyline x points join.
+* :class:`EdgeProbe` — the edge index: edge coverings sorted by cell,
+  probed with ``cellid.cell_pairs`` and refined with
+  ``geom.robust_crossing_vec``; the kernel of the crossing joins.
 * wedge relations (S2EdgeUtil.php:681-794) and
   :func:`check_edge_crossings` (S2Loop.php:880-912) powering
   :func:`loop_contains_loop` / :func:`loop_intersects_loop` /
@@ -100,6 +104,54 @@ def polyline_covering(vertices_latlng_deg: np.ndarray) -> list[int]:
         cov, _ = edge_covering(pts[k], pts[k + 1])
         cells.extend(cov)
     return normalize_cell_union(cells)
+
+
+def edge_cells(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(covering cells as uint64, edge row) of the edges ``a[i] -> b[i]``
+    (unit vectors), :func:`edge_covering` of each."""
+    cells, row = [], []
+    for i in range(len(a)):
+        cov, _ = edge_covering(a[i], b[i])
+        cells += cov
+        row += [i] * len(cov)
+    return np.array(cells, dtype=np.uint64), np.array(row, dtype=np.int64)
+
+
+class EdgeProbe:
+    """The reference's edge index (S2EdgeIndex.php:85-147, 225-244): the
+    index edges ``a[i] -> b[i]`` (unit vectors) of ``owner[i]``, and
+    their covering cells held sorted, each with its edge row.  With
+    ``ordered``, a query edge meets only index edges of a greater
+    owner: a self join of one edge set then tests each pair of edges of
+    two owners once, the lower owner's edge first."""
+
+    def __init__(self, owner, a, b, ordered: bool = False):
+        self.owner = np.asarray(owner, dtype=np.int64)
+        self.a = np.asarray(a, dtype=np.float64)
+        self.b = np.asarray(b, dtype=np.float64)
+        cells, row = edge_cells(self.a, self.b)
+        order = np.argsort(cells, kind="stable")
+        self.cells, self.row = cells[order], row[order]
+        self.levels = sorted({int(x) for x in cid.level_of(self.cells)})
+        self.ordered = ordered
+
+    def crossings(self, owner: np.ndarray, a: np.ndarray, b: np.ndarray):
+        """(query edge, index owner) of every proper crossing
+        (``robustCrossing > 0``, the query edge ``a[i] -> b[i]`` of
+        ``owner[i]`` as AB), sorted by query edge, then index edge.
+        The candidates are the index edges with a covering cell equal
+        to, containing or inside one of the query edge's cells
+        (getEdgesInParentCells, getEdgesInChildrenCells), each once."""
+        cells, qrow = edge_cells(a, b)
+        pair, idx = cid.cell_pairs(self.cells, cells, self.levels)
+        q, e = qrow[pair], self.row[idx]
+        if self.ordered:
+            keep = self.owner[e] > owner[q]
+            q, e = q[keep], e[keep]
+        n = max(len(self.owner), 1)
+        q, e = np.divmod(np.unique(q * n + e), n)
+        hit = geom.robust_crossing_vec(a[q], b[q], self.a[e], self.b[e]) > 0
+        return q[hit], self.owner[e[hit]]
 
 
 # --- wedge relations (S2EdgeUtil.php:681-794) ----------------------------------

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 
 from ..functions.sql_bitops import s2_parent
 from ..functions.udfs import s2_cell_id
+from ..s2core import cellid as cid
 
 STATE_SCHEMA = StructType(
     [
@@ -78,19 +79,12 @@ def _update_tile(key, pdf_iter, state: GroupState):
     yield pd.DataFrame(
         {
             "tile_id": [tile_id],
-            "tile_token": [_token_py(tile_id)],
+            "tile_token": cid.token_from_id(cid.from_signed(tile_id)),
             "doc_count": [count],
             "centroid_lat": [clat],
             "centroid_lon": [clon],
         }
     )
-
-
-def _token_py(tile_id: int) -> str:
-    u = tile_id & 0xFFFFFFFFFFFFFFFF
-    if u == 0:
-        return "X"
-    return format(u, "016x").rstrip("0")
 
 
 def tile_running_stats(

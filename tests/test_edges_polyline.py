@@ -380,6 +380,36 @@ def test_robust_crossing_vec_matches_scalar():
         assert vec2[i] == geom.robust_crossing(a[i], b[i], b[i], c[i])
 
 
+def test_cell_pairs_match_brute_relation():
+    """``cellid.cell_pairs`` returns each (query cell, index cell) pair
+    where one cell equals or contains the other, once, as an all-pairs
+    scan finds them: cells at mixed levels that nest (parents of a few
+    leaves), face cells (an edge longer than a face covers all six),
+    leaf cells, and cells repeated on both sides."""
+    rng = np.random.default_rng(11)
+    base = cid.cell_id_from_latlng_degrees(
+        rng.uniform(-60, 60, 6), rng.uniform(-170, 170, 6)
+    )
+    nested = cid.parent(base[rng.integers(0, 6, 60)], rng.integers(0, 31, 60))
+    faces = np.array([(f << 61) + (1 << 60) for f in range(6)], dtype=np.uint64)
+    index = np.sort(np.concatenate([nested[:40], nested[:8], faces[:2], base[:3]]))
+    query = np.concatenate([nested[30:], nested[30:34], faces[1:], base[2:], base[:1]])
+    levels = sorted({int(x) for x in cid.level_of(index)})
+    row, idx = cid.cell_pairs(index, query, levels)
+    got = sorted(zip(row.tolist(), idx.tolist()))
+    want = [
+        (r, i)
+        for r, q in enumerate(map(int, query))
+        for i, c in enumerate(map(int, index))
+        if cid.contains_scalar(q, c) or cid.contains_scalar(c, q)
+    ]
+    assert got == want
+    level = cid.level_of(query)[row] - cid.level_of(index)[idx]
+    assert level.min() < 0 < level.max() and 0 in level
+    empty = cid.cell_pairs(index[:0], query, [])
+    assert [len(x) for x in empty] == [0, 0]
+
+
 # Two straight lines and a chain crossing line 1 twice, around the quad
 # loop of region 7: shared by the crossing-join tests.
 THREE_LINES = [
@@ -422,6 +452,51 @@ def test_polyline_region_crossing_join_counts(spark):
             for lid, rid, n in polyline_region_crossings_numpy(lines, [QUAD_LOOP])
         }
         assert got == want == exp
+
+
+def test_crossing_joins_shared_vertices_and_wrap_edge(spark):
+    """Edges that share a vertex are no proper crossing (robustCrossing
+    0), and a closed loop's wrap edge (last vertex back to the first)
+    is indexed: both joins equal their numpy oracles on lines that meet
+    the quad loop's vertices and each other's endpoints, and on a line
+    that crosses only the loop's wrap edge."""
+    from s2_geometry_library_php_spark.operators.polyline_join import (
+        polyline_region_crossing_join,
+        polyline_region_crossings_numpy,
+        polyline_self_crossing_join,
+        polyline_self_crossings_numpy,
+    )
+
+    lines = [
+        # from the loop's first vertex out, and a line ending on it
+        dict(line_id=1, vertices=[[40.0, -75.0], [38.0, -78.0]]),
+        dict(line_id=2, vertices=[[38.0, -72.0], [40.0, -75.0]]),
+        # through the loop: two crossings, both off the vertices
+        dict(line_id=3, vertices=[[42.0, -77.0], [43.0, -68.0]]),
+        # crosses only the wrap edge (45N -75 -> 40N -75)
+        dict(line_id=5, vertices=[[42.5, -76.0], [42.5, -74.0]]),
+        # starts on line 3's vertex and on line 1's far end
+        dict(line_id=6, vertices=[[42.0, -77.0], [38.0, -78.0]]),
+        # inside the loop, across line 3
+        dict(line_id=7, vertices=[[41.0, -73.0], [44.0, -73.0]]),
+    ]
+    got = {
+        (r.line_id, r.region_id): r.n_crossings
+        for r in polyline_region_crossing_join(spark, lines, [QUAD_LOOP]).collect()
+    }
+    want = {
+        (a, b): n for a, b, n in polyline_region_crossings_numpy(lines, [QUAD_LOOP])
+    }
+    assert got == want
+    assert got[(3, 7)] == 2 and got[(5, 7)] == 1
+    assert (1, 7) not in got and (2, 7) not in got
+    got = {
+        (r.line_a, r.line_b): r.n_crossings
+        for r in polyline_self_crossing_join(spark, lines).collect()
+    }
+    assert got == {(a, b): n for a, b, n in polyline_self_crossings_numpy(lines)}
+    assert (1, 2) not in got and (3, 6) not in got and (1, 6) not in got
+    assert got[(3, 7)] == 1
 
 
 def test_wedge_contains_or_intersects_cases():
@@ -469,10 +544,10 @@ def test_wedge_contains_or_intersects_cases():
 
 
 def test_polyline_self_crossing_join_no_broadcast(spark):
-    """Both-sides-distributed crossing join: counts equal brute force
-    on a four-line fixture and the three-line fixture, and the plan
-    contains no BroadcastNestedLoopJoin/CartesianProduct (the whole
-    point of the shuffled equi-join)."""
+    """Self-crossing join: counts equal brute force on a four-line
+    fixture and the three-line fixture, and the plan contains no
+    BroadcastNestedLoopJoin/CartesianProduct (candidates come from the
+    edge index lookup, never from all pairs)."""
     from s2_geometry_library_php_spark.operators.polyline_join import (
         polyline_self_crossing_join,
         polyline_self_crossings_numpy,
@@ -519,8 +594,8 @@ def _self_crossings_vec(lines):
 
 
 def test_polyline_self_crossing_join_1k_lines(spark):
-    """Scale fixture through the SHUFFLED raw-vs-ancestor path (1024
-    lines): (a) full equality against the numpy ``robust_crossing_vec``
+    """Scale fixture through the edge index lookup (1024 lines): (a)
+    full equality against the numpy ``robust_crossing_vec``
     oracle over all cross-line edge pairs, (b) exact equality against
     the scalar numpy oracle on a 64-line subsample, (c) no
     Cartesian/BNLJ in the plan."""

@@ -12,9 +12,11 @@ input computes the leaf encode over the same columns, both UDFs share
 that one node; so does the region-table twin, whose executor-built
 coverings are collected before the join is planned.  The polyline
 proximity and projection joins run the same kind of kernel, one Python
-node and no join.  The edge-crossing joins broadcast their region side
-and cross into Python once, for the refine.  Driver-built tables
-(coverings, region specs, edges) plan as local relations."""
+node and no join.  So do the edge-crossing joins: one Python node over
+the query edges (edge index lookup and robustCrossing refine), no join,
+and one exchange for the per-pair count.  Driver-built tables
+(coverings, region specs, query edges, media, lineage metrics) plan as
+local relations."""
 
 import re
 
@@ -25,14 +27,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField
 
 from s2_geometry_library_php_spark.functions import s2_cell_id
+from s2_geometry_library_php_spark.functions.multimodal import synth_media_table
 from s2_geometry_library_php_spark.operators.knn import (
     knn_join,
     probe_rings,
     ring_round_topk,
 )
 from s2_geometry_library_php_spark.operators.polyline_join import (
-    _unit_vertices,
-    edge_table,
     polyline_project_join,
     polyline_proximity_join,
     polyline_region_crossing_join,
@@ -54,6 +55,7 @@ from s2_geometry_library_php_spark.operators.spatial_join import (
     spatial_join,
     spatial_join_region_table,
 )
+from s2_geometry_library_php_spark.plans.lineage import LineageLog
 from s2_geometry_library_php_spark.s2core import cellid as cid
 from s2_geometry_library_php_spark.sources import region_fixtures
 
@@ -235,16 +237,19 @@ def test_spatial_join_shares_the_encodes_python_node(spark, points):
     assert _udf_filters_under_python(nodes) == []
 
 
-def test_driver_built_tables_are_local_relations(spark, encoded):
-    """Coverings, region specs, edges, measure fans, region rects and
-    blocks, and running-sum offsets ship as Arrow local relations: no
-    PythonRDD scan that pickles rows through the workers."""
+def test_driver_built_tables_are_local_relations(spark, encoded, tmp_path):
+    """Coverings, region specs, measure fans, region rects and blocks,
+    running-sum offsets, the synthetic media table and lineage metric
+    rows ship as Arrow local relations: no PythonRDD scan that pickles
+    rows through the workers."""
     regions = region_fixtures()
     lines = [{"line_id": 1, "vertices": [[0.0, -30.0], [10.0, -20.0], [20.0, -20.0]]}]
+    metrics = [("job", "stage", 7, 10, 3, "done", 0.5, 1.0)]
     frames = [
         build_covering_table(spark, regions),
         regions_to_df(spark, regions),
-        edge_table(spark, [(1, _unit_vertices(lines[0]["vertices"]), False)]),
+        synth_media_table(spark, 6, real_payloads=True),
+        LineageLog(spark, str(tmp_path), "job")._metrics_frame(metrics),
     ]
     loop = next(r for r in regions if r["kind"] == "loop")
     frames += [
@@ -309,25 +314,25 @@ def test_polyline_project_join_projects_once(spark, encoded):
         assert _udf_filters_under_python(nodes) == []
 
 
-def test_crossing_joins_broadcast_the_region_side_and_refine_once(spark):
-    """The region join plans the boundary edges (both key arms and the
-    endpoint fetch) only through broadcasts, before any run-time
-    re-planning; each crossing join crosses into Python once, for the
-    robustCrossing refine."""
+def test_crossing_joins_look_up_and_refine_in_one_crossing(spark):
+    """Each crossing join scans its query edges as a local relation,
+    crosses into Python once (the edge index lookup and the
+    robustCrossing refine) and shuffles once, for the per-pair count:
+    no join node of any kind."""
     lines = [
         {"line_id": 1, "vertices": [[42.0, -77.0], [42.0, -72.0]]},
         {"line_id": 2, "vertices": [[40.0, -74.5], [44.0, -74.5]]},
     ]
-    df = polyline_region_crossing_join(spark, lines, region_fixtures())
-    region = _planned_nodes(df)
-    region_side = [
-        i
-        for i, (_, t) in enumerate(region)
-        if t.startswith("Project") and re.search(r" AS (region_id|cx)#", t)
-    ]
-    assert len(region_side) >= 2
-    for i in region_side:
-        assert any(t.startswith("BroadcastExchange") for t in _ancestors(region, i))
-    for nodes in (_executed_nodes(df), _executed_nodes(polyline_self_crossing_join(spark, lines))):
+    joins = (
+        polyline_region_crossing_join(spark, lines, region_fixtures()),
+        polyline_self_crossing_join(spark, lines),
+    )
+    for df in joins:
+        nodes = _executed_nodes(df)
         python = _python_nodes(nodes)
-        assert len(python) == 1 and python[0].startswith("ArrowEvalPython [_crosses(")
+        assert len(python) == 1 and python[0].startswith("ArrowEvalPython [crossings(")
+        assert [t for _, t in nodes if re.match(r"\w*(Join|CartesianProduct)\b", t)] == []
+        assert len(_names(nodes, "Exchange")) == 1
+        assert _names(nodes, "LocalTableScan")
+        assert _names(nodes, "Scan ExistingRDD") == []
+        assert _udf_filters_under_python(nodes) == []

@@ -13,9 +13,9 @@ and cited in README:
 * kNN ring round: ONE ArrowEvalPython (the ring kernel: encode, ring
   lookup and batch-local top-k) -> explode_outer of the survivors ->
   broadcast probe join; the window's sorts see only the survivors;
-* edge-crossing joins: hash equi-joins of ancestor-or-self keys
-  against raw covering cells (the region join broadcasts its boundary
-  side, the self join shuffles both) and one ArrowEvalPython refine;
+* edge-crossing joins: the query edges' local relation -> ONE
+  ArrowEvalPython (edge index lookup + robustCrossing refine) ->
+  explode_outer -> one count around one exchange; no join;
 * parquet scans show PushedFilters / narrow ReadSchema (column
   pruning drops text/html when not selected);
 * bitwise tile math stays inside WholeStageCodegen (no Python), and
@@ -135,11 +135,11 @@ def main() -> None:
     )
     plans.append(
         (
-            "polyline x region-boundary crossing join (driver-built edge "
-            "table; polyline ancestor-or-self keys x broadcast raw boundary "
-            "cells UNION raw polyline cells x broadcast boundary ancestor "
-            "keys, distinct; endpoint fetch, the boundary side broadcast; "
-            "one ArrowEvalPython robustCrossing refine)",
+            "polyline x region-boundary crossing join (polyline edges as "
+            "a local relation into one ArrowEvalPython: each edge's "
+            "lookup in the boundary edge index held in its closure and "
+            "the robustCrossing refine; explode_outer, one count around "
+            "one exchange; no join)",
             polyline_region_crossing_join(
                 spark, synth_grid_lines(64), region_fixtures()
             ),
@@ -147,10 +147,9 @@ def main() -> None:
     )
     plans.append(
         (
-            "polyline self-crossing join (driver-built edge table; "
-            "ancestor-or-self keys x raw cells on a shuffled equi-join, no "
-            "broadcast hint, pairs normalized to line_a < line_b; one "
-            "ArrowEvalPython robustCrossing refine)",
+            "polyline self-crossing join (the same shape, the polylines' "
+            "own edges the index; each edge meets only edges of a greater "
+            "line id, so line_a < line_b; no join, one exchange)",
             polyline_self_crossing_join(spark, synth_grid_lines(1024)),
         )
     )
