@@ -1982,9 +1982,7 @@ FROM r WHERE rnk <= 3
     _ORACLE_CACHE["stateful_running_tiles"] = _ORACLE_CACHE["tile_counts_l8"]
 
     # cell-set difference vs the driver kernel
-    from s2_geometry_library_php_spark.operators.spatial_join import (
-        cell_union_difference,
-    )
+    from s2_geometry_library_php_spark.s2core.coverer import cell_union_difference
 
     diff_kernel = cell_union_difference(list(a_cov), list(b_cov))
     _ORACLE_CACHE["cell_difference"] = _values_sql(

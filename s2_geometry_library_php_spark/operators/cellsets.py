@@ -1,38 +1,53 @@
 """Distributed cell-set algebra over exploded cell-id DataFrames.
 
 The reference's ``S2CellUnion`` set operations (getUnion /
-getIntersection / normalize, S2CellUnion.php:227-313,591-661) work on
-in-memory sorted vectors; these are the shuffle-conscious Spark
-equivalents for data-driven cell sets too large for the driver:
+getIntersection / getDifference / normalize, S2CellUnion.php:227-313,
+591-661) work on in-memory sorted vectors; these are the Spark
+equivalents for data-driven cell sets too large for the driver.  No
+operation loops on the driver:
 
 * :func:`normalize_cells` — drop contained cells with ONE window pass
-  (running-max of range_max over the unsigned Hilbert order), then
-  collapse complete 4-sibling groups level-by-level (groupBy parent
-  having count 4 — each iteration consumes the previous, already
-  reduced, output).
+  (running max of range_max over the unsigned Hilbert order), which
+  leaves the cells disjoint; then ONE explode-and-aggregate finds every
+  fully covered cell: each cell expands to itself and its ancestors
+  with its leaf count ``cell & -cell``, and a cell ``p`` whose summed
+  leaf counts reach ``p & -p`` is full.  The result is the full cells,
+  less the contained ones.
 * :func:`cells_union` — unionAll + normalize.
-* :func:`cells_intersection` — for normalized inputs, the intersection
-  is exactly: cells of A contained in some B-cell, plus cells of B
-  strictly contained in some A-cell (range-containment equi/broadcast
-  join, no geometry).
+* :func:`cells_intersection` — B is collected once and held sorted in
+  one Arrow UDF's closure; each A cell looks up the B cells equal to,
+  containing or inside it (``cellid.cell_pairs``), and the finer cell
+  of each pair is a piece of the intersection.  A streams.
+* :func:`cells_difference` — A \\ B = A ∩ complement(B), the
+  complement built on the driver from B, then normalized.
 * :func:`cells_contain_point` — leaf membership via the range test.
 
-Scale shape: one shuffle (the window sort) + K tiny groupBys for K
-levels present.  All id math is JVM bitwise expressions.
+Scale shape: normalize is two window sorts around one aggregation; the
+intersection and the difference are one Arrow UDF over A and one
+dedup shuffle, plus the one collect of B.  The sums fit in a long: the
+largest, a face's, is 2^60.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.sql_bitops import (
-    s2_level,
-    s2_parent,
     s2_range_max,
     s2_range_min,
     s2_unsigned_order,
 )
+from ..s2core import arrow_io as aio
+from ..s2core import cellid as cid
+from ..s2core.coverer import cell_union_difference
+
+_FACES = [(face << 61) | (1 << 60) for face in range(6)]
+# leaf counts of the levels 0..30, the lowest set bit of a cell there
+_LEVEL_LSBS = ", ".join(f"{1 << 2 * (cid.MAX_LEVEL - k)}L" for k in range(cid.MAX_LEVEL + 1))
 
 
 def _with_ranges(df: DataFrame, cell_col: str) -> DataFrame:
@@ -44,207 +59,127 @@ def _with_ranges(df: DataFrame, cell_col: str) -> DataFrame:
     )
 
 
-def drop_contained_cells(
-    df: DataFrame, cell_col: str = "cell_id", keys: list[str] | None = None
-) -> DataFrame:
-    """Remove cells contained in another cell of the same set (first
-    half of normalize, S2CellUnion.php:600-615).
+def drop_contained_cells(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
+    """Remove null, repeated and contained cells (first half of
+    normalize, S2CellUnion.php:600-615).
 
     A cell is contained in an earlier one (unsigned range_min order)
     iff the running max of range_max over its predecessors already
     reaches its range_max."""
-    keys = keys or []
     w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("_ord").asc(), F.col("_ord_max").desc())
+        Window.orderBy(F.col("_ord").asc(), F.col("_ord_max").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    ranged = _with_ranges(df.dropDuplicates(keys + [cell_col]), cell_col)
+    cells = df.where(F.col(cell_col).isNotNull()).dropDuplicates([cell_col])
     running = F.max("_ord_max").over(w)
     return (
-        ranged.withColumn("_prev_max", running)
+        _with_ranges(cells, cell_col)
+        .withColumn("_prev_max", running)
         .where(F.col("_prev_max").isNull() | (F.col("_prev_max") < F.col("_ord_max")))
         .drop("_rmin", "_rmax", "_ord", "_ord_max", "_prev_max")
     )
 
 
-def collapse_siblings(
-    df: DataFrame,
-    cell_col: str = "cell_id",
-    keys: list[str] | None = None,
-    max_iterations: int = 31,
-) -> DataFrame:
-    """Replace complete 4-sibling groups by their parent, repeating
-    level-by-level until a fixpoint (second half of normalize,
-    S2CellUnion.php:619-643).  Each iteration only touches the deepest
-    remaining level, so the loop runs at most (max level present)
-    times on ever-smaller data."""
-    keys = keys or []
-    out = df.select(*keys, cell_col)
-    levels = {
-        int(r.lv)
-        for r in out.select(s2_level(F.col(cell_col)).alias("lv"))
-        .distinct()
-        .collect()
-        if r.lv is not None
-    }
-    if not levels:
-        return out
-    # Sweep levels deepest-first (only levels that can actually hold
-    # rows): collapsing level L can complete a sibling group at L-1,
-    # which the next pass picks up.
-    processed = 0
-    while levels:
-        lv = max(levels)
-        levels.discard(lv)
-        if lv == 0:
-            break
-        at_level = out.where(s2_level(F.col(cell_col)) == lv)
-        rest = out.where(s2_level(F.col(cell_col)) != lv)
-        grouped = at_level.groupBy(
-            *keys, s2_parent(F.col(cell_col), lv - 1).alias("_parent")
-        ).agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.collect_list(cell_col).alias("_members"),
+def normalize_cells(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
+    """Full distributed S2CellUnion.normalize (S2CellUnion.php:591-661):
+    every fully covered cell, less the contained ones.  The disjoint
+    cells (:func:`drop_contained_cells`) each expand to themselves and
+    their ancestors at levels 0..level-1 with their leaf count; a cell
+    whose leaf counts sum to its own is full.  That is the 4-sibling
+    collapse of every level at once."""
+    cells = drop_contained_cells(df.select(cell_col), cell_col)
+    c = f"`{cell_col}`"
+    self_and_ancestors = F.expr(
+        f"transform(filter(array({_LEVEL_LSBS}), m -> m >= ({c} & -{c})), "
+        f"m -> ({c} & -m) | m)"
+    )
+    full = (
+        cells.select(
+            F.explode(self_and_ancestors).alias(cell_col),
+            F.col(cell_col).bitwiseAND(-F.col(cell_col)).alias("_n"),
         )
-        collapsed = grouped.where(F.col("_n") == 4).select(
-            *keys, F.col("_parent").alias(cell_col)
-        )
-        kept = grouped.where(F.col("_n") < 4).select(
-            *keys, F.explode("_members").alias(cell_col)
-        )
-        out = rest.unionByName(kept).unionByName(collapsed)
-        levels.add(lv - 1)  # collapse may create parents one level up
-        processed += 1
-        if processed % 4 == 0:
-            # keep the iterative plan from growing unbounded
-            out = out.localCheckpoint(eager=True)
-    return out
+        .groupBy(cell_col)
+        .agg(F.sum("_n").alias("_n"))
+        .where(F.col("_n") == F.col(cell_col).bitwiseAND(-F.col(cell_col)))
+    )
+    return drop_contained_cells(full.select(cell_col), cell_col)
 
 
-def normalize_cells(
-    df: DataFrame, cell_col: str = "cell_id", keys: list[str] | None = None
-) -> DataFrame:
-    """Full distributed S2CellUnion.normalize (drop contained +
-    sibling collapse + re-drop)."""
-    out = drop_contained_cells(df, cell_col, keys)
-    out = collapse_siblings(out, cell_col, keys)
-    # collapsing can create a parent that now contains other cells
-    return drop_contained_cells(out, cell_col, keys)
+def cells_union(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") -> DataFrame:
+    return normalize_cells(a.select(cell_col).unionByName(b.select(cell_col)), cell_col)
 
 
-def cells_union(
-    a: DataFrame, b: DataFrame, cell_col: str = "cell_id",
-    keys: list[str] | None = None,
-) -> DataFrame:
-    keys = keys or []
-    cols = keys + [cell_col]
-    return normalize_cells(
-        a.select(*cols).unionByName(b.select(*cols)), cell_col, keys
+def _pieces_udf(cells: np.ndarray):
+    """An Arrow UDF ``pieces(cell)`` over cell ids: per row, the finer
+    cell of each pair of it and one of ``cells`` (uint64, sorted,
+    distinct) equal to, containing or inside it
+    (``cellid.cell_pairs``).  A null row has no pieces.  The cells ride
+    in its closure."""
+    levels = sorted({int(x) for x in cid.level_of(cells)})
+
+    @F.arrow_udf(ArrayType(LongType()))
+    def pieces(cell: pa.Array) -> pa.Array:
+        ids = cid.from_signed(aio.int64_values(cell))
+        valid = aio.valid_mask(cell)
+        at = np.arange(len(ids)) if valid is None else np.flatnonzero(valid)
+        row, idx = cid.cell_pairs(cells, ids[at], levels)
+        mine, other = ids[at][row], cells[idx]
+        piece = np.where(cid.lowest_on_bit(mine) < cid.lowest_on_bit(other), mine, other)
+        row = at[row]
+        order = np.argsort(row, kind="stable")
+        offsets = np.searchsorted(row[order], np.arange(len(ids) + 1))
+        return aio.list_array(offsets, aio.array(cid.to_signed(piece[order])))
+
+    return pieces
+
+
+def _collect_cells(df: DataFrame, cell_col: str) -> np.ndarray:
+    """The distinct non-null cells of ``df`` as sorted uint64: one job."""
+    column = df.select(cell_col).where(F.col(cell_col).isNotNull()).toArrow().column(0)
+    return np.unique(cid.from_signed(column.to_numpy()))
+
+
+def _intersect(a: DataFrame, cells: np.ndarray, cell_col: str) -> DataFrame:
+    """The pieces (:func:`_pieces_udf`) of ``a``'s cells against
+    ``cells``, each once."""
+    pieces = _pieces_udf(cells)(F.col(cell_col))
+    # explode_outer + an explicit not-null filter, not an inner explode
+    # (spatial_join.probe_join): an inner explode runs the UDF twice.
+    return (
+        a.select(F.explode_outer(pieces).alias(cell_col))
+        .where(F.col(cell_col).isNotNull())
+        .dropDuplicates([cell_col])
     )
 
 
-def cells_intersection(
-    a: DataFrame, b: DataFrame, cell_col: str = "cell_id"
-) -> DataFrame:
+def cells_intersection(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     """Intersection of two NORMALIZED cell sets: pure integer range
-    containment, no geometry (S2CellUnion.php:267-313 semantics)."""
-    ar = _with_ranges(a.select(cell_col), cell_col).select(
-        F.col(cell_col).alias("_a"), F.col("_ord").alias("_a_lo"),
-        F.col("_ord_max").alias("_a_hi"),
-    )
-    br = _with_ranges(b.select(cell_col), cell_col).select(
-        F.col(cell_col).alias("_b"), F.col("_ord").alias("_b_lo"),
-        F.col("_ord_max").alias("_b_hi"),
-    )
-    a_in_b = ar.join(
-        F.broadcast(br),
-        (F.col("_a_lo") >= F.col("_b_lo")) & (F.col("_a_hi") <= F.col("_b_hi")),
-    ).select(F.col("_a").alias(cell_col))
-    b_in_a = br.join(
-        F.broadcast(ar),
-        (F.col("_b_lo") >= F.col("_a_lo")) & (F.col("_b_hi") <= F.col("_a_hi")),
-    ).select(F.col("_b").alias(cell_col))
-    # identical cells appear in both arms; dedup collapses them
-    return a_in_b.unionByName(b_in_a).dropDuplicates([cell_col])
-
-
-def cells_difference(
-    a: DataFrame, b: DataFrame, cell_col: str = "cell_id",
-    max_iterations: int = 31,
-) -> DataFrame:
-    """A \\ B for NORMALIZED cell sets (S2CellUnion getDifference
-    semantics, S2CellUnion.php:227-313 family), distributed.
-
-    Quadtree ranges are aligned, so two cells' ranges intersect iff
-    one contains the other.  Per round, each frontier cell joins the
-    broadcast B ranges and is classified: disjoint from all of B ->
-    emit; contained in some B cell -> drop; else (it strictly contains
-    B cells) -> split into its 4 children and retry.  Depth is bounded
-    by max level present in B, and the frontier shrinks geometrically;
-    result is re-normalized (sibling collapse) like the reference's
-    ``Init``-on-result.
+    containment, no geometry (S2CellUnion.php:267-313 semantics).
+    Quadtree ranges are aligned, so two cells meet iff one contains
+    the other, and then the finer one is their intersection.
 
     Scale contract: **B must be broadcast-sized** (a normalized
-    covering — thousands of cells, not a data-driven tiling).  The
-    range-overlap predicate makes each round a
-    BroadcastNestedLoopJoin, O(|frontier| x |B|); A may be arbitrarily
-    large (it streams).  For a large B, first coarsen B to an
-    equi-joinable ancestor key (parent at B's min level) and hash-join
-    on that before the range refine."""
-    br = _with_ranges(b.select(cell_col), cell_col).select(
-        F.col("_ord").alias("_b_lo"), F.col("_ord_max").alias("_b_hi")
-    )
-    spark = a.sparkSession
-    frontier = a.select(cell_col)
-    result: DataFrame | None = None
-    empty = spark.createDataFrame([], f"{cell_col} long")
-    for it in range(max_iterations):
-        fr = _with_ranges(frontier, cell_col)
-        flags = (
-            fr.join(
-                F.broadcast(br),
-                (F.col("_ord") <= F.col("_b_hi"))
-                & (F.col("_ord_max") >= F.col("_b_lo")),
-                "left",
-            )
-            .groupBy(cell_col, "_ord", "_ord_max")
-            .agg(
-                F.max(
-                    (F.col("_b_lo") <= F.col("_ord"))
-                    & (F.col("_b_hi") >= F.col("_ord_max"))
-                ).alias("_contained"),
-                F.max(F.col("_b_lo").isNotNull()).alias("_overlaps"),
-            )
-        )
-        keep = flags.where(~F.col("_overlaps")).select(cell_col)
-        result = keep if result is None else result.unionByName(keep)
-        split = flags.where(
-            F.col("_overlaps") & ~F.coalesce(F.col("_contained"), F.lit(False))
-        ).select(cell_col)
-        if split.isEmpty():
-            break
-        # 4 children: child_k = id - lsb + (2k+1) * (lsb >> 2)
-        lsb = F.expr(f"{cell_col} & -{cell_col}")
-        nl = F.shiftright(lsb, 2)
-        frontier = split.select(
-            F.explode(
-                F.array(
-                    *[
-                        (F.col(cell_col) - lsb + F.lit(2 * k + 1) * nl).alias(
-                            f"c{k}"
-                        )
-                        for k in range(4)
-                    ]
-                )
-            ).alias(cell_col)
-        )
-        if (it + 1) % 4 == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-            result = result.localCheckpoint(eager=True)
-    if result is None:
-        return empty
-    return normalize_cells(result, cell_col)
+    covering, thousands of cells): it is collected once and looked up
+    inside one Arrow UDF over A (:func:`_pieces_udf`); A streams."""
+    return _intersect(a, _collect_cells(b, cell_col), cell_col)
+
+
+def cells_difference(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") -> DataFrame:
+    """A \\ B for NORMALIZED cell sets (S2CellUnion getDifference
+    semantics, S2CellUnion.php:227-313 family), as A ∩ complement(B),
+    normalized like the reference's ``Init``-on-result.
+
+    The complement is the six face cells less B, split on the driver
+    (``coverer.cell_union_difference``): each B cell at level L leaves
+    at most 3 siblings at each of the L levels above it, so the
+    complement has at most 3·30·|B| + 6 cells.  It then takes the
+    intersection's lookup (:func:`_pieces_udf`) over A.
+
+    Scale contract: **B must be broadcast-sized**, as for
+    :func:`cells_intersection`; A streams."""
+    complement = cell_union_difference(_FACES, _collect_cells(b, cell_col).tolist())
+    cells = np.array(complement, dtype=np.uint64)
+    return normalize_cells(_intersect(a, cells, cell_col), cell_col)
 
 
 def cells_contain_point(

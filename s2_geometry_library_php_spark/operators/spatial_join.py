@@ -61,7 +61,6 @@ import tempfile
 from importlib import resources
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,8 +77,7 @@ from .. import s2core
 from ..plans.session import local_relation
 from ..s2core import arrow_io as aio
 from ..s2core import cellid as cid
-from ..s2core.cell import Cell
-from ..s2core.coverer import RegionCoverer, normalize_cell_union
+from ..s2core.coverer import covering_rows
 from ..s2core.probe import CoveringProbe
 from ..s2core.region import Region, region_from_params
 
@@ -101,41 +99,6 @@ COVERING_SCHEMA = StructType(
 # denormalize S2CellUnion.php:111-135) produces grid-conformant
 # coverings natively: min 4, mod 3 -> levels {4, 7, 10, 13}.
 JOIN_LEVEL_GRID = (4, 7, 10, 13)
-
-
-def covering_rows(
-    region: Region,
-    region_id: int,
-    max_cells: int,
-    min_level: int,
-    max_level: int,
-    level_mod: int,
-) -> list[tuple[int, int, int, bool]]:
-    """One region's covering rows: (region_id, cell_id_signed, level,
-    is_interior).
-
-    The exterior covering (disjoint, grid-conformant via the coverer's
-    min_level/level_mod) is the candidate set; each cell is then
-    flagged ``is_interior`` with an exact region.contains_cell test —
-    the interior/exterior refine split (S2RegionCoverer.php:257-267)
-    without a second covering pass.  Disjointness guarantees a probe
-    matches at most one covering row per region, so the join needs no
-    dedup shuffle."""
-    exterior = RegionCoverer(
-        min_level=min_level,
-        max_level=max_level,
-        level_mod=level_mod,
-        max_cells=max_cells,
-    ).get_covering(region)
-    return [
-        (
-            region_id,
-            cid.to_signed_scalar(c),
-            cid.level_scalar(c),
-            bool(region.contains_cell(Cell(c))),
-        )
-        for c in exterior
-    ]
 
 
 def compute_coverings(
@@ -224,46 +187,6 @@ def _disk_cache_store(key, rows) -> None:
         os.replace(tmp, path)
     except OSError:
         pass
-
-
-def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
-    """Cell set A \\ B (S2CellUnion getDifference semantics,
-    S2CellUnion.php:227-313 family): split A cells recursively until
-    disjoint from or contained in B."""
-    if not b_cells:
-        return [x & 0xFFFFFFFFFFFFFFFF for x in a_cells]
-    b_ranges = sorted(
-        tuple(r & 0xFFFFFFFFFFFFFFFF for r in cid.range_scalar(c))
-        for c in (x & 0xFFFFFFFFFFFFFFFF for x in b_cells)
-    )
-
-    def overlaps(lo: int, hi: int) -> str:
-        # returns 'none' | 'full' | 'partial' vs the b range set
-        for blo, bhi in b_ranges:
-            if bhi < lo:
-                continue
-            if blo > hi:
-                break
-            if blo <= lo and hi <= bhi:
-                return "full"
-            return "partial"
-        return "none"
-
-    out: list[int] = []
-
-    def rec(c: int) -> None:
-        state = overlaps(*cid.range_scalar(c))
-        if state == "full":
-            return
-        if state == "none" or cid.lsb_scalar(c) == 1:  # a partial leaf is kept
-            out.append(c)
-            return
-        for child in cid.children_scalar(c):
-            rec(child)
-
-    for c in (x & 0xFFFFFFFFFFFFFFFF for x in a_cells):
-        rec(c)
-    return normalize_cell_union(out)
 
 
 def build_covering_table(
@@ -464,25 +387,38 @@ def build_covering_table_distributed(
     level_mod: int = 3,
 ) -> DataFrame:
     """Distributed twin of :func:`build_covering_table`: the coverer
-    kernel runs INSIDE executors via mapInPandas over the region
-    dimension table, so a large region set covers in parallel.  Output
-    schema matches COVERING_SCHEMA."""
+    kernel runs INSIDE executors via mapInArrow over the region
+    dimension table (:func:`covering_batches`), so a large region set
+    covers in parallel.  Output schema matches COVERING_SCHEMA."""
+    return regions_df.mapInArrow(
+        covering_batches(max_cells, min_level, max_level, level_mod), COVERING_SCHEMA
+    )
+
+
+def covering_batches(max_cells: int, min_level: int, max_level: int, level_mod: int):
+    """The mapInArrow generator of :func:`build_covering_table_distributed`:
+    region-table batches (REGION_TABLE_SCHEMA) in, their
+    ``covering_rows`` out as COVERING_SCHEMA batches.  It reads and
+    writes Arrow through ``s2core``, so the worker imports no pandas."""
+    names = COVERING_SCHEMA.fieldNames()
+    dtypes = (np.int64, np.int64, np.int32, bool)
 
     def gen(batches):
-        for pdf in batches:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                offsets = None if row.loop_offsets is None else list(row.loop_offsets)
-                rows.extend(
-                    covering_rows(
-                        region_from_params(row.kind, list(row.params), offsets),
-                        int(row.region_id),
-                        max_cells, min_level, max_level, level_mod,
-                    )
+        for batch in batches:
+            rows = [
+                row
+                for spec in batch.to_pylist()
+                for row in covering_rows(
+                    region_from_params(spec["kind"], spec["params"], spec["loop_offsets"]),
+                    spec["region_id"], max_cells, min_level, max_level, level_mod,
                 )
-            yield pd.DataFrame(rows, columns=COVERING_SCHEMA.fieldNames())
+            ]
+            cols = list(zip(*rows)) or [()] * len(names)
+            yield pa.RecordBatch.from_arrays(
+                [aio.array(np.array(c, dtype=t)) for c, t in zip(cols, dtypes)], names=names
+            )
 
-    return regions_df.mapInPandas(gen, COVERING_SCHEMA)
+    return gen
 
 
 def spatial_join_region_table(

@@ -7,7 +7,10 @@ Faithful re-derivation of:
   (S2RegionCoverer.php:189-471, priority S2RegionCoverer.php:328),
 * interior coverings (the commented variant,
   S2RegionCoverer.php:214-233, branch logic 249-277, 447-466),
+* the join's covering rows (:func:`covering_rows`): the exterior
+  covering with each cell flagged interior or boundary,
 * ``S2CellUnion.normalize`` 4-sibling collapse (S2CellUnion.php:591-661),
+* ``getDifference`` by recursive split (S2CellUnion.php:227-313),
 * ``denormalize`` (S2CellUnion.php:111-135),
 * ``expand`` buffering (S2CellUnion.php:354-415) via the restored
   8-neighborhood helper,
@@ -24,6 +27,7 @@ deterministic tie-break, S2RegionCoverer.php:54-64).
 
 from __future__ import annotations
 
+import bisect
 import heapq
 
 import numpy as np
@@ -227,6 +231,41 @@ class RegionCoverer:
         self._region = None
 
 
+def covering_rows(
+    region: Region,
+    region_id: int,
+    max_cells: int,
+    min_level: int,
+    max_level: int,
+    level_mod: int,
+) -> list[tuple[int, int, int, bool]]:
+    """One region's covering rows: (region_id, cell_id_signed, level,
+    is_interior).
+
+    The exterior covering (disjoint, grid-conformant via the coverer's
+    min_level/level_mod) is the candidate set; each cell is then
+    flagged ``is_interior`` with an exact region.contains_cell test —
+    the interior/exterior refine split (S2RegionCoverer.php:257-267)
+    without a second covering pass.  Disjointness guarantees a probe
+    matches at most one covering row per region, so the join needs no
+    dedup shuffle."""
+    exterior = RegionCoverer(
+        min_level=min_level,
+        max_level=max_level,
+        level_mod=level_mod,
+        max_cells=max_cells,
+    ).get_covering(region)
+    return [
+        (
+            region_id,
+            cid.to_signed_scalar(c),
+            cid.level_scalar(c),
+            bool(region.contains_cell(Cell(c))),
+        )
+        for c in exterior
+    ]
+
+
 # --- cell union algebra -----------------------------------------------------------
 def _u(x) -> int:
     """Unsigned sort key of a python-int cell id."""
@@ -268,6 +307,32 @@ def normalize_cell_union(ids: list[int]) -> list[int]:
 
 def _is_face(i: int) -> bool:
     return (i & ((1 << 60) - 1)) == 0
+
+
+def cell_union_difference(a_cells: list[int], b_cells: list[int]) -> list[int]:
+    """Cell set A \\ B, normalized (S2CellUnion getDifference
+    semantics, S2CellUnion.php:227-313 family): each A cell is split
+    recursively until it is disjoint from or contained in B.  B is
+    normalized first, so its ranges are disjoint and sorted: a cell
+    meets some B cell iff it meets the last one that starts before its
+    end, found by bisection."""
+    b = normalize_cell_union(b_cells)
+    lo = [cid.range_scalar(c)[0] for c in b]
+    hi = [cid.range_scalar(c)[1] for c in b]
+    out: list[int] = []
+
+    def rec(c: int) -> None:
+        c_lo, c_hi = cid.range_scalar(c)
+        k = bisect.bisect_right(lo, c_hi) - 1  # the last B cell starting in or before c
+        if k < 0 or hi[k] < c_lo:
+            out.append(c)  # disjoint from B
+        elif lo[k] > c_lo or hi[k] < c_hi:  # B cell k lies strictly inside c
+            for child in cid.children_scalar(c):
+                rec(child)
+
+    for c in a_cells:
+        rec(_u(c))
+    return normalize_cell_union(out)
 
 
 def denormalize(ids: list[int], min_level: int, level_mod: int) -> list[int]:

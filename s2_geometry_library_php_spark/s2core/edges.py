@@ -3,7 +3,7 @@ kernels).
 
 * :func:`edge_covering` — the reference's edge-index covering
   (S2EdgeIndex.php:306-375): ideal level from MIN_WIDTH of the
-  (optionally thickened) edge length; the smallest containing cell if
+  thickened edge length; the smallest containing cell if
   tight enough, else the 4 vertex neighbors of the edge midpoint.
 * :func:`polyline_covering` — per-edge coverings, normalized; the
   build side of a polyline x region / polyline x points join.
@@ -52,32 +52,14 @@ def _containing_cell(*points: np.ndarray) -> int | None:
     return cells[0] if len(set(cells)) == 1 else None
 
 
-def edge_covering(
-    a: np.ndarray, b: np.ndarray, thicken_edge: bool = False
-) -> tuple[list[int], int]:
+def edge_covering(a: np.ndarray, b: np.ndarray) -> tuple[list[int], int]:
     """Cover one geodesic edge; returns (cells, level)
     (S2EdgeIndex.php:306-375)."""
     a = geom.normalize(np.asarray(a, dtype=np.float64))
     b = geom.normalize(np.asarray(b, dtype=np.float64))
     edge_length = float(geom.angle_between(a, b))
     ideal_level = MIN_WIDTH.get_max_level(edge_length * (1 + 2 * THICKENING))
-
-    if not thicken_edge:
-        containing = _containing_cell(a, b)
-    else:
-        if ideal_level == cid.MAX_LEVEL:
-            containing = None  # tiny edge: force the midpoint covering
-        else:
-            pq = (b - a) * THICKENING
-            ortho = (
-                geom.normalize(np.cross(pq, a)) * edge_length * THICKENING
-            )
-            p = a - pq
-            q = b + pq
-            containing = _containing_cell(
-                p - ortho, p + ortho, q - ortho, q + ortho
-            )
-
+    containing = _containing_cell(a, b)
     if containing is not None and cid.level_scalar(containing) >= ideal_level - 2:
         return [containing], cid.level_scalar(containing)
 

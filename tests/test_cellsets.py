@@ -1,10 +1,10 @@
 """Distributed cell-set algebra vs the driver-side kernel reference."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from s2_geometry_library_php_spark.operators.cellsets import (
     cells_contain_point,
+    cells_difference,
     cells_intersection,
     cells_union,
     normalize_cells,
@@ -12,6 +12,7 @@ from s2_geometry_library_php_spark.operators.cellsets import (
 from s2_geometry_library_php_spark.s2core import cellid as cid
 from s2_geometry_library_php_spark.s2core.coverer import (
     RegionCoverer,
+    cell_union_difference,
     normalize_cell_union,
 )
 from s2_geometry_library_php_spark.s2core.region import CapRegion
@@ -23,8 +24,9 @@ def _sig(u):
 
 
 def _to_df(spark, cells):
+    """A ``cell_id`` frame; a None cell is a null row."""
     return spark.createDataFrame(
-        [(int(_sig(c)),) for c in cells], "cell_id long"
+        [(None if c is None else int(_sig(c)),) for c in cells], "cell_id long"
     )
 
 
@@ -32,6 +34,43 @@ def _from_df(df):
     return sorted(
         int(r.cell_id) & 0xFFFFFFFFFFFFFFFF for r in df.collect()
     )
+
+
+def _cap_pairs(seed, n=3):
+    """``n`` pairs of cap coverings at random places, sizes and cell
+    budgets, the second cap near the first: they overlap, nest or miss."""
+    rng = np.random.default_rng(seed)
+    pairs = []
+    for _ in range(n):
+        lat, lng = rng.uniform(-80, 80), rng.uniform(-180, 180)
+        caps = [
+            CapRegion(lat, lng, rng.uniform(0.005, 0.1)),
+            CapRegion(lat + rng.normal(0, 3), lng + rng.normal(0, 3), rng.uniform(0.005, 0.1)),
+        ]
+        a, b = (RegionCoverer(max_cells=int(rng.integers(4, 20))).get_covering(c) for c in caps)
+        pairs.append((list(a), list(b)))
+    return pairs
+
+
+def _messy(cells):
+    """``cells`` plus a repeated cell, the children of one, the parent
+    of another and a null."""
+    arr = np.asarray(cells, dtype=np.uint64)
+    children = cid.children_scalar(int(arr[0])) if cid.level_scalar(int(arr[0])) < 30 else []
+    parent = cid.parent1_scalar(int(arr[-1]))
+    return list(cells) + [int(arr[0])] + children + [parent, None]
+
+
+def _pairwise_intersection(a, b):
+    """Brute force: the finer cell of every nested or equal pair."""
+    out = set()
+    for x in a:
+        for y in b:
+            if cid.contains_scalar(x, y):
+                out.add(y)
+            elif cid.contains_scalar(y, x):
+                out.add(x)
+    return sorted(out)
 
 
 def test_normalize_cells_matches_kernel(spark):
@@ -54,6 +93,10 @@ def test_normalize_cells_matches_kernel(spark):
     expected = normalize_cell_union(messy)
     got = _from_df(normalize_cells(_to_df(spark, messy)))
     assert got == sorted(expected)
+    for a, b in _cap_pairs(11):
+        messy = _messy(a + b)
+        expected = normalize_cell_union([c for c in messy if c is not None])
+        assert _from_df(normalize_cells(_to_df(spark, messy))) == sorted(expected)
 
 
 def test_cells_union_matches_kernel(spark):
@@ -62,6 +105,11 @@ def test_cells_union_matches_kernel(spark):
     expected = normalize_cell_union(list(a) + list(b))
     got = _from_df(cells_union(_to_df(spark, a), _to_df(spark, b)))
     assert got == sorted(expected)
+    for a, b in _cap_pairs(12):
+        messy = _messy(a)
+        expected = normalize_cell_union([c for c in messy if c is not None] + b)
+        got = _from_df(cells_union(_to_df(spark, messy), _to_df(spark, b + [None])))
+        assert got == sorted(expected)
 
 
 def test_cells_intersection_covers_overlap_only(spark):
@@ -87,6 +135,11 @@ def test_cells_intersection_covers_overlap_only(spark):
         in_b = covered(b, leaf)
         in_i = covered(inter, leaf)
         assert in_i == (in_a and in_b)
+    assert inter == _pairwise_intersection(a, b)
+    # a null cell matches nothing, on either side
+    for a, b in _cap_pairs(13) + [(a, a)]:
+        got = _from_df(cells_intersection(_to_df(spark, a + [None]), _to_df(spark, b + [None])))
+        assert got == _pairwise_intersection(a, b)
 
 
 def test_cells_contain_point_semijoin(spark):
@@ -112,13 +165,6 @@ def test_cells_contain_point_semijoin(spark):
 
 
 def test_cells_difference_matches_kernel(spark):
-    from s2_geometry_library_php_spark.operators.cellsets import (
-        cells_difference,
-    )
-    from s2_geometry_library_php_spark.operators.spatial_join import (
-        cell_union_difference,
-    )
-
     a = RegionCoverer(max_cells=16).get_covering(CapRegion(0.0, 0.0, 0.08))
     b = RegionCoverer(max_cells=16).get_covering(CapRegion(2.0, 2.0, 0.08))
     for x, y in ((a, b), (b, a)):
@@ -131,3 +177,30 @@ def test_cells_difference_matches_kernel(spark):
     assert _from_df(
         cells_difference(_to_df(spark, a), _to_df(spark, far))
     ) == sorted(normalize_cell_union(list(a)))
+    for x, y in _cap_pairs(14):
+        expected = cell_union_difference(x, y)
+        got = _from_df(cells_difference(_to_df(spark, x + [None]), _to_df(spark, y + [None])))
+        assert got == sorted(expected)
+
+
+def test_cellset_frames_build_with_no_job_but_the_collect_of_b(spark):
+    """Building a result frame runs no Spark job, except the one collect
+    of B behind the intersection and the difference: no operation loops
+    on the driver, checks a frame for emptiness or checkpoints one."""
+    sc = spark.sparkContext
+    a, b = _cap_pairs(15, 1)[0]
+    a_df, b_df = _to_df(spark, a), _to_df(spark, b)
+    for name, build, jobs in (
+        ("normalize", lambda: normalize_cells(a_df), 0),
+        ("union", lambda: cells_union(a_df, b_df), 0),
+        ("intersection", lambda: cells_intersection(a_df, b_df), 1),
+        ("difference", lambda: cells_difference(a_df, b_df), 1),
+    ):
+        group = f"cellset-build-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are posted async
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, name

@@ -294,7 +294,7 @@ def test_region_table_join_shares_the_encodes_python_node(spark, points):
     assert "s2_cell_id(" in python[0] and "hits(" in python[0]
     assert _names(nodes, "BroadcastHashJoin") == []
     assert _names(nodes, "SortMergeJoin") == []
-    assert _names(nodes, "MapInPandas") == []
+    assert _names(nodes, "MapIn") == []
     assert _udf_filters_under_python(nodes) == []
 
 

@@ -6,8 +6,8 @@ covering cells, null, NaN and infinite coordinates) it agrees with
 brute-force containment and with the region-table join, one row per
 containing region; its answer does not depend on how the rows are
 batched; a worker unpickles it, the polyline kernels built on the
-same lookup and the S2 Arrow UDF shells without importing any operator
-module or pandas; the bbox prefilter
+same lookup, the S2 Arrow UDF shells and the region table's covering
+generator without importing any operator module or pandas; the bbox prefilter
 it runs behind is built in the same number of py4j calls for any
 region count; and a join builds each region once."""
 
@@ -26,6 +26,7 @@ from pyspark.sql.types import LongType, StructField
 
 from s2_geometry_library_php_spark.functions import s2_cell_id
 from s2_geometry_library_php_spark.functions.udfs import s2_ring_cells_udf
+from s2_geometry_library_php_spark.operators.cellsets import _pieces_udf
 from s2_geometry_library_php_spark.operators.knn import _ring_topk_udf, probe_rings
 from s2_geometry_library_php_spark.operators.polyline_join import (
     crossings_udf,
@@ -34,9 +35,11 @@ from s2_geometry_library_php_spark.operators.polyline_join import (
     projection_udf,
 )
 from s2_geometry_library_php_spark.operators.spatial_join import (
+    JOIN_LEVEL_GRID,
     bbox_prefilter_expr,
     build_regions,
     compute_coverings,
+    covering_batches,
     hits_udf,
     point_hits,
     region_hits,
@@ -160,7 +163,8 @@ def test_workers_unpickle_the_kernels_without_operator_modules(spark, adversaria
     arrays with no ``operators`` module and no pandas imported (a
     module-level helper from ``operators`` in a closure would import
     all of them; pyarrow's own numpy conversions import pandas), and
-    gets the driver's outputs."""
+    gets the driver's outputs.  So does the region table's mapInArrow
+    covering generator, which gives ``compute_coverings``' rows."""
     from pyspark import cloudpickle
 
     regions, lat, lon = adversarial
@@ -190,13 +194,17 @@ def test_workers_unpickle_the_kernels_without_operator_modules(spark, adversaria
         (_ring_topk_udf(ring, 4, 3).func, (a_lat, a_lon)),
         (projection_udf(lines, 0.2).func, (a_lat, a_lon)),
         (crossings_udf(edge_probe).func, edges),
+        (_pieces_udf(np.unique(cid.parent(leaf, 5))).func, (pa.array([None, *cid.to_signed(leaf)]),)),
     ]
+    gen = covering_batches(MAX_CELLS, JOIN_LEVEL_GRID[0], JOIN_LEVEL_GRID[-1], 3)
+    batches = regions_to_df(spark, regions).toArrow().to_batches()
     path = tmp_path / "kernels.pkl"
-    path.write_bytes(cloudpickle.dumps((kernels, lat, lon, calls)))
+    path.write_bytes(cloudpickle.dumps((kernels, lat, lon, calls, gen, batches)))
     code = (
         "import pickle, sys\n"
-        "kernels, lat, lon, calls = pickle.load(open(sys.argv[1], 'rb'))\n"
+        "kernels, lat, lon, calls, gen, batches = pickle.load(open(sys.argv[1], 'rb'))\n"
         "out = [k(lat, lon) for k in kernels], [f(*a) for f, a in calls]\n"
+        "out += (list(gen(iter(batches))),)\n"
         "pickle.dump(out, open(sys.argv[1] + '.out', 'wb'))\n"
         "print(sorted(m for m in sys.modules if m.startswith("
         "'s2_geometry_library_php_spark.operators')), 'pandas' in sys.modules)"
@@ -207,7 +215,7 @@ def test_workers_unpickle_the_kernels_without_operator_modules(spark, adversaria
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert run.stdout.strip() == "[] False"
-    (hits, near, projected), udf_out = pickle.loads(
+    (hits, near, projected), udf_out, covering = pickle.loads(
         (tmp_path / "kernels.pkl.out").read_bytes()
     )
     assert _lists(hits) == _brute_hits(regions, lat, lon)
@@ -218,6 +226,9 @@ def test_workers_unpickle_the_kernels_without_operator_modules(spark, adversaria
             assert got.equals(f(*args)), f.__name__
     assert len(udf_out[2].flatten()) > 0 and len(udf_out[3].flatten()) > 0
     assert 0 < len(udf_out[5].flatten()) < 200 * 200
+    assert udf_out[6].to_pylist() == [[]] + [[x] for x in cid.to_signed(leaf).tolist()]
+    rows = pa.Table.from_batches(covering).to_pylist()
+    assert [tuple(r.values()) for r in rows] == compute_coverings(regions, max_cells=MAX_CELLS)
 
 
 def test_spatial_join_matches_brute_force_and_region_table(spark, adversarial):

@@ -633,7 +633,7 @@ def test_planned_salting_targets_hot_tiles(spark, docs):
 
 
 def test_spatial_join_region_table_matches_driver_path(spark, docs):
-    """The region-table path (coverings via mapInPandas, collected with
+    """The region-table path (coverings via mapInArrow, collected with
     the region specs into the same kernel) must reproduce the
     driver-side join exactly."""
     from s2_geometry_library_php_spark.operators.spatial_join import (

@@ -16,6 +16,9 @@ and cited in README:
 * edge-crossing joins: the query edges' local relation -> ONE
   ArrowEvalPython (edge index lookup + robustCrossing refine) ->
   explode_outer -> one count around one exchange; no join;
+* cell-set union and difference: normalize is two window sorts around
+  one ancestor aggregate; the difference adds ONE ArrowEvalPython (the
+  lookup in B's complement) and no join;
 * parquet scans show PushedFilters / narrow ReadSchema (column
   pruning drops text/html when not selected);
 * bitwise tile math stays inside WholeStageCodegen (no Python), and
@@ -200,6 +203,43 @@ def main() -> None:
             ring_round_topk(
                 ring, docs.select("doc_id", "lat", "lon", "cell_id"), 5, 8
             ),
+        )
+    )
+
+    from s2_geometry_library_php_spark.operators.cellsets import (
+        cells_difference,
+        cells_union,
+    )
+    from s2_geometry_library_php_spark.s2core.coverer import RegionCoverer
+    from s2_geometry_library_php_spark.s2core.region import CapRegion
+
+    cells_a, cells_b = (
+        spark.createDataFrame(
+            [
+                (cid.to_signed_scalar(c),)
+                for c in RegionCoverer(max_cells=12).get_covering(CapRegion(lat, lat, 0.05))
+            ],
+            "cell_id long",
+        )
+        for lat in (0.0, 1.0)
+    )
+    plans.append(
+        (
+            "cell-set union (normalize: contained cells dropped by a "
+            "window sort, every fully covered cell found by one explode "
+            "of each cell's self and ancestors and one aggregation, "
+            "contained cells dropped again; no driver loop, no "
+            "checkpoint)",
+            cells_union(cells_a, cells_b),
+        )
+    )
+    plans.append(
+        (
+            "cell-set difference (B collected once, its complement held "
+            "sorted in the closure of one ArrowEvalPython over A that "
+            "emits each A cell's pieces; explode_outer, one dedup, then "
+            "the union's normalize; no join)",
+            cells_difference(cells_a, cells_b),
         )
     )
 
