@@ -20,12 +20,16 @@ operation loops on the driver:
   of each pair is a piece of the intersection.  A streams.
 * :func:`cells_difference` — A \\ B = A ∩ complement(B), the
   complement built on the driver from B, then normalized.
-* :func:`cells_contain_point` — leaf membership via the range test.
+* :func:`cells_contain_point` — the set is collected once; each leaf
+  is two binary searches over its ranges inside one Arrow UDF.
 
-Scale shape: normalize is two window sorts around one aggregation; the
-intersection and the difference are one Arrow UDF over A and one
-dedup shuffle, plus the one collect of B.  The sums fit in a long: the
-largest, a face's, is 2^60.
+Scale shape: normalize is two window sorts around one aggregation, all
+three on one exchange by face (cells of different faces never nest),
+so up to six tasks share it; the intersection is one Arrow UDF over A
+and one dedup shuffle, the difference the same UDF and normalize's
+exchange, each plus the one collect of B; the leaf lookup is one Arrow
+UDF over the leaves and no shuffle, plus the one collect of the set.
+The sums fit in a long: the largest, a face's, is 2^60.
 """
 
 from __future__ import annotations
@@ -34,7 +38,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, BooleanType, LongType
 
 from ..functions.sql_bitops import (
     s2_range_max,
@@ -59,21 +63,25 @@ def _with_ranges(df: DataFrame, cell_col: str) -> DataFrame:
     )
 
 
-def drop_contained_cells(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
+def _drop_contained(df: DataFrame, cell_col: str) -> DataFrame:
     """Remove null, repeated and contained cells (first half of
-    normalize, S2CellUnion.php:600-615).
+    normalize, S2CellUnion.php:600-615) from a frame with a ``_face``
+    column (``cell >>> 61``), which it keeps: a
+    frame already hash-partitioned on it is not shuffled again.
 
     A cell is contained in an earlier one (unsigned range_min order)
     iff the running max of range_max over its predecessors already
-    reaches its range_max."""
+    reaches its range_max; a repeated cell's later copies see its own
+    range_max there, so they drop too.  Cells of different faces never
+    nest, so the window runs per face: up to six tasks, not one."""
     w = (
-        Window.orderBy(F.col("_ord").asc(), F.col("_ord_max").desc())
+        Window.partitionBy("_face")
+        .orderBy(F.col("_ord").asc(), F.col("_ord_max").desc())
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    cells = df.where(F.col(cell_col).isNotNull()).dropDuplicates([cell_col])
     running = F.max("_ord_max").over(w)
     return (
-        _with_ranges(cells, cell_col)
+        _with_ranges(df.where(F.col(cell_col).isNotNull()), cell_col)
         .withColumn("_prev_max", running)
         .where(F.col("_prev_max").isNull() | (F.col("_prev_max") < F.col("_ord_max")))
         .drop("_rmin", "_rmax", "_ord", "_ord_max", "_prev_max")
@@ -83,11 +91,14 @@ def drop_contained_cells(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
 def normalize_cells(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     """Full distributed S2CellUnion.normalize (S2CellUnion.php:591-661):
     every fully covered cell, less the contained ones.  The disjoint
-    cells (:func:`drop_contained_cells`) each expand to themselves and
+    cells (:func:`_drop_contained`) each expand to themselves and
     their ancestors at levels 0..level-1 with their leaf count; a cell
     whose leaf counts sum to its own is full.  That is the 4-sibling
-    collapse of every level at once."""
-    cells = drop_contained_cells(df.select(cell_col), cell_col)
+    collapse of every level at once.  An ancestor is on its cell's
+    face, so the aggregate groups by face and cell and the second
+    window by face: the first window's exchange serves all three."""
+    face = F.shiftrightunsigned(F.col(cell_col), 61).alias("_face")
+    cells = _drop_contained(df.select(cell_col, face), cell_col)
     c = f"`{cell_col}`"
     self_and_ancestors = F.expr(
         f"transform(filter(array({_LEVEL_LSBS}), m -> m >= ({c} & -{c})), "
@@ -95,14 +106,15 @@ def normalize_cells(df: DataFrame, cell_col: str = "cell_id") -> DataFrame:
     )
     full = (
         cells.select(
+            "_face",
             F.explode(self_and_ancestors).alias(cell_col),
             F.col(cell_col).bitwiseAND(-F.col(cell_col)).alias("_n"),
         )
-        .groupBy(cell_col)
+        .groupBy("_face", cell_col)
         .agg(F.sum("_n").alias("_n"))
         .where(F.col("_n") == F.col(cell_col).bitwiseAND(-F.col(cell_col)))
     )
-    return drop_contained_cells(full.select(cell_col), cell_col)
+    return _drop_contained(full, cell_col).select(cell_col)
 
 
 def cells_union(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") -> DataFrame:
@@ -141,14 +153,13 @@ def _collect_cells(df: DataFrame, cell_col: str) -> np.ndarray:
 
 def _intersect(a: DataFrame, cells: np.ndarray, cell_col: str) -> DataFrame:
     """The pieces (:func:`_pieces_udf`) of ``a``'s cells against
-    ``cells``, each once."""
+    ``cells``; a piece may repeat."""
     pieces = _pieces_udf(cells)(F.col(cell_col))
     # explode_outer + an explicit not-null filter, not an inner explode
     # (spatial_join.probe_join): an inner explode runs the UDF twice.
     return (
         a.select(F.explode_outer(pieces).alias(cell_col))
         .where(F.col(cell_col).isNotNull())
-        .dropDuplicates([cell_col])
     )
 
 
@@ -161,7 +172,7 @@ def cells_intersection(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") ->
     Scale contract: **B must be broadcast-sized** (a normalized
     covering, thousands of cells): it is collected once and looked up
     inside one Arrow UDF over A (:func:`_pieces_udf`); A streams."""
-    return _intersect(a, _collect_cells(b, cell_col), cell_col)
+    return _intersect(a, _collect_cells(b, cell_col), cell_col).dropDuplicates([cell_col])
 
 
 def cells_difference(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") -> DataFrame:
@@ -182,17 +193,47 @@ def cells_difference(a: DataFrame, b: DataFrame, cell_col: str = "cell_id") -> D
     return normalize_cells(_intersect(a, cells, cell_col), cell_col)
 
 
+def _covered_udf(cells: np.ndarray):
+    """An Arrow UDF ``covered(leaf)``: true where ``leaf`` lies in the
+    range of one of ``cells`` (uint64, any order, nesting allowed).
+    With the ranges sorted by range_min and ``reach`` the running max
+    of their range_max, a leaf is covered iff fewer ranges end before
+    it (``reach < leaf``) than start at or before it: two binary
+    searches per leaf, whatever the set's levels.  A null leaf is not
+    covered.  The ranges ride in its closure."""
+    lo = cid.range_min(cells)
+    order = np.argsort(lo)
+    lo, reach = lo[order], np.maximum.accumulate(cid.range_max(cells)[order])
+
+    @F.arrow_udf(BooleanType())
+    def covered(leaf: pa.Array) -> pa.Array:
+        ids = cid.from_signed(aio.int64_values(leaf))
+        hit = np.searchsorted(reach, ids, "left") < np.searchsorted(lo, ids, "right")
+        valid = aio.valid_mask(leaf)
+        return aio.array(hit if valid is None else hit & valid)
+
+    return covered
+
+
 def cells_contain_point(
     cells: DataFrame, leaf: DataFrame, cell_col: str = "cell_id",
     leaf_col: str = "leaf_id",
 ) -> DataFrame:
-    """Semi-join: leaf rows whose cell is covered by the set."""
-    ranged = _with_ranges(cells.select(cell_col), cell_col).select(
-        "_ord", "_ord_max"
+    """Semi-join: ``leaf`` rows whose ``leaf_col`` lies in the range of
+    a cell of the set (normalized or not).
+
+    Scale contract: **the set must be broadcast-sized**, as for
+    :func:`cells_intersection`: it is collected once and each leaf is
+    looked up inside one Arrow UDF (:func:`_covered_udf`); the leaves
+    stream."""
+    covered = _covered_udf(_collect_cells(cells, cell_col))(F.col(leaf_col))
+    # The flag goes through a one-element explode_outer, not straight
+    # into the filter: a filter is pushed below the projection that
+    # computes ``leaf_col`` and, when that is a UDF too (the leaf
+    # encode), the encode would then run twice.  A filter on a
+    # generated column stays above its Generate.
+    return (
+        leaf.select("*", F.explode_outer(F.array(covered)).alias("_covered"))
+        .where("_covered")
+        .drop("_covered")
     )
-    probe = leaf.withColumn("_p", s2_unsigned_order(F.col(leaf_col)))
-    return probe.join(
-        F.broadcast(ranged),
-        (F.col("_p") >= F.col("_ord")) & (F.col("_p") <= F.col("_ord_max")),
-        "leftsemi",
-    ).drop("_p")

@@ -79,6 +79,16 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        # One Python worker pool per executor: Spark keys its worker
+        # factories on (python exec, worker module, daemon module, env).
+        # The SQL UDF runners add SPARK_SIMPLIFIED_TRACEBACK=1 to the env
+        # and the RDD runner does not, so RDD-path Python (createDataFrame
+        # of a list, .rdd jobs, SparkContext.runJob) would start a second
+        # daemon and a second set of workers (~200 MB on a 4-core kNN
+        # job).  Setting the variable for every worker makes the keys
+        # equal: UDF tracebacks stay as they were, and RDD-path errors
+        # now drop pyspark's own frames the same way.
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         # Local mode has no data locality to wait for; the default 3s
         # locality wait only adds scheduling jitter.
         .config("spark.locality.wait", "0s")

@@ -97,6 +97,12 @@ def test_normalize_cells_matches_kernel(spark):
         messy = _messy(a + b)
         expected = normalize_cell_union([c for c in messy if c is not None])
         assert _from_df(normalize_cells(_to_df(spark, messy))) == sorted(expected)
+    # the windows run per face: no exchange gathers every cell in one
+    # task, and the one exchange, on the face, serves both windows and
+    # the ancestor aggregate
+    plan = normalize_cells(_to_df(spark, messy))._jdf.queryExecution().executedPlan().toString()
+    assert "SinglePartition" not in plan, plan
+    assert plan.count("Exchange") == 1, plan
 
 
 def test_cells_union_matches_kernel(spark):
@@ -144,24 +150,37 @@ def test_cells_intersection_covers_overlap_only(spark):
 
 def test_cells_contain_point_semijoin(spark):
     cov = RegionCoverer(max_cells=8).get_covering(CapRegion(48.85, 2.35, 0.03))
-    cells_df = _to_df(spark, cov)
     rng = np.random.default_rng(5)
     lat = rng.uniform(44, 54, 2000)
     lng = rng.uniform(-3, 8, 2000)
-    leaves = cid.cell_id_from_latlng_degrees(lat, lng)
+    leaves = [int(x) for x in cid.cell_id_from_latlng_degrees(lat, lng)]
+    # unnormalized: the covering plus a repeated cell, the children of
+    # one and the parent of another, a face cell (face 5, a negative
+    # long) and a leaf cell of a point outside the cap
+    face = (5 << 61) | (1 << 60)
+    outside = next(x for x in leaves if not any(cid.contains_scalar(c, x) for c in cov))
+    cells = _messy(cov) + [face, outside, outside]
+    # leaves at each cell's range ends, one off each end, and nulls
+    edges = []
+    for c in [face, outside] + cov:
+        lo, hi = cid.range_scalar(c)
+        edges += [lo - 1, lo, lo + 1, hi - 1, hi, hi + 1]
+    probes = leaves + edges + [None, None]
     leaf_df = spark.createDataFrame(
-        [(i, int(cid.to_signed(leaves[i : i + 1])[0])) for i in range(len(leaves))],
+        [(i, None if x is None else _sig(x)) for i, x in enumerate(probes)],
         "idx long, leaf_id long",
     )
-    got = {r.idx for r in cells_contain_point(cells_df, leaf_df).collect()}
+    joined = cells_contain_point(_to_df(spark, cells), leaf_df)
+    got = {r.idx for r in joined.collect()}
 
-    lo = cid.range_min(np.asarray(cov, dtype=np.uint64))
-    hi = cid.range_max(np.asarray(cov, dtype=np.uint64))
-    expected = set()
-    for i, leaf in enumerate(leaves):
-        if bool(np.any((lo <= leaf) & (leaf <= hi))):
-            expected.add(i)
+    expected = {
+        i for i, x in enumerate(probes)
+        if x is not None and any(cid.contains_scalar(c, x) for c in cells if c is not None)
+    }
     assert got == expected
+    assert len(leaves) + len(edges) > len(expected) > 0
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_cells_difference_matches_kernel(spark):
@@ -195,6 +214,7 @@ def test_cellset_frames_build_with_no_job_but_the_collect_of_b(spark):
         ("union", lambda: cells_union(a_df, b_df), 0),
         ("intersection", lambda: cells_intersection(a_df, b_df), 1),
         ("difference", lambda: cells_difference(a_df, b_df), 1),
+        ("contain_point", lambda: cells_contain_point(b_df, a_df, leaf_col="cell_id"), 1),
     ):
         group = f"cellset-build-{name}"
         sc.setJobGroup(group, name)

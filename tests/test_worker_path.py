@@ -3,8 +3,9 @@
 ``plans.get_spark`` runs the workers under
 ``s2_geometry_library_php_spark._daemon``, which drops ``pyspark.zip``,
 the py4j zip and code-free jars from ``sys.path`` before the stock
-pyspark daemon starts.  The Spark test checks the live worker; the rest
-check the drop rule on fake archives, without Spark."""
+pyspark daemon starts, and ``get_spark``'s executor env gives RDD-path
+Python the UDF runners' worker pool.  The Spark tests check the live
+workers; the rest check the drop rule on fake archives, without Spark."""
 
 import os
 import sys
@@ -41,6 +42,28 @@ def test_worker_imports_installed_pyspark(spark):
     )
     got = {r.id: r.y for r in df.collect()}
     assert got == {i: i * 0.5 + 3.0 for i in range(2000)}
+
+
+def test_python_rdd_actions_share_the_udf_worker_pool(spark):
+    """RDD-path Python (here a ``parallelize().map()`` job) runs in the
+    Arrow UDF workers: every worker of both paths is a child of one
+    daemon."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    @F.arrow_udf("long")
+    def daemon_pid(x: pa.Array) -> pa.Array:
+        return pa.array([os.getppid()] * len(x), pa.int64())
+
+    udf_pids = {
+        r.pid for r in spark.range(0, 4000, numPartitions=4)
+        .select(daemon_pid("id").alias("pid")).distinct().collect()
+    }
+    rdd_pids = set(
+        spark.sparkContext.parallelize(range(8), 4).map(lambda _: os.getppid()).collect()
+    )
+    assert len(udf_pids) == 1, udf_pids
+    assert rdd_pids == udf_pids
 
 
 def _zip(path, members):

@@ -17,8 +17,13 @@ and cited in README:
   ArrowEvalPython (edge index lookup + robustCrossing refine) ->
   explode_outer -> one count around one exchange; no join;
 * cell-set union and difference: normalize is two window sorts around
-  one ancestor aggregate; the difference adds ONE ArrowEvalPython (the
-  lookup in B's complement) and no join;
+  one ancestor aggregate, all three on one exchange by face (no
+  SinglePartition exchange); the difference adds ONE ArrowEvalPython
+  (the lookup in B's complement) and no join;
+* cell-set leaf membership: ONE ArrowEvalPython (the lookup in the
+  collected set's ranges) under a one-element explode_outer and a
+  filter, the leaf encode below it evaluated once; no join, no
+  exchange;
 * parquet scans show PushedFilters / narrow ReadSchema (column
   pruning drops text/html when not selected);
 * bitwise tile math stays inside WholeStageCodegen (no Python), and
@@ -207,6 +212,7 @@ def main() -> None:
     )
 
     from s2_geometry_library_php_spark.operators.cellsets import (
+        cells_contain_point,
         cells_difference,
         cells_union,
     )
@@ -225,10 +231,12 @@ def main() -> None:
     )
     plans.append(
         (
-            "cell-set union (normalize: contained cells dropped by a "
-            "window sort, every fully covered cell found by one explode "
-            "of each cell's self and ancestors and one aggregation, "
-            "contained cells dropped again; no driver loop, no "
+            "cell-set union (normalize: repeated and contained cells "
+            "dropped by a window sort per face, every fully covered cell "
+            "found by one explode of each cell's self and ancestors and "
+            "one aggregation by face and cell, contained cells dropped "
+            "again per face; one exchange, on the face, serves all "
+            "three; no SinglePartition exchange, no driver loop, no "
             "checkpoint)",
             cells_union(cells_a, cells_b),
         )
@@ -237,9 +245,23 @@ def main() -> None:
         (
             "cell-set difference (B collected once, its complement held "
             "sorted in the closure of one ArrowEvalPython over A that "
-            "emits each A cell's pieces; explode_outer, one dedup, then "
-            "the union's normalize; no join)",
+            "emits each A cell's pieces; explode_outer, then the "
+            "union's normalize, which drops repeated pieces too; one "
+            "exchange, no join)",
             cells_difference(cells_a, cells_b),
+        )
+    )
+    plans.append(
+        (
+            "cell-set leaf membership (the set collected once, its "
+            "ranges held sorted in the closure of one ArrowEvalPython "
+            "over the leaves: two binary searches per leaf; the flag "
+            "filtered above a one-element explode_outer, so the leaf "
+            "encode below runs once; no join, no exchange)",
+            cells_contain_point(
+                cells_a,
+                docs.select("doc_id", F.col("cell_id").alias("leaf_id")),
+            ),
         )
     )
 
