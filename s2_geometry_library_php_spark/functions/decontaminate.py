@@ -111,46 +111,6 @@ def decontaminate(
     )
 
 
-def contamination_stats(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = DEFAULT_NGRAM,
-    text_col: str = "text",
-    bench_text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Audit report: one row per document with ``n_grams`` (total
-    ``n``-gram occurrences), ``n_hit_grams`` (occurrences found in the
-    benchmark), and ``hit_fraction`` — the overlap table a release
-    publishes alongside the scrub.  Same broadcast-only corpus shape
-    as :func:`contaminated_ids`; the per-doc totals ride the same
-    single ``groupBy(id_col)``."""
-    words = F.split(F.col(text_col), " ")
-    grams = docs.select(
-        F.col(id_col), F.explode_outer(_grams(words, n)).alias("gram")
-    )
-    bench = F.broadcast(
-        benchmark_grams(benchmark, n, bench_text_col).withColumn(
-            "_hit", F.lit(1)
-        )
-    )
-    per_doc = (
-        grams.join(bench, "gram", "left")
-        .groupBy(id_col)
-        .agg(
-            F.count("gram").alias("n_grams"),
-            F.count("_hit").alias("n_hit_grams"),
-        )
-    )
-    return per_doc.withColumn(
-        "hit_fraction",
-        F.when(
-            F.col("n_grams") > 0,
-            F.col("n_hit_grams") / F.col("n_grams"),
-        ).otherwise(F.lit(0.0)),
-    )
-
-
 def grams_duckdb(text_expr: str, n: int) -> str:
     """DuckDB SCALAR expression: the list of word-``n``-grams of
     ``text_expr``.  Twin of :func:`~.quality_gates._grams`'s

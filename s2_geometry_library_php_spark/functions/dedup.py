@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import ArrayType, LongType
 
 from .text import ascii_lower_py
 
@@ -207,75 +207,6 @@ GROUP BY 1, 2
 """
 
 
-# --- MinHash (vectorized UDF formulation — the scale path) -----------------------------
-@F.pandas_udf(ArrayType(StringType()))
-def minhash_signature_udf(text: pd.Series) -> pd.Series:
-    """One-pass MinHash signature per document (no shingle explode /
-    shuffle): identical output to :func:`minhash_signature_sql`.
-
-    Batch-vectorized: the NUM_HASHES salted md5 digests are computed
-    once per UNIQUE shingle in the Arrow batch (shingles repeat across
-    near-duplicate docs — exactly the corpus this runs on), and the
-    per-document minima are one ``np.minimum.reduceat`` pass over the
-    (flat_shingles x NUM_HASHES) digest matrix.  md5 hex compares
-    lexicographically == byte-wise, so taking mins on the raw 16-byte
-    digests (as two u64 columns) and hexlifying only the winners is
-    exact."""
-    n = len(text)
-    if n == 0:
-        return pd.Series([], dtype=object)
-    empty_sig = [""] * NUM_HASHES
-    shingled: list[list[str]] = []
-    for t in text:
-        if not t:
-            shingled.append([])
-            continue
-        words = ascii_lower_py(t).split(" ")
-        m = max(len(words) - (SHINGLE - 1), 1)
-        shingled.append(
-            sorted({" ".join(words[i : i + SHINGLE]) for i in range(m)})
-        )
-    lengths = np.fromiter((len(s) for s in shingled), dtype=np.int64, count=n)
-    flat = [s for ss in shingled for s in ss]
-    out: list[list[str]] = [empty_sig] * n
-    if flat:
-        uniq = sorted(set(flat))
-        # digest matrix for unique shingles: (U, NUM_HASHES, 2) u64
-        # big-endian halves — unsigned lexicographic == hex-string order
-        dig = np.empty((len(uniq), NUM_HASHES, 2), dtype=np.uint64)
-        salts = [str(k).encode() for k in range(NUM_HASHES)]
-        for u, s in enumerate(uniq):
-            sb = s.encode()
-            for k in range(NUM_HASHES):
-                d = hashlib.md5(salts[k] + sb).digest()
-                dig[u, k, 0] = int.from_bytes(d[:8], "big")
-                dig[u, k, 1] = int.from_bytes(d[8:], "big")
-        index = {s: u for u, s in enumerate(uniq)}
-        rows = np.fromiter((index[s] for s in flat), dtype=np.int64, count=len(flat))
-        mat = dig[rows]  # (F, NUM_HASHES, 2)
-        # lexicographic min on (hi, lo) pairs: compare hi; tie -> lo.
-        # Pack into a sortable structured view via stable ordering:
-        # within each doc segment, argmin over (hi, lo) per hash k.
-        nonempty = lengths > 0
-        offsets = np.zeros(n, dtype=np.int64)
-        offsets[1:] = np.cumsum(lengths)[:-1]
-        seg_starts = offsets[nonempty]
-        min_hi = np.minimum.reduceat(mat[:, :, 0], seg_starts, axis=0)
-        # rows where hi equals the segment min participate in the lo tie-break
-        ne_idx = np.nonzero(nonempty)[0]
-        lo_masked = mat[:, :, 1].copy()
-        seg_of_row = np.repeat(np.arange(len(seg_starts)), lengths[nonempty])
-        is_min_hi = mat[:, :, 0] == min_hi[seg_of_row]
-        lo_masked[~is_min_hi] = np.uint64(0xFFFFFFFFFFFFFFFF)
-        min_lo = np.minimum.reduceat(lo_masked, seg_starts, axis=0)
-        for j, i in enumerate(ne_idx):
-            out[i] = [
-                f"{int(min_hi[j, k]):016x}{int(min_lo[j, k]):016x}"
-                for k in range(NUM_HASHES)
-            ]
-    return pd.Series(out)
-
-
 # --- SimHash -----------------------------------------------------------------------
 @F.pandas_udf(LongType())
 def simhash64_udf(text: pd.Series) -> pd.Series:
@@ -318,48 +249,6 @@ def simhash64_udf(text: pd.Series) -> pd.Series:
         ).sum(axis=1, dtype=np.uint64)
         out[nonempty] = words.view(np.int64)
     return pd.Series(out)
-
-
-def simhash_near_pairs(
-    docs: DataFrame, text_col: str = "text", max_hamming: int = 3
-) -> DataFrame:
-    """Near-dup candidates: equal 16-bit SimHash chunk => candidate,
-    verified by Hamming distance <= max_hamming (pigeonhole: any pair
-    within distance 3 shares at least one of 4 chunks)."""
-    sig = docs.withColumn("simhash", simhash64_udf(F.col(text_col)))
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("chunk"),
-                F.shiftrightunsigned(F.col("simhash"), 16 * i)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("ckey"),
-            )
-            for i in range(4)
-        ]
-    )
-    banded = sig.select(
-        "doc_id", "simhash", F.explode(chunks).alias("c")
-    ).select("doc_id", "simhash", "c.chunk", "c.ckey")
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(
-        F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ckey") == F.col("b.ckey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .where(ham <= max_hamming)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-        .distinct()
-    )
 
 
 # --- n-gram Jaccard ------------------------------------------------------------------

@@ -145,16 +145,3 @@ def cap_per_host_duckdb(
         f"row_number() OVER (PARTITION BY {host_duckdb(url_expr)} "
         f"ORDER BY {sample_priority_duckdb(id_col, salt)}, {id_col})"
     )
-
-
-def host_contribution_stats(
-    docs: DataFrame, url_col: str = "url"
-) -> DataFrame:
-    """One row per host: ``(host, n_docs)`` — the skew census a
-    pipeline logs before choosing ``cap`` (and the evidence artifact
-    the bench records).  Map-side partial agg, one shuffle."""
-    return (
-        docs.select(host_column(url_col).alias("host"))
-        .groupBy("host")
-        .agg(F.count("*").alias("n_docs"))
-    )

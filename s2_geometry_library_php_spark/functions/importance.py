@@ -78,23 +78,6 @@ def word_bucket_duckdb(word_expr: str, n_buckets: int) -> str:
     )
 
 
-def doc_word_buckets(
-    docs: DataFrame,
-    n_buckets: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """``(id_col, bucket)`` — one row per word occurrence.  Pure
-    generate + projection, no shuffle."""
-    return docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), " ")).alias("_w"),
-    ).select(
-        F.col(id_col),
-        F.expr(word_bucket_sql("_w", n_buckets)).alias("bucket"),
-    )
-
-
 def bucket_weights(
     target: DataFrame,
     background: DataFrame,

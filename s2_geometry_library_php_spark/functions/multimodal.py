@@ -3,8 +3,8 @@ columns with typed metadata.
 
 Decode is REAL for self-contained formats expressible with stdlib +
 numpy alone — WAV (RIFF PCM 8/16-bit), PPM (P6), BMP (24-bit
-BI_RGB) — including decode → feature-extract and decode → resize →
-re-encode round trips.  Formats that genuinely require media
+BI_RGB) — including decode → feature-extract and encode → decode
+round trips.  Formats that genuinely require media
 libraries absent from this environment (JPEG/PNG entropy coding,
 MP4/H.264) stay behind ``DecoderUnavailable`` with a gated
 try-import, so the same call sites light up when PIL/soundfile are
@@ -55,15 +55,6 @@ FEATURE_SCHEMA = StructType(
         StructField("kind", StringType()),
         StructField("n_bytes", LongType()),
         StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
     ]
 )
 
@@ -185,15 +176,6 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return rows[..., ::-1].copy()  # BGR -> RGB
 
 
-def resize_image(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize via pure index sampling (pixel-center
-    mapping, matches the usual nearest kernel)."""
-    h, w = img.shape[:2]
-    yi = np.minimum(((np.arange(out_h) + 0.5) * h / out_h).astype(np.int64), h - 1)
-    xi = np.minimum(((np.arange(out_w) + 0.5) * w / out_w).astype(np.int64), w - 1)
-    return img[yi][:, xi]
-
-
 # ---------------------------------------------------------------------------
 # Feature kernels (pure numpy; FEATURE_DIM-dim float32 each).
 # ---------------------------------------------------------------------------
@@ -304,59 +286,6 @@ def extract_features(
             )
 
     return media.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Real decode -> resize -> re-encode round trip for PPM/BMP image
-    rows (output re-encoded as PPM).  Non-image and undecodable rows
-    are dropped; one Arrow batch in flight per thread."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for mid, payload, mime in zip(
-                pdf["media_id"], pdf["payload"], pdf["mime"]
-            ):
-                try:
-                    if mime in ("image/x-portable-pixmap", "image/ppm"):
-                        img = decode_ppm(payload)
-                    elif mime == "image/bmp":
-                        img = decode_bmp(payload)
-                    else:
-                        continue
-                except (ValueError, struct.error, DecoderUnavailable):
-                    continue
-                ids.append(mid)
-                payloads.append(encode_ppm(resize_image(img, out_w, out_h)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "payload": pd.Series(payloads, dtype=object),
-                    "width": pd.Series([out_w] * len(ids), dtype="int32"),
-                    "height": pd.Series([out_h] * len(ids), dtype="int32"),
-                }
-            )
-
-    return media.mapInPandas(run, RESIZE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: emits (media_id, frame_ts_ms)
-    rows for each sample instant — the decode of the actual frame is
-    the stubbed step (MP4/H.264 needs ffmpeg).  Pure column math
-    (sequence + explode)."""
-    from pyspark.sql import functions as F
-
-    return media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.col("duration_ms") - 1, F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-    )
 
 
 def synth_image(i: int, w: int, h: int) -> np.ndarray:

@@ -6,7 +6,7 @@ million — ``(numerator * 1_000_000) // denominator`` on BIGINTs, no
 doubles anywhere — with one definition spelled three ways: native
 Spark Columns (:func:`repetition_columns_ppm`), DuckDB text for the
 driver's oracle (:func:`repetition_duckdb_ppm`) and the Python kernel
-of the Arrow gate (:func:`repetition_signals_ppm`):
+of the Arrow gate (:func:`repetition_gate_arrow`):
 
 - ``dup_line_fraction``        — fraction of lines that repeat an
   earlier line (Gopher's duplicate-line rule; lines split on ``\\n``).
@@ -239,14 +239,6 @@ def repetition_duckdb_ppm(text_col: str = "text") -> dict[str, str]:
 # ``length``.  test_quality_gates.py pins the kernel and the gate
 # against the Columns on fixtures, real testdata, and a hypothesis
 # fuzz.
-
-
-def repetition_signals_ppm(text: str) -> dict[str, int]:
-    """Pure-Python twin of :func:`repetition_columns_ppm` (same keys,
-    same integers)."""
-    return {
-        f"{name}_ppm": sig() for name, sig in _signal_thunks(text).items()
-    }
 
 
 def _signal_thunks(text: str) -> dict:

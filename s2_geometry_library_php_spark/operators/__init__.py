@@ -24,14 +24,9 @@ from .similarity import (  # noqa: F401
     embedding_near_dup_pairs,
 )
 from .scan import global_running_sum, pack_sequences  # noqa: F401
-from .sampling import (  # noqa: F401
-    hash_mixture_sample,
-    sample_priority_column,
-    stratified_quota_sample,
-)
+from .sampling import sample_priority_column  # noqa: F401
 from .corpus_pipeline import (  # noqa: F401
     annotate_corpus,
     clean_corpus,
     min_label_components,
-    pipeline_stage_counts,
 )

@@ -319,26 +319,3 @@ def clean_corpus(
             ),
         )
     return survivors
-
-
-def pipeline_stage_counts(
-    spark: SparkSession,
-    docs: DataFrame,
-    text_col: str = "text",
-    **kwargs,
-) -> dict[str, int]:
-    """Per-stage survivor counts for pipeline monitoring.  Runs the
-    stages eagerly (one action per stage) — a diagnostic, not the
-    production path; production jobs act once on
-    :func:`clean_corpus`'s single plan."""
-    threshold = kwargs.pop("near_dup_threshold", 0.8)
-    counts = {"input": docs.count()}
-    gated_only = clean_corpus(
-        spark, docs, text_col, near_dup_threshold=None, **kwargs
-    )
-    counts["after_gates_and_exact_dedup"] = gated_only.count()
-    full = clean_corpus(
-        spark, docs, text_col, near_dup_threshold=threshold, **kwargs
-    )
-    counts["after_near_dup"] = full.count()
-    return counts

@@ -55,6 +55,13 @@ from ..s2core import geom
 from ..s2core.metric import MIN_WIDTH
 from ..s2core.probe import finite_leaves
 
+#: ring rounds before the brute-force fallback takes the stragglers
+MAX_ROUNDS = 3
+#: levels auto_start_level backs off from the uniform-density level
+_START_LEVEL_MARGIN = 3
+#: input partitions _estimate_count samples before extrapolating
+_ESTIMATE_PARTITIONS = 8
+
 
 def knn_brute_force(
     probes: DataFrame,
@@ -97,11 +104,11 @@ def _window_topk(cand: DataFrame, k: int, probe_id: str, doc_id: str) -> DataFra
     )
 
 
-def auto_start_level(n_docs: int, k: int, margin: int = 3) -> int:
+def auto_start_level(n_docs: int, k: int) -> int:
     """Pick L so the exactness guarantee is expected to hold on the
     first round: the k-th neighbor distance under a uniform density
     (~2*sqrt(k/n) rad) must be below MIN_WIDTH(L) = sqrt(2)/3 *
-    2^(1-L), then back off ``margin`` levels.
+    2^(1-L), then back off ``_START_LEVEL_MARGIN`` levels.
 
     The margin is the skew allowance: real geo corpora have
     orders-of-magnitude density variation (oceans vs cities), so the
@@ -117,25 +124,25 @@ def auto_start_level(n_docs: int, k: int, margin: int = 3) -> int:
     if n_docs <= 0 or k <= 0:
         return 0
     expected_kth = 2.0 * math.sqrt(k / n_docs)
-    level = int(1 + math.log2((math.sqrt(2) / 3) / expected_kth)) - margin
-    return max(0, min(18, level))
+    level = int(1 + math.log2((math.sqrt(2) / 3) / expected_kth))
+    return max(0, min(18, level - _START_LEVEL_MARGIN))
 
 
-def _estimate_count(docs: DataFrame, max_partitions: int = 8) -> int:
+def _estimate_count(docs: DataFrame) -> int:
     """Approximate row count from a bounded number of partitions —
     O(sample) work instead of a full scan, good to the factor-of-2
     accuracy auto_start_level needs.  Runs one small job over at most
-    ``max_partitions`` input partitions and extrapolates linearly.
+    ``_ESTIMATE_PARTITIONS`` input partitions and extrapolates linearly.
     The constant projection lets Catalyst prune every real column
     (including any UDF-computed ones) before rows cross to Python."""
     rdd = docs.select(F.lit(1).alias("_one")).rdd
     n_parts = rdd.getNumPartitions()
-    if n_parts <= max_partitions:
+    if n_parts <= _ESTIMATE_PARTITIONS:
         return docs.count()
     sampled = rdd.context.runJob(
         rdd,
         lambda it: [sum(1 for _ in it)],
-        partitions=list(range(max_partitions)),
+        partitions=list(range(_ESTIMATE_PARTITIONS)),
     )
     per_part = sum(sampled) / max(len(sampled), 1)
     return max(1, int(per_part * n_parts))
@@ -339,7 +346,6 @@ def knn_join(
     start_level: int | None = None,
     probe_id: str = "probe_id",
     doc_id: str = "doc_id",
-    max_rounds: int = 3,
 ) -> DataFrame:
     """Scalable kNN: match the docs' level-L cells against each probe's
     3x3 ring, exact re-rank, provable-exactness check, coarser retry for
@@ -376,7 +382,7 @@ def knn_join(
     results: list[DataFrame] = []
     by_probe = Window.partitionBy(probe_id)
     level = start_level
-    for rnd in range(max_rounds):
+    for rnd in range(MAX_ROUNDS):
         if level < 0 or (rnd > 0 and todo.num_rows == 0):
             break
         # Exactness: k candidates found AND kth distance < MIN_WIDTH(L),

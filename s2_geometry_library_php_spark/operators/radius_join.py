@@ -16,9 +16,10 @@ right side explodes to its ring (<= 9 distinct cells), and the pair
 search becomes a plain hash EQUI-join on the cell key followed by one
 whole-stage-codegen exact-angle refine — no theta-join, no
 BroadcastNestedLoopJoin, both sides scale out by cell key.  Total
-cost: one 9x fan-out of the (smaller) right side + one shuffle-or-
-broadcast hash join; candidate count per left row is bounded by the
-density of the 3x3 ring, not by corpus size.
+cost: one 9x fan-out of the right side + one hash join, unhinted, so
+two large sides hash-shuffle on the ring cell and a small one is
+broadcast by Spark's own size rule; candidate count per left row is
+bounded by the density of the 3x3 ring, not by corpus size.
 
 For ``radius > MIN_WIDTH(0)`` (2*sqrt(2)/3 ~ 0.94 rad) no level
 satisfies the
@@ -71,22 +72,14 @@ def within_radius_join(
     radius_rad: float,
     left_id: str = "a_id",
     right_id: str = "b_id",
-    broadcast_right: bool = True,
-    level: int | None = None,
 ) -> DataFrame:
     """All pairs with angle(left, right) <= radius_rad (closed bound,
     the reference's cap containment convention).  Inputs carry
     ``(id, lat, lon)`` with degree coordinates; output is
-    ``(left_id, right_id, dist_rad)``.
-
-    ``broadcast_right=True`` hints the exploded right side (use for a
-    dimension-sized right table); with False no side is hinted, so two
-    large sides hash-shuffle on the ring cell key — the
-    two-large-tables plan.  ``level`` overrides the auto-picked ring
-    level (coarser = fewer keys, more refine work)."""
+    ``(left_id, right_id, dist_rad)``."""
     if radius_rad < 0:
         raise ValueError(f"radius must be >= 0, got {radius_rad}")
-    lvl = radius_join_level(radius_rad) if level is None else int(level)
+    lvl = radius_join_level(radius_rad)
 
     l = left.select(
         F.col(left_id),
@@ -106,8 +99,7 @@ def within_radius_join(
         # radius wider than a face cell: the ring guarantee cannot
         # hold at any level and the answer is cross-join-sized by its
         # own semantics — run the literal plan.
-        joined = l.crossJoin(F.broadcast(r) if broadcast_right else r)
-        return joined.select(left_id, right_id, dist).where(
+        return l.crossJoin(r).select(left_id, right_id, dist).where(
             F.col("dist_rad") <= F.lit(float(radius_rad))
         )
 
@@ -119,16 +111,12 @@ def within_radius_join(
         "_cell",
         F.explode(s2_ring_cells_udf(F.col("_blat"), F.col("_blon"), F.lit(lvl))),
     )
-    if broadcast_right:
-        joined = lk.join(F.broadcast(rk), "_cell")
-    else:
-        # The ring on the left: should Spark broadcast on its own, it
-        # builds from the one row per point.  It sizes the explode as
-        # its input, so with the ring on the right it would build its
-        # hash table from ~9 ring rows per point.
-        joined = rk.join(lk, "_cell")
+    # The ring on the left: should Spark broadcast on its own, it
+    # builds from the one row per point.  It sizes the explode as its
+    # input, so with the ring on the right it would build its hash
+    # table from ~9 ring rows per point.
     return (
-        joined
+        rk.join(lk, "_cell")
         .select(left_id, right_id, dist)
         .where(F.col("dist_rad") <= F.lit(float(radius_rad)))
     )
@@ -138,27 +126,15 @@ def self_radius_pairs(
     points: DataFrame,
     radius_rad: float,
     id_col: str = "doc_id",
-    broadcast: bool = False,
-    level: int | None = None,
 ) -> DataFrame:
     """Unordered point pairs within ``radius_rad`` of each other:
     ``(id_a, id_b, dist_rad)`` with ``id_a < id_b`` (each pair once,
-    no self-pairs).  ``broadcast=False`` by default: a self-join's
-    right side is corpus-sized, so both sides hash-partition on the
-    ring cell — the scale plan."""
+    no self-pairs)."""
     a = points.select(
         F.col(id_col).alias("id_a"), "lat", "lon"
     )
     b = points.select(
         F.col(id_col).alias("id_b"), "lat", "lon"
     )
-    out = within_radius_join(
-        a,
-        b,
-        radius_rad,
-        left_id="id_a",
-        right_id="id_b",
-        broadcast_right=broadcast,
-        level=level,
-    )
+    out = within_radius_join(a, b, radius_rad, left_id="id_a", right_id="id_b")
     return out.where(F.col("id_a") < F.col("id_b"))

@@ -21,20 +21,11 @@ fraction on this module's own test corpus; the quadratic map is
 non-linear, and its measured worst progression error is binomial-level
 (0.65% at n=10⁴ over steps 1..1000 and fractions 0.5/0.1/0.01).
 
-Two samplers:
-
-* :func:`hash_mixture_sample` — keep a *fraction* per stratum by
-  thresholding the priority.  A pure per-row filter: **no shuffle at
-  all**, rides the ingest scan — this is the 100 TB path.  The
-  realized fraction converges to the target at corpus scale (it is
-  exact over the priority distribution, binomial over a finite
-  stratum).
-* :func:`stratified_quota_sample` — keep exactly *n* rows per
-  stratum via ``row_number`` over (priority, id).  Exact quotas cost
-  one shuffle on the stratum key; stratum count is usually tiny
-  (languages, sources), so the window runs on few fat partitions —
-  use it for quotas that fit an executor (ranking is per-stratum
-  sequential by nature); at larger quotas prefer the mixture form.
+Thresholding the priority keeps a per-stratum *fraction* with no
+shuffle; ranking by (priority, id) within a stratum keeps an exact
+*quota* (the registry's ``row_number`` over the priority column does
+this).  Both are plain Spark expressions over
+:func:`sample_priority_column`.
 
 No reference counterpart (the reference is a geometry library); the
 need comes from the published corpus-curation literature (e.g. the
@@ -44,9 +35,8 @@ Pile / RefinedWeb mixture tables) and composes with
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 #: Mersenne-prime modulus (2^31 - 1) and the inner quadratic offset
 MODULUS = 2147483647
@@ -78,50 +68,3 @@ def sample_priority_duckdb(
     x = f"((({id_col} % {m}) + {m}) % {m})"
     y = f"(({x} * {x} + {MIX_C1}) % {m})"
     return f"(({y} * {y} + {int(salt)}) % {m})"
-
-
-def hash_mixture_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict[str, float],
-    id_col: str = "doc_id",
-    default_fraction: float = 0.0,
-    salt: int = DEFAULT_SALT,
-) -> DataFrame:
-    """Keep ~``fractions[stratum]`` of each stratum's rows,
-    deterministically.  Pure filter — zero shuffles; strata missing
-    from ``fractions`` keep ``default_fraction``.  Thresholds are
-    precomputed long literals, so the whole predicate stays in
-    whole-stage codegen."""
-    pri = sample_priority_column(id_col, salt)
-    thresh = F.lit(int(float(default_fraction) * MODULUS))
-    for value, frac in sorted(fractions.items()):
-        thresh = F.when(
-            F.col(strata_col) == F.lit(value),
-            F.lit(int(float(frac) * MODULUS)),
-        ).otherwise(thresh)
-    return df.where(pri < thresh)
-
-
-def stratified_quota_sample(
-    df: DataFrame,
-    strata_cols: list[str] | str,
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    salt: int = DEFAULT_SALT,
-) -> DataFrame:
-    """Exactly ``min(n, |stratum|)`` rows per stratum: the ``n``
-    smallest (priority, id) pairs — a deterministic 'random' subset.
-    One shuffle on the stratum key; adds a ``sample_rank`` column
-    (1-based within stratum)."""
-    if isinstance(strata_cols, str):
-        strata_cols = [strata_cols]
-    pri = sample_priority_column(id_col, salt)
-    w = (
-        Window.partitionBy(*strata_cols)
-        .orderBy(pri.asc(), F.col(id_col).asc())
-    )
-    return (
-        df.withColumn("sample_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("sample_rank") <= F.lit(int(n_per_stratum)))
-    )

@@ -99,26 +99,28 @@ COVERING_SCHEMA = StructType(
 # denormalize S2CellUnion.php:111-135) produces grid-conformant
 # coverings natively: min 4, mod 3 -> levels {4, 7, 10, 13}.
 JOIN_LEVEL_GRID = (4, 7, 10, 13)
+# The grid as the coverer's (min_level, max_level, level_mod).
+_GRID_LEVELS = (
+    JOIN_LEVEL_GRID[0],
+    JOIN_LEVEL_GRID[-1],
+    JOIN_LEVEL_GRID[1] - JOIN_LEVEL_GRID[0],
+)
 
 
 def compute_coverings(
-    regions: list[dict],
-    max_cells: int = 96,
-    min_level: int = JOIN_LEVEL_GRID[0],
-    max_level: int = JOIN_LEVEL_GRID[-1],
-    level_mod: int = 3,
+    regions: list[dict], max_cells: int = 96
 ) -> list[tuple[int, int, int, bool]]:
-    """Driver-side covering rows (:func:`covering_rows`) of every
-    region.  Memoized in process and on disk: coverings are
-    deterministic functions of the region spec, the parameters and the
-    s2core code (:func:`_s2core_digest`)."""
+    """Driver-side covering rows (:func:`covering_rows`, on
+    :data:`JOIN_LEVEL_GRID`) of every region.  Memoized in process and
+    on disk: coverings are deterministic functions of the region spec,
+    ``max_cells`` and the s2core code (:func:`_s2core_digest`)."""
     key = (
         tuple(
             (r["region_id"], r["kind"], tuple(r["params"]),
              tuple(r.get("loop_offsets") or ()))
             for r in regions
         ),
-        max_cells, min_level, max_level, level_mod, _s2core_digest(),
+        max_cells, _GRID_LEVELS, _s2core_digest(),
     )
     cached = _COVERING_CACHE.get(key)
     if cached is not None:
@@ -133,10 +135,7 @@ def compute_coverings(
             spec["kind"], spec["params"], spec.get("loop_offsets")
         )
         rows.extend(
-            covering_rows(
-                region, int(spec["region_id"]),
-                max_cells, min_level, max_level, level_mod,
-            )
+            covering_rows(region, int(spec["region_id"]), max_cells, *_GRID_LEVELS)
         )
     _COVERING_CACHE[key] = rows
     _disk_cache_store(key, rows)
@@ -380,22 +379,16 @@ def regions_to_df(spark: SparkSession, regions: list[dict]) -> DataFrame:
 
 
 def build_covering_table_distributed(
-    regions_df: DataFrame,
-    max_cells: int = 8,
-    min_level: int = JOIN_LEVEL_GRID[0],
-    max_level: int = JOIN_LEVEL_GRID[-1],
-    level_mod: int = 3,
+    regions_df: DataFrame, max_cells: int = 8
 ) -> DataFrame:
     """Distributed twin of :func:`build_covering_table`: the coverer
     kernel runs INSIDE executors via mapInArrow over the region
     dimension table (:func:`covering_batches`), so a large region set
     covers in parallel.  Output schema matches COVERING_SCHEMA."""
-    return regions_df.mapInArrow(
-        covering_batches(max_cells, min_level, max_level, level_mod), COVERING_SCHEMA
-    )
+    return regions_df.mapInArrow(covering_batches(max_cells), COVERING_SCHEMA)
 
 
-def covering_batches(max_cells: int, min_level: int, max_level: int, level_mod: int):
+def covering_batches(max_cells: int):
     """The mapInArrow generator of :func:`build_covering_table_distributed`:
     region-table batches (REGION_TABLE_SCHEMA) in, their
     ``covering_rows`` out as COVERING_SCHEMA batches.  It reads and
@@ -410,7 +403,7 @@ def covering_batches(max_cells: int, min_level: int, max_level: int, level_mod: 
                 for spec in batch.to_pylist()
                 for row in covering_rows(
                     region_from_params(spec["kind"], spec["params"], spec["loop_offsets"]),
-                    spec["region_id"], max_cells, min_level, max_level, level_mod,
+                    spec["region_id"], max_cells, *_GRID_LEVELS,
                 )
             ]
             cols = list(zip(*rows)) or [()] * len(names)

@@ -182,14 +182,13 @@ def vectorize_raster(
     coarse_level: int,
     raster_col: str = "raster_id",
     array_col: str = "raster",
-    keep_zeros: bool = False,
 ) -> DataFrame:
     """Exact inverse of :func:`rasterize_tiles`: each raster entry
     back to its fine-level tile row ``(tile_id, tile_token,
     doc_count)``.  The child id is pure bit reassembly — parent prefix
     (parent id minus its lsb) + position path bits + child lsb — so
     the whole explode stays native SQL.  Zero entries (no data) are
-    dropped unless ``keep_zeros``."""
+    dropped."""
     dl = int(fine_level) - int(coarse_level)
     if not (0 < dl <= 8):
         raise ValueError(
@@ -201,9 +200,7 @@ def vectorize_raster(
     exploded = rasters.select(
         F.col(raster_col),
         F.posexplode(F.col(array_col)).alias("_pos", "doc_count"),
-    )
-    if not keep_zeros:
-        exploded = exploded.where(F.col("doc_count") != 0)
+    ).where(F.col("doc_count") != 0)
     child = (
         F.col(raster_col)
         - F.lit(parent_lsb)
@@ -479,9 +476,7 @@ def tile_balance(assigned: DataFrame, tile_col: str = "tile_id"):
     return int(row.mx), float(row.mean), int(row.k)
 
 
-def hilbert_sorted_writer(
-    df: DataFrame, leaf_col: str = "cell_id", n_files: int | None = None
-):
+def hilbert_sorted_writer(df: DataFrame, leaf_col: str = "cell_id"):
     """Write layout: GLOBAL Hilbert clustering — range-repartition on
     the unsigned cell order (each output file owns a disjoint keyspace
     slice), then sort within partitions so rows inside a file are in
@@ -491,12 +486,7 @@ def hilbert_sorted_writer(
     from ..functions.sql_bitops import s2_unsigned_order
 
     order = s2_unsigned_order(F.col(leaf_col))
-    ranged = (
-        df.repartitionByRange(n_files, order)
-        if n_files is not None
-        else df.repartitionByRange(order)
-    )
-    return ranged.sortWithinPartitions(order)
+    return df.repartitionByRange(order).sortWithinPartitions(order)
 
 
 def write_tile_partitioned(

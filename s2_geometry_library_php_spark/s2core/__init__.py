@@ -34,8 +34,6 @@ from .geom import (  # noqa: F401
     angle_between,
     latlng_to_xyz,
     robust_ccw,
-    robust_ccw_vec,
-    simple_crossing_vec,
     xyz_to_latlng,
 )
 from .metric import MIN_WIDTH, AVG_AREA, Metric  # noqa: F401

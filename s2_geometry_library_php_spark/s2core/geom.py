@@ -206,23 +206,6 @@ def robust_ccw(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> int:
     return expensive_ccw(a, b, c)
 
 
-def robust_ccw_vec(
-    a: np.ndarray, b: np.ndarray, c: np.ndarray
-) -> np.ndarray:
-    """Vectorized robustCCW: fast determinant; scalar exact fallback only
-    on rows within the uncertainty band."""
-    det = dot(np.cross(a, b), c)
-    out = np.sign(det).astype(np.int8)
-    uncertain = np.abs(det) <= CCW_THRESHOLD
-    if np.any(uncertain):
-        aa = np.broadcast_to(a, c.shape) if a.ndim < c.ndim or a.shape != c.shape else a
-        bb = np.broadcast_to(b, c.shape) if b.ndim < c.ndim or b.shape != c.shape else b
-        idx = np.nonzero(uncertain)
-        for ii in zip(*idx):
-            out[ii] = expensive_ccw(aa[ii], bb[ii], c[ii])
-    return out
-
-
 def simple_ccw_vec(a, b, c) -> np.ndarray:
     """sign((c x a) . b) > 0 (S2.php:470-481)."""
     return dot(np.cross(c, a), b) > 0
@@ -326,19 +309,6 @@ def edge_or_vertex_crossing(a, b, c, d) -> bool:
     if crossing > 0:
         return True
     return vertex_crossing(a, b, c, d)
-
-
-def simple_crossing_vec(a, b, c, d) -> np.ndarray:
-    """Vectorized simpleCrossing (S2.php:198-214); a,b,c,d broadcastable
-    (...,3)."""
-    ab = np.cross(a, b)
-    acb = -dot(ab, c)
-    bda = dot(ab, d)
-    first = acb * bda > 0
-    cd = np.cross(c, d)
-    cbd = -dot(cd, b)
-    dac = dot(cd, a)
-    return first & (acb * cbd > 0) & (cbd * dac > 0)
 
 
 # --- point-in-loop parity (the refine kernel) --------------------------------------

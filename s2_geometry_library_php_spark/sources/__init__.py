@@ -1,4 +1,3 @@
-from .crawl_source import register_crawl_sources, synth_pages  # noqa: F401
 from .documents import (  # noqa: F401
     GEOCODE_LAT_SQL,
     GEOCODE_LON_SQL,

@@ -21,7 +21,7 @@ the 100-TB deployment story (SURVEY §6).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -49,31 +49,3 @@ def write_bucketed(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str | list[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Join two tables previously written with :func:`write_bucketed`
-    on their bucket key.  When both sides were bucketed on ``on`` with
-    the same bucket count, Catalyst reuses the storage partitioning
-    and the plan carries no Exchange (verify with
-    :func:`count_shuffle_exchanges`)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
-def count_shuffle_exchanges(df: DataFrame) -> int:
-    """Number of shuffle Exchange operators in the EXECUTED plan
-    (broadcast exchanges excluded — they move dimension-sized data,
-    not the big table).  The co-located-join contract is exactly
-    ``count_shuffle_exchanges(join) == 0``."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return sum(
-        1
-        for line in plan.splitlines()
-        if "Exchange" in line and "BroadcastExchange" not in line
-    )

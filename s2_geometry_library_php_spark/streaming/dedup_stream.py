@@ -18,7 +18,6 @@ oracle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_column
 
@@ -40,34 +39,4 @@ def streaming_distinct_documents(
         return fp.dropDuplicates(["fingerprint"])
     return fp.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         ["fingerprint"]
-    )
-
-
-def streaming_distinct_urls(
-    stream_docs: DataFrame,
-    url_col: str = "url",
-    exact: bool = True,
-    ts_col: str = "warc_ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """streaming docs -> first-seen document per CANONICAL URL (the
-    streaming twin of ``functions/urltools.url_dedup``: a crawl
-    frontier re-visiting ``http://www.x.com/p?utm_source=…`` after
-    ``https://x.com/p`` is a re-crawl, suppressed before any
-    content-level stage runs).
-
-    Same state contract as :func:`streaming_distinct_documents`:
-    ``exact=True`` keeps unbounded canonical-URL state (exact over the
-    whole stream); otherwise ``dropDuplicatesWithinWatermark`` bounds
-    state by event time — the production contract, since a re-crawl
-    beyond the horizon is a legitimate new observation."""
-    from ..functions.urltools import canonical_url_column
-
-    c = stream_docs.withColumn(
-        "canonical_url", canonical_url_column(url_col)
-    )
-    if exact:
-        return c.dropDuplicates(["canonical_url"])
-    return c.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["canonical_url"]
     )

@@ -5,13 +5,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2_geometry_library_php_spark.functions import s2_cell_id
-from s2_geometry_library_php_spark.sources.bucketed import (
-    bucketed_join,
-    count_shuffle_exchanges,
-    write_bucketed,
-)
+from s2_geometry_library_php_spark.sources.bucketed import write_bucketed
 
 N_BUCKETS = 8
+
+
+def count_shuffle_exchanges(df):
+    """Shuffle Exchange operators in the executed plan (broadcast
+    exchanges move dimension-sized data and do not count)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        1
+        for line in plan.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    )
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +60,7 @@ def test_bucketed_join_zero_shuffle_same_rows(spark, bucketed_tables):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, "bk_docs", "bk_tiles", "tile_id")
+        joined = spark.table("bk_docs").join(spark.table("bk_tiles"), "tile_id")
         got = sorted(
             (r.doc_id, r.tile_id, r.n_docs) for r in joined.collect()
         )

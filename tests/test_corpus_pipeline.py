@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from s2_geometry_library_php_spark.operators import (
     annotate_corpus,
     clean_corpus,
-    pipeline_stage_counts,
 )
 from s2_geometry_library_php_spark.sources import load_documents
 
@@ -77,13 +76,14 @@ def test_stage_counts_monotone_on_real_docs(spark):
     docs = load_documents(spark, "/root/testdata/sf0.001").select(
         "doc_id", "text", "lat", "lon"
     )
-    counts = pipeline_stage_counts(spark, docs, langs=None, min_tokens=1)
-    assert (
-        counts["input"]
-        >= counts["after_gates_and_exact_dedup"]
-        >= counts["after_near_dup"]
-        > 0
-    )
+
+    def survivors(**kwargs):
+        out = clean_corpus(spark, docs, langs=None, min_tokens=1, **kwargs)
+        return {r.doc_id for r in out.select("doc_id").collect()}
+
+    gated = survivors(near_dup_threshold=None)
+    full = survivors(near_dup_threshold=0.8)
+    assert docs.count() >= len(gated) and gated >= full and full
 
 
 def test_annotate_adds_signals_without_touching_rows(spark, corpus):

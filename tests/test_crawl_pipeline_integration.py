@@ -1,16 +1,13 @@
-"""End-to-end connector integration: the north-star story in one test
-file — read Common-Crawl-style pages through the ``s2crawl`` Python
-DataSource, geocode them with the shared SQL derivation, clean the
-corpus (gates + URL/exact/near dedup), tile-assign on S2 cells, and
-commit metrics through the ``s2metrics`` sink.
+"""End-to-end curation chain over the documents table: load the
+Common-Crawl-style pages through ``load_documents`` (url and geocode
+derived by the shared SQL), plant re-crawls, mirrored copies and PII,
+clean the corpus (gates + URL/exact/near dedup), and tile-assign on
+S2 cells.
 
-Everything between the two connectors is the same lazy-plan machinery
-the parquet-backed driver queries use; this file proves the connector
-schema (BASELINE input_hint) is a drop-in for that machinery.
+Everything here is the same lazy-plan machinery the parquet-backed
+driver queries use; this file checks that the chain's stages compose
+over the loader's schema (doc_id, text, url, lat, lon).
 """
-
-import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,30 +16,51 @@ from s2_geometry_library_php_spark.operators.corpus_pipeline import (
     annotate_corpus,
     clean_corpus,
 )
-from s2_geometry_library_php_spark.sources.crawl_source import register_crawl_sources
-from s2_geometry_library_php_spark.sources.documents import (
-    GEOCODE_LAT_SQL,
-    GEOCODE_LON_SQL,
-)
+from s2_geometry_library_php_spark.sources.documents import load_documents
 
-SEGMENTS, ROWS = 4, 500
-TOTAL = SEGMENTS * ROWS
+SF = "/root/testdata/sf0.001"
+#: doc_id offsets of the planted rows (the table's ids are < 500)
+RECRAWL, MIRROR = 10_000, 20_000
 
 
 @pytest.fixture(scope="module")
 def crawl_docs(spark):
-    """Crawl pages + geocode columns — the pipeline's input contract
-    (doc_id, text, url, lat, lon)."""
-    register_crawl_sources(spark)
-    crawl = (
-        spark.read.format("s2crawl")
-        .option("segments", SEGMENTS)
-        .option("rows_per_segment", ROWS)
-        .load()
+    """The pipeline's input contract (doc_id, text, url, lat, lon):
+    the documents table, every 7th page carrying an email address,
+    plus every 10th page re-crawled under a messier spelling of its
+    URL (same canonical form, edited text, so only URL dedup drops it)
+    and every 10th (offset 5) mirrored under a new URL with the same
+    text (so only exact dedup drops it)."""
+    docs = load_documents(spark, SF).select(
+        "doc_id",
+        F.expr(
+            "CASE WHEN doc_id % 7 = 3 THEN text || ' write to ops' "
+            "|| CAST(doc_id AS STRING) || '@example.org' ELSE text END"
+        ).alias("text"),
+        "url",
+        "lat",
+        "lon",
     )
-    return crawl.withColumn("lat", F.expr(GEOCODE_LAT_SQL)).withColumn(
-        "lon", F.expr(GEOCODE_LON_SQL)
+    recrawl = docs.where("doc_id % 10 = 0").select(
+        (F.col("doc_id") + RECRAWL).alias("doc_id"),
+        F.concat("text", F.lit(" and more")).alias("text"),
+        F.expr(
+            "concat('HTTPS://WWW.', "
+            "upper(regexp_extract(url, '^https://([^/]+)', 1)), ':443', "
+            "regexp_extract(url, '^https://[^/]+(.*)$', 1), '#top')"
+        ).alias("url"),
+        "lat",
+        "lon",
     )
+    mirror = docs.where("doc_id % 10 = 5").select(
+        (F.col("doc_id") + MIRROR).alias("doc_id"),
+        "text",
+        F.expr("concat('https://mirror.example/d/', CAST(doc_id AS STRING))")
+        .alias("url"),
+        "lat",
+        "lon",
+    )
+    return docs.unionByName(recrawl).unionByName(mirror)
 
 
 @pytest.fixture(scope="module")
@@ -58,11 +76,13 @@ def cleaned(spark, crawl_docs):
 
 def test_crawl_pipeline_survivors_and_gates(spark, crawl_docs, cleaned):
     n = cleaned.count()
-    assert 0 < n < TOTAL
-    # the source plants ~5% exact duplicate texts: the exact-dedup stage
-    # must leave no repeated text among survivors
+    assert 0 < n < crawl_docs.count()
+    # mirrors plant exact duplicate texts: the exact-dedup stage must
+    # leave no repeated text among survivors, and never a mirror
     assert cleaned.groupBy("text").count().filter("count > 1").count() == 0
-    # URL dedup ran on the CANONICAL form: no two survivors may share it
+    assert cleaned.filter(F.col("doc_id") >= MIRROR).count() == 0
+    # URL dedup ran on the CANONICAL form: no two survivors may share
+    # it, and no re-crawl outlives its original
     from s2_geometry_library_php_spark.functions.urltools import canonical_url_column
 
     dup_canon = (
@@ -73,13 +93,14 @@ def test_crawl_pipeline_survivors_and_gates(spark, crawl_docs, cleaned):
         .count()
     )
     assert dup_canon == 0
+    assert cleaned.filter(F.col("doc_id") >= RECRAWL).count() == 0
     # language gate: every survivor's guess is the gated language
     assert cleaned.filter(F.col("lang_guess") != "en").count() == 0
 
 
 def test_crawl_pipeline_tile_is_cell_prefix(spark, cleaned):
     """tile_id must be the level-8 shifted prefix of the leaf cell id —
-    the same invariant the parquet-backed pipeline test asserts."""
+    the same invariant the fixture-backed pipeline test asserts."""
     bad = cleaned.filter(
         F.col("tile_id") != F.expr(f"cast(shiftrightunsigned(cell_id, {64 - 3 - 16}) as long)")
     ).count()
@@ -87,8 +108,8 @@ def test_crawl_pipeline_tile_is_cell_prefix(spark, cleaned):
 
 
 def test_crawl_pipeline_deterministic_rerun(spark, crawl_docs, cleaned):
-    """Connector re-read + pipeline rerun = identical survivor set
-    (closed-form synthesis + content-pure keep/drop decisions)."""
+    """Re-read + pipeline rerun = identical survivor set (derived
+    columns are scalar SQL, keep/drop decisions are content-pure)."""
     again = clean_corpus(
         spark,
         crawl_docs,
@@ -102,8 +123,7 @@ def test_crawl_pipeline_deterministic_rerun(spark, crawl_docs, cleaned):
 
 
 def test_crawl_pipeline_near_dup_subset(spark, crawl_docs, cleaned):
-    """Adding the LSH near-dup stage can only remove survivors, and the
-    planted exact duplicates guarantee it already removed some."""
+    """Adding the LSH near-dup stage can only remove survivors."""
     full = clean_corpus(
         spark,
         crawl_docs,
@@ -117,24 +137,10 @@ def test_crawl_pipeline_near_dup_subset(spark, crawl_docs, cleaned):
     assert len(full_ids) > 0
 
 
-def test_crawl_pipeline_metrics_sink_roundtrip(spark, cleaned, tmp_path):
-    """Survivors flow out through the s2metrics sink; the driver-side
-    manifest must account for exactly the survivor rows."""
-    out = str(tmp_path / "pipeline_metrics")
-    n = cleaned.count()
-    cleaned.select("doc_id", "url", "text", "tile_id").write.format(
-        "s2metrics"
-    ).mode("append").save(out)
-    man = json.load(open(os.path.join(out, "_METRICS_MANIFEST.json")))
-    assert man["rows"] == n
-    assert man["text_bytes"] > 0
-    parts = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert sorted(parts) == man["files"]
-
-
 def test_crawl_annotate_runs_native(spark, crawl_docs):
-    """annotate_corpus over the connector stays a single narrow plan:
-    no Exchange may appear (signals are scalar SQL over the scan)."""
+    """annotate_corpus over the loaded pages stays a single narrow
+    plan: no Exchange may appear (signals are scalar SQL over the
+    scan)."""
     ann = annotate_corpus(crawl_docs)
     plan = ann._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
@@ -142,20 +148,17 @@ def test_crawl_annotate_runs_native(spark, crawl_docs):
 
 
 def test_crawl_release_pipeline_all_stages(spark, crawl_docs, cleaned):
-    """The FULL release chain over the connector: gates + URL dedup +
-    exact dedup + decontamination + host cap + PII redaction in one
-    lazy plan.  Survivors are a subset of the base clean set, per-host
-    counts respect the cap, and no raw PII pattern survives in text."""
+    """The FULL release chain: gates + URL dedup + exact dedup +
+    decontamination + host cap + PII redaction in one lazy plan.
+    Survivors are a subset of the base clean set, per-host counts
+    respect the cap, and no raw PII pattern survives in text."""
     from s2_geometry_library_php_spark.functions.hostcap import host_column
     from s2_geometry_library_php_spark.functions.pii import (
         pii_count_columns,
     )
 
-    # the synthetic crawl texts are rotations of ONE short cyclic
-    # word stream, so every narrow n-gram is corpus-universal (a
-    # single doc's 13-grams hit all 797 survivors — measured);
-    # n=25 is the narrowest width that distinguishes documents here
-    bench = crawl_docs.where("doc_id = 0").select("text")
+    bench_id = cleaned.agg(F.min("doc_id")).collect()[0][0]
+    bench = crawl_docs.where(F.col("doc_id") == bench_id).select("text")
     release = clean_corpus(
         spark,
         crawl_docs,
@@ -163,8 +166,8 @@ def test_crawl_release_pipeline_all_stages(spark, crawl_docs, cleaned):
         dedup_by_url=True,
         near_dup_threshold=None,
         decontaminate_against=bench,
-        decontaminate_n=25,
-        max_docs_per_host=25,
+        decontaminate_n=13,
+        max_docs_per_host=1,
         redact_pii=True,
     )
     rows = release.cache().collect()
@@ -173,16 +176,21 @@ def test_crawl_release_pipeline_all_stages(spark, crawl_docs, cleaned):
     base_ids = {r["doc_id"] for r in cleaned.select("doc_id").collect()}
     assert ids < base_ids
     # the benchmark doc itself never survives
-    assert 0 not in ids
-    # host cap holds
+    assert bench_id not in ids
+    # host cap holds, and binds: some host had more than one survivor
     per_host = (
         release.withColumn("h", host_column("url"))
         .groupBy("h")
         .count()
         .collect()
     )
-    assert per_host and all(r["count"] <= 25 for r in per_host)
-    # PII scrubbed: counting the patterns on the RELEASED text finds 0
+    assert per_host and all(r["count"] <= 1 for r in per_host)
+    base_max = (
+        cleaned.groupBy(host_column("url")).count().agg(F.max("count"))
+    ).collect()[0][0]
+    assert base_max > 1
+    # PII scrubbed: the planted addresses reached the release redacted
+    assert any("<EMAIL>" in r["text"] for r in rows)
     leftover = release.select(
         *[c.alias(n) for n, c in pii_count_columns("text").items()]
     ).agg(F.sum("n_email"), F.sum("n_ipv4"), F.sum("n_phone")).collect()[0]

@@ -210,49 +210,3 @@ def test_fuzz_python_twin(spark):
         assert got == want
 
     run()
-
-
-def test_contamination_stats(spark):
-    from s2_geometry_library_php_spark.functions.decontaminate import (
-        contamination_stats,
-    )
-
-    docs = _vocab_corpus(spark, n_docs=150)
-    bench = docs.where("doc_id % 23 = 0").select("text")
-    n = 4
-    got = {
-        r["doc_id"]: (r["n_grams"], r["n_hit_grams"], r["hit_fraction"])
-        for r in contamination_stats(docs, bench, n=n).collect()
-    }
-    docs_py = {r["doc_id"]: r["text"] for r in docs.collect()}
-    bg = set()
-    for i, t in docs_py.items():
-        if i % 23 == 0:
-            bg |= _py_grams(t, n)
-    for i, t in docs_py.items():
-        w = t.split(" ")
-        occ = [" ".join(w[j : j + n]) for j in range(len(w) - n + 1)]
-        hits = sum(1 for g in occ if g in bg)
-        ng, nh, frac = got[i]
-        assert (ng, nh) == (len(occ), hits), i
-        assert abs(frac - (hits / len(occ) if occ else 0.0)) < 1e-12
-    # every doc is reported, benchmark members hit 100%
-    assert set(got) == set(docs_py)
-    assert all(
-        got[i][2] == 1.0 for i in docs_py if i % 23 == 0
-    )
-    # flag consistency
-    flags = {
-        r["doc_id"]: r["is_contaminated"]
-        for r in decontaminate(docs, bench, n=n, mode="flag").collect()
-    }
-    assert all((got[i][1] > 0) == flags[i] for i in docs_py)
-    # short-doc edge: fewer than n words -> (0, 0, 0.0)
-    short = spark.createDataFrame(
-        [(1, "a b"), (2, "")], "doc_id long, text string"
-    )
-    srows = {
-        r["doc_id"]: (r["n_grams"], r["n_hit_grams"], r["hit_fraction"])
-        for r in contamination_stats(short, bench, n=n).collect()
-    }
-    assert srows == {1: (0, 0, 0.0), 2: (0, 0, 0.0)}

@@ -15,7 +15,6 @@ from s2_geometry_library_php_spark.functions.importance import (
     HASH_MOD,
     LLR_SCALE,
     bucket_weights,
-    doc_word_buckets,
     dsir_select,
     importance_scores,
     importance_scores_duckdb_cte,
@@ -182,12 +181,17 @@ def test_plan_shape(spark):
 
 
 def test_word_bucket_totality(spark):
-    # doc_word_buckets never drops or fabricates words: occurrence
-    # count equals total split size, including empty-string words
+    # the weights and the scores count every word of the split, empty
+    # strings included ('a','','b' / '' / 'x','y','z'): the Python twin
+    # splits the same way, so a dropped or extra word moves every score
+    texts = {1: "a  b", 2: "", 3: "x y z"}
     docs = spark.createDataFrame(
-        [(1, "a  b"), (2, ""), (3, "x y z")],
-        "doc_id long, text string",
+        list(texts.items()), "doc_id long, text string"
     )
-    rows = doc_word_buckets(docs, B).groupBy("doc_id").count().collect()
-    got = {r["doc_id"]: r["count"] for r in rows}
-    assert got == {1: 3, 2: 1, 3: 3}  # 'a','','b' / '' / 'x','y','z'
+    target = docs.where("doc_id = 3").select("text")
+    w = bucket_weights(target, docs, n_buckets=B)
+    got = {
+        r["doc_id"]: r["importance_score"]
+        for r in importance_scores(docs, w, n_buckets=B).collect()
+    }
+    assert got == _py_scores(texts, [texts[3]])

@@ -83,9 +83,10 @@ def test_kth_retry_level_matches_brute(spark, points, spy):
     assert got == _rows(knn_brute_force(probes, points, K))
 
 
-def test_brute_fallback_after_last_round_matches_brute(spark, points, spy):
+def test_brute_fallback_after_last_round_matches_brute(spark, points, spy, monkeypatch):
+    monkeypatch.setattr(knn_mod, "MAX_ROUNDS", 1)
     probes = _probes(spark, CLUSTER_PROBES)
-    got = _rows(knn_join(spark, probes, points, K, start_level=13, max_rounds=1))
+    got = _rows(knn_join(spark, probes, points, K, start_level=13))
     assert spy["levels"] == [13]
     assert spy["brute"] == 1
     assert got == _rows(knn_brute_force(probes, points, K))

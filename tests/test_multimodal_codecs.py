@@ -1,5 +1,5 @@
 """Real multimodal decode kernels: WAV/PPM/BMP round trips, the
-decode->feature->resize Spark paths, and batch-shape edge cases.
+decode->feature Spark path, and batch-shape edge cases.
 
 The reference pipeline treats media as opaque binaries; these kernels
 are the graft's training-data-pipeline extension (task spec): decode
@@ -23,8 +23,6 @@ from s2_geometry_library_php_spark.functions.multimodal import (
     encode_wav,
     extract_features,
     image_feature,
-    resize_image,
-    resize_images,
     synth_image,
     synth_media_table,
     synth_wave,
@@ -110,23 +108,6 @@ def test_bmp_decode_bottom_up_padding():
     assert tuple(img[1, 0]) == px["bl"] and tuple(img[1, 1]) == px["br"]
 
 
-def test_resize_image_nearest():
-    img = synth_image(0, 64, 48)
-    small = resize_image(img, 16, 12)
-    assert small.shape == (12, 16, 3)
-    # nearest-neighbor: every output pixel is an input pixel
-    up = resize_image(small, 64, 48)
-    assert up.shape == img.shape
-    # 2x2 checkerboard survives exact /2 downsample of its doubling
-    board = np.kron(
-        np.array([[0, 255], [255, 0]], dtype=np.uint8), np.ones((2, 2), np.uint8)
-    )
-    rgb = np.stack([board] * 3, axis=-1)
-    assert np.array_equal(
-        resize_image(rgb, 2, 2)[..., 0], np.array([[0, 255], [255, 0]])
-    )
-
-
 def test_feature_kernels_shapes():
     assert image_feature(synth_image(1, 8, 8)).shape == (16,)
     assert audio_feature(synth_wave(1), 8000).shape == (16,)
@@ -159,24 +140,10 @@ def test_extract_features_real_decode_matches_numpy_twin(spark):
         assert np.array_equal(got, expect), f"media {i} ({kind})"
 
 
-def test_resize_images_spark_path(spark):
-    media = synth_media_table(spark, 30, real_payloads=True)
-    resized = resize_images(media, 8, 6).collect()
-    # only image rows survive (10 of 30)
-    assert len(resized) == 10
-    for r in resized:
-        img = decode_ppm(bytes(r.payload))
-        assert img.shape == (6, 8, 3)
-        i = r.media_id
-        expect = resize_image(synth_image(i, 64 + i % 16, 48 + i % 9), 8, 6)
-        assert np.array_equal(img, expect)
-
-
 def test_multimodal_zero_row_and_null_payload(spark):
     media = synth_media_table(spark, 6, real_payloads=True)
     empty = media.where(F.col("media_id") < 0)
     assert extract_features(empty, deterministic_fake=False).count() == 0
-    assert resize_images(empty, 4, 4).count() == 0
     nulled = media.withColumn(
         "payload", F.when(F.col("media_id") % 2 == 0, F.col("payload"))
     )
@@ -189,8 +156,7 @@ def test_multimodal_zero_row_and_null_payload(spark):
 def test_extract_features_corrupt_payload_falls_back(spark):
     """ADVICE r3 (low): a corrupt or mislabeled payload (truncated
     WAV, garbage bytes under an image mime, odd-length 16-bit PCM)
-    must fall back to the byte-histogram feature, not fail the job —
-    matching resize_images' behavior."""
+    must fall back to the byte-histogram feature, not fail the job."""
     wav = encode_wav(synth_wave(3), 8000)
     rows = [
         (0, "audio", "audio/wav", b"P6 2 2 255 junkjunkjunk"),  # mislabeled

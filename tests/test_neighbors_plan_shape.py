@@ -193,25 +193,19 @@ def test_knn_join_result_holds_no_python_node(spark, points):
 def test_radius_join_evaluates_each_kernel_once(spark, points):
     left = points.select(F.col("doc_id").alias("a_id"), "lat", "lon")
     right = points.select(F.col("doc_id").alias("b_id"), "lat", "lon")
-    for broadcast_right in (True, False):
-        nodes = _executed_nodes(
-            within_radius_join(left, right, 0.01, broadcast_right=broadcast_right)
-        )
-        python = _python_nodes(nodes)
-        assert len(python) == 2, python
-        assert sum("s2_cell_id" in t for t in python) == 1
-        assert sum("s2_ring_cells_udf" in t for t in python) == 1
-        assert _udf_filters_under_python(nodes) == []
-        if not broadcast_right:
-            # Spark broadcasts the small unhinted self-join on its own;
-            # it builds from one row per point, not from the ring.
-            built = [
-                i for i, (_, t) in enumerate(nodes) if t.startswith("BroadcastExchange")
-            ]
-            assert built
-            assert not any(
-                t.startswith("Generate") for i in built for t in _descendants(nodes, i)
-            )
+    nodes = _executed_nodes(within_radius_join(left, right, 0.01))
+    python = _python_nodes(nodes)
+    assert len(python) == 2, python
+    assert sum("s2_cell_id" in t for t in python) == 1
+    assert sum("s2_ring_cells_udf" in t for t in python) == 1
+    assert _udf_filters_under_python(nodes) == []
+    # Spark broadcasts the small unhinted self-join on its own; it
+    # builds from one row per point, not from the ring.
+    built = [i for i, (_, t) in enumerate(nodes) if t.startswith("BroadcastExchange")]
+    assert built
+    assert not any(
+        t.startswith("Generate") for i in built for t in _descendants(nodes, i)
+    )
 
 
 def test_spatial_join_crosses_once_for_the_refine(spark, encoded):

@@ -19,7 +19,6 @@ from s2_geometry_library_php_spark.functions.hostcap import (
     cap_per_host,
     cap_per_host_duckdb,
     host_column,
-    host_contribution_stats,
     host_duckdb,
 )
 from s2_geometry_library_php_spark.functions.pii import (
@@ -301,8 +300,8 @@ def test_cap_semantics_and_stats(spark):
     assert all(r["count"] <= cap for r in per_host)
     # hosts with <= cap docs keep everything
     stats = {
-        r["host"]: r["n_docs"]
-        for r in host_contribution_stats(docs).collect()
+        r["h"]: r["count"]
+        for r in docs.groupBy(host_column("url").alias("h")).count().collect()
     }
     kept = {r["h"]: r["count"] for r in per_host}
     for h, n in stats.items():
@@ -362,3 +361,45 @@ def test_cap_rejects_reserved_column_names(spark):
     )
     with _pytest.raises(ValueError, match="_pri"):
         cap_per_host(df, cap=1)
+
+
+def test_streaming_pii_redaction_stateless(spark, tmp_path):
+    """PII redaction is a pure projection, so it rides a stream
+    unchanged: availableNow output == batch redaction of the same
+    rows."""
+    from s2_geometry_library_php_spark.functions.pii import (
+        redact_pii_column,
+        synth_pii_text_sql,
+    )
+
+    docs = spark.range(120).withColumnRenamed("id", "doc_id").selectExpr(
+        "doc_id", f"{synth_pii_text_sql('doc_id')} AS text"
+    )
+    stage = str(tmp_path / "src")
+    docs.coalesce(2).write.parquet(stage)
+    stream = (
+        spark.readStream.schema(docs.schema).format("parquet").load(stage)
+    )
+    q = (
+        stream.select("doc_id", redact_pii_column("text").alias("red"))
+        .writeStream.format("memory")
+        .queryName("t_pii_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    q.awaitTermination()
+    got = {
+        (r["doc_id"], r["red"])
+        for r in spark.table("t_pii_stream").collect()
+    }
+    want = {
+        (r["doc_id"], r["red"])
+        for r in docs.select(
+            "doc_id", redact_pii_column("text").alias("red")
+        ).collect()
+    }
+    assert got == want
+    assert any("<EMAIL>" in t or "<IP>" in t or "<PHONE>" in t
+               for _, t in got)

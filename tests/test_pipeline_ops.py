@@ -22,27 +22,6 @@ def test_exact_dedup_finds_injected_duplicates(spark, docs):
     assert dups.where(F.col("keeper_doc_id") >= 100000).count() == 0
 
 
-def test_minhash_sql_and_udf_agree(spark, docs):
-    from s2_geometry_library_php_spark.functions.dedup import (
-        NUM_HASHES,
-        minhash_signature_sql,
-        minhash_signature_udf,
-    )
-
-    d = docs.select("doc_id", "text").limit(40)
-    sql_sig = {
-        r.doc_id: [r[f"mh{k}"] for k in range(NUM_HASHES)]
-        for r in minhash_signature_sql(d).collect()
-    }
-    udf_sig = {
-        r.doc_id: list(r.sig)
-        for r in d.select(
-            "doc_id", minhash_signature_udf(F.col("text")).alias("sig")
-        ).collect()
-    }
-    assert sql_sig == udf_sig
-
-
 def test_minhash_detects_near_duplicates(spark, docs):
     from s2_geometry_library_php_spark.functions.dedup import (
         minhash_band_pairs,
@@ -138,19 +117,6 @@ def test_prefix_len_exact_integer_boundary(spark):
             assert got[n] == want, (t, n, got[n], want)
 
 
-def test_simhash_hamming_zero_for_identical(spark, docs):
-    from s2_geometry_library_php_spark.functions.dedup import (
-        simhash_near_pairs,
-    )
-
-    base = docs.select("doc_id", "text").limit(25)
-    dup = base.withColumn("doc_id", F.col("doc_id") + 100000)
-    pairs = simhash_near_pairs(base.unionByName(dup), max_hamming=0)
-    got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
-    for r in base.collect():
-        assert (r.doc_id, r.doc_id + 100000) in got
-
-
 def test_lang_id_prefers_marker_language(spark):
     from s2_geometry_library_php_spark.functions.text import lang_id_column
 
@@ -176,7 +142,6 @@ def test_lang_id_prefers_marker_language(spark):
 def test_multimodal_plumbing(spark):
     from s2_geometry_library_php_spark.functions.multimodal import (
         extract_features,
-        frame_sample_plan,
         synth_media_table,
     )
 
@@ -186,10 +151,6 @@ def test_multimodal_plumbing(spark):
     for r in feats:
         assert len(r.feature) == 16
         assert abs(sum(r.feature) - 1.0) < 1e-5  # histogram normalizes
-    frames = frame_sample_plan(media, every_ms=1000)
-    vids = media.where(F.col("kind") == "video").collect()
-    n_expected = sum(1 + (v.duration_ms - 1) // 1000 for v in vids)
-    assert frames.count() == n_expected
 
 
 def test_lineage_resume_skips_completed(spark, docs):
@@ -449,56 +410,3 @@ def test_streaming_sessionize_across_microbatches(spark, tmp_path):
         ).collect()
     }
     assert got == {1: (2, 4), 2: (2, 2)}
-
-
-def test_streaming_url_dedup_across_microbatches(spark, tmp_path):
-    """A canonical-URL re-crawl arriving in a LATER micro-batch must
-    be suppressed by the canonical-url state (streaming twin of
-    functions/urltools.url_dedup)."""
-    from s2_geometry_library_php_spark.streaming import (
-        streaming_distinct_urls,
-    )
-
-    src = str(tmp_path / "ud_src")
-    b1 = spark.createDataFrame(
-        [(i, f"http://www.site{i}.com/page/?utm_source=x") for i in range(20)],
-        "doc_id long, url string",
-    ).withColumn("warc_ts", F.current_timestamp())
-    b1.coalesce(1).write.parquet(src)
-    # batch 2: 20 re-crawls under messier spellings (same canonical
-    # form: scheme case, bare host, fragment) + 5 fresh URLs
-    b2 = spark.createDataFrame(
-        [(100 + i, f"HTTP://SITE{i}.COM:80/page#top") for i in range(20)]
-        + [(200 + i, f"http://fresh{i}.org/x") for i in range(5)],
-        "doc_id long, url string",
-    ).withColumn("warc_ts", F.current_timestamp())
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    import tempfile
-    import uuid
-
-    ckpt = f"{tempfile.gettempdir()}/s2udtest_{uuid.uuid4().hex[:8]}"
-    q = (
-        streaming_distinct_urls(stream)
-        .select("doc_id", "canonical_url")
-        .writeStream.format("memory")
-        .queryName("ud_test_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.table("ud_test_out").collect()
-    urls = [r["canonical_url"] for r in rows]
-    ids = {r["doc_id"] for r in rows}
-    # 20 batch-1 survivors + 5 fresh; every messy re-crawl suppressed
-    assert len(urls) == len(set(urls)) == 25
-    assert "http://site0.com/page" in urls
-    assert not any(100 <= i < 200 for i in ids)

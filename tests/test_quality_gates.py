@@ -338,8 +338,15 @@ def test_quality_ppm_twins_bit_exact(spark, tmp_path):
 
 # --- Arrow gate parity (the pipeline hot path) ---------------------------------------
 from s2_geometry_library_php_spark.functions.quality_gates import (  # noqa: E402
-    repetition_signals_ppm,
+    _signal_thunks,
 )
+
+
+def repetition_signals_ppm(text: str) -> dict[str, int]:
+    """Every signal of the Arrow gate's kernel, evaluated (the gate
+    itself stops at the first failing one)."""
+    return {f"{n}_ppm": sig() for n, sig in _signal_thunks(text).items()}
+
 
 # adversarial shapes for the exact twin: words containing newlines
 # (tie-break order stress), multi-space runs (empty words), unicode
@@ -360,7 +367,7 @@ def parity_df(spark):
 
 
 def test_signals_exact_twin_bit_identical(parity_df):
-    """repetition_signals_ppm (the Arrow gate's kernel) == the native
+    """The Arrow gate's kernel (``_signal_thunks``) == the native
     ppm Columns, integer for integer."""
     got = _collect_signals(parity_df.where("text is not null"))
     for doc_id, text in FIXTURES + ADVERSARIAL:

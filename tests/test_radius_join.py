@@ -139,17 +139,6 @@ def test_self_radius_pairs_matches_brute_and_dedups(spark, docs):
     assert all(a < b for a, b in gk)
 
 
-def test_level_override_changes_plan_not_answer(spark, docs):
-    left = docs.select(F.col("doc_id").alias("a_id"), "lat", "lon")
-    right = docs.select(F.col("doc_id").alias("b_id"), "lat", "lon")
-    radius = 0.02
-    auto = _key_set(within_radius_join(left, right, radius))
-    coarse = _key_set(
-        within_radius_join(left, right, radius, level=max(0, radius_join_level(radius) - 2))
-    )
-    assert auto == coarse
-
-
 def test_radius_sweep_matches_brute_across_levels(spark):
     """Seeded random clouds x radii spanning ring levels 1..17 plus
     the crossJoin-fallback regime: set equality with brute at every

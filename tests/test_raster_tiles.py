@@ -71,23 +71,6 @@ def test_raster_position_matches_child_position_kernel(spark, tiles):
         assert grid[int(want_pos[k])] == int(r["doc_count"])
 
 
-def test_vectorize_keep_zeros_is_dense(spark, tiles):
-    rast = rasterize_tiles(tiles, FINE, COARSE)
-    n_parents = rast.count()
-    dense = vectorize_raster(rast, FINE, COARSE, keep_zeros=True)
-    assert dense.count() == n_parents * 4 ** (FINE - COARSE)
-    # every dense child's parent must be its raster id
-    from s2_geometry_library_php_spark.functions.sql_bitops import s2_parent
-
-    back = vectorize_raster(rast, FINE, COARSE, keep_zeros=True).select(
-        s2_parent(F.col("tile_id"), COARSE).alias("p"), "tile_id"
-    )
-    joined = back.join(
-        rast.select(F.col("raster_id").alias("p")).distinct(), "p", "left_anti"
-    )
-    assert joined.count() == 0
-
-
 def test_raster_round_trip_level_sweep(spark):
     """Round-trip exactness across (fine, coarse) level pairs incl.
     dl=1 and the max supported dl=8, coarse level 0 (face rasters) and

@@ -35,7 +35,6 @@ from s2_geometry_library_php_spark.operators.polyline_join import (
     projection_udf,
 )
 from s2_geometry_library_php_spark.operators.spatial_join import (
-    JOIN_LEVEL_GRID,
     bbox_prefilter_expr,
     build_regions,
     compute_coverings,
@@ -196,7 +195,7 @@ def test_workers_unpickle_the_kernels_without_operator_modules(spark, adversaria
         (crossings_udf(edge_probe).func, edges),
         (_pieces_udf(np.unique(cid.parent(leaf, 5))).func, (pa.array([None, *cid.to_signed(leaf)]),)),
     ]
-    gen = covering_batches(MAX_CELLS, JOIN_LEVEL_GRID[0], JOIN_LEVEL_GRID[-1], 3)
+    gen = covering_batches(MAX_CELLS)
     batches = regions_to_df(spark, regions).toArrow().to_batches()
     path = tmp_path / "kernels.pkl"
     path.write_bytes(cloudpickle.dumps((kernels, lat, lon, calls, gen, batches)))

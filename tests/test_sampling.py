@@ -1,6 +1,5 @@
-"""Deterministic stratified sampling (operators/sampling.py):
-priority hash parity across Spark / DuckDB / Python, mixture
-fractions, exact quotas, and the zero-shuffle plan claim."""
+"""Deterministic sampling priority (operators/sampling.py): hash
+parity across Spark / DuckDB / Python, and the IVF training sample."""
 
 import duckdb
 from pyspark.sql import functions as F
@@ -9,10 +8,8 @@ from s2_geometry_library_php_spark.operators.sampling import (
     DEFAULT_SALT,
     MIX_C1,
     MODULUS,
-    hash_mixture_sample,
     sample_priority_column,
     sample_priority_duckdb,
-    stratified_quota_sample,
 )
 
 
@@ -20,13 +17,6 @@ def _py_priority(i, salt=DEFAULT_SALT):
     x = i % MODULUS
     y = (x * x + MIX_C1) % MODULUS
     return (y * y + salt) % MODULUS
-
-
-def _ids_df(spark, n):
-    return spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        (F.col("id") % 3).cast("string").alias("stratum"),
-    )
 
 
 def test_priority_three_way_parity(spark):
@@ -48,72 +38,6 @@ def test_priority_three_way_parity(spark):
             f"SELECT {expr} FROM (SELECT CAST(? AS BIGINT) AS doc_id)", [i]
         ).fetchone()
         assert d == want, i
-
-
-def test_mixture_sample_fraction_and_determinism(spark):
-    df = _ids_df(spark, 30000)
-    out = hash_mixture_sample(
-        df, "stratum", {"0": 0.5, "1": 0.1}, default_fraction=0.0
-    )
-    counts = {
-        r["stratum"]: r["n"]
-        for r in out.groupBy("stratum").agg(F.count("*").alias("n")).collect()
-    }
-    assert counts.get("2", 0) == 0
-    assert abs(counts["0"] / 10000 - 0.5) < 0.02
-    assert abs(counts["1"] / 10000 - 0.1) < 0.02
-    a = sorted(r["doc_id"] for r in out.collect())
-    b = sorted(
-        r["doc_id"]
-        for r in hash_mixture_sample(
-            df, "stratum", {"0": 0.5, "1": 0.1}
-        ).collect()
-    )
-    assert a == b
-    # membership is exactly the documented threshold rule
-    for i in a[:100]:
-        frac = 0.5 if i % 3 == 0 else 0.1
-        assert _py_priority(i) < int(frac * MODULUS)
-
-
-def test_mixture_sample_is_shuffle_free(spark):
-    df = _ids_df(spark, 100)
-    plan = (
-        hash_mixture_sample(df, "stratum", {"0": 0.5})
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-
-
-def test_quota_sample_exact_counts_and_selection(spark):
-    df = _ids_df(spark, 3000)
-    out = stratified_quota_sample(df, "stratum", 25).collect()
-    by_stratum = {}
-    for r in out:
-        by_stratum.setdefault(r["stratum"], []).append(
-            (r["sample_rank"], r["doc_id"])
-        )
-    assert {s: len(v) for s, v in by_stratum.items()} == {
-        "0": 25, "1": 25, "2": 25,
-    }
-    # selection = the 25 smallest (priority, id) pairs of the stratum
-    for s, picked in by_stratum.items():
-        want = sorted(
-            (i for i in range(3000) if str(i % 3) == s),
-            key=lambda i: (_py_priority(i), i),
-        )[:25]
-        got_ids = [i for _, i in sorted(picked)]
-        assert got_ids == want
-
-
-def test_quota_sample_small_stratum_keeps_all(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b")], "doc_id long, stratum string"
-    )
-    out = stratified_quota_sample(df, "stratum", 10)
-    assert out.count() == 3
 
 
 def test_ivf_training_sample_twin_parity_and_bound(spark):

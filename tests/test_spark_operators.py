@@ -767,7 +767,15 @@ def test_hilbert_writer_clusters_across_files(spark, docs, tmp_path):
     )
 
     path = str(tmp_path / "hilbert")
-    hilbert_sorted_writer(docs, n_files=6).write.parquet(path)
+    # one file per shuffle partition: AQE would coalesce this small
+    # input into one file, and the claim needs more than one
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        hilbert_sorted_writer(docs).write.parquet(path)
+    finally:
+        spark.conf.set(key, old)
     import glob
 
     ranges = []
